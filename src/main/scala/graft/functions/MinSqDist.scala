@@ -94,6 +94,9 @@ case class MinSqDist(child: Expression, centers: Seq[Seq[Double]])
       val found = ctx.freshName("found")
       val hasNull = ctx.freshName("hasNull")
       val lt = ctx.freshName("lt")
+      // no line may BEGIN with `|` once this margin is stripped: the
+      // whole-stage templates strip margins again, which would eat a
+      // leading `||` (the NearestCentroid note)
       s"""
          |int $dim = $v.numElements();
          |boolean $hasNull = false;
@@ -110,9 +113,9 @@ case class MinSqDist(child: Expression, centers: Seq[Seq[Double]])
          |      double $d = $v.getDouble($i) - $cv[$i];
          |      $acc += $d * $d;
          |    }
-         |    boolean $lt = !$found
-         |      || (!java.lang.Double.isNaN($acc)
-         |          && (java.lang.Double.isNaN($best) || $acc < $best));
+         |    boolean $lt = !$found ||
+         |      (!java.lang.Double.isNaN($acc) &&
+         |        (java.lang.Double.isNaN($best) || $acc < $best));
          |    if ($lt) { $best = $acc; $found = true; }
          |  }
          |}

@@ -110,6 +110,10 @@ case class NearestCentroid(child: Expression,
     val bestNull = ctx.freshName("bestNull")
     val denom = ctx.freshName("denom")
     val gt = ctx.freshName("gt")
+    // no generated line may BEGIN with `|`: ProjectExec and the
+    // whole-stage templates stripMargin the embedded code (twice), which
+    // eats a leading `||` and leaves Janino a call to `bestNull (...)` —
+    // a silent fallback to interpreted eval. Operators stay at line ends.
     val code =
       code"""
 ${childGen.code}
@@ -135,10 +139,10 @@ if (!${childGen.isNull}) {
       $acc += $v.getDouble($i) * $cv[$i];
     }
     double $s = $acc / $denom;
-    boolean $gt = $bestNull
-      || (java.lang.Double.isNaN($s)
-          ? !java.lang.Double.isNaN($bestS)
-          : (!java.lang.Double.isNaN($bestS) && $s > $bestS));
+    boolean $gt = $bestNull ||
+      (java.lang.Double.isNaN($s) ?
+        !java.lang.Double.isNaN($bestS) :
+        (!java.lang.Double.isNaN($bestS) && $s > $bestS));
     if ($gt) { $best = $c; $bestS = $s; $bestNull = false; }
   }
 }

@@ -2954,6 +2954,131 @@ class DataxSpec extends AnyFunSuite {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     }
   }
+
+  // ---- served build geometry: resolved once per committed build, so
+  // each spec probes FIRST (the geometry is then cached) and changes the
+  // index after ----
+
+  private def withTempDirs(prefixes: String*)(body: Seq[String] => Unit): Unit = {
+    val dirs = prefixes.map(p => java.nio.file.Files.createTempDirectory(p).toString)
+    try body(dirs) finally dirs.foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
+  }
+
+  /** 600 seeded gaussian 64-dim vectors in the embeddings-table shape:
+    * no cluster structure, so two quantizers probe different candidate
+    * sets and every bucket holds rows of any residue class. */
+  private lazy val geoEmb = {
+    val rnd = new scala.util.Random(11)
+    (1L to 600L).map(id => (id, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+
+  private def probePq(d: String, queries: org.apache.spark.sql.DataFrame): Seq[Row] =
+    Similarity.ivfPqTopK(spark, d, queries, k = 5, nProbe = 4)
+      .orderBy("query_id", "rank").collect().toSeq
+
+  private def probeIvf(d: String, queries: org.apache.spark.sql.DataFrame): Seq[Row] =
+    Similarity.ivfTopKIndexed(spark, d, queries, k = 5, nProbe = 4)
+      .orderBy("query_id", "rank").collect().toSeq
+
+  test("served geometry: an in-place PQ rebuild (raw -> residual, then a new codebook via pqIndexWriteWith) is seen by the next probe") {
+    val emb = geoEmb
+    val queries = emb.filter($"vec_id" < 8)
+    withTempDirs("graft-geo", "graft-geo-res", "graft-geo-with") { case Seq(dir, freshRes, freshWith) =>
+      Similarity.pqIndexWrite(emb, dir, nCentroids = 16)
+      val raw = probePq(dir, queries)
+      assert(probePq(dir, queries) == raw, "a repeated probe of one build is stable")
+      Similarity.pqIndexWriteResidual(emb, dir, nCentroids = 16)
+      Similarity.pqIndexWriteResidual(emb, freshRes, nCentroids = 16)
+      val residual = probePq(dir, queries)
+      assert(residual == probePq(freshRes, queries),
+        "the probe after a rebuild in place must equal a fresh dir's")
+      assert(residual != raw, "raw and residual codes must score differently here")
+      val centroids = Similarity.ivfIndex(emb, nCentroids = 8)._1
+      val book = Similarity.pqCentroids(emb, m = 4, ksub = 8)
+      Similarity.pqIndexWriteWith(emb, dir, centroids, book)
+      Similarity.pqIndexWriteWith(emb, freshWith, centroids, book)
+      val rebuilt = probePq(dir, queries)
+      assert(rebuilt == probePq(freshWith, queries),
+        "a new quantizer + codebook must be served by the next probe")
+      assert(rebuilt != residual)
+    }
+  }
+
+  test("served geometry: ivfIndexAppendBatch rows are served by the next probe with no rebuild (ivfPqTopK and ivfTopKIndexed)") {
+    val emb = geoEmb
+    val base = emb.filter($"vec_id" % 5 =!= 3)
+    val shard = emb.filter($"vec_id" % 5 === 3)
+    val shardIds = shard.select("vec_id").as[Long].collect().toSet
+    val queries = emb.filter($"vec_id" < 16)
+    def served(rows: Seq[Row]) = rows.exists(r => shardIds(r.getAs[Long]("id")))
+    withTempDirs("graft-geo-pq", "graft-geo-pqc", "graft-geo-ivf", "graft-geo-ivfc") {
+      case Seq(pq, pqCold, ivf, ivfCold) =>
+        Seq(pq, pqCold).foreach(Similarity.pqIndexWrite(base, _, nCentroids = 16))
+        Seq(ivf, ivfCold).foreach(Similarity.ivfIndexWrite(base, _, nCentroids = 16))
+        val (pqBefore, ivfBefore) = (probePq(pq, queries), probeIvf(ivf, queries))
+        assert(!served(pqBefore) && !served(ivfBefore))
+        Seq(pq, pqCold, ivf, ivfCold).foreach(Similarity.ivfIndexAppendBatch(spark, _, shard, 0L))
+        val pqAfter = probePq(pq, queries)
+        assert(served(pqAfter), "appended rows must reach the warm PQ probe")
+        assert(pqAfter == probePq(pqCold, queries))
+        val ivfAfter = probeIvf(ivf, queries)
+        assert(served(ivfAfter), "appended rows must reach the warm IVF probe")
+        assert(ivfAfter == probeIvf(ivfCold, queries))
+    }
+  }
+
+  test("served geometry: a build_meta with no residual row raises the named error on every probe of a warm index") {
+    val emb = geoEmb
+    val queries = emb.filter($"vec_id" < 8)
+    withTempDirs("graft-geo-meta") { case Seq(dir) =>
+      Similarity.pqIndexWriteResidual(emb, dir, nCentroids = 16)
+      val good = probePq(dir, queries)
+      Seq.empty[(Long, Int, Int, Boolean)]
+        .toDF("built_n", "m", "ksub", "residual")
+        .write.mode("overwrite").parquet(
+          Similarity.sidecarPath(spark, dir, "build_meta.parquet"))
+      (1 to 2).foreach { i =>
+        val ex = intercept[IllegalStateException](probePq(dir, queries))
+        assert(ex.getMessage.contains("no residual flag row"), s"probe $i got: ${ex.getMessage}")
+      }
+      // a rebuild heals the meta and serves the same build again
+      Similarity.pqIndexWriteResidual(emb, dir, nCentroids = 16)
+      assert(probePq(dir, queries) == good)
+    }
+  }
+
+  test("served geometry (ivfTopKIndexed): an in-place rebuild is seen by the next probe; a missing quantizer raises on every probe") {
+    val emb = geoEmb
+    val queries = emb.filter($"vec_id" < 8)
+    withTempDirs("graft-geo-ivfr", "graft-geo-ivff") { case Seq(dir, fresh) =>
+      Similarity.ivfIndexWrite(emb, dir, nCentroids = 16)
+      val first = probeIvf(dir, queries)
+      Similarity.ivfIndexWrite(emb, dir, nCentroids = 8, kmeansIterations = 2)
+      Similarity.ivfIndexWrite(emb, fresh, nCentroids = 8, kmeansIterations = 2)
+      val rebuilt = probeIvf(dir, queries)
+      assert(rebuilt == probeIvf(fresh, queries),
+        "the probe after a rebuild in place must equal a fresh dir's")
+      assert(rebuilt != first, "the two quantizers must probe differently here")
+      // the quantizer moved aside: the named missing-path error on every
+      // probe; moved back (same files): the same build serves again
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val q = new org.apache.hadoop.fs.Path(
+        Similarity.sidecarPath(spark, dir, "centroids.parquet"))
+      val aside = new org.apache.hadoop.fs.Path(s"$dir/centroids.aside")
+      assert(fs.rename(q, aside))
+      (1 to 2).foreach { i =>
+        val ex = intercept[org.apache.spark.sql.AnalysisException](probeIvf(dir, queries))
+        assert(ex.getMessage.contains("centroids.parquet"), s"probe $i got: ${ex.getMessage}")
+      }
+      assert(fs.rename(aside, q))
+      assert(probeIvf(dir, queries) == rebuilt)
+    }
+  }
 }
 
 object DataxSpec {

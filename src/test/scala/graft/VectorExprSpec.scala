@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{DotProduct, MinSqDist, NearestCentroid, PqCodes}
+import graft.functions.{DotProduct, MinSqDist, NearestCentroid, PqCodes, PqLut}
 
-/** Round-21 exactness pins for the three native vector expressions
-  * that replaced interpreted HOF compositions in the similarity family
-  * ([[NearestCentroid]], [[MinSqDist]], [[PqCodes]]). Each test runs
+/** Exactness pins for the native vector expressions that replaced
+  * interpreted HOF compositions in the similarity family
+  * ([[NearestCentroid]], [[MinSqDist]], [[PqCodes]], [[PqLut]]). Each test runs
   * the NATIVE expression and the EXACT column composition it replaced
   * over the same frame — including the hostile corners (null vector,
   * empty vector, ragged dims, NaN elements, zero vectors, exact ties)
@@ -47,6 +47,33 @@ class VectorExprSpec extends AnyFunSuite {
         .SeqHasAsJava(rows).asJava), vecSchema)
   }
 
+  /** [[hostileFrame]] written to and read back from parquet: a frame
+    * the optimizer cannot fold into a local relation, so a select over
+    * it is planned as a whole-stage-codegen'd scan + project — the
+    * CODEGEN path of every expression in it. (A select over
+    * [[hostileFrame]] itself is evaluated on the driver by
+    * ConvertToLocalRelation through each expression's interpreted
+    * `eval`.) */
+  private def withParquetHostile(body: DataFrame => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vexpr").toString
+    try {
+      hostileFrame().write.mode("overwrite").parquet(s"$dir/h")
+      body(spark.read.parquet(s"$dir/h"))
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      ()
+    }
+  }
+
+  /** Runs `body` with generated-code compile failures raised instead of
+    * silently falling back to interpreted eval. */
+  private def noCodegenFallback[T](body: => T): T = {
+    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try body finally spark.conf.set("spark.sql.codegen.fallback", prev)
+  }
+
   /** Boxed-value identity: NaN == NaN, -0.0 != 0.0, null == null —
     * java.lang equality, NOT Scala's number-unboxing == (which reads
     * NaN != NaN and would miss a -0.0/0.0 drift). */
@@ -54,7 +81,7 @@ class VectorExprSpec extends AnyFunSuite {
     case (null, null) => true
     case (null, _) | (_, null) => false
     case (x: java.lang.Double, y: java.lang.Double) => x.equals(y)
-    case (x: Seq[_], y: Seq[_]) =>
+    case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
       x.length == y.length && x.lazyZip(y).forall(sameValue)
     case _ => a == b
   }
@@ -223,26 +250,93 @@ class VectorExprSpec extends AnyFunSuite {
     assert(r.getSeq[Any](0).last == null)
   }
 
-  test("all three expressions whole-stage-compile — no silent interpreted fallback") {
+  // ---- PqLut -----------------------------------------------------------
+
+  /** The pre-native ADC lookup-table composition, verbatim: per
+    * subspace, an array of ordered sqDist folds of the query slice
+    * against each literal center. */
+  private def oldLut(vec: Column, book: Seq[Seq[Seq[Double]]]): Column = {
+    val dsub = book.head.head.length
+    array(book.indices.map { s =>
+      val sl = slice(vec, s * dsub + 1, dsub)
+      array(book(s).map(c =>
+        aggregate(zip_with(sl, typedLit(c), (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, x) => acc + x)): _*)
+    }: _*)
+  }
+
+  /** m=2 x ksub=3 x dsub=2 with a NaN center, a -0.0 center and an
+    * overflow-prone one. */
+  private val lutBook: Seq[Seq[Seq[Double]]] = Seq(
+    Seq(Seq(1.0, 0.0), Seq(-0.0, -0.0), Seq(Double.NaN, 1.0)),
+    Seq(Seq(0.0, 0.0), Seq(1e300, -1e300), Seq(0.5, -0.5)))
+
+  /** Adds -0.0 rows to the hostile set: -0.0 - -0.0 and -0.0 - 0.0
+    * must fold to the same bits as the composed form. */
+  private def lutFrame(df: DataFrame): DataFrame =
+    df.unionByName(df.filter(col("id") === 5L).select(
+      lit(14L).as("id"), typedLit(Seq(-0.0, -0.0, -0.0, -0.0)).as("vec")))
+
+  test("PqLut == composed sqDist folds on hostile inputs (interpreted eval path)") {
+    val df = lutFrame(hostileFrame())
+    val plan = df.select(col("id"), PqLut.lut(col("vec"), lutBook).as("n"))
+      .queryExecution.executedPlan
+    assert(!plan.toString.contains("graft_pq_lut"),
+      s"the local frame must be evaluated while optimizing (interpreted eval):\n$plan")
+    assertSameRows(df, oldLut(col("vec"), lutBook), PqLut.lut(col("vec"), lutBook))
+  }
+
+  test("PqLut == composed sqDist folds on hostile inputs (codegen path)") {
+    noCodegenFallback {
+      withParquetHostile { h =>
+        val df = lutFrame(h)
+        val plan = df.select(col("id"), PqLut.lut(col("vec"), lutBook).as("n"))
+          .queryExecution.executedPlan
+        assert(plan.collect {
+            case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+          }.exists(_.toString.contains("graft_pq_lut")),
+          s"graft_pq_lut must run inside WholeStageCodegen:\n$plan")
+        assertSameRows(df, oldLut(col("vec"), lutBook), PqLut.lut(col("vec"), lutBook))
+      }
+    }
+  }
+
+  test("PqLut: null vector yields m rows of ksub nulls in a non-null table") {
+    val r = hostileFrame().filter(col("id") === 6L)
+      .select(PqLut.lut(col("vec"), lutBook).as("t")).head()
+    assert(!r.isNullAt(0))
+    val t = r.getSeq[scala.collection.Seq[Any]](0)
+    assert(t.length == 2 && t.forall(row => row.length == 3 && row.forall(_ == null)))
+  }
+
+  test("all four expressions whole-stage-compile — no silent interpreted fallback") {
     // spark.sql.codegen.fallback=false turns a generated-code compile
     // failure into a raise instead of the silent interpreted fallback
     // that would eat the optimization (this caught the round-21 Block
     // margin bug: the code interpolator does NOT strip | margins, and
-    // the pipes reached Janino)
-    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val cents = Seq((1L, Seq(1.0, 0.0, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.0, 0.0)))
-      val book: Seq[Seq[Seq[Double]]] =
-        Seq(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), Seq(Seq(0.5, 0.5)))
-      val got = hostileFrame().filter(col("id") <= 4L)
-        .select(
-          nativeNearest(col("vec"), cents).as("slot"),
-          MinSqDist.minSqDist(col("vec"), cents.map(_._2)).as("d"),
-          PqCodes.codes(col("vec"), book).as("codes"))
-        .collect()
-      assert(got.length == 4)
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    // the pipes reached Janino). The input is a parquet scan: over a
+    // local frame the select is evaluated on the driver and nothing is
+    // compiled at all.
+    noCodegenFallback {
+      withParquetHostile { h =>
+        val cents = Seq((1L, Seq(1.0, 0.0, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.0, 0.0)))
+        val book: Seq[Seq[Seq[Double]]] =
+          Seq(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), Seq(Seq(0.5, 0.5)))
+        val q = h.filter(col("id") <= 4L)
+          .select(
+            nativeNearest(col("vec"), cents).as("slot"),
+            MinSqDist.minSqDist(col("vec"), cents.map(_._2)).as("d"),
+            PqCodes.codes(col("vec"), book).as("codes"),
+            PqLut.lut(col("vec"), book).as("lut"))
+        val plan = q.queryExecution.executedPlan
+        val wsc = plan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+        }
+        assert(wsc.exists(_.toString.contains("graft_nearest_centroid")),
+          s"the native expressions must sit inside WholeStageCodegen:\n$plan")
+        assert(q.collect().length == 4)
+      }
+    }
   }
 
   // ---- interpreted (non-codegen) eval path ----------------------------
