@@ -235,15 +235,6 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => md5(concat_ws(",", slice(sig, b * rows + 1, lit(rows)))))
 
-  /** [[lshBandSigs]] ∘ [[minhashSignature]] fused so each minhash fold
-    * is spliced in EXACTLY once: slicing a full-signature subexpression
-    * would splice that whole subtree into every band (Catalyst does not
-    * CSE inside lambda bodies), costing bands× the md5 work. */
-  def lshBandSigsDirect(sh: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map(b =>
-      md5(concat_ws(",",
-        (b * rows until (b + 1) * rows).map(minhashOne(sh, _)): _*))): _*)
-
   /** Exact Jaccard over the distinct shingle sets. */
   def jaccard(shA: Column, shB: Column): Column = {
     val inter = size(array_intersect(shA, shB))

@@ -743,7 +743,7 @@ object Similarity {
     * is bounded by max(chunkIds, width / chunkIds) rows — ~sqrt(width)
     * balances the two levels. Wire it by passing `chunkIds = -1`
     * ("auto") to [[labelCentroids]] / [[kmeansCentroidsOrdered]] /
-    * [[pqCentroidsKMeans]] (and the pq write faces' `pqChunkIds`),
+    * [[pqCentroidsKMeans]] (and [[IndexSpec]]'s `pqChunkIds`),
     * which derives the width from the corpus id range in ONE (min,
     * max) aggregate and logs the derived value; 0 keeps the flat fold
     * — the oracle face, and still the default. Like every chunking,
@@ -942,6 +942,123 @@ object Similarity {
       .select("query_id", "rank", "id", "cosine")
   }
 
+  /** How an index is BUILT — the one construction recipe both derived
+    * builds take ([[ivfIndexWrite]] for the plain layout,
+    * [[pqIndexWrite]] for IVF-PQ), written verbatim into build_meta so a
+    * trigger-fired [[ivfIndexMaintain]] rebuild replays it (round 18: a
+    * maintenance daemon needs no record of how the index was built —
+    * the index carries it; without the record every quality build
+    * silently downgraded to the stride form on its first fire).
+    * Indexes written before round 18 lack the columns and read as the
+    * defaults — exactly the rebuild they already received.
+    *
+    * `seeding` — the coarse quantizer:
+    *  - "stride" (default): the deterministic min-id-anchored stride
+    *    sample ([[ivfIndex]] — the oracle-replayable form), Lloyd-refined
+    *    by `kmeansIterations` > 0 ([[ivfIndexKMeans]]).
+    *  - "reservoir": the `seed` hash-coin uniform sample
+    *    ([[ivfSeedsReservoir]]), then `kmeansIterations` Lloyd rounds.
+    *  - "kmeans_parallel": kmeans|| seeds ([[ivfSeedsKMeansParallel]]:
+    *    `rounds`, `oversample`, `seed`), then `kmeansIterations` Lloyd
+    *    rounds ([[ivfIndexKMeansParallel]]).
+    *  - "given": what [[ivfIndexWriteWith]] / [[pqIndexWriteWith]]
+    *    record for a caller-supplied quantizer. Its construction is
+    *    unknowable, so it is never an input to a derived build: a cold
+    *    maintenance fire warns and rebuilds with `IndexSpec()`.
+    *
+    * Defaults: `kmeansIterations` 0, `rounds` 2, `oversample` 2.0,
+    * `seed` 42, `pqKmeansIterations` 0, `pqChunkIds` 0, `encoding`
+    * "raw", `sampleMultiple` 8 — the per-seeding build defaults, with
+    * one exception: a kmeans|| build defaults to 2 Lloyd iterations, so
+    * pass `kmeansIterations = 2` with it (the field's default, 0, is
+    * every other seeding's).
+    *
+    * PQ-only fields ([[ivfIndexWrite]] rejects them):
+    *  - `pqKmeansIterations` > 0 Lloyd-refines the subspace codebook
+    *    ([[pqCentroidsKMeans]], with `pqChunkIds` > 0 its chunked
+    *    ordered fold); 0 keeps the stride codebook ([[pqCentroids]]).
+    *  - `encoding` "raw": codes quantize the vectors. "residual"
+    *    (textbook IVFADC): the codebook trains on, and the codes
+    *    quantize, each vector MINUS its assigned centroid, so the same
+    *    m x ksub budget spends no bits re-describing the bucket's common
+    *    direction; build_meta's `residual` flag tells every probe and
+    *    append how to read the codes. Residual wins exactly when the
+    *    quantizer carries information the codebook cannot (clustered
+    *    corpora) and LOSES on near-orthogonal noise, where subtracting an
+    *    unrelated centroid adds energy (||v - c||^2 ~= ||v||^2 + ||c||^2;
+    *    SCALE.md round 15). "auto" makes that choice at build time: both
+    *    books train against one shared quantizer, each one's summed
+    *    encode error is measured over a deterministic min-id-anchored
+    *    id-stride EVALUATION sample of ~`ksub * sampleMultiple` rows
+    *    (wider than the ksub-row training stride, so neither book
+    *    self-codes its sample to zero), and the lower error's layout is
+    *    written — the losing book never encodes the corpus. A
+    *    maintenance replay re-runs the chooser at the recorded width
+    *    (drift can move the regime boundary; the procedure IS the
+    *    record).
+    *
+    * Reachable builds (one `require`): "residual" and "auto" encode
+    * only stride-seeded quantizers; "given" carries no knob; `rounds` /
+    * `oversample` are kmeans||'s, `seed` the hash-coin seedings', and
+    * `sampleMultiple` (>= 1) auto's — anything else raises. */
+  final case class IndexSpec(seeding: String = "stride",
+                             kmeansIterations: Int = 0,
+                             rounds: Int = 2,
+                             oversample: Double = 2.0,
+                             seed: Long = 42L,
+                             pqKmeansIterations: Int = 0,
+                             pqChunkIds: Long = 0L,
+                             encoding: String = "raw",
+                             sampleMultiple: Int = 8) {
+    require(((seeding, encoding) match {
+        case ("stride", "raw" | "residual" | "auto") => true
+        case ("reservoir" | "kmeans_parallel", "raw") => true
+        case ("given", "raw") =>
+          kmeansIterations == 0 && pqKmeansIterations == 0 && pqChunkIds == 0L
+        case _ => false
+      }) &&
+      (seeding == "kmeans_parallel" || (rounds == 2 && oversample == 2.0)) &&
+      (seeding == "reservoir" || seeding == "kmeans_parallel" || seed == 42L) &&
+      (if (encoding == "auto") sampleMultiple >= 1 else sampleMultiple == 8),
+      s"$this is not a buildable index: residual/auto encoding needs " +
+        "stride seeding, \"given\" carries no knob, rounds/oversample " +
+        "are kmeans_parallel's, seed reservoir's or kmeans_parallel's, " +
+        "sampleMultiple (>= 1) auto's")
+  }
+
+  private val QualityOnlyCols = Seq("seeding", "kmeans_iterations",
+    "seed_rounds", "seed_oversample", "seed", "pq_kmeans_iterations",
+    "pq_chunk_ids", "auto", "sample_multiple")
+  private val QualityCols = "built_n" +: QualityOnlyCols
+
+  /** The stored [[IndexSpec]] of a persisted index; stride defaults
+    * for pre-round-18 metas (no `seeding` column) with the encoding
+    * their `residual` flag records, and the default chooser sample
+    * width for pre-round-19 ones (no `sample_multiple` column —
+    * round-19 ADVICE: without the record, a maintenance replay of an
+    * auto build re-ran the chooser at the default width, which can
+    * flip the raw-vs-residual outcome differently than the original
+    * non-default chooser would have). */
+  private def qualityOf(spark: org.apache.spark.sql.SparkSession,
+                        dir: String): IndexSpec = {
+    val resolved = sidecarPath(spark, dir, "build_meta.parquet")
+    val meta = spark.read.parquet(resolved)
+    def flagged = if (residualFlagIn(meta, resolved)) "residual" else "raw"
+    if (!meta.columns.contains("seeding")) IndexSpec(encoding = flagged)
+    else {
+      val hasSm = meta.columns.contains("sample_multiple")
+      val cols = if (hasSm) QualityOnlyCols else QualityOnlyCols.dropRight(1)
+      val r = meta.select(cols.map(col): _*).head()
+      // the missing-column fallback is the case-class default, not a
+      // second literal — drifting an independent copy of the chooser
+      // width would re-create the replay-flip this record prevents
+      IndexSpec(r.getString(0), r.getInt(1), r.getInt(2), r.getDouble(3),
+        r.getLong(4), r.getInt(5), r.getLong(6),
+        if (r.getBoolean(7)) "auto" else flagged,
+        if (hasSm) r.getInt(8) else IndexSpec().sampleMultiple)
+    }
+  }
+
   /** Persist an IVF index in the layout [[ivfTopK]]'s scale note
     * promises: `<dir>/assigned.parquet` PARTITIONED BY centroid_id —
     * one directory per bucket, so a probe over the persisted index is
@@ -952,185 +1069,186 @@ object Similarity {
     * (round 20: they commit in the same single rename as the rows —
     * [[commitRowTable]]; pre-round-20 `<dir>/centroids.parquet`
     * siblings still read via [[sidecarPath]]). This is the 100-TB
-    * serving shape: the index
-    * builds once (the expensive assign pass over the corpus), then
-    * every query batch reads only its nProbe buckets.
-    *
-    * `kmeansIterations > 0` builds the Lloyd-refined quantizer
-    * ([[ivfIndexKMeans]]); 0 (default) the stride-sampled one
-    * ([[ivfIndex]], deterministic — the oracle-replayable form).
+    * serving shape: the index builds once (the expensive assign pass
+    * over the corpus), then every query batch reads only its nProbe
+    * buckets. `spec` is the coarse quantizer's recipe ([[IndexSpec]]).
     *
     * SINGLE-WRITER per index dir, like EVERY write face here (builds,
     * appends, maintenance — the [[commitRowTable]] contract): an
     * append racing a rebuild would get its batch stamped consumed
     * while its rows miss the rebuild's corpus — silently dropped from
     * serving. Concurrent readers are sanctioned. */
-  /** Construction-QUALITY record round-tripped through build_meta
-    * (round 18 — the maintenance daemon exists so no human remembers
-    * how the index was built; without this record a trigger-fired
-    * [[ivfIndexMaintain]] rebuild silently downgraded every
-    * quality-built index to the deterministic stride form on its
-    * first fire). `seeding`: "stride" (the default, incl. Lloyd-refined
-    * stride via `kmeansIterations`), "reservoir", "kmeans_parallel",
-    * or "given" (a caller-supplied quantizer whose construction the
-    * index cannot know — maintenance warns loudly and stride-rebuilds).
-    * (rounds, oversample) are kmeans||'s; `seed` feeds both hash-coin
-    * variants; the pq fields and `auto` are the IVF-PQ layout's
-    * codebook knobs and the [[pqIndexWriteAuto]] flag. Indexes written
-    * before round 18 lack the columns and read as stride defaults —
-    * exactly the rebuild they already received. */
-  private final case class IndexQuality(seeding: String = "stride",
-                                        kmeansIterations: Int = 0,
-                                        rounds: Int = 2,
-                                        oversample: Double = 2.0,
-                                        seed: Long = 42L,
-                                        pqKmeansIterations: Int = 0,
-                                        pqChunkIds: Long = 0L,
-                                        auto: Boolean = false,
-                                        sampleMultiple: Int = 8)
-
-  private val QualityOnlyCols = Seq("seeding", "kmeans_iterations",
-    "seed_rounds", "seed_oversample", "seed", "pq_kmeans_iterations",
-    "pq_chunk_ids", "auto", "sample_multiple")
-  private val QualityCols = "built_n" +: QualityOnlyCols
-
-  /** The stored [[IndexQuality]] of a persisted index; stride defaults
-    * for pre-round-18 metas (no `seeding` column), and the default
-    * chooser sample width for pre-round-19 ones (no `sample_multiple`
-    * column — round-19 ADVICE: without the record, a maintenance
-    * replay of an auto build re-ran the chooser at the default width,
-    * which can flip the raw-vs-residual outcome differently than the
-    * original non-default chooser would have). */
-  private def qualityOf(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): IndexQuality = {
-    val meta = spark.read.parquet(
-      sidecarPath(spark, dir, "build_meta.parquet"))
-    if (!meta.columns.contains("seeding")) IndexQuality()
-    else {
-      val hasSm = meta.columns.contains("sample_multiple")
-      val cols = if (hasSm) QualityOnlyCols else QualityOnlyCols.dropRight(1)
-      val r = meta.select(cols.map(col): _*).head()
-      // the missing-column fallback is the case-class default, not a
-      // second literal — drifting an independent copy of the chooser
-      // width would re-create the replay-flip this record prevents
-      IndexQuality(r.getString(0), r.getInt(1), r.getInt(2), r.getDouble(3),
-        r.getLong(4), r.getInt(5), r.getLong(6), r.getBoolean(7),
-        if (hasSm) r.getInt(8) else IndexQuality().sampleMultiple)
-    }
-  }
-
   def ivfIndexWrite(vectors: DataFrame, dir: String, nCentroids: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    kmeansIterations: Int = 0): Unit = {
-    val centroids =
-      if (kmeansIterations > 0)
-        ivfIndexKMeans(vectors, nCentroids, kmeansIterations, idCol, vecCol)._1
-      else ivfIndex(vectors, nCentroids, idCol, vecCol)._1
-    ivfIndexWriteWithQ(vectors, dir, centroids, idCol, vecCol,
-      IndexQuality(kmeansIterations = kmeansIterations))
+                    spec: IndexSpec = IndexSpec()): Unit = {
+    require(spec.encoding == "raw" && spec.pqKmeansIterations == 0 &&
+        spec.pqChunkIds == 0L,
+      s"$spec sets PQ-only fields (encoding, pqKmeansIterations, " +
+        "pqChunkIds): the plain layout stores no codebook — build it " +
+        "with pqIndexWrite")
+    buildIndex(vectors, dir, coarseQuantizer(vectors, nCentroids, spec,
+      idCol, vecCol), None, idCol, vecCol, spec)
+    ()
   }
 
   /** [[ivfIndexWrite]] with a GIVEN quantizer — the plain layout's twin
-    * of [[pqIndexWriteWith]]: persist any centroid table (a
-    * prior index's stored geometry for a frozen-quantizer rebuild, a
+    * of [[pqIndexWriteWith]]: persist any centroid table (a prior
+    * index's stored geometry for a frozen-quantizer rebuild, a
     * quantizer derived outside this module) and assign the corpus
-    * against it. Records `seeding = "given"` in build_meta: the index
-    * cannot know how a caller-supplied quantizer was constructed, so a
-    * trigger-fired [[ivfIndexMaintain]] rebuild WARNS and downgrades
-    * to the stride form — for the recorded-and-replayable seeding
-    * variants use [[ivfIndexWriteReservoir]] /
-    * [[ivfIndexWriteKMeansParallel]] instead (round 18). */
+    * against it. Records `seeding = "given"` (see [[IndexSpec]]). */
   def ivfIndexWriteWith(vectors: DataFrame, dir: String,
                         centroids: DataFrame,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): Unit =
-    ivfIndexWriteWithQ(vectors, dir, centroids, idCol, vecCol,
-      IndexQuality(seeding = "given"))
-
-  /** RESERVOIR-seeded build ([[ivfSeedsReservoir]] + optional Lloyd
-    * refinement), with the construction recorded in build_meta so
-    * [[ivfIndexMaintain]] replays it on a trigger-fired rebuild
-    * (round 18 — previously only reachable through the given-quantizer
-    * face, which a maintenance rebuild silently stride-downgraded). */
-  def ivfIndexWriteReservoir(vectors: DataFrame, dir: String,
-                             nCentroids: Int, seed: Long = 42L,
-                             iterations: Int = 0,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding"): Unit =
-    ivfIndexWriteWithQ(vectors, dir,
-      reservoirCentroids(vectors, nCentroids, seed, iterations, idCol, vecCol),
-      idCol, vecCol,
-      IndexQuality(seeding = "reservoir", kmeansIterations = iterations,
-        seed = seed))
-
-  /** Reservoir seeds + optional Lloyd refinement — the coarse-quantizer
-    * construction shared by the plain and PQ reservoir write faces. */
-  private def reservoirCentroids(vectors: DataFrame, nCentroids: Int,
-                                 seed: Long, iterations: Int,
-                                 idCol: String, vecCol: String): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
-    val seeds = ivfSeedsReservoir(vectors, nCentroids, seed, idCol, vecCol)
-    if (iterations > 0) lloyd(v, seeds, iterations, avgMeans) else seeds
+                        vecCol: String = "embedding"): Unit = {
+    buildIndex(vectors, dir, centroids, None, idCol, vecCol,
+      IndexSpec(seeding = "given"))
+    ()
   }
 
-  /** KMEANS||-seeded build ([[ivfIndexKMeansParallel]]), with the
-    * construction recorded in build_meta so [[ivfIndexMaintain]]
-    * replays it on a trigger-fired rebuild (round 18 — the quality
-    * quantizer no longer degrades to a stride build on the first
-    * maintenance fire).
+  /** The coarse quantizer `spec`'s seeding derives — the ONE seeding
+    * dispatch, shared by the build faces and maintenance's cold fires. */
+  private def coarseQuantizer(vectors: DataFrame, nCentroids: Int,
+                              spec: IndexSpec, idCol: String,
+                              vecCol: String): DataFrame = spec.seeding match {
+    case "stride" =>
+      if (spec.kmeansIterations > 0)
+        ivfIndexKMeans(vectors, nCentroids, spec.kmeansIterations, idCol,
+          vecCol)._1
+      else ivfIndex(vectors, nCentroids, idCol, vecCol)._1
+    case "reservoir" =>
+      val v = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
+      val seeds = ivfSeedsReservoir(vectors, nCentroids, spec.seed, idCol,
+        vecCol)
+      if (spec.kmeansIterations > 0)
+        lloyd(v, seeds, spec.kmeansIterations, avgMeans)
+      else seeds
+    case "kmeans_parallel" =>
+      ivfIndexKMeansParallel(vectors, nCentroids, spec.rounds,
+        spec.kmeansIterations, spec.oversample, spec.seed, idCol, vecCol)._1
+    case other => throw new IllegalArgumentException(
+      s"seeding = \"$other\" records a caller-supplied quantizer — build " +
+        "with ivfIndexWriteWith / pqIndexWriteWith")
+  }
+
+  /** The subspace codebook `spec` trains over `vectors` — the ONE
+    * codebook dispatch (raw vectors or residual rows alike). */
+  private def codebookOf(vectors: DataFrame, m: Int, ksub: Int,
+                         idCol: String, vecCol: String,
+                         spec: IndexSpec): DataFrame =
+    if (spec.pqKmeansIterations > 0)
+      pqCentroidsKMeans(vectors, m, ksub, spec.pqKmeansIterations, idCol,
+        vecCol, spec.pqChunkIds)
+    else pqCentroids(vectors, m, ksub, idCol, vecCol)
+
+  /** The one derived build: the plain layout (`pq` empty) or IVF-PQ
+    * with (m, ksub) and `spec`'s encoding, over an already-derived
+    * coarse quantizer — a fresh [[coarseQuantizer]], or maintenance's
+    * warm one. Returns whether residual codes were written.
     *
-    * The IVF-PQ layout has recorded twins —
-    * [[pqIndexWriteReservoir]] / [[pqIndexWriteKMeansParallel]] (raw
-    * encoding; the residual and auto faces keep the stride/Lloyd
-    * coarse forms) — so quality seeding round-trips through
-    * maintenance on BOTH layouts; only a truly caller-supplied
-    * geometry ([[ivfIndexWriteWith]]/[[pqIndexWriteWith]]) records
-    * "given" and downgrades with a warning. */
-  def ivfIndexWriteKMeansParallel(vectors: DataFrame, dir: String,
-                                  nCentroids: Int, rounds: Int = 2,
-                                  iterations: Int = 2,
-                                  oversample: Double = 2.0, seed: Long = 42L,
-                                  idCol: String = "vec_id",
-                                  vecCol: String = "embedding"): Unit = {
-    val centroids = ivfIndexKMeansParallel(vectors, nCentroids, rounds,
-      iterations, oversample, seed, idCol, vecCol)._1
-    ivfIndexWriteWithQ(vectors, dir, centroids, idCol, vecCol,
-      IndexQuality(seeding = "kmeans_parallel", kmeansIterations = iterations,
-        rounds = rounds, oversample = oversample, seed = seed))
+    * Residual and auto builds cache the residual frame: it feeds the
+    * residual codebook, the chooser's evaluation sample, and (when
+    * residual is written) the encode scan — unpersisted it would re-run
+    * the assign pass per consumer (round-16 review). The quantizer is
+    * collected ONCE (round 20) and shared by the residual frame and the
+    * geometry write. The chooser costs, over a raw build, one extra
+    * codebook derivation, two sample-sized encode passes and one
+    * combined (count, min-id) aggregate; its min-id anchor keeps the
+    * sample non-empty on all-odd ids (a dedup survivor set), which
+    * would otherwise zero both errors and silently pick raw. */
+  private def buildIndex(vectors: DataFrame, dir: String,
+                         centroids: DataFrame, pq: Option[(Int, Int)],
+                         idCol: String, vecCol: String,
+                         spec: IndexSpec): Boolean = pq match {
+    case None =>
+      commitBuild(vectors, dir, localCentroids(centroids), None, None,
+        idCol, vecCol, spec)
+      false
+    case Some((m, ksub)) if spec.encoding == "raw" =>
+      val book = codebookOf(vectors, m, ksub, idCol, vecCol, spec)
+      commitBuild(vectors, dir, localCentroids(centroids),
+        Some(localCodebook(book)), None, idCol, vecCol, spec)
+      false
+    case Some((m, ksub)) =>
+      val lc = localCentroids(centroids)
+      val res = residualRowsLocal(vectors, lc, idCol, vecCol).cache()
+      try {
+        val rawBook =
+          if (spec.encoding == "auto")
+            Some(codebookOf(vectors, m, ksub, idCol, vecCol, spec))
+          else None
+        val resBook = codebookOf(res, m, ksub, "id", "vec", spec)
+        val residual = rawBook.forall { raw =>
+          val nm = vectors.agg(count(lit(1)),
+            min(col(idCol).cast("long"))).head()
+          val (n, minId) = (nm.getLong(0), nm.getLong(1))
+          val evalStride = math.max(1L,
+            n / math.max(1L, ksub.toLong * spec.sampleMultiple))
+          val rawErr = encodeErrorSum(
+            vectors.filter((col(idCol).cast("long") - minId) % evalStride === 0),
+            raw, vecCol)
+          val resErr = encodeErrorSum(
+            res.filter((col("id").cast("long") - minId) % evalStride === 0),
+            resBook, "vec")
+          resErr < rawErr
+        }
+        if (residual)
+          commitBuild(vectors, dir, lc, Some(localCodebook(resBook)),
+            Some(res), idCol, vecCol, spec)
+        else
+          commitBuild(vectors, dir, lc, rawBook.map(localCodebook), None,
+            idCol, vecCol, spec)
+        residual
+      } finally { res.unpersist(); () }
   }
 
-  private def ivfIndexWriteWithQ(vectors: DataFrame, dir: String,
-                                 centroids: DataFrame,
-                                 idCol: String, vecCol: String,
-                                 quality: IndexQuality): Unit = {
+  /** The one build commit: rows, quantizer geometry, the codebook (PQ
+    * layout), and build_meta — `built_n` (the staleness denominator),
+    * for PQ (m, ksub, residual), and the [[IndexSpec]] record — staged
+    * together and committed by one rename with the consumed-cutoff
+    * token ([[commitRowTable]], round 20). Rows are the plain layout's
+    * assignments (no `book`), the raw codes, or the codes of `res`'s
+    * residuals. ONE evaluation each for quantizer and codebook (both
+    * arrive collected and feed the assign/encode literals AND their
+    * sidecar writes) and ONE corpus pass: `built_n` rides the row write
+    * via observe() instead of a separate vectors.count(). */
+  private def commitBuild(vectors: DataFrame, dir: String,
+                          lc: LocalCentroids, book: Option[LocalCodebook],
+                          res: Option[DataFrame], idCol: String,
+                          vecCol: String, spec: IndexSpec): Unit = {
     val spark = vectors.sparkSession
-    // ONE-RENAME WHOLE-BUILD COMMIT (round 20): rows, quantizer
-    // geometry, the build_meta record (built_n = the staleness
-    // denominator + the construction-quality record ivfIndexMaintain
-    // replays, round 18), and the consumed-cutoff token all land in
-    // the staging dir and commit in one rename — see commitRowTable.
-    // ONE quantizer evaluation + ONE corpus pass (round 20, guide §1.2):
-    // the centroid subtree is collected once and feeds both the
-    // assignment literal and the geometry write (it used to re-run per
-    // consumer), and built_n rides the assign write itself via
-    // observe() — rows written == corpus rows, one per vector — where
-    // it used to be a third full vectors.count() pass.
-    val lc = localCentroids(centroids)
-    val v = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
+    val rows = book match {
+      case None => assignLocal(vectors.select(col(idCol).as("id"),
+        toDouble(col(vecCol)).as("vec")), lc)
+      case Some(lb) => res.fold(
+        pqCodeRowsLocal(vectors, lc, lb.tensor, idCol, vecCol))(
+        residualCodeRowsLocal(_, lb.tensor))
+    }
     val obs = org.apache.spark.sql.Observation()
-    commitRowTable(spark, dir, "assigned.parquet") { staging =>
-      assignLocal(v, lc).observe(obs, count(lit(1)).as("n"))
+    val table = if (book.isEmpty) "assigned.parquet" else "codes.parquet"
+    commitRowTable(spark, dir, table) { staging =>
+      rows.observe(obs, count(lit(1)).as("n"))
         .write.mode("overwrite").partitionBy("centroid_id").parquet(staging)
       lc.df(spark).write.mode("overwrite")
         .parquet(s"$staging/${inTableName("centroids.parquet")}")
+      book.foreach(_.df(spark).write.mode("overwrite")
+        .parquet(s"$staging/${inTableName("pq_codebook.parquet")}"))
       import spark.implicits._
-      Seq((obs.get("n").asInstanceOf[Long], quality.seeding,
-          quality.kmeansIterations,
-          quality.rounds, quality.oversample, quality.seed,
-          quality.pqKmeansIterations, quality.pqChunkIds, quality.auto,
-          quality.sampleMultiple))
-        .toDF(QualityCols: _*)
-        .write.mode("overwrite")
+      val (n, auto) = (obs.get("n").asInstanceOf[Long], spec.encoding == "auto")
+      // one literal row per layout: the PQ columns sit between built_n
+      // and the record, and a literal keeps the meta write one local scan
+      (book match {
+        case None =>
+          Seq((n, spec.seeding, spec.kmeansIterations, spec.rounds,
+              spec.oversample, spec.seed, spec.pqKmeansIterations,
+              spec.pqChunkIds, auto, spec.sampleMultiple))
+            .toDF(QualityCols: _*)
+        case Some(lb) =>
+          Seq((n, lb.tensor.length, lb.tensor.headOption.fold(0)(_.length),
+              res.nonEmpty, spec.seeding, spec.kmeansIterations, spec.rounds,
+              spec.oversample, spec.seed, spec.pqKmeansIterations,
+              spec.pqChunkIds, auto, spec.sampleMultiple))
+            .toDF(Seq("built_n", "m", "ksub", "residual") ++ QualityOnlyCols: _*)
+      }).write.mode("overwrite")
         .parquet(s"$staging/${inTableName("build_meta.parquet")}")
     }
     clearIncTables(spark, dir)
@@ -1145,16 +1263,20 @@ object Similarity {
     assign(vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec")),
       centroids)
 
-  /** APPEND new vectors to a persisted [[ivfIndexWrite]] index without a
-    * rebuild — the serving-path increment at 100 TB (a full rebuild
-    * re-assigns the whole corpus; an append assigns only the new shard):
-    * the new vectors are quantized against the index's EXISTING
-    * centroids (one broadcast pass over the batch) and the rows land
-    * INSIDE the existing centroid_id partition directories (dynamic
-    * partition append), so [[ivfTopKIndexed]]'s directory-level pruning
-    * is untouched. Probing the appended index ≡ probing a one-shot
-    * index over the union UNDER THE SAME QUANTIZER (spec-pinned): the
-    * append changes bucket CONTENTS, never bucket GEOMETRY.
+  /** APPEND new vectors to a persisted index without a rebuild — the
+    * serving-path increment at 100 TB (a full rebuild re-encodes the
+    * whole corpus; an append encodes only the new shard). Layout-aware
+    * ([[shardRows]]): on an [[ivfIndexWrite]] index the shard is
+    * assigned against the STORED centroids; on a [[pqIndexWrite]] index
+    * it is also PQ-encoded against the STORED codebook — residual-
+    * encoded when build_meta says so. One broadcast pass over the shard
+    * (O(shard) total), and the rows land INSIDE the existing
+    * centroid_id partition directories (dynamic partition append), so
+    * the probes' directory-level pruning is untouched. Probing the
+    * appended index ≡ probing a one-shot build over the union UNDER THE
+    * SAME GEOMETRY (the `*With` faces; spec-pinned on both layouts):
+    * the append changes bucket CONTENTS, never bucket GEOMETRY, and
+    * codes depend only on the codebook.
     *
     * That fixed geometry is also the staleness trade: appended vectors
     * were not seen by the quantizer, so as the appended fraction grows
@@ -1162,16 +1284,16 @@ object Similarity {
     * nProbe scans more wrong buckets for the same recall — the same
     * compact/expire discipline [[graft.streaming.DedupStream]] applies
     * to its sidecars. [[ivfIndexStaleness]] tracks the fraction;
-    * re-quantize (a fresh [[ivfIndexWrite]] over the full corpus) when
-    * it passes ~0.5, or earlier if bucket-size skew grows —
-    * [[ivfIndexSkew]] measures that second trigger (max/median bucket
-    * rows) so both rebuild signals are code, not prose (SCALE.md
-    * round 15). Idempotence is the CALLER's: replaying an append
-    * duplicates rows (parquet append), the [[graft.streaming]] replay
-    * guards are the pattern if delivery is at-least-once.
-    * Single-writer per index dir, like every write face here
-    * (never run an append concurrently with a rebuild — the
-    * [[commitRowTable]] contract). */
+    * re-quantize (a fresh build over the full corpus, or
+    * [[ivfIndexMaintain]]) when it passes ~0.5, or earlier if
+    * bucket-size skew grows — [[ivfIndexSkew]] measures that second
+    * trigger (max/median bucket rows) so both rebuild signals are code,
+    * not prose (SCALE.md round 15). Idempotence is the CALLER's:
+    * replaying an append duplicates rows (parquet append) —
+    * [[ivfIndexAppendBatch]] is the replay-idempotent face.
+    * Single-writer per index dir, like every write face here (never
+    * run an append concurrently with a rebuild — the [[commitRowTable]]
+    * contract). */
   def ivfIndexAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                      newVectors: DataFrame,
                      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
@@ -1181,18 +1303,9 @@ object Similarity {
     // heal would then keep (its staging twin rolls back once a final
     // table exists) — cheap no-op when nothing is pending
     healIndexDir(spark, dir)
-    // loud on a PQ dir (the symmetric twin of pqIndexAppend's guard,
-    // round-17 review: a stray assigned.parquet sibling would WIN
-    // rowTableOf's resolution and silently flip the index's identity)
-    val table = rowTableOf(spark, dir)
-    require(table == "assigned.parquet",
-      s"$dir holds a pqIndexWrite layout ($table) — use pqIndexAppend " +
-        "(or the layout-aware ivfIndexAppendBatch), not ivfIndexAppend")
-    val centroids = spark.read.parquet(
-      sidecarPath(spark, dir, "centroids.parquet", table))
-    ivfAssign(newVectors, centroids, idCol, vecCol)
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/assigned.parquet")
+    val (table, rows) = shardRows(spark, dir, newVectors, idCol, vecCol)
+    rows.write.mode("append").partitionBy("centroid_id")
+      .parquet(s"$dir/$table")
   }
 
   /** Small-file maintenance for an appended index: every
@@ -1506,7 +1619,7 @@ object Similarity {
           s => s.getField("code")).as("codes"))
     // native codegen'd lookup loop on the per-pair hot path — the
     // interpreted HOF fold measured MORE CPU than the 64-dim dot it
-    // replaces (PqProbe; AdcSpec pins bit-equality to the fold)
+    // replaces (SCALE.md; AdcSpec pins bit-equality to the fold)
     val scored = codeArrays.crossJoin(broadcast(withLut))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
@@ -1528,142 +1641,38 @@ object Similarity {
     * quantizer, the subspace codebook, and build_meta as in-table
     * `_graft/` sidecars committed by the same single rename (round 20;
     * pre-round-20 sibling layouts still read — [[sidecarPath]]).
-    * Vectors themselves are not stored here:
-    * at scale the full-precision table lives elsewhere and is touched
-    * only by an optional exact rerank of the top candidates.
+    * Vectors themselves are not stored here: at scale the
+    * full-precision table lives elsewhere and is touched only by an
+    * optional exact rerank of the top candidates.
     *
-    * `kmeansIterations` / `pqKmeansIterations` (round 16 — the
-    * [[ivfIndexWrite]] quality knob, for both halves): > 0 Lloyd-refines
-    * the coarse quantizer ([[ivfIndexKMeans]]) and/or the subspace
-    * codebook ([[pqCentroidsKMeans]]); 0 (default) keeps the
-    * deterministic stride forms — the oracle-replayable baseline. For
-    * the residual-encoded variant (textbook IVFADC — codes quantize
-    * `vec - centroid`, not the raw vector) see
-    * [[pqIndexWriteResidual]]. Single-writer per index dir, like every
-    * write face here ([[ivfIndexWrite]]'s note, the
-    * [[commitRowTable]] contract). */
+    * `spec` ([[IndexSpec]]) is the recipe: quantizer seeding, codebook
+    * refinement, and the raw / residual / auto encoding. Returns true
+    * when residual codes were written (always false for "raw", always
+    * true for "residual", the chooser's outcome for "auto"); build_meta
+    * records it either way, so the index stays self-describing and
+    * every probe/append face reads it unchanged. Single-writer per
+    * index dir, like every write face here ([[ivfIndexWrite]]'s note,
+    * the [[commitRowTable]] contract). */
   def pqIndexWrite(vectors: DataFrame, dir: String, nCentroids: Int = 16,
                    m: Int = 8, ksub: Int = 16,
                    idCol: String = "vec_id", vecCol: String = "embedding",
-                   kmeansIterations: Int = 0,
-                   pqKmeansIterations: Int = 0,
-                   pqChunkIds: Long = 0L): Unit = {
-    val centroids =
-      if (kmeansIterations > 0)
-        ivfIndexKMeans(vectors, nCentroids, kmeansIterations, idCol, vecCol)._1
-      else ivfIndex(vectors, nCentroids, idCol, vecCol)._1
-    val book =
-      if (pqKmeansIterations > 0)
-        pqCentroidsKMeans(vectors, m, ksub, pqKmeansIterations, idCol, vecCol,
-          pqChunkIds)
-      else pqCentroids(vectors, m, ksub, idCol, vecCol)
-    pqIndexWriteWithQ(vectors, dir, centroids, book, idCol, vecCol,
-      IndexQuality(kmeansIterations = kmeansIterations,
-        pqKmeansIterations = pqKmeansIterations, pqChunkIds = pqChunkIds))
-  }
-
-  /** [[pqIndexWrite]] with a RESERVOIR-seeded coarse quantizer
-    * ([[ivfSeedsReservoir]] + optional Lloyd), construction recorded so
-    * [[ivfIndexMaintain]] replays it — the PQ-layout twin of
-    * [[ivfIndexWriteReservoir]] (round 18: at full scale the PQ layout
-    * IS the served index, so the quality-seeding cell that matters most
-    * must round-trip through maintenance too). Raw encoding; the
-    * codebook keeps [[pqIndexWrite]]'s stride/Lloyd knobs. */
-  def pqIndexWriteReservoir(vectors: DataFrame, dir: String,
-                            nCentroids: Int = 16, m: Int = 8, ksub: Int = 16,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding",
-                            seed: Long = 42L, kmeansIterations: Int = 0,
-                            pqKmeansIterations: Int = 0,
-                            pqChunkIds: Long = 0L): Unit = {
-    val centroids = reservoirCentroids(vectors, nCentroids, seed,
-      kmeansIterations, idCol, vecCol)
-    val book =
-      if (pqKmeansIterations > 0)
-        pqCentroidsKMeans(vectors, m, ksub, pqKmeansIterations, idCol, vecCol,
-          pqChunkIds)
-      else pqCentroids(vectors, m, ksub, idCol, vecCol)
-    pqIndexWriteWithQ(vectors, dir, centroids, book, idCol, vecCol,
-      IndexQuality(seeding = "reservoir", kmeansIterations = kmeansIterations,
-        seed = seed, pqKmeansIterations = pqKmeansIterations,
-        pqChunkIds = pqChunkIds))
-  }
-
-  /** [[pqIndexWrite]] with a KMEANS||-seeded coarse quantizer
-    * ([[ivfIndexKMeansParallel]]), construction recorded so
-    * [[ivfIndexMaintain]] replays it — the PQ-layout twin of
-    * [[ivfIndexWriteKMeansParallel]]. Raw encoding. */
-  def pqIndexWriteKMeansParallel(vectors: DataFrame, dir: String,
-                                 nCentroids: Int = 16, m: Int = 8,
-                                 ksub: Int = 16,
-                                 idCol: String = "vec_id",
-                                 vecCol: String = "embedding",
-                                 rounds: Int = 2, iterations: Int = 2,
-                                 oversample: Double = 2.0, seed: Long = 42L,
-                                 pqKmeansIterations: Int = 0,
-                                 pqChunkIds: Long = 0L): Unit = {
-    val centroids = ivfIndexKMeansParallel(vectors, nCentroids, rounds,
-      iterations, oversample, seed, idCol, vecCol)._1
-    val book =
-      if (pqKmeansIterations > 0)
-        pqCentroidsKMeans(vectors, m, ksub, pqKmeansIterations, idCol, vecCol,
-          pqChunkIds)
-      else pqCentroids(vectors, m, ksub, idCol, vecCol)
-    pqIndexWriteWithQ(vectors, dir, centroids, book, idCol, vecCol,
-      IndexQuality(seeding = "kmeans_parallel",
-        kmeansIterations = iterations, rounds = rounds,
-        oversample = oversample, seed = seed,
-        pqKmeansIterations = pqKmeansIterations, pqChunkIds = pqChunkIds))
-  }
+                   spec: IndexSpec = IndexSpec()): Boolean =
+    buildIndex(vectors, dir, coarseQuantizer(vectors, nCentroids, spec,
+      idCol, vecCol), Some((m, ksub)), idCol, vecCol, spec)
 
   /** [[pqIndexWrite]] with a GIVEN quantizer and codebook — the
-    * frozen-geometry rebuild: re-encode any corpus against centroids
-    * and a codebook derived elsewhere (an earlier build, a Lloyd-refined
-    * [[pqCentroidsKMeans]] book, a base-subset quantizer in the append
-    * spec). [[pqIndexAppend]] composes per-shard on top; this is the
-    * full-rewrite face. Writes the `build_meta.parquet` sidecar —
-    * (built_n, m, ksub): the staleness denominator plus the
-    * construction params, self-describing like the band sidecars. */
+    * frozen-geometry rebuild: re-encode any corpus (raw encoding)
+    * against centroids and a codebook derived elsewhere (an earlier
+    * build, a Lloyd-refined [[pqCentroidsKMeans]] book, a base-subset
+    * quantizer in the append spec). [[ivfIndexAppend]] composes
+    * per-shard on top; this is the full-rewrite face. Records
+    * `seeding = "given"` (see [[IndexSpec]]). */
   def pqIndexWriteWith(vectors: DataFrame, dir: String,
                        centroids: DataFrame, codebook: DataFrame,
                        idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    pqIndexWriteWithQ(vectors, dir, centroids, codebook, idCol, vecCol,
-      IndexQuality(seeding = "given"))
-
-  private def pqIndexWriteWithQ(vectors: DataFrame, dir: String,
-                                centroids: DataFrame, codebook: DataFrame,
-                                idCol: String, vecCol: String,
-                                quality: IndexQuality): Unit =
-    pqIndexWriteWithQL(vectors, dir, localCentroids(centroids), codebook,
-      idCol, vecCol, quality)
-
-  private def pqIndexWriteWithQL(vectors: DataFrame, dir: String,
-                                 lc: LocalCentroids, codebook: DataFrame,
-                                 idCol: String, vecCol: String,
-                                 quality: IndexQuality): Unit = {
-    // one-rename whole-build commit (round 20): rows + geometry +
-    // codebook + build_meta + consumed token, one rename.
-    // ONE evaluation each for quantizer and codebook + ONE corpus pass
-    // (round 20, guide §1.2): both small tables are collected once and
-    // feed the encode/assign literals AND their sidecar writes; built_n
-    // rides the codes write via observe() instead of a second full
-    // vectors.count() pass.
-    val spark = vectors.sparkSession
-    val lb = localCodebook(codebook)
-    val obs = org.apache.spark.sql.Observation()
-    commitRowTable(spark, dir, "codes.parquet") { staging =>
-      pqCodeRowsLocal(vectors, lc, lb.tensor, idCol, vecCol)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(staging)
-      lc.df(spark).write.mode("overwrite")
-        .parquet(s"$staging/${inTableName("centroids.parquet")}")
-      lb.df(spark).write.mode("overwrite")
-        .parquet(s"$staging/${inTableName("pq_codebook.parquet")}")
-      writePqMeta(spark, obs.get("n").asInstanceOf[Long], staging, lb.tensor,
-        residual = false, quality)
-    }
-    clearIncTables(spark, dir)
-  }
+    commitBuild(vectors, dir, localCentroids(centroids),
+      Some(localCodebook(codebook)), None, idCol, vecCol,
+      IndexSpec(seeding = "given"))
 
   /** The stored codes-table rows for one corpus slice: (id, codes
     * array, centroid_id) — PQ codes against `codebook`, bucket against
@@ -1769,85 +1778,6 @@ object Similarity {
       codesArray(toDouble(col("vec")), book).as("codes"),
       col("centroid_id"))
 
-  /** Persist the RESIDUAL-encoded IVF-PQ index (textbook IVFADC): same
-    * layout and maintenance family as [[pqIndexWrite]], but the
-    * codebook is trained on — and the codes quantize — each vector's
-    * residual against its assigned centroid, so the same m x ksub code
-    * budget spends zero bits re-describing the bucket's common
-    * direction (spec measures the encode-error drop on real data). The
-    * index is SELF-DESCRIBING: build_meta carries `residual = true`,
-    * and [[ivfPqTopK]] / [[pqIndexAppend]] read the flag — a probe
-    * then builds its lookup table per (query, probed centroid) from
-    * `qvec - cvec` (the asymmetric side of IVFADC; K-bounded extra LUT
-    * work, zero extra scan cost), and an append residual-encodes the
-    * shard against the stored geometry. `pqKmeansIterations` > 0
-    * Lloyd-refines the residual codebook ([[pqCentroidsKMeans]] over
-    * the residual table — deterministic ordered folds).
-    *
-    * REGIME BOUNDARY (measured, spec-pinned): residual coding wins
-    * exactly when the coarse quantizer carries information the
-    * codebook cannot — on clustered corpora (the shape real embedding
-    * corpora have) the error drop is wide, but on near-orthogonal
-    * noise the orthogonality identity ||v - c||^2 ~= ||v||^2 + ||c||^2
-    * means subtracting an unrelated centroid ADDS energy and residual
-    * coding LOSES to [[pqIndexWrite]]'s raw form. Same boundary as
-    * ADC recall itself (SCALE.md round 15): pick per corpus. */
-  def pqIndexWriteResidual(vectors: DataFrame, dir: String,
-                           nCentroids: Int = 16, m: Int = 8, ksub: Int = 16,
-                           idCol: String = "vec_id", vecCol: String = "embedding",
-                           kmeansIterations: Int = 0,
-                           pqKmeansIterations: Int = 0,
-                           pqChunkIds: Long = 0L): Unit = {
-    val lc = localCentroids(
-      if (kmeansIterations > 0)
-        ivfIndexKMeans(vectors, nCentroids, kmeansIterations, idCol, vecCol)._1
-      else ivfIndex(vectors, nCentroids, idCol, vecCol)._1)
-    // cache: the residual subtree (scan-side assign + zip_with) feeds
-    // the codebook derivation and the encode scan — unpersisted it
-    // would re-run the assign pass per consumer (round-16 review
-    // finding). The quantizer itself is collected ONCE above (round 20)
-    // and shared by the residual frame and the geometry write.
-    val res = residualRowsLocal(vectors, lc, idCol, vecCol).cache()
-    try {
-      val book =
-        if (pqKmeansIterations > 0)
-          pqCentroidsKMeans(res, m, ksub, pqKmeansIterations, "id", "vec",
-            pqChunkIds)
-        else pqCentroids(res, m, ksub, "id", "vec")
-      writeResidualLayout(vectors, dir, lc, res, book,
-        IndexQuality(kmeansIterations = kmeansIterations,
-          pqKmeansIterations = pqKmeansIterations, pqChunkIds = pqChunkIds))
-    } finally { res.unpersist(); () }
-  }
-
-  /** The residual layout's four writes, shared by
-    * [[pqIndexWriteResidual]] and [[pqIndexWriteAuto]] (which has the
-    * centroids / residual frame / codebook already in hand). */
-  private def writeResidualLayout(vectors: DataFrame, dir: String,
-                                  lc: LocalCentroids, res: DataFrame,
-                                  book: DataFrame,
-                                  quality: IndexQuality): Unit = {
-    // one-rename whole-build commit (round 20): rows + geometry +
-    // codebook + build_meta + consumed token, one rename; quantizer and
-    // codebook collected once each, built_n observed on the codes write
-    // (see pqIndexWriteWithQ)
-    val spark = vectors.sparkSession
-    val lb = localCodebook(book)
-    val obs = org.apache.spark.sql.Observation()
-    commitRowTable(spark, dir, "codes.parquet") { staging =>
-      residualCodeRowsLocal(res, lb.tensor)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(staging)
-      lc.df(spark).write.mode("overwrite")
-        .parquet(s"$staging/${inTableName("centroids.parquet")}")
-      lb.df(spark).write.mode("overwrite")
-        .parquet(s"$staging/${inTableName("pq_codebook.parquet")}")
-      writePqMeta(spark, obs.get("n").asInstanceOf[Long], staging, lb.tensor,
-        residual = true, quality)
-    }
-    clearIncTables(spark, dir)
-  }
-
   /** Summed PQ encode error of `vectors` against `codebook`: per
     * vector, the min-cell squared L2 summed over subspaces —
     * distributed and scan-side like [[pqEncode]] (codebook as
@@ -1874,99 +1804,6 @@ object Similarity {
       .agg(coalesce(sum("_e"), lit(0.0))).head().getDouble(0)
   }
 
-  /** [[pqIndexWrite]] with the raw-vs-residual layout choice made AT
-    * BUILD TIME from the data — the d09i regime boundary as code
-    * instead of caller prose (round 17): residual coding wins exactly
-    * when the coarse quantizer carries information the codebook cannot
-    * (clustered corpora), and LOSES on near-orthogonal noise where
-    * subtracting an unrelated centroid ADDS energy. The chooser trains
-    * BOTH candidate codebooks (one coarse quantizer, shared), measures
-    * each one's summed encode error over a deterministic id-stride
-    * EVALUATION sample (~`ksub * sampleMultiple` rows — wider than the
-    * ksub-row training stride, so neither book self-codes its own
-    * sample to zero), and writes the winning layout. Cost over a plain
-    * build: one extra codebook derivation, two sample-sized encode
-    * passes, and one combined (count, min-id) aggregate — the losing
-    * book never encodes the corpus. Returns true when residual won; build_meta
-    * records the choice either way, so the index stays self-describing
-    * and every probe/append face works unchanged. */
-  def pqIndexWriteAuto(vectors: DataFrame, dir: String, nCentroids: Int = 16,
-                       m: Int = 8, ksub: Int = 16,
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       kmeansIterations: Int = 0,
-                       pqKmeansIterations: Int = 0,
-                       pqChunkIds: Long = 0L,
-                       sampleMultiple: Int = 8): Boolean = {
-    require(sampleMultiple >= 1, s"sampleMultiple=$sampleMultiple must be >= 1")
-    val lc = localCentroids(
-      if (kmeansIterations > 0)
-        ivfIndexKMeans(vectors, nCentroids, kmeansIterations, idCol, vecCol)._1
-      else ivfIndex(vectors, nCentroids, idCol, vecCol)._1)
-    // the residual frame feeds the candidate book, the eval sample, and
-    // (if residual wins) the encode scan — cache like pqIndexWriteResidual;
-    // the quantizer is collected ONCE (round 20) and shared with the
-    // winning layout's geometry write
-    val res = residualRowsLocal(vectors, lc, idCol, vecCol).cache()
-    try {
-      def bookOf(v: DataFrame, idC: String, vecC: String): DataFrame =
-        if (pqKmeansIterations > 0)
-          pqCentroidsKMeans(v, m, ksub, pqKmeansIterations, idC, vecC, pqChunkIds)
-        else pqCentroids(v, m, ksub, idC, vecC)
-      val rawBook = bookOf(vectors, idCol, vecCol)
-      val resBook = bookOf(res, "id", "vec")
-      // ONE combined aggregate for (n, min id) — not two corpus passes
-      // (round-17 review; the write face's built_n count remains, as
-      // on every build path). The min anchors the evaluation stride so
-      // the sample is never empty (all-odd ids — a dedup survivor set,
-      // say — can miss `id % stride == 0` entirely, which would zero
-      // both errors and silently pick raw). Round 18: the TRAINING
-      // strides (ivfIndex / pqCentroids) now carry the same min-id
-      // anchor, so such a corpus no longer fails the build before this
-      // chooser runs (the r17-ADVICE gap).
-      val nm = vectors.agg(count(lit(1)),
-        min(col(idCol).cast("long"))).head()
-      val (n, minId) = (nm.getLong(0), nm.getLong(1))
-      val evalStride = math.max(1L, n / math.max(1L, ksub.toLong * sampleMultiple))
-      val rawErr = encodeErrorSum(
-        vectors.filter((col(idCol).cast("long") - minId) % evalStride === 0),
-        rawBook, vecCol)
-      val resErr = encodeErrorSum(
-        res.filter((col("id").cast("long") - minId) % evalStride === 0),
-        resBook, "vec")
-      val residual = resErr < rawErr
-      val quality = IndexQuality(kmeansIterations = kmeansIterations,
-        pqKmeansIterations = pqKmeansIterations, pqChunkIds = pqChunkIds,
-        auto = true, sampleMultiple = sampleMultiple)
-      if (residual) writeResidualLayout(vectors, dir, lc, res, resBook,
-        quality)
-      else pqIndexWriteWithQL(vectors, dir, lc, rawBook, idCol, vecCol,
-        quality)
-      residual
-    } finally { res.unpersist(); () }
-  }
-
-  /** The PQ build_meta sidecar: (built_n, m, ksub, residual) — the
-    * staleness denominator, the construction params, and the encoding
-    * flag the probe/append faces key on — plus the [[IndexQuality]]
-    * record [[ivfIndexMaintain]] replays (round 18). Written INTO the
-    * staging dir (round 20) so it commits atomically with the rows it
-    * describes. */
-  private def writePqMeta(spark: org.apache.spark.sql.SparkSession,
-                          builtN: Long, staging: String,
-                          book: Array[Array[Array[Double]]],
-                          residual: Boolean,
-                          quality: IndexQuality): Unit = {
-    import spark.implicits._
-    Seq((builtN, book.length,
-        book.headOption.map(_.length).getOrElse(0), residual,
-        quality.seeding, quality.kmeansIterations, quality.rounds,
-        quality.oversample, quality.seed, quality.pqKmeansIterations,
-        quality.pqChunkIds, quality.auto, quality.sampleMultiple))
-      .toDF(Seq("built_n", "m", "ksub", "residual") ++ QualityOnlyCols: _*)
-      .write.mode("overwrite")
-      .parquet(s"$staging/${inTableName("build_meta.parquet")}")
-  }
-
   /** The stored `residual` flag of a persisted PQ index; false for
     * indexes written before the flag existed (no `residual` column —
     * raw-vector encoding was the only form then). A FLAG-ERA meta that
@@ -1981,56 +1818,22 @@ object Similarity {
     val resolved = sidecarPath(spark, dir, "build_meta.parquet")
     val metaPath = new org.apache.hadoop.fs.Path(resolved)
     val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(metaPath) && residualFlagAt(spark, resolved)
+    fs.exists(metaPath) &&
+      residualFlagIn(spark.read.parquet(resolved), resolved)
   }
 
-  /** [[residualFlagOf]] over an existing, already-resolved meta path. */
-  private def residualFlagAt(spark: org.apache.spark.sql.SparkSession,
-                             resolved: String): Boolean = {
-    val meta = spark.read.parquet(resolved)
+  /** [[residualFlagOf]] over an already-opened meta (read from
+    * `resolved`). */
+  private def residualFlagIn(meta: DataFrame, resolved: String): Boolean = {
     if (!meta.columns.contains("residual")) return false
     meta.select("residual").head(1).headOption match {
       case Some(r) if !r.isNullAt(0) => r.getBoolean(0)
       case _ => throw new IllegalStateException(
         s"$resolved exists but holds no residual flag row " +
           "— a crashed/partial meta write; the codes' encoding is " +
-          "unknowable, rebuild the index (pqIndexWrite / " +
-          "pqIndexWriteResidual / pqIndexWriteAuto) before probing or " +
-          "appending")
+          "unknowable, rebuild the index (pqIndexWrite) before probing " +
+          "or appending")
     }
-  }
-
-  /** APPEND a new shard to a persisted [[pqIndexWrite]] index without a
-    * rebuild — the [[ivfIndexAppend]] increment for the IVF-PQ serving
-    * layout, which at 100 TB is the index actually served (before this,
-    * every new shard forced a full O(corpus) re-encode): the shard is
-    * PQ-encoded against the STORED codebook and bucketed against the
-    * STORED centroids (one broadcast pass over the shard each — O(shard)
-    * total), and the rows land inside the existing centroid_id partition
-    * dirs, so [[ivfPqTopK]]'s directory pruning is untouched. Probing
-    * the appended index ≡ probing a [[pqIndexWriteWith]] rebuild of the
-    * union under the same (centroids, codebook) — spec-pinned: append
-    * changes bucket contents, never geometry, and codes depend only on
-    * the codebook. Same staleness trade and caller-owned idempotence as
-    * the plain-IVF append; [[ivfIndexStaleness]] / [[ivfIndexSkew]] /
-    * [[ivfIndexCompact]] all read this layout too. Single-writer per
-    * index dir, like every write face here (the [[commitRowTable]]
-    * contract). */
-  def pqIndexAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    newVectors: DataFrame,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    // heal a crashed rebuild first (round 19) — see ivfIndexAppend
-    healIndexDir(spark, dir)
-    val (table, rows) = shardRows(spark, dir, newVectors, idCol, vecCol)
-    // loud on a plain-IVF dir (round-17 review finding: writing assign
-    // rows into a fresh codes.parquet sibling would be silently ignored
-    // by every probe — rowTableOf resolves assigned.parquet first)
-    require(table == "codes.parquet",
-      s"$dir holds a plain ivfIndexWrite layout ($table) — use " +
-        "ivfIndexAppend (or the layout-aware ivfIndexAppendBatch), not " +
-        "pqIndexAppend")
-    rows.write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/codes.parquet")
   }
 
   /** One shard's serving-index rows against a persisted index's STORED
@@ -2038,7 +1841,7 @@ object Similarity {
     * the plain [[ivfIndexWrite]] layout; (id, codes, centroid_id) for
     * the PQ one — residual-encoded when build_meta says so (the flag is
     * the index's, never re-supplied by the caller). Returns (row table
-    * name, rows); shared by [[pqIndexAppend]] and
+    * name, rows); shared by [[ivfIndexAppend]] and
     * [[ivfIndexAppendBatch]] so the plain-append and batch-idempotent
     * faces are byte-rule-identical. */
   private def shardRows(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -2062,9 +1865,9 @@ object Similarity {
   }
 
   // ---- replay-idempotent serving-index increment (round 17): the
-  // plain appends above are parquet appends — replaying one under
-  // at-least-once delivery duplicates rows, which both scaladocs
-  // delegate to "the caller's own discipline". The batch face below
+  // plain append above is a parquet append — replaying one under
+  // at-least-once delivery duplicates rows, which its scaladoc
+  // delegates to "the caller's own discipline". The batch face below
   // closes that seam with the [[graft.streaming.DedupStream]]
   // batch-partition protocol: each shard lands in a batch-SCOPED
   // partition of a sibling increment table, written with OVERWRITE, so
@@ -2453,7 +2256,7 @@ object Similarity {
     }
   }
 
-  /** [[ivfIndexAppend]] / [[pqIndexAppend]] made REPLAY-IDEMPOTENT for
+  /** [[ivfIndexAppend]] made REPLAY-IDEMPOTENT for
     * at-least-once drivers (the [[graft.streaming.EmbedStream]] ingest
     * loop — previously the one unprotected seam in an otherwise
     * exactly-once pipeline): the shard's rows are encoded against the
@@ -2672,7 +2475,8 @@ object Similarity {
         case Seq(codebook, meta) =>
           val b = collectCodebook(spark.read.parquet(codebook.path))
           require(b.length >= 1, "empty codebook")
-          (b, meta.exists && residualFlagAt(spark, meta.path))
+          (b, meta.exists &&
+            residualFlagIn(spark.read.parquet(meta.path), meta.path))
         case _ => (Array.empty[Array[Array[Double]]], false)
       }
       ServedGeometry(table, centroids, book, residual,
@@ -3133,91 +2937,6 @@ object Similarity {
                                     rebuilt: Boolean,
                                     warmFellBack: Boolean = false)
 
-  /** The RE-QUANTIZE RULE as one callable (round 17 — previously the
-    * rule lived as scaladoc prose on [[ivfIndexAppend]]): poll both
-    * rebuild triggers and, when either fires ([[ivfIndexStaleness]] >=
-    * `maxStaleness` — the appended-fraction drift — or
-    * [[ivfIndexSkew]] >= `maxSkew` — the hot-bucket drift the fraction
-    * cannot see), rebuild the index over `corpus` IN PLACE with the
-    * layout's own construction parameters: K re-read from the stored
-    * centroid table, (m, ksub) from the stored codebook, raw-vs-
-    * residual from build_meta, and — round 18 — the QUALITY record
-    * ([[IndexQuality]]) replayed from build_meta too: a
-    * reservoir-seeded index rebuilds reservoir-seeded, a
-    * kmeans||-seeded one re-runs kmeans|| with its stored (rounds,
-    * oversample, seed, Lloyd iterations), Lloyd/codebook-refined forms
-    * keep their iteration counts, and an [[pqIndexWriteAuto]] index
-    * RE-RUNS the chooser at its RECORDED evaluation sample width
-    * (round 19 — `sample_multiple` rides in build_meta; a non-default
-    * eval sample is part of the decision procedure, and replaying it
-    * at the default could flip raw-vs-residual differently than the
-    * original chooser would) (deliberate: drift that fires a rebuild
-    * can also move the raw-vs-residual regime boundary, and the
-    * chooser is exactly the recorded decision PROCEDURE; build_meta
-    * records the fresh outcome). So a maintenance daemon needs no record of how
-    * the index was built — the index carries it. The one exception is
-    * `seeding = "given"` ([[ivfIndexWriteWith]]/[[pqIndexWriteWith]]:
-    * a caller-supplied geometry whose construction the index cannot
-    * know) — the rebuild warns loudly on stderr and uses the stride
-    * form; pre-round-18 metas lack the record and read as stride,
-    * which is exactly the rebuild they already received. `corpus` must
-    * be the FULL current corpus (the
-    * appended rows included): the rebuild re-derives geometry from it
-    * and clears the increment sibling. Single-writer like every
-    * maintenance face; polling cost when nothing fires is one
-    * metadata count + one footer walk (no corpus scan).
-    *
-    * The skew trigger is APPEND-DRIVEN (round-17 review): it fires
-    * only when staleness > 0 — i.e. something has been appended since
-    * the build. Bucket contents change ONLY via appends, so at
-    * staleness 0 the skew reading is the build's own intrinsic
-    * quantizer skew, which the rebuild would exactly reproduce — an
-    * unconditional absolute trigger would turn a daemon polling an
-    * intrinsically skewed corpus into a full-corpus rebuild loop.
-    * Intrinsic skew is a build-QUALITY matter: address it with the
-    * Lloyd / kmeans|| seeding knobs on the write faces, not the
-    * maintenance loop.
-    *
-    * `warmStart` (round 19, default OFF — the record replays the full
-    * construction): when a trigger fires and the geometry is unchanged
-    * (it always is here — K, m, ksub, and the residual flag are all
-    * read from the stored index), seed the Lloyd refinement from the
-    * CURRENT centroids instead of re-running the recorded seeding from
-    * scratch. A quality fire costs ~2x a stride fire (SCALE.md) and
-    * most of that is the seed construction; centroids that start near
-    * a fixed point converge in fewer effective passes, and the
-    * quality A/B (WarmQualityProbe, round 20 — sf0.1 and a 10x
-    * ScaleData corpus) measured what "equal quality" means per layout:
-    * on RAW layouts the stored codebook is BIT-IDENTICAL warm vs cold
-    * (it trains on raw vectors, independent of the quantizer —
-    * spec-pinned), encode error exactly equal, probe recall equal
-    * within noise, fires 9-43% cheaper on kmeans|| records; on
-    * RESIDUAL records the codebook trains against each fire's own
-    * quantizer and the warm one measured ~5-6% HIGHER encode error
-    * with NO wall saving (stride seeds cost nothing to re-run) — keep
-    * warmStart off for residual stride records; the spec bounds the
-    * drift at 1.25x if a caller flips it anyway. The quality record
-    * is written UNCHANGED either way, so any later
-    * cold fire (or geometry change, which forces an explicit rebuild
-    * anyway) still replays the full recorded construction. The auto
-    * chooser is excluded (re-running the decision procedure IS its
-    * record); a "given" record warm-starts to the frozen-geometry
-    * rebuild it always wanted instead of the warned stride downgrade.
-    * Spec pins: warm fires are deterministic (identical dirs + corpus
-    * produce identical indexes), keep the record intact, reset
-    * staleness, and at kmeansIterations = 0 serve EXACTLY the pre-fire
-    * view (unchanged quantizer, re-encoded corpus).
-    *
-    * SKEW-ONLY warm fires self-heal against futility (round 20, from
-    * round-19 ADVICE): at recorded kmeansIterations = 0 the warm
-    * quantizer is bit-identical to the current one — such a fire takes
-    * the recorded cold construction up front; at iterations >= 1 a
-    * warm Lloyd refinement sitting at its fixed point has the same
-    * cannot-move-skew property, detectable only after the fact — the
-    * fire re-measures skew and, when it did not drop, falls back to
-    * the recorded cold construction in the SAME call (reported as
-    * `warmFellBack`), so warmStart = true can never loop futile
-    * O(corpus) rebuilds on an append-skewed corpus. */
   /** The warm-start coarse quantizer (round 19): the CURRENT stored
     * centroids, re-refined by the recorded Lloyd iteration count,
     * instead of a from-scratch re-run of the recorded construction.
@@ -3235,6 +2954,84 @@ object Similarity {
       cur, iterations, avgMeans)
   }
 
+  /** The RE-QUANTIZE RULE as one callable (round 17 — previously the
+    * rule lived as scaladoc prose on [[ivfIndexAppend]]): poll both
+    * rebuild triggers and, when either fires ([[ivfIndexStaleness]] >=
+    * `maxStaleness` — the appended-fraction drift — or
+    * [[ivfIndexSkew]] >= `maxSkew` — the hot-bucket drift the fraction
+    * cannot see), rebuild the index over `corpus` IN PLACE with the
+    * layout's own construction parameters: K re-read from the stored
+    * centroid table, (m, ksub) from the stored codebook, and the
+    * recorded [[IndexSpec]] (round 18) — seeding with its (rounds,
+    * oversample, seed, Lloyd iterations), codebook refinement, and
+    * encoding — replayed through the same build the write faces run.
+    * An auto record RE-RUNS the chooser at its RECORDED evaluation
+    * sample width (round 19 — a non-default eval sample is part of the
+    * decision procedure, and replaying it at the default could flip
+    * raw-vs-residual differently than the original chooser would);
+    * build_meta records the fresh outcome. So a maintenance daemon
+    * needs no record of how the index was built — the index carries
+    * it. The one exception is `seeding = "given"`
+    * ([[ivfIndexWriteWith]]/[[pqIndexWriteWith]]: a caller-supplied
+    * geometry whose construction the index cannot know) — the rebuild
+    * warns loudly on stderr and builds with `IndexSpec()`; pre-round-18
+    * metas lack the record and read as stride, which is exactly the
+    * rebuild they already received. `corpus` must be the FULL current
+    * corpus (the appended rows included): the rebuild re-derives
+    * geometry from it and clears the increment sibling. Single-writer
+    * like every maintenance face; polling cost when nothing fires is
+    * one metadata count + one footer walk (no corpus scan).
+    *
+    * The skew trigger is APPEND-DRIVEN (round-17 review): it fires
+    * only when staleness > 0 — i.e. something has been appended since
+    * the build. Bucket contents change ONLY via appends, so at
+    * staleness 0 the skew reading is the build's own intrinsic
+    * quantizer skew, which the rebuild would exactly reproduce — an
+    * unconditional absolute trigger would turn a daemon polling an
+    * intrinsically skewed corpus into a full-corpus rebuild loop.
+    * Intrinsic skew is a build-QUALITY matter: address it with the
+    * [[IndexSpec]] seeding knobs, not the maintenance loop.
+    *
+    * `warmStart` (round 19, default OFF — the record replays the full
+    * construction): when a trigger fires and the geometry is unchanged
+    * (it always is here — K, m, ksub, and the encoding are all read
+    * from the stored index), seed the Lloyd refinement from the
+    * CURRENT centroids ([[warmCentroids]]) instead of re-running the
+    * recorded seeding from scratch. A quality fire costs ~2x a stride
+    * fire (SCALE.md) and most of that is the seed construction;
+    * centroids that start near a fixed point converge in fewer
+    * effective passes, and the quality A/B (round 20 — sf0.1 and a 10x
+    * ScaleData corpus, SCALE.md) measured what "equal quality" means
+    * per layout: on RAW layouts the stored codebook is BIT-IDENTICAL
+    * warm vs cold (it trains on raw vectors, independent of the
+    * quantizer — spec-pinned), encode error exactly equal, probe recall
+    * equal within noise, fires 9-43% cheaper on kmeans|| records; on
+    * RESIDUAL records the codebook trains against each fire's own
+    * quantizer and the warm one measured ~5-6% HIGHER encode error with
+    * NO wall saving (stride seeds cost nothing to re-run) — keep
+    * warmStart off for residual stride records; the spec bounds the
+    * drift at 1.25x if a caller flips it anyway. The record is written
+    * UNCHANGED either way, so any later cold fire (or geometry change,
+    * which forces an explicit rebuild anyway) still replays the full
+    * recorded construction. The auto chooser is excluded (re-running
+    * the decision procedure IS its record); a "given" record
+    * warm-starts to the frozen-geometry rebuild it always wanted
+    * instead of the warned downgrade. Spec pins: warm fires are
+    * deterministic (identical dirs + corpus produce identical indexes),
+    * keep the record intact, reset staleness, and at kmeansIterations =
+    * 0 serve EXACTLY the pre-fire view (unchanged quantizer, re-encoded
+    * corpus).
+    *
+    * SKEW-ONLY warm fires self-heal against futility (round 20, from
+    * round-19 ADVICE): at recorded kmeansIterations = 0 the warm
+    * quantizer is bit-identical to the current one — such a fire takes
+    * the recorded cold construction up front; at iterations >= 1 a
+    * warm Lloyd refinement sitting at its fixed point has the same
+    * cannot-move-skew property, detectable only after the fact — the
+    * fire re-measures skew and, when it did not drop, falls back to
+    * the recorded cold construction in the SAME call (reported as
+    * `warmFellBack`), so warmStart = true can never loop futile
+    * O(corpus) rebuilds on an append-skewed corpus. */
   def ivfIndexMaintain(spark: org.apache.spark.sql.SparkSession,
                        dir: String, corpus: DataFrame,
                        maxStaleness: Double = 0.5, maxSkew: Double = 4.0,
@@ -3257,6 +3054,13 @@ object Similarity {
       val k = spark.read.parquet(
         sidecarPath(spark, dir, "centroids.parquet", table)).count().toInt
       val q = qualityOf(spark, dir)
+      val pq =
+        if (table == "assigned.parquet") None
+        else {
+          val book = collectCodebook(spark.read.parquet(
+            sidecarPath(spark, dir, "pq_codebook.parquet", "codes.parquet")))
+          Some((book.length, book.head.length))
+        }
       // warm-start cannot serve a PURELY skew-driven fire when the
       // record's Lloyd count is 0: the warm quantizer is bit-identical
       // to the current one, so the rebuild cannot move skew and the
@@ -3264,99 +3068,34 @@ object Similarity {
       // subsequent append (round-19 review finding) — that fire takes
       // the recorded cold construction instead, whose re-derived
       // geometry CAN move skew. Staleness-driven fires stay warm: the
-      // re-encode is the point there, geometry movement is not.
-      val warm0 = warmStart &&
+      // re-encode is the point there, geometry movement is not. The
+      // auto chooser is never warm: re-running the recorded decision
+      // procedure IS the record, and it derives its own quantizer.
+      val warm0 = warmStart && q.encoding != "auto" &&
         !(skewFire && !staleFire && q.kmeansIterations == 0)
-      def warnGiven(): Unit = System.err.println(
-        "[graft-similarity] ivfIndexMaintain: index was built from a " +
-          "CALLER-SUPPLIED geometry (ivfIndexWriteWith/pqIndexWriteWith " +
-          "— seeding = \"given\"); its construction is not recorded, so " +
-          "this rebuild uses the deterministic stride form. To keep a " +
-          "quality build across maintenance, write through a recorded " +
-          "face (ivfIndexWriteReservoir / ivfIndexWriteKMeansParallel / " +
-          "pqIndexWrite*'s knobs) or rebuild explicitly.")
-      def fireRebuild(warm: Boolean): Unit =
-      if (table == "assigned.parquet") {
-        if (warm)
-          // warm-start (round 19): geometry (K) is unchanged by
-          // construction here, so seed the Lloyd refinement from the
-          // CURRENT centroids instead of re-running the recorded
-          // construction from scratch — typically fewer passes at
-          // equal quality (the centroids start near a fixed point).
-          // The quality record is written UNCHANGED: a later cold fire
-          // still replays the full construction. For a "given" record
-          // (iterations 0) this is exactly the frozen-geometry rebuild
-          // the index wants — no downgrade warning needed.
-          ivfIndexWriteWithQ(corpus, dir,
-            warmCentroids(spark, dir, corpus, q.kmeansIterations,
-              idCol, vecCol), idCol, vecCol, q)
-        else q.seeding match {
-          case "reservoir" =>
-            ivfIndexWriteReservoir(corpus, dir, k, q.seed, q.kmeansIterations,
-              idCol, vecCol)
-          case "kmeans_parallel" =>
-            ivfIndexWriteKMeansParallel(corpus, dir, k, q.rounds,
-              q.kmeansIterations, q.oversample, q.seed, idCol, vecCol)
-          case "given" =>
-            warnGiven()
-            ivfIndexWrite(corpus, dir, k, idCol, vecCol)
-          case _ =>
-            ivfIndexWrite(corpus, dir, k, idCol, vecCol, q.kmeansIterations)
-        }
-      } else {
-        val book = collectCodebook(spark.read.parquet(
-          sidecarPath(spark, dir, "pq_codebook.parquet", "codes.parquet")))
-        val (m, ksub) = (book.length, book.head.length)
-        if (q.seeding == "given" && !warm) warnGiven()
-        if (q.auto) {
-          // the auto chooser is excluded from warm-start by design:
-          // re-running the recorded decision procedure (raw vs
-          // residual) IS the record, and it derives its own quantizer
-          pqIndexWriteAuto(corpus, dir, k, m, ksub, idCol, vecCol,
-            q.kmeansIterations, q.pqKmeansIterations, q.pqChunkIds,
-            q.sampleMultiple)
-          ()
-        } else if (warm) {
-          val wc = warmCentroids(spark, dir, corpus, q.kmeansIterations,
-            idCol, vecCol)
-          if (residualFlagOf(spark, dir)) {
-            // warm quantizer collected once (round 20) — shared by the
-            // residual frame and the geometry write
-            val wcL = localCentroids(wc)
-            val res = residualRowsLocal(corpus, wcL, idCol, vecCol).cache()
-            try {
-              val bookR =
-                if (q.pqKmeansIterations > 0)
-                  pqCentroidsKMeans(res, m, ksub, q.pqKmeansIterations,
-                    "id", "vec", q.pqChunkIds)
-                else pqCentroids(res, m, ksub, "id", "vec")
-              writeResidualLayout(corpus, dir, wcL, res, bookR, q)
-            } finally { res.unpersist(); () }
-          } else {
-            val bookW =
-              if (q.pqKmeansIterations > 0)
-                pqCentroidsKMeans(corpus, m, ksub, q.pqKmeansIterations,
-                  idCol, vecCol, q.pqChunkIds)
-              else pqCentroids(corpus, m, ksub, idCol, vecCol)
-            pqIndexWriteWithQ(corpus, dir, wc, bookW, idCol, vecCol, q)
+      // a cold fire replays the record; a warm one keeps it UNCHANGED
+      // over the current centroids (for a "given" record at iterations
+      // 0: exactly the frozen-geometry rebuild, no downgrade warning)
+      def fireRebuild(warm: Boolean): Unit = {
+        val spec =
+          if (warm || q.seeding != "given") q
+          else {
+            System.err.println(
+              "[graft-similarity] ivfIndexMaintain: index was built from a " +
+                "CALLER-SUPPLIED geometry (ivfIndexWriteWith/pqIndexWriteWith " +
+                "— seeding = \"given\"); its construction is not recorded, " +
+                "so this rebuild uses the default IndexSpec() (stride). To " +
+                "keep a quality build across maintenance, build through " +
+                "ivfIndexWrite / pqIndexWrite with an IndexSpec, or rebuild " +
+                "explicitly.")
+            IndexSpec()
           }
-        } else q.seeding match {
-          // quality-seeded PQ faces are raw-encoded by construction
-          // (the recorded combination is the only one that can exist)
-          case "reservoir" =>
-            pqIndexWriteReservoir(corpus, dir, k, m, ksub, idCol, vecCol,
-              q.seed, q.kmeansIterations, q.pqKmeansIterations, q.pqChunkIds)
-          case "kmeans_parallel" =>
-            pqIndexWriteKMeansParallel(corpus, dir, k, m, ksub, idCol, vecCol,
-              q.rounds, q.kmeansIterations, q.oversample, q.seed,
-              q.pqKmeansIterations, q.pqChunkIds)
-          case _ =>
-            if (residualFlagOf(spark, dir))
-              pqIndexWriteResidual(corpus, dir, k, m, ksub, idCol, vecCol,
-                q.kmeansIterations, q.pqKmeansIterations, q.pqChunkIds)
-            else pqIndexWrite(corpus, dir, k, m, ksub, idCol, vecCol,
-              q.kmeansIterations, q.pqKmeansIterations, q.pqChunkIds)
-        }
+        val centroids =
+          if (warm) warmCentroids(spark, dir, corpus, q.kmeansIterations,
+            idCol, vecCol)
+          else coarseQuantizer(corpus, k, spec, idCol, vecCol)
+        buildIndex(corpus, dir, centroids, pq, idCol, vecCol, spec)
+        ()
       }
       fireRebuild(warm0)
       // a skew-only WARM fire must MOVE skew or it will re-fire an
@@ -3368,9 +3107,8 @@ object Similarity {
       // ADVICE): when the re-measured skew did not drop, fall back to
       // the recorded cold construction IN THIS FIRE, whose re-derived
       // geometry can move skew. One extra cache-warm skew poll per
-      // warm skew-only fire; auto records are excluded (their fire IS
-      // the cold decision procedure already).
-      if (warm0 && !q.auto && skewFire && !staleFire) {
+      // warm skew-only fire.
+      if (warm0 && skewFire && !staleFire) {
         val after = ivfIndexSkew(spark, dir)
         if (after.exists(a => sk.exists(b => a >= b))) {
           warmFellBack = true

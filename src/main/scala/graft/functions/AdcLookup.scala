@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * `ivfPqTopK` — the built-in composition
   * `aggregate(zip_with(codes, lut, (c, t) => element_at(t, c + 1)), ...)`
   * pays per-element interpreted lambdas and boxing on every candidate,
-  * which PqProbe measured at MORE CPU than the codegen'd 64-dim dot it
+  * which measured at MORE CPU than the codegen'd 64-dim dot it (SCALE.md)
   * replaces (the compression won IO but lost compute). Same shape as
   * [[DotProduct]]: a tight codegen'd loop plus a matching interpreted
   * `nullSafeEval`, summing in ascending subspace order — bit-identical

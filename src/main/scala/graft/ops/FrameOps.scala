@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Array-valued "frames" semantics (SURVEY.md §2.6, §2.8) — the densest
@@ -205,13 +204,5 @@ object FrameOps {
     val picked = df.groupBy(keyCols.map(col): _*)
       .agg(max_by(payload, ord).as("_row"))
     picked.select(df.columns.toSeq.map(c => picked.col(s"_row.$c").as(c)): _*)
-  }
-
-  /** O17 table-level — argmax per group via row_number window (used where
-    * the full winning row is needed and keys are few); prefer
-    * [[dedupKeepMax]]/max_by for large fact tables. */
-  def argmaxWindow(df: DataFrame, partCols: Seq[String], orderCols: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(partCols.map(col): _*).orderBy(orderCols: _*)
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 }

@@ -48,14 +48,6 @@ object MetaSync {
       .orderBy("year")
   }
 
-  /** P9 + R4 — all year-cursors for one content type, sorted by the year
-    * parsed from the key tail (reference: app/main.py:196-206). */
-  def yearCursors(cursors: DataFrame, contentType: String): DataFrame =
-    cursors
-      .filter(col("key").rlike(s"^years:$contentType:\\d+$$"))
-      .withColumn("year", Enrich.parseKeyYear(col("key")))
-      .orderBy("year")
-
   /** P11 + F3 + R3 — parse all `years:*` cursors into (content_type, year)
     * rows, skipping malformed keys, sorted by (content_type, year)
     * (reference: app/main.py:96-118). */

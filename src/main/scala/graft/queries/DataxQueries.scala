@@ -429,7 +429,7 @@ object DataxQueries {
     * centers; [[pqCtes]]' stride codebook encodes every vector and
     * [[IvfPqCoreCtes]]' pruned ADC probe scores against those centers.
     * This gates the served PQ layout's quality-seeding cell
-    * (`pqIndexWriteKMeansParallel` with Lloyd iterations = 0 →
+    * (`pqIndexWrite` with a kmeans|| `IndexSpec`, Lloyd iterations = 0 →
     * `ivfPqTopK`) end to end — the one face d09k/d09l left spec-only.
     *
     * Exactness: everything runs on the d09l-integerized vectors
@@ -457,7 +457,7 @@ object DataxQueries {
         ORDER BY query_id, rank"""
 
   /** The RESERVOIR-SEEDED IVF-PQ replay (d09n, round 19 — d09m's
-    * twin, closing the last spec-only quality write face): the d09e
+    * twin, closing the last spec-only quality seeding): the d09e
     * composition with the coarse quantizer swapped for the d09k
     * hash-coin reservoir (bottom-16 ids by `md5('42:res:' || id)` —
     * fixed-width lowercase hex, so Spark's numeric-parse order and
@@ -1611,7 +1611,7 @@ object DataxQueries {
     /* IVF-PQ APPEND (round 16) — maintenance parity for the serving
      * index the d09e scaladoc calls the standard 100 TB shape: built on
      * 80% of the corpus (the d09b residue-3 split), the remaining shard
-     * pqIndexAppend-ed — encoded with the STORED codebook, bucketed
+     * ivfIndexAppend-ed — encoded with the STORED codebook, bucketed
      * with the STORED centroids, O(shard) — and probed through the
      * merged partitioned layout. The oracle is the d09f closed form of
      * write(base) + append(shard) under frozen geometry: quantizer AND
@@ -1624,7 +1624,7 @@ object DataxQueries {
           val all = embT(s, dir)
           Similarity.pqIndexWrite(all.filter(col("vec_id") % 5 =!= 3),
             tmp, nCentroids = 16)
-          Similarity.pqIndexAppend(s, tmp,
+          Similarity.ivfIndexAppend(s, tmp,
             all.filter(col("vec_id") % 5 === 3))
           Similarity.ivfPqTopK(s, tmp,
               all.filter(col("vec_id") < 16), k = 5, nProbe = 4)
@@ -1643,7 +1643,7 @@ object DataxQueries {
      * rewrite, so the probe through base ∪ increment equals the d09f
      * frozen-geometry closed form over the full union (quantizer and
      * codebook from the base subset, every vector coded against them).
-     * A plain pqIndexAppend replay would double shard 1's rows and
+     * A plain ivfIndexAppend replay would double shard 1's rows and
      * diverge — the oracle would catch it. */
     QueryDef("d09j_ivfpq_append_batch",
       (s, dir) => {
@@ -1681,10 +1681,11 @@ object DataxQueries {
         val tmp = java.nio.file.Files.createTempDirectory("graft-d09k").toString
         try {
           val all = embT(s, dir)
-          // round 18: the RECORDED reservoir face (same seeds, same
+          // round 18: the RECORDED reservoir spec (same seeds, same
           // layout as the previous given-quantizer composition — and
           // build_meta now lets ivfIndexMaintain replay the seeding)
-          Similarity.ivfIndexWriteReservoir(all, tmp, nCentroids = 16)
+          Similarity.ivfIndexWrite(all, tmp, nCentroids = 16,
+            spec = Similarity.IndexSpec(seeding = "reservoir"))
           Similarity.ivfTopKIndexed(s, tmp,
               all.filter(col("vec_id") < 16), k = 5, nProbe = 4)
             .orderBy("query_id", "rank")
@@ -1714,7 +1715,7 @@ object DataxQueries {
       Some(KmeansParSeedsSql)),
 
     /* The QUALITY-SEEDED SERVED LAYOUT end to end (d09m, round 19 —
-     * the verdict's last spec-only face): pqIndexWriteKMeansParallel
+     * the verdict's last spec-only face): pqIndexWrite (kmeans|| spec)
      * persists the index with the kmeans|| seeds as the coarse
      * quantizer (Lloyd iterations = 0 — the seeds themselves serve,
      * so the d09l closed form replays them; the Lloyd-refined default
@@ -1730,8 +1731,9 @@ object DataxQueries {
             transform(col("embedding"),
               x => floor(x.cast("double") * lit(4))).as("embedding"))
             .localCheckpoint(eager = true)
-          Similarity.pqIndexWriteKMeansParallel(ints, tmp, nCentroids = 8,
-            rounds = 2, iterations = 0)
+          Similarity.pqIndexWrite(ints, tmp, nCentroids = 8,
+            spec = Similarity.IndexSpec(seeding = "kmeans_parallel",
+              rounds = 2, kmeansIterations = 0))
           Similarity.ivfPqTopK(s, tmp,
               ints.filter(col("vec_id") < 16), k = 5, nProbe = 4)
             .orderBy("query_id", "rank")
@@ -1741,19 +1743,20 @@ object DataxQueries {
       Some(QualityIvfPqSql)),
 
     /* The RESERVOIR-SEEDED SERVED LAYOUT end to end (d09n, round 19 —
-     * d09m's twin): pqIndexWriteReservoir persists the index with the
+     * d09m's twin): pqIndexWrite (reservoir spec) persists the index with the
      * hash-coin reservoir as the coarse quantizer (Lloyd iterations =
      * 0, the d09k closed form) and the stride PQ codebook; ivfPqTopK
      * probes the pruned layout. Raw doubles — the reservoir pick adds
      * no float accumulation, so the d09e exactness argument carries
-     * unchanged. With d09m this makes every recorded quality write
-     * face oracle-gated on the layout it serves. */
+     * unchanged. With d09m this makes every recorded quality seeding
+     * oracle-gated on the layout it serves. */
     QueryDef("d09n_ivfpq_reservoir",
       (s, dir) => {
         val tmp = java.nio.file.Files.createTempDirectory("graft-d09n").toString
         try {
           val all = embT(s, dir)
-          Similarity.pqIndexWriteReservoir(all, tmp, nCentroids = 16)
+          Similarity.pqIndexWrite(all, tmp, nCentroids = 16,
+            spec = Similarity.IndexSpec(seeding = "reservoir"))
           Similarity.ivfPqTopK(s, tmp,
               all.filter(col("vec_id") < 16), k = 5, nProbe = 4)
             .orderBy("query_id", "rank")
@@ -1838,7 +1841,8 @@ object DataxQueries {
         val tmp = java.nio.file.Files.createTempDirectory("graft-d09i").toString
         try {
           val all = embT(s, dir)
-          Similarity.pqIndexWriteResidual(all, tmp, nCentroids = 16)
+          Similarity.pqIndexWrite(all, tmp, nCentroids = 16,
+            spec = Similarity.IndexSpec(encoding = "residual"))
           Similarity.ivfPqTopK(s, tmp,
               all.filter(col("vec_id") < 16), k = 5, nProbe = 4)
             .orderBy("query_id", "rank")

@@ -53,9 +53,9 @@ import graft.datax.{Dedup, Similarity}
   * the [[Similarity.ivfIndexStaleness]] / `ivfIndexSkew` triggers — a
   * rebuild folds the increment rows into the new base and clears the
   * sibling. Without `servingDir` the loop behaves as before: feed
-  * survivors downstream under your own discipline (the plain
-  * [[Similarity.ivfIndexAppend]] / `pqIndexAppend` faces remain the
-  * at-most-once path).
+  * survivors downstream under your own discipline (the plain,
+  * layout-aware [[Similarity.ivfIndexAppend]] remains the at-most-once
+  * path, on both layouts).
   *
   * (tables, planesPerTable) have NO default (round-16 review finding):
   * LSH geometry must be sized for the EVENTUAL index, not a fixture —

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.datax.{Dedup, Similarity, TextStats}
+import graft.datax.Similarity.IndexSpec
 
 /** Semantics specs for the scale-pipeline operators (dedup / similarity /
   * text analysis) — the behaviors the DuckDB oracle cannot express
@@ -1126,7 +1127,7 @@ class DataxSpec extends AnyFunSuite {
     val dir2 = java.nio.file.Files.createTempDirectory("graft-pqreb").toString
     try {
       Similarity.pqIndexWrite(base, dir, nCentroids = 16)
-      Similarity.pqIndexAppend(spark, dir, shard)
+      Similarity.ivfIndexAppend(spark, dir, shard)
       val queries = emb.filter($"vec_id" < 16)
       val appended = Similarity.ivfPqTopK(spark, dir, queries, k = 5, nProbe = 4)
       // the pin: append changes bucket contents and code rows, never
@@ -1560,7 +1561,8 @@ class DataxSpec extends AnyFunSuite {
       // explicit fresh build carries that forward, so a late replay of
       // an absorbed batch can never double-count); NEW data in an
       // existing dir takes fresh ids, as streaming epochs do
-      Similarity.pqIndexWriteResidual(base, dir, nCentroids = 16)
+      Similarity.pqIndexWrite(base, dir, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual"))
       Similarity.ivfIndexAppendBatch(spark, dir, shard, 1L)
       val viaSkew = Similarity.ivfIndexMaintain(spark, dir, emb,
         maxStaleness = Double.MaxValue, maxSkew = 1.0)
@@ -1639,26 +1641,16 @@ class DataxSpec extends AnyFunSuite {
     }
   }
 
-  test("serving-index misuse fails loudly: pqIndexAppend on a plain layout; probing an empty flag-era build_meta") {
+  test("serving-index misuse fails loudly: probing an empty flag-era build_meta") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select("vec_id", "embedding")
-    val dirP = java.nio.file.Files.createTempDirectory("graft-loudp").toString
     val dirR = java.nio.file.Files.createTempDirectory("graft-loudr").toString
     try {
-      // a plain-IVF dir has no codes: the PQ append must refuse, not
-      // write assign rows into a codes.parquet sibling every probe
-      // would silently ignore (round-17 review finding)
-      Similarity.ivfIndexWrite(emb.filter($"vec_id" % 5 =!= 3), dirP,
-        nCentroids = 16)
-      val ex = intercept[IllegalArgumentException] {
-        Similarity.pqIndexAppend(spark, dirP, emb.filter($"vec_id" % 5 === 3))
-      }
-      assert(ex.getMessage.contains("plain ivfIndexWrite layout"),
-        s"got: ${ex.getMessage}")
       // a flag-era meta with NO row (crashed partial overwrite): the
       // codes' encoding is unknowable — named error, never a silent
       // raw probe of residual codes
-      Similarity.pqIndexWriteResidual(emb, dirR, nCentroids = 16)
+      Similarity.pqIndexWrite(emb, dirR, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual"))
       Seq.empty[(Long, Int, Int, Boolean)]
         .toDF("built_n", "m", "ksub", "residual")
         .write.mode("overwrite").parquet(
@@ -1669,7 +1661,7 @@ class DataxSpec extends AnyFunSuite {
       }
       assert(ex2.getMessage.contains("no residual flag row"),
         s"got: ${ex2.getMessage}")
-    } finally Seq(dirP, dirR).foreach { d =>
+    } finally Seq(dirR).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     }
@@ -1692,9 +1684,11 @@ class DataxSpec extends AnyFunSuite {
     val dirN = java.nio.file.Files.createTempDirectory("graft-auton").toString
     val dirN2 = java.nio.file.Files.createTempDirectory("graft-auton2").toString
     try {
-      assert(Similarity.pqIndexWriteAuto(clustered, dirC, nCentroids = 64),
+      assert(Similarity.pqIndexWrite(clustered, dirC, nCentroids = 64,
+        spec = IndexSpec(encoding = "auto")),
         "clustered corpus: auto must pick residual")
-      assert(!Similarity.pqIndexWriteAuto(emb, dirN, nCentroids = 16),
+      assert(!Similarity.pqIndexWrite(emb, dirN, nCentroids = 16,
+        spec = IndexSpec(encoding = "auto")),
         "near-orthogonal noise: auto must pick raw")
       // build_meta records the choice — the index stays self-describing
       assert(spark.read.parquet(
@@ -1705,7 +1699,8 @@ class DataxSpec extends AnyFunSuite {
         .select("residual").head().getBoolean(0))
       // and the written layout IS the explicit face's, probe-identical
       val qC = clustered.filter($"vec_id" < 8)
-      Similarity.pqIndexWriteResidual(clustered, dirC2, nCentroids = 64)
+      Similarity.pqIndexWrite(clustered, dirC2, nCentroids = 64,
+        spec = IndexSpec(encoding = "residual"))
       assert(Similarity.ivfPqTopK(spark, dirC, qC, k = 3, nProbe = 4)
           .orderBy("query_id", "rank").collect().toSeq
         == Similarity.ivfPqTopK(spark, dirC2, qC, k = 3, nProbe = 4)
@@ -1732,7 +1727,7 @@ class DataxSpec extends AnyFunSuite {
       // the Lloyd-refined codebook path is deterministic (ordered
       // folds), so the knob must be EXACTLY the manual composition
       Similarity.pqIndexWrite(emb, dir1, nCentroids = 16,
-        pqKmeansIterations = 2)
+        spec = IndexSpec(pqKmeansIterations = 2))
       Similarity.pqIndexWriteWith(emb, dir2,
         Similarity.ivfIndex(emb, nCentroids = 16)._1,
         Similarity.pqCentroidsKMeans(emb, iterations = 2))
@@ -1746,7 +1741,7 @@ class DataxSpec extends AnyFunSuite {
       val dir3 = java.nio.file.Files.createTempDirectory("graft-pqk3").toString
       try {
         Similarity.pqIndexWrite(emb, dir3, nCentroids = 16,
-          kmeansIterations = 1, pqKmeansIterations = 1)
+          spec = IndexSpec(kmeansIterations = 1, pqKmeansIterations = 1))
         val c = Similarity.ivfPqTopK(spark, dir3, queries, k = 5, nProbe = 4)
         assert(c.count() == 8L * 5)
       } finally {
@@ -1824,7 +1819,8 @@ class DataxSpec extends AnyFunSuite {
     val df16 = base.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-pqres").toString
     try {
-      Similarity.pqIndexWriteResidual(df16, dir, nCentroids = 4)
+      Similarity.pqIndexWrite(df16, dir, nCentroids = 4,
+        spec = IndexSpec(encoding = "residual"))
       val query = Seq((200L, base(3)._2)).toDF("vec_id", "embedding")
       val top1 = Similarity.ivfPqTopK(spark, dir, query, k = 1, nProbe = 4)
         .select("id", "adc_dist").as[(Long, Double)].collect()
@@ -1835,7 +1831,7 @@ class DataxSpec extends AnyFunSuite {
       // flag is the index's, not the caller's): an appended exact copy
       // lands at adc 0 too; a raw-encoded shard would score garbage
       val shard = Seq((300L, base(3)._2)).toDF("vec_id", "embedding")
-      Similarity.pqIndexAppend(spark, dir, shard)
+      Similarity.ivfIndexAppend(spark, dir, shard)
       val top2 = Similarity.ivfPqTopK(spark, dir, query, k = 2, nProbe = 4)
         .select("rank", "id", "adc_dist").as[(Int, Long, Double)].collect()
         .sortBy(_._1)
@@ -2244,7 +2240,8 @@ class DataxSpec extends AnyFunSuite {
     try {
       // end-to-end: the chooser trains both books and writes a servable
       // index (before the anchor this failed before the chooser ran)
-      Similarity.pqIndexWriteAuto(emb, dir, nCentroids = 16)
+      Similarity.pqIndexWrite(emb, dir, nCentroids = 16,
+        spec = IndexSpec(encoding = "auto"))
       val queries = emb.filter($"vec_id" < 32)
       val res = Similarity.ivfPqTopK(spark, dir, queries, k = 5, nProbe = 4)
       assert(res.groupBy("query_id").count()
@@ -2264,109 +2261,112 @@ class DataxSpec extends AnyFunSuite {
     val base = emb.filter($"vec_id" % 2 === 0)
     val shard = emb.filter($"vec_id" % 2 === 1) // staleness 1.0 -> fires
     val queries = emb.filter($"vec_id" < 8)
-    def probeIvf(d: String) = Similarity.ivfTopKIndexed(spark, d, queries,
-      k = 5, nProbe = 4).orderBy("query_id", "rank").collect().toSeq
-    def probePq(d: String) = Similarity.ivfPqTopK(spark, d, queries,
-      k = 5, nProbe = 4).orderBy("query_id", "rank").collect().toSeq
-    def seedingOf(d: String) = spark.read.parquet(
-        Similarity.sidecarPath(spark, d, "build_meta.parquet"))
-      .select("seeding").head().getString(0)
-    def tmp() = java.nio.file.Files.createTempDirectory("graft-qmaint").toString
+    def probe(pq: Boolean, d: String) =
+      (if (pq) Similarity.ivfPqTopK(spark, d, queries, k = 5, nProbe = 4)
+       else Similarity.ivfTopKIndexed(spark, d, queries, k = 5, nProbe = 4))
+        .orderBy("query_id", "rank").collect().toSeq
+    def metaOf(d: String) = spark.read.parquet(
+      Similarity.sidecarPath(spark, d, "build_meta.parquet"))
+    val qualityCols = Seq("seeding", "kmeans_iterations", "seed_rounds",
+      "seed_oversample", "seed", "pq_kmeans_iterations", "pq_chunk_ids",
+      "auto", "sample_multiple")
+    def recorded(s: IndexSpec) = Row(s.seeding, s.kmeansIterations,
+      s.rounds, s.oversample, s.seed, s.pqKmeansIterations, s.pqChunkIds,
+      s.encoding == "auto", s.sampleMultiple)
     val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    def fresh() = { val d = tmp(); dirs += d; d }
-    try {
-      // KMEANS||-seeded plain index: the maintenance rebuild must BE a
-      // kmeans|| rebuild of the full corpus, not a stride downgrade
-      val km = fresh(); val kmExplicit = fresh()
-      Similarity.ivfIndexWriteKMeansParallel(base, km, nCentroids = 16)
-      assert(seedingOf(km) == "kmeans_parallel")
-      Similarity.ivfIndexAppendBatch(spark, km, shard, 0L)
-      assert(Similarity.ivfIndexMaintain(spark, km, emb).rebuilt)
-      Similarity.ivfIndexWriteKMeansParallel(emb, kmExplicit, nCentroids = 16)
-      assert(probeIvf(km) == probeIvf(kmExplicit),
-        "maintenance must replay the kmeans|| construction exactly")
-      assert(seedingOf(km) == "kmeans_parallel",
-        "the quality record must survive its own replay")
-      // RESERVOIR-seeded
-      val res = fresh(); val resExplicit = fresh()
-      Similarity.ivfIndexWriteReservoir(base, res, nCentroids = 16)
-      assert(seedingOf(res) == "reservoir")
-      Similarity.ivfIndexAppendBatch(spark, res, shard, 0L)
-      assert(Similarity.ivfIndexMaintain(spark, res, emb).rebuilt)
-      Similarity.ivfIndexWriteReservoir(emb, resExplicit, nCentroids = 16)
-      assert(probeIvf(res) == probeIvf(resExplicit),
-        "maintenance must replay the reservoir seeding exactly")
-      // AUTO-chosen IVF-PQ index: maintenance re-runs the chooser (the
-      // recorded decision PROCEDURE — drift can move the regime)
-      val auto = fresh(); val autoExplicit = fresh()
-      Similarity.pqIndexWriteAuto(base, auto, nCentroids = 16)
-      Similarity.ivfIndexAppendBatch(spark, auto, shard, 0L)
-      assert(Similarity.ivfIndexMaintain(spark, auto, emb).rebuilt)
-      Similarity.pqIndexWriteAuto(emb, autoExplicit, nCentroids = 16)
-      assert(probePq(auto) == probePq(autoExplicit),
-        "maintenance must re-run the auto chooser over the full corpus")
-      assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, auto, "build_meta.parquet"))
-        .select("auto").head().getBoolean(0),
-        "the auto flag must survive the replay")
-      // round 19 (ADVICE): a NON-DEFAULT chooser sample width rides
-      // build_meta and the replay re-runs the chooser at that width —
-      // a default-width replay could flip raw-vs-residual differently
-      def smOf(d: String) = spark.read.parquet(
-          Similarity.sidecarPath(spark, d, "build_meta.parquet"))
-        .select("sample_multiple").head().getInt(0)
-      assert(smOf(auto) == 8, "the default width is recorded too")
-      val autoW = fresh(); val autoWExplicit = fresh()
-      Similarity.pqIndexWriteAuto(base, autoW, nCentroids = 16,
-        sampleMultiple = 2)
-      assert(smOf(autoW) == 2)
-      Similarity.ivfIndexAppendBatch(spark, autoW, shard, 0L)
-      assert(Similarity.ivfIndexMaintain(spark, autoW, emb).rebuilt)
-      assert(smOf(autoW) == 2,
-        "the chooser width must survive its own replay")
-      Similarity.pqIndexWriteAuto(emb, autoWExplicit, nCentroids = 16,
-        sampleMultiple = 2)
-      assert(probePq(autoW) == probePq(autoWExplicit),
-        "maintenance must re-run the chooser at the RECORDED width")
-      // PQ-layout quality cells (round 18): the recorded seeding
-      // round-trips through maintenance on the SERVED layout too
-      val pqkm = fresh(); val pqkmExplicit = fresh()
-      Similarity.pqIndexWriteKMeansParallel(base, pqkm, nCentroids = 16)
-      assert(seedingOf(pqkm) == "kmeans_parallel")
-      Similarity.ivfIndexAppendBatch(spark, pqkm, shard, 0L)
-      assert(Similarity.ivfIndexMaintain(spark, pqkm, emb).rebuilt)
-      Similarity.pqIndexWriteKMeansParallel(emb, pqkmExplicit, nCentroids = 16)
-      assert(probePq(pqkm) == probePq(pqkmExplicit),
-        "PQ maintenance must replay the kmeans|| coarse quantizer")
-      assert(seedingOf(pqkm) == "kmeans_parallel")
-      val pqres = fresh(); val pqresExplicit = fresh()
-      Similarity.pqIndexWriteReservoir(base, pqres, nCentroids = 16)
-      assert(seedingOf(pqres) == "reservoir")
-      Similarity.ivfIndexAppendBatch(spark, pqres, shard, 0L)
-      assert(Similarity.ivfIndexMaintain(spark, pqres, emb).rebuilt)
-      Similarity.pqIndexWriteReservoir(emb, pqresExplicit, nCentroids = 16)
-      assert(probePq(pqres) == probePq(pqresExplicit),
-        "PQ maintenance must replay the reservoir coarse quantizer")
-      // GIVEN-quantizer index: construction unknown -> loud stderr warn
-      // + the stride rebuild (the documented downgrade)
-      val giv = fresh(); val givExplicit = fresh()
-      Similarity.ivfIndexWriteWith(base, giv,
-        Similarity.ivfIndex(base, nCentroids = 16)._1)
-      assert(seedingOf(giv) == "given")
-      Similarity.ivfIndexAppendBatch(spark, giv, shard, 0L)
+    def fresh() = {
+      val d = java.nio.file.Files.createTempDirectory("graft-qmaint").toString
+      dirs += d; d
+    }
+    // every reachable spec cell: (layout, spec), None = the given-
+    // quantizer face (construction unknown -> loud stderr warn + the
+    // default-spec rebuild, the documented downgrade)
+    val cells: Seq[(Boolean, Option[IndexSpec])] = Seq(
+      (false, Some(IndexSpec())),
+      (false, Some(IndexSpec(seeding = "reservoir"))),
+      (false, Some(IndexSpec(seeding = "kmeans_parallel",
+        kmeansIterations = 2))),
+      (false, None),
+      (true, Some(IndexSpec())),
+      (true, Some(IndexSpec(seeding = "reservoir"))),
+      (true, Some(IndexSpec(seeding = "kmeans_parallel",
+        kmeansIterations = 2))),
+      (true, None),
+      (true, Some(IndexSpec(encoding = "residual"))),
+      // the auto record re-runs the chooser (the recorded decision
+      // PROCEDURE — drift can move the regime), at the RECORDED width
+      (true, Some(IndexSpec(encoding = "auto"))),
+      (true, Some(IndexSpec(encoding = "auto", sampleMultiple = 2))),
+      // residual + Lloyd on both halves, chunked codebook fold
+      (true, Some(IndexSpec(encoding = "residual", kmeansIterations = 1,
+        pqKmeansIterations = 1, pqChunkIds = 64L))))
+    try cells.foreach { case (pq, spec) =>
+      val cell = s"${if (pq) "pq" else "ivf"} ${spec.getOrElse("given")}"
+      val d = fresh(); val explicit = fresh()
+      spec match {
+        case Some(s) if pq => Similarity.pqIndexWrite(base, d, spec = s)
+        case Some(s) => Similarity.ivfIndexWrite(base, d, 16, spec = s)
+        case None if pq => Similarity.pqIndexWriteWith(base, d,
+          Similarity.ivfIndex(base, nCentroids = 16)._1,
+          Similarity.pqCentroids(base))
+        case None => Similarity.ivfIndexWriteWith(base, d,
+          Similarity.ivfIndex(base, nCentroids = 16)._1)
+      }
+      assert(metaOf(d).select(qualityCols.map(col): _*).head() ==
+        recorded(spec.getOrElse(IndexSpec(seeding = "given"))),
+        s"$cell: the build must record its spec verbatim")
+      Similarity.ivfIndexAppendBatch(spark, d, shard, 0L)
       val errBuf = new java.io.ByteArrayOutputStream()
       val oldErr = System.err
       System.setErr(new java.io.PrintStream(errBuf, true))
-      val mg = try Similarity.ivfIndexMaintain(spark, giv, emb)
+      val m = try Similarity.ivfIndexMaintain(spark, d, emb)
         finally System.setErr(oldErr)
-      assert(mg.rebuilt)
-      assert(errBuf.toString.contains("CALLER-SUPPLIED"),
-        s"the downgrade must warn loudly, got: ${errBuf.toString.take(400)}")
-      Similarity.ivfIndexWrite(emb, givExplicit, nCentroids = 16)
-      assert(probeIvf(giv) == probeIvf(givExplicit),
-        "the given-quantizer rebuild is the stride form")
+      assert(m.rebuilt, cell)
+      assert(errBuf.toString.contains("CALLER-SUPPLIED") == spec.isEmpty,
+        s"$cell: only the given record warns, got: ${errBuf.toString.take(400)}")
+      val replayed = spec.getOrElse(IndexSpec())
+      if (pq) Similarity.pqIndexWrite(emb, explicit, spec = replayed)
+      else Similarity.ivfIndexWrite(emb, explicit, 16, spec = replayed)
+      assert(metaOf(d).head() == metaOf(explicit).head(),
+        s"$cell: the replay's whole build_meta row must equal the explicit build's")
+      assert(probe(pq, d) == probe(pq, explicit),
+        s"$cell: maintenance must replay the recorded construction exactly")
     } finally dirs.foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
+  }
+
+  test("IndexSpec admits only reachable builds: an unreachable seeding x " +
+       "encoding cell and PQ-only fields on the plain layout raise") {
+    Seq(() => IndexSpec(seeding = "reservoir", encoding = "residual"),
+        () => IndexSpec(seeding = "kmeans_parallel", encoding = "auto"),
+        () => IndexSpec(seeding = "given", kmeansIterations = 2),
+        () => IndexSpec(seeding = "stride", seed = 7L),
+        () => IndexSpec(encoding = "raw", sampleMultiple = 2),
+        () => IndexSpec(seeding = "lloyd")).foreach { mk =>
+      val ex = intercept[IllegalArgumentException](mk())
+      assert(ex.getMessage.contains("is not a buildable index"),
+        s"got: ${ex.getMessage}")
+    }
+    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+      .select("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft-specreq").toString
+    try {
+      Seq(IndexSpec(encoding = "residual"), IndexSpec(pqKmeansIterations = 1),
+          IndexSpec(pqChunkIds = 8L)).foreach { spec =>
+        val ex = intercept[IllegalArgumentException](
+          Similarity.ivfIndexWrite(emb, dir, 16, spec = spec))
+        assert(ex.getMessage.contains("PQ-only"), s"got: ${ex.getMessage}")
+      }
+      val ex = intercept[IllegalArgumentException](Similarity.pqIndexWrite(
+        emb, dir, spec = IndexSpec(seeding = "given")))
+      assert(ex.getMessage.contains("pqIndexWriteWith"), s"got: ${ex.getMessage}")
+      assert(!new java.io.File(dir, "assigned.parquet").exists() &&
+        !new java.io.File(dir, "codes.parquet").exists(),
+        "a rejected spec must not write anything")
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     }
   }
@@ -2405,7 +2405,8 @@ class DataxSpec extends AnyFunSuite {
     try {
       // PQ quality build + appended shard: the fire shape under test
       val a = fresh()
-      Similarity.pqIndexWriteKMeansParallel(base, a, nCentroids = 16)
+      Similarity.pqIndexWrite(base, a, nCentroids = 16,
+        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 2))
       Similarity.ivfIndexAppendBatch(spark, a, shard, 0L)
       val b = clone(a) // identical starting state
       assert(Similarity.ivfIndexMaintain(spark, a, emb,
@@ -2422,7 +2423,8 @@ class DataxSpec extends AnyFunSuite {
       Similarity.ivfIndexAppendBatch(spark, a, shard, 1L)
       assert(Similarity.ivfIndexMaintain(spark, a, emb).rebuilt)
       val aExplicit = fresh()
-      Similarity.pqIndexWriteKMeansParallel(emb, aExplicit, nCentroids = 16)
+      Similarity.pqIndexWrite(emb, aExplicit, nCentroids = 16,
+        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 2))
       assert(probePq(a) == probePq(aExplicit),
         "the record survives warm fires: cold replay is the full construction")
       // zero-Lloyd record on the PLAIN layout: the warm fire keeps the
@@ -2433,8 +2435,8 @@ class DataxSpec extends AnyFunSuite {
       // legitimately moves ADC scores; its pins are the deterministic
       // A/B and record-preservation above.)
       val z = fresh()
-      Similarity.ivfIndexWriteKMeansParallel(base, z, nCentroids = 16,
-        iterations = 0)
+      Similarity.ivfIndexWrite(base, z, nCentroids = 16,
+        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 0))
       Similarity.ivfIndexAppendBatch(spark, z, shard, 0L)
       val before = probeIvf(z)
       assert(Similarity.ivfIndexMaintain(spark, z, emb,
@@ -2448,15 +2450,15 @@ class DataxSpec extends AnyFunSuite {
       // would re-fire per append forever — the fire takes the recorded
       // cold construction instead
       val s0 = fresh(); val s0Explicit = fresh()
-      Similarity.ivfIndexWriteKMeansParallel(base, s0, nCentroids = 16,
-        iterations = 0)
+      Similarity.ivfIndexWrite(base, s0, nCentroids = 16,
+        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 0))
       Similarity.ivfIndexAppendBatch(spark, s0, shard, 0L)
       val ms = Similarity.ivfIndexMaintain(spark, s0, emb,
         maxStaleness = 1e9, maxSkew = 1.01, warmStart = true)
       assert(ms.rebuilt && ms.staleness.exists(_ < 1e9),
         "the fixture must fire on skew alone")
-      Similarity.ivfIndexWriteKMeansParallel(emb, s0Explicit, nCentroids = 16,
-        iterations = 0)
+      Similarity.ivfIndexWrite(emb, s0Explicit, nCentroids = 16,
+        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 0))
       assert(probeIvf(s0) == probeIvf(s0Explicit),
         "a skew-only fire on a 0-iteration record runs the COLD " +
           "construction (fresh kmeans|| seeds over the full corpus)")
@@ -2517,11 +2519,11 @@ class DataxSpec extends AnyFunSuite {
       // refines): the codebook trains on the corpus's raw vectors on
       // BOTH paths — identical inputs, identical deterministic
       // training, identical book. Equal encode error follows without a
-      // tolerance (WarmQualityProbe measured the same bit-equality at
+      // tolerance (SCALE.md records the same bit-equality measured at
       // sf0.1 and a 10x ScaleData corpus, with recall parity).
       val w = fresh()
-      Similarity.pqIndexWriteKMeansParallel(base, w, nCentroids = 16,
-        iterations = 2)
+      Similarity.pqIndexWrite(base, w, nCentroids = 16,
+        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 2))
       Similarity.ivfIndexAppendBatch(spark, w, shard, 0L)
       val c = clone(w)
       assert(Similarity.ivfIndexMaintain(spark, w, emb,
@@ -2539,8 +2541,8 @@ class DataxSpec extends AnyFunSuite {
       // flips it anyway (deterministic fixture => fixed ratio; 1.25 is
       // headroom for fixture regeneration, not run-to-run noise)
       val rw = fresh()
-      Similarity.pqIndexWriteResidual(base, rw, nCentroids = 16,
-        kmeansIterations = 2)
+      Similarity.pqIndexWrite(base, rw, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual", kmeansIterations = 2))
       Similarity.ivfIndexAppendBatch(spark, rw, shard, 0L)
       val rc = clone(rw)
       assert(Similarity.ivfIndexMaintain(spark, rw, emb,
@@ -2595,8 +2597,9 @@ class DataxSpec extends AnyFunSuite {
     val dirS = java.nio.file.Files.createTempDirectory("graft-futileS").toString
     val dirX = java.nio.file.Files.createTempDirectory("graft-futileX").toString
     try {
-      Similarity.ivfIndexWriteReservoir(corpus, dir, nCentroids = 4,
-        seed = 42L, iterations = 6)
+      Similarity.ivfIndexWrite(corpus, dir, nCentroids = 4,
+        spec = IndexSpec(seeding = "reservoir", seed = 42L,
+          kmeansIterations = 6))
       Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L)
       // SKEW-ONLY warm fire: the warm quantizer reproduces the converged
       // partition exactly, skew cannot drop — the fallback must fire the
@@ -2608,8 +2611,9 @@ class DataxSpec extends AnyFunSuite {
         s"a fixed-point warm fire must fall back to the cold record: $m")
       // the fallback IS the recorded construction: identical to the
       // explicit reservoir build over the full corpus
-      Similarity.ivfIndexWriteReservoir(full, dirX, nCentroids = 4,
-        seed = 42L, iterations = 6)
+      Similarity.ivfIndexWrite(full, dirX, nCentroids = 4,
+        spec = IndexSpec(seeding = "reservoir", seed = 42L,
+          kmeansIterations = 6))
       val queries = corpus.filter($"vec_id" < 8)
       def probe(d: String) = Similarity.ivfTopKIndexed(spark, d, queries,
         k = 5, nProbe = 2).orderBy("query_id", "rank").collect().toSeq
@@ -2635,8 +2639,9 @@ class DataxSpec extends AnyFunSuite {
       // a STALENESS-driven warm fire keeps the warm path (re-encode is
       // the point there; geometry movement is not) — no fallback even
       // though this corpus's warm quantizer is equally immobile
-      Similarity.ivfIndexWriteReservoir(corpus, dirS, nCentroids = 4,
-        seed = 42L, iterations = 6)
+      Similarity.ivfIndexWrite(corpus, dirS, nCentroids = 4,
+        spec = IndexSpec(seeding = "reservoir", seed = 42L,
+          kmeansIterations = 6))
       Similarity.ivfIndexAppendBatch(spark, dirS, shard, 0L)
       val mS = Similarity.ivfIndexMaintain(spark, dirS, full,
         maxStaleness = 0.4, maxSkew = 1e9, warmStart = true)
@@ -2835,7 +2840,8 @@ class DataxSpec extends AnyFunSuite {
     try {
       // reconstruct the legacy layout exactly: build fresh, then move
       // the in-table sidecars out to the pre-round-20 sibling paths
-      Similarity.pqIndexWriteResidual(emb, dir, nCentroids = 16)
+      Similarity.pqIndexWrite(emb, dir, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual"))
       Seq("centroids.parquet", "pq_codebook.parquet", "build_meta.parquet")
         .foreach { n =>
           assert(fs.rename(p(s"codes.parquet/_graft/$n"), p(n)),
@@ -2991,8 +2997,10 @@ class DataxSpec extends AnyFunSuite {
       Similarity.pqIndexWrite(emb, dir, nCentroids = 16)
       val raw = probePq(dir, queries)
       assert(probePq(dir, queries) == raw, "a repeated probe of one build is stable")
-      Similarity.pqIndexWriteResidual(emb, dir, nCentroids = 16)
-      Similarity.pqIndexWriteResidual(emb, freshRes, nCentroids = 16)
+      Similarity.pqIndexWrite(emb, dir, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual"))
+      Similarity.pqIndexWrite(emb, freshRes, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual"))
       val residual = probePq(dir, queries)
       assert(residual == probePq(freshRes, queries),
         "the probe after a rebuild in place must equal a fresh dir's")
@@ -3035,7 +3043,8 @@ class DataxSpec extends AnyFunSuite {
     val emb = geoEmb
     val queries = emb.filter($"vec_id" < 8)
     withTempDirs("graft-geo-meta") { case Seq(dir) =>
-      Similarity.pqIndexWriteResidual(emb, dir, nCentroids = 16)
+      Similarity.pqIndexWrite(emb, dir, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual"))
       val good = probePq(dir, queries)
       Seq.empty[(Long, Int, Int, Boolean)]
         .toDF("built_n", "m", "ksub", "residual")
@@ -3046,7 +3055,8 @@ class DataxSpec extends AnyFunSuite {
         assert(ex.getMessage.contains("no residual flag row"), s"probe $i got: ${ex.getMessage}")
       }
       // a rebuild heals the meta and serves the same build again
-      Similarity.pqIndexWriteResidual(emb, dir, nCentroids = 16)
+      Similarity.pqIndexWrite(emb, dir, nCentroids = 16,
+        spec = IndexSpec(encoding = "residual"))
       assert(probePq(dir, queries) == good)
     }
   }
@@ -3057,8 +3067,10 @@ class DataxSpec extends AnyFunSuite {
     withTempDirs("graft-geo-ivfr", "graft-geo-ivff") { case Seq(dir, fresh) =>
       Similarity.ivfIndexWrite(emb, dir, nCentroids = 16)
       val first = probeIvf(dir, queries)
-      Similarity.ivfIndexWrite(emb, dir, nCentroids = 8, kmeansIterations = 2)
-      Similarity.ivfIndexWrite(emb, fresh, nCentroids = 8, kmeansIterations = 2)
+      Similarity.ivfIndexWrite(emb, dir, nCentroids = 8,
+        spec = IndexSpec(kmeansIterations = 2))
+      Similarity.ivfIndexWrite(emb, fresh, nCentroids = 8,
+        spec = IndexSpec(kmeansIterations = 2))
       val rebuilt = probeIvf(dir, queries)
       assert(rebuilt == probeIvf(fresh, queries),
         "the probe after a rebuild in place must equal a fresh dir's")
