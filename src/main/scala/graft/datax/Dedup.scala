@@ -128,9 +128,9 @@ object Dedup {
     * sidecar the incremental-dedup loop keeps alongside the documents
     * (bucketed/partitioned by (band, bsig) on a lakehouse) so an
     * increment never recomputes corpus-side signatures
-    * ([[incrementalNearDupsPrebanded]]). `bands` rows per document,
-    * regardless of document size. Uncached: the one consumer is the
-    * sidecar write. */
+    * ([[incrementalNearDups]] with `indexBands`). `bands` rows per
+    * document, regardless of document size. Uncached: the one consumer
+    * is the sidecar write. */
   def bandSignatures(docs: DataFrame, idCol: String, textCol: String,
                      k: Int = 4, numHashes: Int = 16,
                      bands: Int = 4): DataFrame = {
@@ -148,58 +148,90 @@ object Dedup {
   private def sidecarParams(k: Int, numHashes: Int, bands: Int): String =
     s"k=$k,h=$numHashes,b=$bands"
 
-  /** Fail fast when a stored band table's parameters disagree with the
-    * increment call's. Tolerates tables without the params column
-    * (hand-built). Validates EVERY distinct params value, not a sampled
-    * row: a sidecar accumulated across stream restarts with changed
-    * parameters holds mixed values, and a one-row probe could match the
-    * current call while other partitions mismatch — silently finding
-    * zero candidates for those partitions and admitting near-dups, the
-    * exact failure this column exists to prevent. The distinct is one
-    * partial-aggregated pass over a single string column (a handful of
-    * rows in any non-broken sidecar). */
-  private def validateBandSidecar(ib: DataFrame, k: Int, numHashes: Int,
-                                  bands: Int): Unit =
-    if (ib.columns.contains("params")) {
-      val expect = sidecarParams(k, numHashes, bands)
+  /** What a stored band sidecar must agree with to stand in for the
+    * index side of an increment: its bucket-key columns, the params
+    * value the call would stamp, the name errors call it by, and —
+    * when a sidecar without a params column cannot be trusted — the
+    * message rejecting it (None: such a table passes unchecked). */
+  private case class BandContract(keys: Seq[String], expect: String,
+                                  label: String,
+                                  missingParams: Option[String])
+
+  /** Text sidecars ([[bandSignatures]]); a params-less table passes
+    * (hand-built). */
+  private def textContract(k: Int, numHashes: Int, bands: Int): BandContract =
+    BandContract(Seq("band", "bsig"), sidecarParams(k, numHashes, bands),
+      "index band table", None)
+
+  /** Vector sidecars ([[embeddingBandSignatures]]). The params column is
+    * REQUIRED (round 15): `dim` participates in the bucket contract —
+    * the sidecar form can only probe dim from the BATCH, so a
+    * params-less sidecar built in a different vector space would
+    * silently bucket nothing in common and admit every near-dup. */
+  private def embContract(tables: Int, planes: Int, dim: Int): BandContract =
+    BandContract(Seq("tbl", "bucket"), embSidecarParams(tables, planes, dim),
+      "embedding band sidecar", Some(
+        "embedding band sidecar has no `params` column — build it with " +
+          "embeddingBandSignatures (dim participates in the bucket " +
+          "contract; an unparameterized sidecar cannot be checked against " +
+          "the call and a dim drift silently admits near-dups)"))
+
+  /** Whether `ib` carries a params column; a schema check (no Spark
+    * job) that rejects a params-less table the contract cannot trust. */
+  private def hasParams(ib: DataFrame, c: BandContract): Boolean = {
+    val has = ib.columns.contains("params")
+    c.missingParams.foreach(msg => require(has, msg))
+    has
+  }
+
+  /** The (keys..., id) projection of a stored band sidecar, after an
+    * EAGER params check. Validates EVERY distinct params value, not a
+    * sampled row: a sidecar accumulated across stream restarts with
+    * changed parameters holds mixed values, and a one-row probe could
+    * match the current call while other partitions mismatch — silently
+    * finding zero candidates for those partitions and admitting
+    * near-dups, the exact failure this column exists to prevent. The
+    * distinct is one partial-aggregated pass over a single string
+    * column (a handful of rows in any non-broken sidecar). */
+  private def validatedSidecar(ib: DataFrame, c: BandContract): DataFrame = {
+    if (hasParams(ib, c)) {
       val got = ib.select("params").distinct().collect().map(_.getString(0))
-      val bad = got.filterNot(_ == expect)
-      require(bad.isEmpty, s"index band table holds params " +
-        s"[${bad.mkString("; ")}] but the increment call uses [$expect]" +
+      val bad = got.filterNot(_ == c.expect)
+      require(bad.isEmpty, s"${c.label} holds params " +
+        s"[${bad.mkString("; ")}] but the increment call uses [${c.expect}]" +
         (if (got.length > 1) " (mixed-parameter sidecar — likely " +
           "accumulated across restarts with changed settings)" else "") +
         "; rebuild the sidecar or match the parameters")
     }
+    ib.select((c.keys :+ "id").map(col): _*)
+  }
 
-  /** DATA-PATH twin of [[validateBandSidecar]] (round 21, guide §1.2):
-    * the (band, bsig, id) projection of a stored band table with the
-    * params check grafted INTO the band column — any stored row whose
-    * params is null or differs from the call's raises at EXECUTION
-    * time, with zero extra driver actions (the eager form ran a full
-    * sidecar distinct+collect per call — per MICRO-BATCH on the ingest
-    * loop, a full sidecar scan at 100 TB scale). Row coverage is the
-    * same (the cross band join scans every stored row); the one
-    * difference is an EMPTY batch, whose AQE-propagated empty semi
-    * join can skip the sidecar scan — an empty batch admits nothing,
-    * and the next non-empty batch raises. Tables without a params
-    * column pass, as before (hand-built). */
-  private def guardedBandCols(ib: DataFrame, k: Int, numHashes: Int,
-                              bands: Int): DataFrame =
-    if (!ib.columns.contains("params"))
-      ib.select(col("band"), col("bsig"), col("id"))
+  /** DATA-PATH twin of [[validatedSidecar]] (round 21, guide §1.2): the
+    * same projection with the params check grafted INTO the first key
+    * column — any stored row whose params is null or differs from the
+    * call's raises at EXECUTION time, with zero extra driver actions
+    * (the eager form runs a full sidecar distinct+collect per call —
+    * per MICRO-BATCH on the ingest loops, a full sidecar scan at 100 TB
+    * scale). Row coverage is the same (the cross band join scans every
+    * stored row); the one difference is an EMPTY batch, whose
+    * AQE-propagated empty semi join can skip the sidecar scan — an
+    * empty batch admits nothing, and the next non-empty batch raises.
+    * A params-less table gets the eager form's schema rule. */
+  private def guardedSidecar(ib: DataFrame, c: BandContract): DataFrame =
+    if (!hasParams(ib, c)) ib.select((c.keys :+ "id").map(col): _*)
     else {
-      val expect = sidecarParams(k, numHashes, bands)
+      val key = c.keys.head
       ib.select(
-        when(col("params").isNull || col("params") =!= lit(expect),
+        (when(col("params").isNull || col("params") =!= lit(c.expect),
           raise_error(concat(
-            lit("[graft-dedup] index band table holds params ["),
+            lit(s"[graft-dedup] ${c.label} holds params ["),
             coalesce(col("params"), lit("null")),
-            lit(s"] but the increment call uses [$expect] " +
+            lit(s"] but the increment call uses [${c.expect}] " +
               "(parameter drift, or a mixed-parameter sidecar " +
               "accumulated across restarts with changed settings); " +
               "rebuild the sidecar or match the parameters"))))
-          .otherwise(col("band")).as("band"),
-        col("bsig"), col("id"))
+          .otherwise(col(key)).as(key) +:
+          (c.keys.tail :+ "id").map(col)): _*)
     }
 
   /** The storable (id, fp) FINGERPRINT TABLE — 16 bytes per document;
@@ -329,8 +361,12 @@ object Dedup {
                       metricSuffix: String = ""): DataFrame = {
     require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
     require(threshold > 0, "zero-intersection pairs are never emitted")
-    minhashNearDupsOn(docShingleRows(docs, idCol, textCol, k),
-      numHashes, bands, threshold, metricSuffix)
+    val exploded = docShingleRows(docs, idCol, textCol, k)
+    // signatures as codegen'd min-aggregates (bandedSigs); the 16 agg
+    // inputs share 4 md5 digests (chunk scheme) — hash-aggregate
+    // codegen's subexpression elimination computes each digest once
+    minhashNearDupsOnBanded(bandedSigs(exploded, numHashes, bands),
+      exploded, threshold, metricSuffix)
   }
 
   /** `base` or `base.suffix` — the observed-metric name rule shared by
@@ -468,18 +504,7 @@ object Dedup {
       .distinct()
   }
 
-  /** [[minhashNearDups]] over an already-built shingle relation — lets
-    * eager callers (dedupCorpus) own the cache lifecycle. */
-  private def minhashNearDupsOn(exploded: DataFrame, numHashes: Int,
-                                bands: Int, threshold: Double,
-                                metricSuffix: String = ""): DataFrame =
-    // signatures as codegen'd min-aggregates (bandedSigs); the 16 agg
-    // inputs share 4 md5 digests (chunk scheme) — hash-aggregate
-    // codegen's subexpression elimination computes each digest once
-    minhashNearDupsOnBanded(bandedSigs(exploded, numHashes, bands),
-      exploded, threshold, metricSuffix)
-
-  /** [[minhashNearDupsOn]] over a PREBUILT banded-signature relation —
+  /** [[minhashNearDups]] over a PREBUILT banded-signature relation —
     * the shared-signature face (round 21, guide §1.2): the ingest loop
     * computes (and caches) the batch's band signatures ONCE for the
     * within pass, the cross pass and the stored sidecar write, where
@@ -524,28 +549,21 @@ object Dedup {
     require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
     require(threshold > 0, "zero-intersection pairs are never emitted")
     val exploded = docShingleRows(docs, idCol, textCol, k)
-    // dupClusters (inside dedupCorpusOn) is eager and its output carries
-    // no lineage back to `exploded`, so the shingle cache is dropped
-    // right after — try/finally so an error path (non-convergence, task
-    // failure) doesn't leak the cache either
-    try dedupCorpusOn(docs, exploded, idCol, textCol, numHashes, bands,
-      threshold)
+    // dupClusters (inside dedupCorpusOnBanded) is eager and its output
+    // carries no lineage back to `exploded`, so the shingle cache is
+    // dropped right after — try/finally so an error path
+    // (non-convergence, task failure) doesn't leak the cache either
+    try dedupCorpusOnBanded(docs, exploded,
+      bandedSigs(exploded, numHashes, bands), idCol, textCol, threshold)
     finally { exploded.unpersist(); liveShingleCaches.remove(exploded); () }
   }
 
-  /** [[dedupCorpus]] over an already-built shingle relation — lets
-    * dedupIncrement reuse the batch's cached shingles instead of
-    * re-deriving them. The caller owns `exploded`'s lifecycle; the
+  /** [[dedupCorpus]] over an already-built shingle relation and its
+    * banded signatures — lets [[dedupIncrementShared]] reuse the batch's
+    * cached shingles and bands (the round-21 shared-signature face —
+    * see [[minhashNearDupsOnBanded]]). The caller owns both caches; the
     * near-dup drop list materializes inside (dupClusters is eager), so
-    * releasing `exploded` right after this returns is safe. */
-  private def dedupCorpusOn(docs: DataFrame, exploded: DataFrame,
-                            idCol: String, textCol: String, numHashes: Int,
-                            bands: Int, threshold: Double): DataFrame =
-    dedupCorpusOnBanded(docs, exploded,
-      bandedSigs(exploded, numHashes, bands), idCol, textCol, threshold)
-
-  /** [[dedupCorpusOn]] over a prebuilt banded-signature relation (the
-    * round-21 shared-signature face — see [[minhashNearDupsOnBanded]]). */
+    * releasing them right after this returns is safe. */
   private def dedupCorpusOnBanded(docs: DataFrame, exploded: DataFrame,
                                   banded: DataFrame, idCol: String,
                                   textCol: String,
@@ -600,15 +618,29 @@ object Dedup {
     * Returns (id_a = new-batch id, id_b = index id, jaccard >= threshold).
     *
     * Scale shape: both sides reduce to (id, band, bsig) rows via the
-    * SAME band construction as [[minhashNearDups]] (so an index's band
-    * table can be PRECOMPUTED and stored bucketed by (band, bsig) —
-    * only the new batch's signatures are built per increment); the
-    * candidate join is new-bands × index-bands on (band, bsig), where
-    * AQE broadcasts the batch side when it is small (the normal case:
-    * batch ≪ corpus). Verification is the count-based exact Jaccard
-    * with the lossless size-ratio prune, across the two shingle
-    * relations. Within-batch duplicates are [[dedupCorpus]]'s job —
-    * see [[dedupIncrement]] for the composed step.
+    * SAME band construction as [[minhashNearDups]]; the candidate join
+    * is new-bands × index-bands on (band, bsig), where AQE broadcasts
+    * the batch side when it is small (the normal case: batch ≪ corpus).
+    * Verification is the count-based exact Jaccard with the lossless
+    * size-ratio prune, across the two shingle relations. Within-batch
+    * duplicates are [[dedupCorpus]]'s job — see [[dedupIncrement]] for
+    * the composed step.
+    *
+    * `indexBands`: the index's PRECOMPUTED band table
+    * ([[bandSignatures]], stored alongside the corpus) — the
+    * steady-state increment. Corpus-side signatures are then never
+    * recomputed, and corpus-side shingles are rebuilt only for the
+    * (candidate-sized) slice of index documents that actually collided
+    * with the batch: per increment the corpus-sized work drops from
+    * tokenize + window + 16 min-aggregates over every index document to
+    * one band join (batch side broadcast) plus a semi-join text fetch
+    * of the touched docs. Output ≡ the `None` form with the same
+    * parameters (DataxSpec pins the equality). The table's params
+    * column is checked against the call up front (one distinct+collect:
+    * a mismatch, or a mixed-parameter table, fails fast — signatures
+    * built with different parameters never collide, so a silent
+    * mismatch would admit near-dups); a table without the column
+    * passes (hand-built).
     *
     * `maxBucketLoad` (round 15): the per-bucket batch x index product
     * bound — the two-sided form of the [[bucketCandidatePairs]]
@@ -617,148 +649,63 @@ object Dedup {
     * blow up as it grows (per-bucket load is the occupancy PRODUCT —
     * SCALE.md measured the vector twin at 61x wall for 3x data);
     * `None` opts out and emits the max product as the
-    * `graft.lsh.occupancy.inc_text` observe() metric instead. */
+    * `graft.lsh.occupancy.inc_text` (with `indexBands`:
+    * `.inc_text_prebanded`) observe() metric instead. */
   def incrementalNearDups(newDocs: DataFrame, index: DataFrame,
                           idCol: String, textCol: String, k: Int = 4,
                           numHashes: Int = 16, bands: Int = 4,
                           threshold: Double = 0.5,
                           maxBucketLoad: Option[Long] = Some(1L << 20),
-                          metricSuffix: String = ""): DataFrame = {
+                          metricSuffix: String = "",
+                          indexBands: Option[DataFrame] = None): DataFrame = {
     require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
     require(threshold > 0, "zero-intersection pairs are never emitted")
-    incrementalNearDupsOn(docShingleRows(newDocs, idCol, textCol, k),
-      docShingleRows(index, idCol, textCol, k), numHashes, bands, threshold,
-      maxBucketLoad, metricSuffix)
+    val ne = docShingleRows(newDocs, idCol, textCol, k)
+    val ibCols = indexBands.map(validatedSidecar(_,
+      textContract(k, numHashes, bands)))
+    crossPairs(ne, bandedSigs(ne, numHashes, bands), index, ibCols, idCol,
+      textCol, k, numHashes, bands, threshold, maxBucketLoad,
+      metricSuffix)._1
   }
 
-  /** [[incrementalNearDups]] over already-built shingle relations — lets
-    * eager callers (dedupIncrement) own the cache lifecycle. */
-  private def incrementalNearDupsOn(ne: DataFrame, ie: DataFrame,
-                                    numHashes: Int, bands: Int,
-                                    threshold: Double,
-                                    maxBucketLoad: Option[Long],
-                                    metricSuffix: String = ""): DataFrame = {
-    val cand = crossBucketCandidatePairs(
-      bandedSigs(ne, numHashes, bands), bandedSigs(ie, numHashes, bands),
-      Seq("band", "bsig"), maxBucketLoad,
-      metricTag = tagged("inc_text", metricSuffix))
-    verifyJaccardSides(cand, ne, ie, threshold)
-  }
-
-  /** [[incrementalNearDups]] against a PRECOMPUTED index band table
-    * ([[bandSignatures]], stored alongside the corpus) — the steady-state
-    * increment: corpus-side signatures are never recomputed, and
-    * corpus-side shingles are rebuilt only for the (candidate-sized)
-    * slice of index documents that actually collided with the batch.
-    * Per increment the corpus-sized work drops from tokenize + window +
-    * 16 min-aggregates over every index document to one band join
-    * (batch side broadcast) plus a semi-join text fetch of the touched
-    * docs. Output ≡ [[incrementalNearDups]] with the same parameters
-    * (DataxSpec pins the equality); `maxBucketLoad` as there. */
-  def incrementalNearDupsPrebanded(newDocs: DataFrame, index: DataFrame,
-                                   indexBands: DataFrame, idCol: String,
-                                   textCol: String, k: Int = 4,
-                                   numHashes: Int = 16, bands: Int = 4,
-                                   threshold: Double = 0.5,
-                                   maxBucketLoad: Option[Long] = Some(1L << 20),
-                                   metricSuffix: String = ""): DataFrame = {
-    require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
-    require(threshold > 0, "zero-intersection pairs are never emitted")
-    prebandedPairsOn(docShingleRows(newDocs, idCol, textCol, k), index,
-      indexBands, idCol, textCol, k, numHashes, bands, threshold,
-      maxBucketLoad, metricSuffix)._1
-  }
-
-  /** [[incrementalNearDupsPrebanded]] with (k, numHashes, bands) read
-    * FROM the sidecar's params column instead of re-supplied by the
-    * caller — the steady-state form with zero redundant parameter
-    * discipline: the sidecar already pins the construction, so passing
-    * the values again only creates the drift the params check exists
-    * to catch. Requires a single-valued params column
-    * ([[bandSignatures]] always writes one). */
-  def incrementalNearDupsFromSidecar(newDocs: DataFrame, index: DataFrame,
-                                     indexBands: DataFrame, idCol: String,
-                                     textCol: String,
-                                     threshold: Double = 0.5,
-                                     maxBucketLoad: Option[Long] = Some(1L << 20),
-                                     metricSuffix: String = ""): DataFrame = {
-    val (k, numHashes, bands) = textSidecarParams(indexBands)
-    incrementalNearDupsPrebanded(newDocs, index, indexBands, idCol, textCol,
-      k, numHashes, bands, threshold, maxBucketLoad, metricSuffix)
-  }
-
-  /** The single (k, h, b) triple a text sidecar was built with, parsed
-    * from its params column; loud on a missing column or a
-    * mixed-parameter sidecar. */
-  private def textSidecarParams(ib: DataFrame): (Int, Int, Int) = {
-    val got = distinctSidecarParams(ib)
-    val re = """k=(\d+),h=(\d+),b=(\d+)""".r
-    got match {
-      case re(k, h, b) => (k.toInt, h.toInt, b.toInt)
-      case other => throw new IllegalArgumentException(
-        s"unparseable band-sidecar params [$other]; rebuild with bandSignatures")
+  /** The batch x index pass behind [[incrementalNearDups]] (lazy,
+    * registry-released) and [[dedupIncrementShared]] (eager, tracked),
+    * over the batch's shingle relation `ne` and its band rows
+    * `neBanded`. Without `ibCols` the index side is shingled and banded
+    * here; with it — a stored sidecar's (band, bsig, id) rows, already
+    * checked by the caller — only the collided index docs are
+    * re-shingled. Returns the verified pairs plus the caches this call
+    * created so eager callers can release them precisely. */
+  private def crossPairs(ne: DataFrame, neBanded: DataFrame, index: DataFrame,
+                         ibCols: Option[DataFrame], idCol: String,
+                         textCol: String, k: Int, numHashes: Int,
+                         bands: Int, threshold: Double,
+                         maxBucketLoad: Option[Long],
+                         metricSuffix: String): (DataFrame, Seq[DataFrame]) =
+    ibCols match {
+      case None =>
+        val ie = docShingleRows(index, idCol, textCol, k)
+        val cand = crossBucketCandidatePairs(
+          neBanded, bandedSigs(ie, numHashes, bands),
+          Seq("band", "bsig"), maxBucketLoad,
+          metricTag = tagged("inc_text", metricSuffix))
+        (verifyJaccardSides(cand, ne, ie, threshold), Seq(ie))
+      case Some(ib) =>
+        val cand = crossBucketCandidatePairs(
+          neBanded, ib,
+          Seq("band", "bsig"), maxBucketLoad,
+          metricTag = tagged("inc_text_prebanded", metricSuffix))
+          // consumed three times below (verify join x2 + size join);
+          // tiny (collision pairs), and caching prevents re-running the
+          // band join
+          .cache()
+        registerCache(cand)
+        // re-shingle ONLY the index docs that collided — candidate-sized
+        val touched = index.join(cand.select(col("id_b").as(idCol)).distinct(),
+          Seq(idCol), "left_semi")
+        val ie = docShingleRows(touched, idCol, textCol, k)
+        (verifyJaccardSides(cand, ne, ie, threshold), Seq(cand, ie))
     }
-  }
-
-  /** The sidecar's one distinct params value — shared by both
-    * modalities' FromSidecar forms. */
-  private def distinctSidecarParams(ib: DataFrame): String = {
-    require(ib.columns.contains("params"),
-      "sidecar has no `params` column — the FromSidecar form derives " +
-        "its parameters from it; build the sidecar with " +
-        "bandSignatures / embeddingBandSignatures")
-    val got = ib.select("params").distinct().collect().map(_.getString(0))
-    require(got.length == 1, s"sidecar holds ${got.length} distinct params " +
-      s"values [${got.mkString("; ")}] — a mixed-parameter sidecar (likely " +
-      "accumulated across restarts with changed settings) cannot drive an " +
-      "increment; rebuild it")
-    got(0)
-  }
-
-  /** The prebanded candidate + verify pipeline over an already-built
-    * batch shingle relation — shared by [[incrementalNearDupsPrebanded]]
-    * (lazy, registry-released) and [[dedupIncrement]] (eager, tracked).
-    * Returns the verified pairs plus the caches this call created so
-    * eager callers can release them precisely. */
-  private def prebandedPairsOn(ne: DataFrame, index: DataFrame,
-                               indexBands: DataFrame, idCol: String,
-                               textCol: String, k: Int, numHashes: Int,
-                               bands: Int, threshold: Double,
-                               maxBucketLoad: Option[Long],
-                               metricSuffix: String = ""): (DataFrame, Seq[DataFrame]) = {
-    validateBandSidecar(indexBands, k, numHashes, bands)
-    prebandedPairsOnBanded(bandedSigs(ne, numHashes, bands), ne, index,
-      indexBands.select(col("band"), col("bsig"), col("id")),
-      idCol, textCol, k, threshold, maxBucketLoad, metricSuffix)
-  }
-
-  /** [[prebandedPairsOn]] over a PREBUILT batch band relation and an
-    * already-projected/guarded index band relation — the ingest loop's
-    * shared-signature face (round 21): the batch bands come from the
-    * shared cache, and the caller chooses between the eager sidecar
-    * validation (a full params distinct+collect per call) and the
-    * data-path guard ([[guardedBandCols]], zero extra driver
-    * actions). */
-  private def prebandedPairsOnBanded(neBanded: DataFrame, ne: DataFrame,
-                               index: DataFrame, ibCols: DataFrame,
-                               idCol: String, textCol: String, k: Int,
-                               threshold: Double,
-                               maxBucketLoad: Option[Long],
-                               metricSuffix: String = ""): (DataFrame, Seq[DataFrame]) = {
-    val cand = crossBucketCandidatePairs(
-      neBanded, ibCols,
-      Seq("band", "bsig"), maxBucketLoad,
-      metricTag = tagged("inc_text_prebanded", metricSuffix))
-      // consumed three times below (verify join x2 + size join); tiny
-      // (collision pairs), and caching prevents re-running the band join
-      .cache()
-    registerCache(cand)
-    // re-shingle ONLY the index docs that collided — candidate-sized
-    val touched = index.join(cand.select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_semi")
-    val ie = docShingleRows(touched, idCol, textCol, k)
-    (verifyJaccardSides(cand, ne, ie, threshold), Seq(cand, ie))
-  }
 
   /** End-to-end INCREMENTAL dedup: the new-batch rows that survive both
     * (a) near-dup / exact-fingerprint dedup WITHIN the batch
@@ -791,7 +738,7 @@ object Dedup {
     // the shared form materializes everything before returning, and the
     // returned plan references no internal cache — releasing right away
     // IS the old eager contract
-    val (survivors, _, release) = dedupIncrementShared(newDocs, index,
+    val (survivors, _, release) = dedupIncrementShared(newDocs, Some(index),
       idCol, textCol, k, numHashes, bands, threshold, indexBands, indexFps,
       maxBucketLoad)
     release()
@@ -811,10 +758,13 @@ object Dedup {
     * [[bandSignatures]] over the survivors), backed by caches that
     * live until `release()` — the caller MUST call it (once) after its
     * last consumer ran; error paths inside release everything
-    * immediately. The stored-sidecar params check runs on the DATA
-    * PATH here ([[guardedBandCols]]) instead of the public form's
-    * call-time collect. */
-  private[graft] def dedupIncrementShared(newDocs: DataFrame, index: DataFrame,
+    * immediately. `index = None` is the FIRST batch (no index yet): the
+    * within pass alone, i.e. [[dedupCorpus]] over the shared caches,
+    * and `indexBands`/`indexFps` are ignored. The stored-sidecar params
+    * check runs on the DATA PATH here ([[guardedSidecar]]) instead of
+    * the public form's call-time collect. */
+  private[graft] def dedupIncrementShared(newDocs: DataFrame,
+                     index: Option[DataFrame],
                      idCol: String, textCol: String, k: Int = 4,
                      numHashes: Int = 16,
                      bands: Int = 4, threshold: Double = 0.5,
@@ -841,93 +791,64 @@ object Dedup {
       val neBanded = bandedSigs(ne, numHashes, bands).cache()
       registerCache(neBanded)
       track(neBanded)
-      val crossPairs = indexBands match {
-        // steady state: the stored band table replaces corpus-side
-        // signature work
-        case Some(ib) =>
-          val (pairs, caches) = prebandedPairsOnBanded(neBanded, ne, index,
-            guardedBandCols(ib, k, numHashes, bands), idCol,
-            textCol, k, threshold, maxBucketLoad)
-          caches.foreach(track)
-          pairs
+      val survivors = index match {
         case None =>
-          incrementalNearDupsOn(ne,
-            track(docShingleRows(index, idCol, textCol, k)),
-            numHashes, bands, threshold, maxBucketLoad)
+          dedupCorpusOnBanded(newDocs, ne, neBanded, idCol, textCol,
+            threshold)
+        case Some(ix) =>
+          // steady state: a stored band table, when given, replaces
+          // corpus-side signature work
+          val (crossHits, caches) = crossPairs(ne, neBanded, ix,
+            indexBands.map(guardedSidecar(_, textContract(k, numHashes, bands))),
+            idCol, textCol, k, numHashes, bands, threshold, maxBucketLoad, "")
+          caches.foreach(track)
+          // sub-k-token docs produce no shingles: exact-fingerprint
+          // collisions against the index catch them (same rule
+          // dedupCorpus applies within one table). A digest is 16
+          // bytes/doc — the semi join shuffles fingerprints, never
+          // text; the stored fingerprint table replaces the index text
+          // scan when provided. NULL-SAFE equality: fingerprint(NULL
+          // text) is NULL, and the within-batch exact rule (a
+          // fp-partitioned window) groups NULLs together — the cross
+          // rule must match it, or a redelivered NULL-text doc
+          // re-appends forever.
+          val fps = indexFps.getOrElse(fingerprintTable(ix, idCol, textCol))
+            .select(col("fp").as("_ifp"))
+          val exactHit = newDocs
+            .select(col(idCol), TextStats.fingerprint(col(textCol)).as("_fp"))
+            .join(fps, col("_fp") <=> col("_ifp"), "left_semi")
+            .select(col(idCol))
+          // BOTH cross-index hit lists inside one lineage cut: the
+          // returned plan really is batch ANTI JOIN small-list —
+          // re-running an action on it must not repeat the fingerprint
+          // semi join (a full index text scan when no indexFps sidecar
+          // was provided), and the release in the finally must leave
+          // nothing the plan still needs. The cross-index cut and the
+          // within-batch dedup (whose near-dup drop list materializes
+          // inside dedupCorpusOnBanded — dupClusters is eager) are
+          // INDEPENDENT materializations over the shared `ne` shingle
+          // cache — run them concurrently (round 12): at fixture scale
+          // each is dominated by fixed job latency, at cluster scale the
+          // scheduler interleaves them. Concurrent FIRST-touch of the
+          // shared batch-sized caches (ne, the persisted batch) can
+          // compute a partition twice before the block lands — bounded
+          // at 2x a batch-sized scan, the accepted price of
+          // unserializing the two materializations. After both complete
+          // no internal cache is referenced by the returned plan and the
+          // finally can release them all. Forked.awaitAll joins BOTH
+          // before surfacing a failure — a fail-fast await would let the
+          // finally below drop the shared caches while the sibling's
+          // jobs are mid-flight — and keeps the forked jobs inside the
+          // caller's job group so they stay cancellable.
+          val both = graft.util.Forked.awaitAll[DataFrame](newDocs.sparkSession)(Seq(
+            () => cutLineage(
+              crossHits.select(col("id_a").as(idCol)).union(exactHit).distinct()),
+            () => dedupCorpusOnBanded(newDocs, ne, neBanded, idCol, textCol,
+              threshold)))
+          val (hit, within) = (both(0), both(1))
+          within.join(hit, Seq(idCol), "left_anti")
       }
-      // sub-k-token docs produce no shingles: exact-fingerprint collisions
-      // against the index catch them (same rule dedupCorpus applies
-      // within one table). A digest is 16 bytes/doc — the semi join
-      // shuffles fingerprints, never text; the stored fingerprint table
-      // replaces the index text scan when provided. NULL-SAFE equality:
-      // fingerprint(NULL text) is NULL, and the within-batch exact rule
-      // (a fp-partitioned window) groups NULLs together — the cross rule
-      // must match it, or a redelivered NULL-text doc re-appends forever.
-      val fps = indexFps.getOrElse(fingerprintTable(index, idCol, textCol))
-        .select(col("fp").as("_ifp"))
-      val exactHit = newDocs
-        .select(col(idCol), TextStats.fingerprint(col(textCol)).as("_fp"))
-        .join(fps, col("_fp") <=> col("_ifp"), "left_semi")
-        .select(col(idCol))
-      // BOTH cross-index hit lists inside one lineage cut: the returned
-      // plan really is batch ANTI JOIN small-list — re-running an action
-      // on it must not repeat the fingerprint semi join (a full index
-      // text scan when no indexFps sidecar was provided), and the
-      // release in the finally must leave nothing the plan still needs.
-      // The cross-index cut and the within-batch dedup (whose near-dup
-      // drop list materializes inside dedupCorpusOn — dupClusters is
-      // eager) are INDEPENDENT materializations over the shared `ne`
-      // shingle cache — run them concurrently (round 12): at fixture
-      // scale each is dominated by fixed job latency, at cluster scale
-      // the scheduler interleaves them. Concurrent FIRST-touch of the
-      // shared batch-sized caches (ne, the persisted batch) can compute
-      // a partition twice before the block lands — bounded at 2x a
-      // batch-sized scan, the accepted price of unserializing the two
-      // materializations. After both complete no internal cache is
-      // referenced by the returned plan and the finally can release
-      // them all. Forked.awaitAll joins BOTH before surfacing a
-      // failure — a fail-fast await would let the finally below drop
-      // the shared caches while the sibling's jobs are mid-flight —
-      // and keeps the forked jobs inside the caller's job group so
-      // they stay cancellable.
-      val both = graft.util.Forked.awaitAll[DataFrame](newDocs.sparkSession)(Seq(
-        () => cutLineage(
-          crossPairs.select(col("id_a").as(idCol)).union(exactHit).distinct()),
-        () => dedupCorpusOnBanded(newDocs, ne, neBanded, idCol, textCol,
-          threshold)))
-      val (hit, within) = (both(0), both(1))
-      val survivors = within.join(hit, Seq(idCol), "left_anti")
       val batchBands = neBanded
-        .withColumn("params", lit(sidecarParams(k, numHashes, bands)))
-      ok = true
-      (survivors, batchBands, () => releaseAll())
-    } finally { if (!ok) releaseAll() }
-  }
-
-  /** [[dedupCorpus]] that additionally hands the caller the batch's
-    * CACHED band signatures — the FIRST-batch twin of
-    * [[dedupIncrementShared]] (no index yet), same
-    * (survivors, batchBands, release) contract. */
-  private[graft] def dedupCorpusShared(docs: DataFrame, idCol: String,
-                     textCol: String, k: Int = 4, numHashes: Int = 16,
-                     bands: Int = 4,
-                     threshold: Double = 0.5): (DataFrame, DataFrame, () => Unit) = {
-    require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
-    require(threshold > 0, "zero-intersection pairs are never emitted")
-    val created = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def releaseAll(): Unit = created.foreach { e =>
-      e.unpersist(); liveShingleCaches.remove(e)
-    }
-    var ok = false
-    try {
-      val exploded = docShingleRows(docs, idCol, textCol, k)
-      created += exploded
-      val banded = bandedSigs(exploded, numHashes, bands).cache()
-      registerCache(banded)
-      created += banded
-      val survivors = dedupCorpusOnBanded(docs, exploded, banded, idCol,
-        textCol, threshold)
-      val batchBands = banded
         .withColumn("params", lit(sidecarParams(k, numHashes, bands)))
       ok = true
       (survivors, batchBands, () => releaseAll())
@@ -1211,8 +1132,9 @@ object Dedup {
     * check. `maxIterations` bounds pathological chains; the method
     * throws rather than return a half-converged clustering.
     *
-    * `driverMaxPairs` default is MEASURED, not guessed (CrossoverProbe,
-    * SCALE.md "components crossover"): on dup-shaped graphs the driver
+    * `driverMaxPairs` default is MEASURED, not guessed (SCALE.md
+    * "Components crossover: driver union-find vs distributed loop,
+    * measured (round 9)"): on dup-shaped graphs the driver
     * union-find costs ~8 s per 1M collected edges while the distributed
     * loop's fixed per-round overhead is ~4-7 s regardless of size —
     * the curves cross at ~0.5M edges. */
@@ -1721,37 +1643,6 @@ object Dedup {
   private def embSidecarParams(tables: Int, planes: Int, dim: Int): String =
     s"L=$tables,r=$planes,dim=$dim"
 
-  /** Fail fast when a stored embedding band table's parameters disagree
-    * with the increment call's — the vector twin of
-    * [[validateBandSidecar]], with `dim` in the contract too (the
-    * seeded plane matrices depend on it, so a dim mismatch buckets
-    * nothing in common and silently admits near-dups). Validates every
-    * distinct params value for the same mixed-sidecar reason.
-    *
-    * Unlike the text twin ([[validateBandSidecar]], lenient for
-    * hand-built tables), the params column is REQUIRED here (round 15):
-    * `dim` participates in the bucket contract — the prebanded form can
-    * only probe dim from the BATCH, so a params-less sidecar built in a
-    * different vector space would silently bucket nothing in common and
-    * admit every near-dup, the exact failure the column exists to
-    * prevent. [[embeddingBandSignatures]] always writes it. */
-  private def validateEmbSidecar(ib: DataFrame, tables: Int, planes: Int,
-                                 dim: Int): Unit = {
-    require(ib.columns.contains("params"),
-      "embedding band sidecar has no `params` column — build it with " +
-        "embeddingBandSignatures (dim participates in the bucket " +
-        "contract; an unparameterized sidecar cannot be checked against " +
-        "the call and a dim drift silently admits near-dups)")
-    val expect = embSidecarParams(tables, planes, dim)
-    val got = ib.select("params").distinct().collect().map(_.getString(0))
-    val bad = got.filterNot(_ == expect)
-    require(bad.isEmpty, s"embedding band sidecar holds params " +
-      s"[${bad.mkString("; ")}] but the increment call uses [$expect]" +
-      (if (got.length > 1) " (mixed-parameter sidecar — likely " +
-        "accumulated across restarts with changed settings)" else "") +
-      "; rebuild the sidecar or match the parameters")
-  }
-
   /** The storable (id, tbl, bucket) band-signature SIDECAR for an
     * embedding index — the vector twin of [[bandSignatures]]: build it
     * once when vectors enter the corpus, store it bucketed/partitioned
@@ -1822,6 +1713,18 @@ object Dedup {
     * the batch alone — the standing corpus is already deduplicated, by
     * induction (same contract as the text [[dedupIncrement]]).
     *
+    * `indexBands`: the index's PRECOMPUTED [[embeddingBandSignatures]]
+    * sidecar — the steady-state increment. Corpus-side signatures are
+    * then never recomputed, and corpus-side VECTORS re-enter only for
+    * the (candidate-sized) slice of index ids that actually collided
+    * with the batch (semi-join fetch — at 100 TB the index vector table
+    * is read candidate-order, not corpus-order). The plane space is
+    * then anchored to the BATCH's dim, and the sidecar's params column
+    * — required here, since dim is part of the bucket contract — is
+    * checked against (L, r, dim) up front: drift fails fast. Output ≡
+    * the `None` form with the same parameters (DataxSpec pins the
+    * equality).
+    *
     * PARAMETERS SCALE WITH THE INDEX, same rule as the banded family:
     * per-bucket load here is batch-occupancy x index-occupancy, so
     * fixed (L, r) on a growing index is the d10a-class trap in join
@@ -1837,38 +1740,76 @@ object Dedup {
     * data on fixed (3, 4); the raise names the fix
     * ([[embeddingNearDupsIncrementalAuto]]). `None` opts out; the max
     * observed product then ships as the deterministic
-    * `graft.lsh.occupancy.inc_embedding` observe() metric. */
+    * `graft.lsh.occupancy.inc_embedding` (with `indexBands`:
+    * `.inc_embedding_prebanded`) observe() metric. */
   def embeddingNearDupsIncremental(newVecs: DataFrame, index: DataFrame,
                                    idCol: String, vecCol: String,
                                    tables: Int = 8, planesPerTable: Int = 8,
                                    threshold: Double = 0.9,
                                    maxBucketLoad: Option[Long] = Some(1L << 20),
-                                   metricSuffix: String = ""): DataFrame = {
+                                   metricSuffix: String = "",
+                                   indexBands: Option[DataFrame] = None): DataFrame =
+    embeddingIncrementPairs(newVecs, index, indexBands, idCol, vecCol,
+      tables, planesPerTable, threshold, maxBucketLoad, metricSuffix,
+      dim = -1, eagerValidate = true)
+
+  /** [[embeddingNearDupsIncremental]]'s body, shared with the
+    * [[graft.streaming.EmbedStream]] ingest loop, which passes the
+    * batch `dim` it probed once for the whole micro-batch (`-1`:
+    * probe here) and `eagerValidate = false` — the sidecar params
+    * check then rides the data path ([[guardedSidecar]]) instead of a
+    * per-call full-sidecar distinct+collect. `dim` is the batch's, so
+    * it only serves the sidecar form; the direct form always probes
+    * the index. */
+  private[graft] def embeddingIncrementPairs(newVecs: DataFrame,
+      index: DataFrame, indexBands: Option[DataFrame], idCol: String,
+      vecCol: String, tables: Int, planesPerTable: Int, threshold: Double,
+      maxBucketLoad: Option[Long], metricSuffix: String, dim: Int,
+      eagerValidate: Boolean): DataFrame = {
     require(tables >= 1 && planesPerTable >= 1,
       s"tables=$tables, planesPerTable=$planesPerTable must be >= 1")
-    val nv = newVecs.select(col(idCol).as("id"),
+    def vecs(df: DataFrame): DataFrame = df.select(col(idCol).as("id"),
       transform(col(vecCol), x => x.cast("double")).as("vec"))
-    val iv = index.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"))
-    val dim = probeDim(index, vecCol)
-    if (dim == 0) // empty index: nothing to collide with
-      return emptyPairFrame(nv)
-    val cand = crossBucketCandidatePairs(
-      embSigRows(nv, tables, planesPerTable, dim),
-      embSigRows(iv, tables, planesPerTable, dim),
-      Seq("tbl", "bucket"), maxBucketLoad,
-      metricTag = tagged("inc_embedding", metricSuffix))
-    verifyCosineSides(cand, nv, iv, threshold)
+    val nv = vecs(newVecs)
+    indexBands match {
+      case None =>
+        val iv = vecs(index)
+        val d = probeDim(index, vecCol)
+        if (d == 0) // empty index: nothing to collide with
+          return emptyPairFrame(nv)
+        val cand = crossBucketCandidatePairs(
+          embSigRows(nv, tables, planesPerTable, d),
+          embSigRows(iv, tables, planesPerTable, d),
+          Seq("tbl", "bucket"), maxBucketLoad,
+          metricTag = tagged("inc_embedding", metricSuffix))
+        verifyCosineSides(cand, nv, iv, threshold)
+      case Some(ib) =>
+        val d = if (dim >= 0) dim else probeDim(newVecs, vecCol)
+        if (d == 0) // empty/unusable batch: no pairs
+          return emptyPairFrame(nv)
+        val contract = embContract(tables, planesPerTable, d)
+        val ibCols =
+          if (eagerValidate) validatedSidecar(ib, contract)
+          else guardedSidecar(ib, contract)
+        val cand = crossBucketCandidatePairs(
+          embSigRows(nv, tables, planesPerTable, d),
+          ibCols,
+          Seq("tbl", "bucket"), maxBucketLoad,
+          metricTag = tagged("inc_embedding_prebanded", metricSuffix))
+        val touched = index.join(cand.select(col("id_b").as(idCol)).distinct(),
+          Seq(idCol), "left_semi")
+        verifyCosineSides(cand, nv, vecs(touched), threshold)
+    }
   }
 
   /** [[embeddingNearDupsIncremental]] with (L, r) DERIVED FROM THE INDEX
     * SIZE via [[bandsFor]] — the production parameterization the direct
-    * form's scaladoc prescribes and IncLoadProbe measured sublinear
-    * (1.5x wall for 3x data, vs 61x for the fixed-parameter shape;
-    * SCALE.md round 14), as an API instead of caller discipline. One
-    * `count()` of the index per call; at the steady state, prefer
-    * counting once at sidecar-build time and storing the derived (L, r)
-    * with the [[embeddingBandSignatures]] sidecar.
+    * form's scaladoc prescribes, measured sublinear (1.5x wall for 3x
+    * data, vs 61x for the fixed-parameter shape; SCALE.md "Full-batch-
+    * suite anchor at 30x (round 14)"), as an API instead of caller
+    * discipline. One `count()` of the index per call; at the steady
+    * state, prefer counting once at sidecar-build time and storing the
+    * derived (L, r) with the [[embeddingBandSignatures]] sidecar.
     *
     * maxBucketLoad=None like the other auto forms: parameters ARE
     * derived from n here, so a bucket past the bound means genuinely
@@ -1882,96 +1823,5 @@ object Dedup {
     val (tables, r) = bandsFor(index.count(), threshold)
     embeddingNearDupsIncremental(newVecs, index, idCol, vecCol, tables, r,
       threshold, maxBucketLoad = None, metricSuffix = metricSuffix)
-  }
-
-  /** [[embeddingNearDupsIncremental]] against a PRECOMPUTED
-    * [[embeddingBandSignatures]] sidecar — the steady-state increment:
-    * corpus-side signatures are never recomputed, and corpus-side
-    * VECTORS re-enter only for the (candidate-sized) slice of index ids
-    * that actually collided with the batch (semi-join fetch — at 100 TB
-    * the index vector table is read candidate-order, not corpus-order).
-    * Output ≡ the direct form with the same parameters (DataxSpec pins
-    * the equality); parameter drift between sidecar and call fails fast
-    * via the params column; `maxBucketLoad` as on the direct form. */
-  def embeddingNearDupsIncrementalPrebanded(newVecs: DataFrame,
-      index: DataFrame, indexBands: DataFrame, idCol: String, vecCol: String,
-      tables: Int = 8, planesPerTable: Int = 8,
-      threshold: Double = 0.9,
-      maxBucketLoad: Option[Long] = Some(1L << 20),
-      metricSuffix: String = "",
-      dim: Int = -1,
-      eagerValidate: Boolean = true): DataFrame = {
-    require(tables >= 1 && planesPerTable >= 1,
-      s"tables=$tables, planesPerTable=$planesPerTable must be >= 1")
-    val nv = newVecs.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"))
-    // dim >= 0: caller-probed once per batch (the ingest loop)
-    val d = if (dim >= 0) dim else probeDim(newVecs, vecCol)
-    if (d == 0) // empty/unusable batch: no pairs
-      return emptyPairFrame(nv)
-    // eagerValidate=false (the ingest loop): the params check rides the
-    // data path instead of a per-call full-sidecar distinct+collect —
-    // [[guardedBandCols]]' rationale, (tbl, bucket) keyed
-    val ibCols =
-      if (eagerValidate) {
-        validateEmbSidecar(indexBands, tables, planesPerTable, d)
-        indexBands.select(col("tbl"), col("bucket"), col("id"))
-      } else guardedEmbCols(indexBands, tables, planesPerTable, d)
-    val cand = crossBucketCandidatePairs(
-      embSigRows(nv, tables, planesPerTable, d),
-      ibCols,
-      Seq("tbl", "bucket"), maxBucketLoad,
-      metricTag = tagged("inc_embedding_prebanded", metricSuffix))
-    val touched = index.join(cand.select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_semi")
-    val iv = touched.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"))
-    verifyCosineSides(cand, nv, iv, threshold)
-  }
-
-  /** The vector twin of [[guardedBandCols]]: (tbl, bucket, id) with the
-    * (L, r, dim) params check grafted into the tbl column — raises at
-    * execution on any stored row whose params drifted from the call's,
-    * zero extra driver actions. Same empty-batch caveat. */
-  private def guardedEmbCols(ib: DataFrame, tables: Int, planes: Int,
-                             dim: Int): DataFrame =
-    if (!ib.columns.contains("params"))
-      ib.select(col("tbl"), col("bucket"), col("id"))
-    else {
-      val expect = embSidecarParams(tables, planes, dim)
-      ib.select(
-        when(col("params").isNull || col("params") =!= lit(expect),
-          raise_error(concat(
-            lit("[graft-dedup] embedding band sidecar holds params ["),
-            coalesce(col("params"), lit("null")),
-            lit(s"] but the increment call uses [$expect] " +
-              "(parameter drift, or a mixed-parameter sidecar " +
-              "accumulated across restarts with changed settings); " +
-              "rebuild the sidecar or match the parameters"))))
-          .otherwise(col("tbl")).as("tbl"),
-        col("bucket"), col("id"))
-    }
-
-  /** [[embeddingNearDupsIncrementalPrebanded]] with (L, r) read FROM the
-    * sidecar's params column — the vector twin of
-    * [[incrementalNearDupsFromSidecar]], and the recommended
-    * steady-state call: the sidecar pins (L, r, dim), the batch's dim
-    * still fails fast against it, and no caller re-supplies values
-    * whose only failure mode is drifting from the store. */
-  def embeddingNearDupsIncrementalFromSidecar(newVecs: DataFrame,
-      index: DataFrame, indexBands: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.9,
-      maxBucketLoad: Option[Long] = Some(1L << 20),
-      metricSuffix: String = ""): DataFrame = {
-    val got = distinctSidecarParams(indexBands)
-    val re = """L=(\d+),r=(\d+),dim=(\d+)""".r
-    val (tables, planes) = got match {
-      case re(l, r, _) => (l.toInt, r.toInt)
-      case other => throw new IllegalArgumentException(
-        s"unparseable embedding-sidecar params [$other]; rebuild with " +
-          "embeddingBandSignatures")
-    }
-    embeddingNearDupsIncrementalPrebanded(newVecs, index, indexBands,
-      idCol, vecCol, tables, planes, threshold, maxBucketLoad, metricSuffix)
   }
 }

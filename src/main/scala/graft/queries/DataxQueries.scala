@@ -1490,14 +1490,14 @@ object DataxQueries {
      * strictly cross-side (within-batch dedup is the banded form's job
      * on the batch alone). Same fixed (3, 4) seeded planes as d10a, so
      * the whole pipeline replays in DuckDB with only the pair condition
-     * changed; the prebanded sidecar twin is spec-pinned equal. Like
+     * changed; the `indexBands` sidecar form is spec-pinned equal. Like
      * d10/d10a, the fixed plane count is the documented pedagogical
      * contrast (the 30x anchor measured it at 61x wall for 3x data), so
      * the entry opts out of the round-15 batch x index load tripwire
      * explicitly; production callers get the default
      * maxBucketLoad=Some(1<<20), and the derived-parameter form is
-     * embeddingNearDupsIncrementalAuto (IncLoadProbe's 1.5x-for-3x
-     * measurement). */
+     * embeddingNearDupsIncrementalAuto (1.5x wall for 3x data, SCALE.md
+     * "Full-batch-suite anchor at 30x (round 14)"). */
     QueryDef("d10c_embedding_neardups_incremental",
       (s, dir) => {
         val all = embT(s, dir)
@@ -1511,8 +1511,9 @@ object DataxQueries {
       Some(EmbeddingNearDupIncrementalSql)),
 
     /* The AUTO twin of d10c (round 15) — (L, r) derived from the INDEX
-     * size via bandsFor, i.e. the production parameterization
-     * IncLoadProbe measured sublinear (1.57x wall for 3x data) where
+     * size via bandsFor, i.e. the production parameterization measured
+     * sublinear (1.57x wall for 3x data, SCALE.md "Incremental dedup at
+     * 10x/30x, re-measured through the guarded APIs (round 15)") where
      * the fixed form blew up 61x; same oracle machinery as d10b (the
      * seeded planes and the recall rule recomputed bit-exactly in
      * DuckDB), with the bandsFor size source switched to the index

@@ -129,22 +129,17 @@ object DedupStream {
           raw, textCol, mode, quarantineDir)
         case None => raw
       }
-      // the SHARED forms hand back the batch's cached band signatures
+      // the SHARED form hands back the batch's cached band signatures
       // so the sidecar write below reuses them (round 21, guide §1.2:
       // the write used to re-tokenize + re-aggregate the survivors from
-      // raw text — a third signature derivation per batch)
-      val (survivors, batchBands, release) = priorOnly(docsDir) match {
-        case Some(index) =>
-          Dedup.dedupIncrementShared(b,
-            index.select(batch.columns.map(col): _*),
-            idCol, textCol, k, numHashes, bands, threshold,
-            indexBands = priorOnly(bandsDir),
-            indexFps = priorOnly(fpsDir),
-            maxBucketLoad = maxBucketLoad)
-        case None => // first batch: the index does not exist yet
-          Dedup.dedupCorpusShared(b, idCol, textCol, k, numHashes, bands,
-            threshold)
-      }
+      // raw text — a third signature derivation per batch); on the
+      // first batch there is no index and it runs the within pass alone
+      val (survivors, batchBands, release) = Dedup.dedupIncrementShared(b,
+        priorOnly(docsDir).map(_.select(batch.columns.map(col): _*)),
+        idCol, textCol, k, numHashes, bands, threshold,
+        indexBands = priorOnly(bandsDir),
+        indexFps = priorOnly(fpsDir),
+        maxBucketLoad = maxBucketLoad)
       try {
         // STAGE-THEN-RENAME batch commit (round 21, guide §2.4/§6; the
         // r20 whole-build-commit pattern applied per batch). The r20

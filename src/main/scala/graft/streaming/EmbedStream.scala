@@ -24,9 +24,10 @@ import graft.datax.{Dedup, Similarity}
   *   - `bands` — the (id, tbl, bucket, params) sidecar
   *     ([[Dedup.embeddingBandSignatures]]), so steady-state batches
   *     never recompute corpus-side signatures: the batch's bands join
-  *     the STORED table ([[Dedup.embeddingNearDupsIncrementalPrebanded]]
-  *     — corpus VECTORS re-enter only for the candidate-sized colliding
-  *     slice), and the params column fails fast on (L, r, dim) drift.
+  *     the STORED table ([[Dedup.embeddingNearDupsIncremental]] with
+  *     `indexBands` — corpus VECTORS re-enter only for the
+  *     candidate-sized colliding slice), and the params column fails
+  *     fast on (L, r, dim) drift.
   *
   * Dedup rule (the vector family's standing one, [[Similarity.semanticDedup]]'s):
   * of each near-dup pair the LARGER id drops — within the batch first
@@ -217,22 +218,16 @@ object EmbedStream {
       // checked on the DATA PATH — the eager per-batch full-sidecar
       // distinct+collect is the public form's posture, not the loop's);
       // index vectors re-enter only for the candidate-sized colliding
-      // slice.
+      // slice. A bands table missing by manual surgery falls back to the
+      // direct form.
       val survivors = priorOnly(vecsDir) match {
         case Some(indexVecs) =>
-          val crossDrop = (priorOnly(bandsDir) match {
-            case Some(indexBands) =>
-              Dedup.embeddingNearDupsIncrementalPrebanded(withinSurvivors,
-                indexVecs.select(batch.columns.map(col): _*),
-                indexBands, idCol, vecCol, tables, planesPerTable,
-                threshold, maxBucketLoad, metricSuffix = "ingest_cross",
-                dim = dim, eagerValidate = false)
-            case None => // bands table missing (manual surgery): direct
-              Dedup.embeddingNearDupsIncremental(withinSurvivors,
-                indexVecs.select(batch.columns.map(col): _*),
-                idCol, vecCol, tables, planesPerTable, threshold,
-                maxBucketLoad, metricSuffix = "ingest_cross")
-          }).select(col("id_a").as(idCol)).distinct()
+          val crossDrop = Dedup.embeddingIncrementPairs(withinSurvivors,
+              indexVecs.select(batch.columns.map(col): _*),
+              priorOnly(bandsDir), idCol, vecCol, tables, planesPerTable,
+              threshold, maxBucketLoad, metricSuffix = "ingest_cross",
+              dim = dim, eagerValidate = false)
+            .select(col("id_a").as(idCol)).distinct()
           withinSurvivors.join(crossDrop, Seq(idCol), "left_anti")
         case None => withinSurvivors // first batch: no index yet
       }

@@ -649,8 +649,9 @@ class DataxSpec extends AnyFunSuite {
     Dedup.releaseShingleCaches()
     // the stored band table (what a deployment keeps next to the corpus)
     val stored = Dedup.bandSignatures(index, "doc_id", "text", bands = 8)
-    val pre = collectPairs(Dedup.incrementalNearDupsPrebanded(batch, index,
-      stored, "doc_id", "text", bands = 8, threshold = 0.4))
+    val pre = collectPairs(Dedup.incrementalNearDups(batch, index,
+      "doc_id", "text", bands = 8, threshold = 0.4,
+      indexBands = Some(stored)))
     Dedup.releaseShingleCaches()
     assert(pre == direct && direct.nonEmpty,
       "precomputed bands give bit-identical pairs (same jaccard values)")
@@ -668,8 +669,8 @@ class DataxSpec extends AnyFunSuite {
     // a parameter mismatch against the stored table fails FAST — silent
     // near-zero candidate counts would let near-dups into the corpus
     val err = intercept[IllegalArgumentException] {
-      Dedup.incrementalNearDupsPrebanded(batch, index, stored, "doc_id",
-        "text", bands = 4, threshold = 0.4)
+      Dedup.incrementalNearDups(batch, index, "doc_id",
+        "text", bands = 4, threshold = 0.4, indexBands = Some(stored))
     }
     assert(err.getMessage.contains("index band table holds params"))
     // a MIXED-parameter sidecar (accumulated across restarts with
@@ -680,8 +681,8 @@ class DataxSpec extends AnyFunSuite {
       Dedup.bandSignatures(index, "doc_id", "text", numHashes = 8, bands = 8)
         .limit(1))
     val errMixed = intercept[IllegalArgumentException] {
-      Dedup.incrementalNearDupsPrebanded(batch, index, mixed, "doc_id",
-        "text", bands = 8, threshold = 0.4)
+      Dedup.incrementalNearDups(batch, index, "doc_id",
+        "text", bands = 8, threshold = 0.4, indexBands = Some(mixed))
     }
     assert(errMixed.getMessage.contains("mixed-parameter sidecar"))
     Dedup.releaseShingleCaches()
@@ -2046,9 +2047,9 @@ class DataxSpec extends AnyFunSuite {
     val index = emb.filter($"vec_id" % 10 =!= 0)
     val sidecar = Dedup.embeddingBandSignatures(index, "vec_id", "embedding",
       tables = 3, planesPerTable = 4)
-    val pre = Dedup.embeddingNearDupsIncrementalPrebanded(batch, index,
-        sidecar, "vec_id", "embedding", tables = 3, planesPerTable = 4,
-        threshold = 0.25)
+    val pre = Dedup.embeddingNearDupsIncremental(batch, index,
+        "vec_id", "embedding", tables = 3, planesPerTable = 4,
+        threshold = 0.25, indexBands = Some(sidecar))
       .orderBy("id_a", "id_b").collect().toSeq
     val direct = Dedup.embeddingNearDupsIncremental(batch, index,
         "vec_id", "embedding", tables = 3, planesPerTable = 4,
@@ -2059,9 +2060,9 @@ class DataxSpec extends AnyFunSuite {
     // a sidecar built with different (L, r, dim) would bucket nothing in
     // common and silently admit near-dups — the params column fails fast
     val drifted = intercept[IllegalArgumentException] {
-      Dedup.embeddingNearDupsIncrementalPrebanded(batch, index, sidecar,
+      Dedup.embeddingNearDupsIncremental(batch, index,
         "vec_id", "embedding", tables = 2, planesPerTable = 4,
-        threshold = 0.25)
+        threshold = 0.25, indexBands = Some(sidecar))
     }
     assert(drifted.getMessage.contains("L=3,r=4,dim=64")
         && drifted.getMessage.contains("L=2,r=4,dim=64"),

@@ -64,15 +64,16 @@ class IncrementalGuardSpec extends AnyFunSuite {
     val sidecar = Dedup.embeddingBandSignatures(index, "vec_id", "embedding",
       tables = 2, planesPerTable = 2)
     val ex2 = intercept[Throwable] {
-      Dedup.embeddingNearDupsIncrementalPrebanded(batch, index, sidecar,
+      Dedup.embeddingNearDupsIncremental(batch, index,
         "vec_id", "embedding", tables = 2, planesPerTable = 2,
-        threshold = 0.9, maxBucketLoad = Some(1000L)).count()
+        threshold = 0.9, maxBucketLoad = Some(1000L),
+        indexBands = Some(sidecar)).count()
     }
     assert(chain(ex2).contains("hot LSH bucket (batch x index)"),
       s"prebanded form must carry the guard too:\n${chain(ex2)}")
-    val pre = Dedup.embeddingNearDupsIncrementalPrebanded(batch, index,
-        sidecar, "vec_id", "embedding", tables = 2, planesPerTable = 2,
-        threshold = 0.9, maxBucketLoad = None)
+    val pre = Dedup.embeddingNearDupsIncremental(batch, index,
+        "vec_id", "embedding", tables = 2, planesPerTable = 2,
+        threshold = 0.9, maxBucketLoad = None, indexBands = Some(sidecar))
       .orderBy("id_a", "id_b").collect().toSeq
     assert(pre == pairs.orderBy("id_a", "id_b").collect().toSeq,
       "opted-out prebanded == opted-out direct")
@@ -90,8 +91,8 @@ class IncrementalGuardSpec extends AnyFunSuite {
       s"text twin unguarded:\n${chain(ex)}")
     val sidecar = Dedup.bandSignatures(index, "doc_id", "text")
     val ex2 = intercept[Throwable] {
-      Dedup.incrementalNearDupsPrebanded(batch, index, sidecar, "doc_id",
-        "text", maxBucketLoad = Some(20L)).count()
+      Dedup.incrementalNearDups(batch, index, "doc_id",
+        "text", maxBucketLoad = Some(20L), indexBands = Some(sidecar)).count()
     }
     assert(chain(ex2).contains("hot LSH bucket (batch x index)"),
       s"text prebanded twin unguarded:\n${chain(ex2)}")
@@ -196,64 +197,38 @@ class IncrementalGuardSpec extends AnyFunSuite {
     }
   }
 
-  test("FromSidecar forms derive parameters from the stored params column") {
-    // vector side: == the explicit prebanded call at the sidecar's own
-    // (L, r); zero caller-supplied parameters left to drift
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select("vec_id", "embedding")
-    val batch = emb.filter($"vec_id" % 10 === 0)
-    val index = emb.filter($"vec_id" % 10 =!= 0)
-    val sidecar = Dedup.embeddingBandSignatures(index, "vec_id", "embedding",
-      tables = 3, planesPerTable = 4)
-    val from = Dedup.embeddingNearDupsIncrementalFromSidecar(batch, index,
-        sidecar, "vec_id", "embedding", threshold = 0.25)
-      .orderBy("id_a", "id_b").collect().toSeq
-    val explicit = Dedup.embeddingNearDupsIncrementalPrebanded(batch, index,
-        sidecar, "vec_id", "embedding", tables = 3, planesPerTable = 4,
-        threshold = 0.25)
-      .orderBy("id_a", "id_b").collect().toSeq
-    assert(from.nonEmpty && from == explicit)
-    // text side: same contract over the (k, h, b) params
-    val txt = "the quick brown fox jumps over the lazy dog again and again"
-    val b = Seq((1L, txt)).toDF("doc_id", "text")
-    val ix = Seq((101L, txt), (102L, "entirely unrelated words about ships"))
-      .toDF("doc_id", "text")
-    val tside = Dedup.bandSignatures(ix, "doc_id", "text", k = 4,
-      numHashes = 16, bands = 8)
-    val tFrom = Dedup.incrementalNearDupsFromSidecar(b, ix, tside,
-        "doc_id", "text", threshold = 0.3)
-      .orderBy("id_a", "id_b").collect().toSeq
-    val tExpl = Dedup.incrementalNearDupsPrebanded(b, ix, tside,
-        "doc_id", "text", k = 4, numHashes = 16, bands = 8, threshold = 0.3)
-      .orderBy("id_a", "id_b").collect().toSeq
-    assert(tFrom.nonEmpty && tFrom == tExpl)
-    // a mixed-parameter sidecar cannot drive an increment
-    val mixed = tside.union(
-      Dedup.bandSignatures(ix, "doc_id", "text", k = 4, numHashes = 16,
-        bands = 4))
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.incrementalNearDupsFromSidecar(b, ix, mixed, "doc_id", "text")
-    }
-    assert(ex.getMessage.contains("mixed-parameter"), ex.getMessage)
-    // and a params-less one is rejected before any work runs
-    val bare = intercept[IllegalArgumentException] {
-      Dedup.incrementalNearDupsFromSidecar(b, ix, tside.drop("params"),
-        "doc_id", "text")
-    }
-    assert(bare.getMessage.contains("params"), bare.getMessage)
-  }
-
   test("embedding sidecar without a params column is rejected (dim is part of the bucket contract)") {
     val batch = identicalVecs(1 to 3)
     val index = identicalVecs(11 to 14)
     val bare = Dedup.embeddingBandSignatures(index, "vec_id", "embedding",
       tables = 2, planesPerTable = 2).drop("params")
     val ex = intercept[IllegalArgumentException] {
-      Dedup.embeddingNearDupsIncrementalPrebanded(batch, index, bare,
+      Dedup.embeddingNearDupsIncremental(batch, index,
         "vec_id", "embedding", tables = 2, planesPerTable = 2,
-        threshold = 0.9)
+        threshold = 0.9, indexBands = Some(bare))
     }
     assert(ex.getMessage.contains("params"),
       s"must demand the params column: ${ex.getMessage}")
+    // the ingest loop's data-path check applies the same rule to a
+    // STORED sidecar that lost its params column
+    val root = java.nio.file.Files.createTempDirectory("graft-bare-sidecar").toString
+    try {
+      graft.streaming.EmbedStream.processBatch(index, 0L, root, "vec_id",
+        "embedding", tables = 2, planesPerTable = 2)
+      val part = s"$root/bands/batch=0"
+      val stripped = spark.read.parquet(part).drop("params")
+      spark.createDataFrame(java.util.Arrays.asList(stripped.collect(): _*),
+          stripped.schema)
+        .write.mode("overwrite").parquet(part)
+      val ex2 = intercept[IllegalArgumentException] {
+        graft.streaming.EmbedStream.processBatch(batch, 1L, root, "vec_id",
+          "embedding", tables = 2, planesPerTable = 2)
+      }
+      assert(ex2.getMessage.contains("params"),
+        s"the drive must demand the params column too: ${ex2.getMessage}")
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(root)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
   }
 }

@@ -1138,7 +1138,27 @@ class StreamingSpec extends AnyFunSuite {
       val fps = spark.read.parquet(s"$root/fps")
         .select("id").as[Long].collect().sorted.toSeq
       assert(fps == indexIds, "one fingerprint per indexed doc")
+      // and they hold exactly what the public builders derive from the
+      // visible docs
+      import graft.streaming.DedupStream.visibleIndex
+      val docs = visibleIndex(spark, s"$root/docs")
+      assertSameRows(visibleIndex(spark, s"$root/bands"),
+        graft.datax.Dedup.bandSignatures(docs, "doc_id", "text", bands = 8),
+        "stored bands == bandSignatures(visible docs)")
+      assertSameRows(visibleIndex(spark, s"$root/fps"),
+        graft.datax.Dedup.fingerprintTable(docs, "doc_id", "text"),
+        "stored fps == fingerprintTable(visible docs)")
     } finally q.stop()
+  }
+
+  /** `stored` (a visible index table: `batch` and the other side's
+    * all-null columns included) and `built` agree row for row on
+    * `built`'s columns. */
+  private def assertSameRows(stored: org.apache.spark.sql.DataFrame,
+      built: org.apache.spark.sql.DataFrame, clue: String): Unit = {
+    val a = stored.select(built.columns.map(col).toIndexedSeq: _*)
+    assert(a.exceptAll(built).isEmpty && built.exceptAll(a).isEmpty, clue)
+    assert(built.count() > 0, s"vacuous: $clue")
   }
 
   test("compactIndex: folds old batches, preserves index state and the replay contract") {
@@ -1444,6 +1464,11 @@ class StreamingSpec extends AnyFunSuite {
     val params = DedupStream.visibleIndex(spark, s"$root2/bands")
       .select("params").distinct().as[String].collect()
     assert(params.toSeq == Seq("L=3,r=4,dim=64"), s"got ${params.toSeq}")
+    assertSameRows(DedupStream.visibleIndex(spark, s"$root2/bands"),
+      graft.datax.Dedup.embeddingBandSignatures(
+        DedupStream.visibleIndex(spark, s"$root2/vecs"), "vec_id",
+        "embedding", tables = 3, planesPerTable = 4),
+      "stored vector bands == embeddingBandSignatures(visible vecs)")
     // RETENTION: compact folds old batches (layout-only), expire drops
     // the consolidated generation — the DedupStream protocol over
     // (vecs, bands)
