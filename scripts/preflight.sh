@@ -18,7 +18,24 @@ cd "$(dirname "$0")/.."
 # failure mode this script exists to prevent). ScalaTest prints one
 # "Total number of tests run: N" summary per test run; require N > 0.
 out="$(mktemp)"
-trap 'rm -f "$out"' EXIT
+start="$(mktemp)" # its mtime marks this run's start
+
+# Per-suite wall time from the JUnit reports THIS run wrote (newer than
+# $start, so reports left by earlier testOnly runs are ignored): the
+# slowest five first, then the rest, then the total. Printed on every
+# exit, pass or fail; it never changes the exit status.
+suite_times() {
+  local reports=target/test-reports
+  [ -d "$reports" ] || return 0
+  find "$reports" -name 'TEST-*.xml' -newer "$start" -print0 \
+    | xargs -0 -r grep -ho '<testsuite [^>]*' \
+    | sed -nE 's/.* name="([^"]*)".* time="([0-9.]+)".*/\2 \1/p' \
+    | sort -rn \
+    | awk '{ printf "   %9.1f s  %s\n", $1, $2; t += $1; n++ }
+           NR == 5 { print "   ---" }
+           END { if (n) printf "== suite time: %.1f s over %d suites (slowest first)\n", t, n }'
+}
+trap 'suite_times || true; rm -f "$out" "$start"' EXIT
 
 if [ "$#" -gt 0 ]; then
   suites="$*"

@@ -1031,32 +1031,42 @@ object Similarity {
     "pq_chunk_ids", "auto", "sample_multiple")
   private val QualityCols = "built_n" +: QualityOnlyCols
 
-  /** The stored [[IndexSpec]] of a persisted index; stride defaults
-    * for pre-round-18 metas (no `seeding` column) with the encoding
-    * their `residual` flag records, and the default chooser sample
-    * width for pre-round-19 ones (no `sample_multiple` column —
-    * round-19 ADVICE: without the record, a maintenance replay of an
-    * auto build re-ran the chooser at the default width, which can
-    * flip the raw-vs-residual outcome differently than the original
-    * non-default chooser would have). */
-  private def qualityOf(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): IndexSpec = {
-    val resolved = sidecarPath(spark, dir, "build_meta.parquet")
-    val meta = spark.read.parquet(resolved)
-    def flagged = if (residualFlagIn(meta, resolved)) "residual" else "raw"
-    if (!meta.columns.contains("seeding")) IndexSpec(encoding = flagged)
-    else {
-      val hasSm = meta.columns.contains("sample_multiple")
-      val cols = if (hasSm) QualityOnlyCols else QualityOnlyCols.dropRight(1)
-      val r = meta.select(cols.map(col): _*).head()
-      // the missing-column fallback is the case-class default, not a
-      // second literal — drifting an independent copy of the chooser
-      // width would re-create the replay-flip this record prevents
-      IndexSpec(r.getString(0), r.getInt(1), r.getInt(2), r.getDouble(3),
-        r.getLong(4), r.getInt(5), r.getLong(6),
-        if (r.getBoolean(7)) "auto" else flagged,
-        if (hasSm) r.getInt(8) else IndexSpec().sampleMultiple)
-    }
+  /** A persisted index's build_meta row ([[commitBuild]] writes one per
+    * build): `built_n` (the staleness denominator), the residual flag
+    * (PQ layout only — plain rows carry no codes), and the stored
+    * [[IndexSpec]]. */
+  private final case class BuildMeta(row: org.apache.spark.sql.Row, residual: Boolean) {
+    def builtN: Long = row.getAs[Long]("built_n")
+    def spec: IndexSpec = IndexSpec(row.getAs[String]("seeding"),
+      row.getAs[Int]("kmeans_iterations"), row.getAs[Int]("seed_rounds"),
+      row.getAs[Double]("seed_oversample"), row.getAs[Long]("seed"),
+      row.getAs[Int]("pq_kmeans_iterations"), row.getAs[Long]("pq_chunk_ids"),
+      if (row.getAs[Boolean]("auto")) "auto"
+      else if (residual) "residual" else "raw",
+      row.getAs[Int]("sample_multiple"))
+  }
+
+  /** The build_meta row of the index whose row table is `table` — the
+    * ONE meta read, shared by staleness, maintenance, the
+    * appends' encoding and the probes' geometry. A meta that holds no
+    * row, or a PQ meta with a null flag (a crashed partial overwrite),
+    * raises a NAMED error instead of a bare NoSuchElementException or a
+    * silent raw default — a residual index probed as raw returns wrong
+    * neighbors with no error, and an append would mix encodings
+    * permanently (round-17 review finding). */
+  private def buildMetaOf(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, table: String): BuildMeta = {
+    val path = sidecarPath(dir, table, "build_meta.parquet")
+    val pq = table == "codes.parquet"
+    spark.read.parquet(path).head(1).headOption
+      .filter(r => !pq || !r.isNullAt(r.fieldIndex("residual")))
+      .map(r => BuildMeta(r, pq && r.getAs[Boolean]("residual")))
+      .getOrElse(throw new IllegalStateException(
+        s"$path exists but holds no " +
+          (if (pq) "residual flag row" else "build record row") +
+          " — a crashed/partial meta write; how the index was built is " +
+          "unknowable, rebuild it (ivfIndexWrite/pqIndexWrite) before " +
+          "probing, appending or maintaining it"))
   }
 
   /** Persist an IVF index in the layout [[ivfTopK]]'s scale note
@@ -1066,9 +1076,9 @@ object Similarity {
     * contribute zero bytes read, zero tasks — not a data filter
     * evaluated per row) — with the K-row quantizer and the build_meta
     * record riding INSIDE that table under the hidden `_graft/` subdir
-    * (round 20: they commit in the same single rename as the rows —
-    * [[commitRowTable]]; pre-round-20 `<dir>/centroids.parquet`
-    * siblings still read via [[sidecarPath]]). This is the 100-TB
+    * (they commit in the same single rename as the rows —
+    * [[commitRowTable]]; [[rowTableOf]] is the one layout check every
+    * face runs). This is the 100-TB
     * serving shape: the index builds once (the expensive assign pass
     * over the corpus), then every query batch reads only its nProbe
     * buckets. `spec` is the coarse quantizer's recipe ([[IndexSpec]]).
@@ -1229,9 +1239,9 @@ object Similarity {
       rows.observe(obs, count(lit(1)).as("n"))
         .write.mode("overwrite").partitionBy("centroid_id").parquet(staging)
       lc.df(spark).write.mode("overwrite")
-        .parquet(s"$staging/${inTableName("centroids.parquet")}")
+        .parquet(s"$staging/$SidecarDir/centroids.parquet")
       book.foreach(_.df(spark).write.mode("overwrite")
-        .parquet(s"$staging/${inTableName("pq_codebook.parquet")}"))
+        .parquet(s"$staging/$SidecarDir/pq_codebook.parquet"))
       import spark.implicits._
       val (n, auto) = (obs.get("n").asInstanceOf[Long], spec.encoding == "auto")
       // one literal row per layout: the PQ columns sit between built_n
@@ -1249,7 +1259,7 @@ object Similarity {
               spec.pqChunkIds, auto, spec.sampleMultiple))
             .toDF(Seq("built_n", "m", "ksub", "residual") ++ QualityOnlyCols: _*)
       }).write.mode("overwrite")
-        .parquet(s"$staging/${inTableName("build_meta.parquet")}")
+        .parquet(s"$staging/$SidecarDir/build_meta.parquet")
     }
     clearIncTables(spark, dir)
   }
@@ -1302,9 +1312,9 @@ object Similarity {
     // rename would otherwise CREATE a shard-only table that a later
     // heal would then keep (its staging twin rolls back once a final
     // table exists) — cheap no-op when nothing is pending
-    healIndexDir(spark, dir)
-    val (table, rows) = shardRows(spark, dir, newVectors, idCol, vecCol)
-    rows.write.mode("append").partitionBy("centroid_id")
+    val table = healIndexDir(spark, dir)
+    shardRows(spark, dir, table, newVectors, idCol, vecCol)
+      .write.mode("append").partitionBy("centroid_id")
       .parquet(s"$dir/$table")
   }
 
@@ -1640,7 +1650,7 @@ object Similarity {
     * directory-pruned AND 32x lighter per row — carrying the IVF
     * quantizer, the subspace codebook, and build_meta as in-table
     * `_graft/` sidecars committed by the same single rename (round 20;
-    * pre-round-20 sibling layouts still read — [[sidecarPath]]).
+    * [[rowTableOf]] rejects any other layout).
     * Vectors themselves are not stored here: at scale the
     * full-precision table lives elsewhere and is touched only by an
     * optional exact rerank of the top candidates.
@@ -1804,64 +1814,29 @@ object Similarity {
       .agg(coalesce(sum("_e"), lit(0.0))).head().getDouble(0)
   }
 
-  /** The stored `residual` flag of a persisted PQ index; false for
-    * indexes written before the flag existed (no `residual` column —
-    * raw-vector encoding was the only form then). A FLAG-ERA meta that
-    * exists but holds no row / a null flag (a crashed partial
-    * overwrite) raises a NAMED error instead of either the bare
-    * NoSuchElementException it used to or a silent false — a residual
-    * index probed as raw returns wrong neighbors with no error, and an
-    * append would mix encodings permanently (round-17 review finding;
-    * the degrade-to-false first cut had exactly that failure mode). */
-  private def residualFlagOf(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Boolean = {
-    val resolved = sidecarPath(spark, dir, "build_meta.parquet")
-    val metaPath = new org.apache.hadoop.fs.Path(resolved)
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(metaPath) &&
-      residualFlagIn(spark.read.parquet(resolved), resolved)
-  }
-
-  /** [[residualFlagOf]] over an already-opened meta (read from
-    * `resolved`). */
-  private def residualFlagIn(meta: DataFrame, resolved: String): Boolean = {
-    if (!meta.columns.contains("residual")) return false
-    meta.select("residual").head(1).headOption match {
-      case Some(r) if !r.isNullAt(0) => r.getBoolean(0)
-      case _ => throw new IllegalStateException(
-        s"$resolved exists but holds no residual flag row " +
-          "— a crashed/partial meta write; the codes' encoding is " +
-          "unknowable, rebuild the index (pqIndexWrite) before probing " +
-          "or appending")
-    }
-  }
-
   /** One shard's serving-index rows against a persisted index's STORED
     * geometry, layout- and encoding-aware: (id, vec, centroid_id) for
     * the plain [[ivfIndexWrite]] layout; (id, codes, centroid_id) for
     * the PQ one — residual-encoded when build_meta says so (the flag is
-    * the index's, never re-supplied by the caller). Returns (row table
-    * name, rows); shared by [[ivfIndexAppend]] and
-    * [[ivfIndexAppendBatch]] so the plain-append and batch-idempotent
-    * faces are byte-rule-identical. */
+    * the index's, never re-supplied by the caller). `table` is the
+    * healed row table ([[healIndexDir]]); shared by [[ivfIndexAppend]]
+    * and [[ivfIndexAppendBatch]] so the plain-append and
+    * batch-idempotent faces are byte-rule-identical. */
   private def shardRows(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        newVectors: DataFrame, idCol: String,
-                        vecCol: String): (String, DataFrame) = {
-    val table = rowTableOf(spark, dir)
+                        table: String, newVectors: DataFrame, idCol: String,
+                        vecCol: String): DataFrame = {
     val centroids = spark.read.parquet(
-      sidecarPath(spark, dir, "centroids.parquet", table))
-    val rows =
-      if (table == "assigned.parquet")
-        ivfAssign(newVectors, centroids, idCol, vecCol)
-      else {
-        val book = spark.read.parquet(
-          sidecarPath(spark, dir, "pq_codebook.parquet", table))
-        if (residualFlagOf(spark, dir))
-          residualCodeRows(residualRows(newVectors, centroids, idCol, vecCol),
-            book)
-        else pqCodeRows(newVectors, centroids, book, idCol, vecCol)
-      }
-    (table, rows)
+      sidecarPath(dir, table, "centroids.parquet"))
+    if (table == "assigned.parquet")
+      ivfAssign(newVectors, centroids, idCol, vecCol)
+    else {
+      val book = spark.read.parquet(
+        sidecarPath(dir, table, "pq_codebook.parquet"))
+      if (buildMetaOf(spark, dir, table).residual)
+        residualCodeRows(residualRows(newVectors, centroids, idCol, vecCol),
+          book)
+      else pqCodeRows(newVectors, centroids, book, idCol, vecCol)
+    }
   }
 
   // ---- replay-idempotent serving-index increment (round 17): the
@@ -1901,87 +1876,45 @@ object Similarity {
     }
   }
 
-  private val IncClearMarker = "_inc_clear_pending" // legacy, pre-round-19
   private val IncConsumedToken = "_inc_consumed_upto"
+  private val SidecarDir = "_graft"
 
-  /** The build sidecars that ride the one-rename whole-build commit
-    * (round 20): the coarse quantizer, the PQ codebook, and the
-    * build_meta record live INSIDE the row table dir under one hidden
-    * `_graft/` subdir — invisible to Spark's file index, partition
-    * discovery, and the skew walk alike (one hidden PARENT, not
-    * underscore-prefixed leaf names, so a direct read of a sidecar
-    * path is an ordinary non-hidden-leaf read — no per-probe
-    * ignored-path warnings) — so {rows,
-    * geometry, codebook, meta, consumed token} commit in the SAME
-    * single `fs.rename` ([[commitRowTable]]). This closes the two
-    * residual windows the round-19 protocol documented: a crash
-    * between a sibling geometry write and the rename can no longer
-    * leave new geometry over the old row table (the staged geometry
-    * rolls back WITH the staged rows), and a crash before a trailing
-    * build_meta job can no longer roll the quality/built_n record back
-    * to the prior build (the meta commits with the rows it describes). */
-  private[graft] val InTableSidecars =
-    Seq("centroids.parquet", "pq_codebook.parquet", "build_meta.parquet")
+  /** Where build sidecar `name` of the row table `table` lives:
+    * `<dir>/<table>/_graft/<name>`. The coarse quantizer, the PQ
+    * codebook, and the build_meta record live INSIDE the row table dir
+    * under one hidden `_graft/` subdir — invisible to Spark's file
+    * index, partition discovery, and the skew walk alike (one hidden
+    * PARENT, not underscore-prefixed leaf names, so a direct read of a
+    * sidecar path is an ordinary non-hidden-leaf read — no per-probe
+    * ignored-path warnings) — so {rows, geometry, codebook, meta,
+    * consumed token} commit in the SAME single `fs.rename`
+    * ([[commitRowTable]]): a crash can never leave new geometry over
+    * the old row table (the staged geometry rolls back WITH the staged
+    * rows), nor roll the quality/built_n record back to the prior
+    * build (the meta commits with the rows it describes). A pure path
+    * function: [[rowTableOf]] is the one existence check. */
+  private def sidecarPath(dir: String, table: String, name: String): String =
+    s"$dir/$table/$SidecarDir/$name"
 
-  private def inTableName(name: String): String = "_graft/" + name
+  /** [[sidecarPath]] of the index at `dir`, after the layout check
+    * ([[rowTableOf]]) — package-visible so specs inspect stored
+    * geometry through the same resolution the faces use. */
+  private[graft] def sidecarOf(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, name: String): String =
+    sidecarPath(dir, rowTableOf(spark, dir), name)
 
-  /** Where a build sidecar lives: `<dir>/<table>/_graft/<name>` for
-    * round-20 one-rename builds (preferred — it committed atomically with the
-    * rows it describes), falling back to the legacy `<dir>/<name>`
-    * sibling for pre-round-20 indexes. Callers that tolerate an absent
-    * sidecar check existence of the RESOLVED path. `table` (when the
-    * caller already resolved the layout — probe faces know theirs,
-    * maintenance computed [[rowTableOf]]) skips probing the other
-    * table's path: one metadata RPC per resolution instead of two,
-    * which matters on object stores where each exists is a round trip
-    * (round-20 review). Package-visible so specs inspect stored
-    * geometry through the same resolution. */
-  private[graft] def sidecarPath(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String, name: String,
-                                 table: String = null): String = {
-    val conf = spark.sessionState.newHadoopConf()
-    val candidates =
-      if (table != null) Seq(table)
-      else Seq("assigned.parquet", "codes.parquet")
-    candidates.iterator
-      .map(t => new org.apache.hadoop.fs.Path(s"$dir/$t/${inTableName(name)}"))
-      .find(p => p.getFileSystem(conf).exists(p))
-      .map(_.toString)
-      .getOrElse(s"$dir/$name")
-  }
-
-  /** True when a PRE-ROUND-19 rebuild committed its base writes but
-    * its increment clear has not completed (the legacy
-    * `_inc_clear_pending` marker): the increment rows are ALREADY IN
-    * the base, so every reader must skip them and the next
-    * maintenance/append heals the clear. New rebuilds never write this
-    * marker — the consumed token rides the row-table rename instead
-    * ([[commitRowTable]]). Round 20 retires the marker from the read
-    * faces' own code: [[rowTableConsumedUpTo]] resolves it to a
-    * synthesized consumed-cutoff (the ONE resolution point), so an
-    * index crashed under the old protocol still reads correctly after
-    * an upgrade, and [[healIndexDir]] physically retires it on the
-    * first write-face touch. */
-  private def incClearPending(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$IncClearMarker")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Physically drop both increment siblings (and any legacy marker) —
-    * pure GC under the round-19 protocol: by the time a successful
-    * rebuild calls this, the committed consumed token already makes
-    * every batch at or below it invisible to readers, so a crash at
-    * any point inside this face changes nothing a reader sees. */
+  /** Physically drop both increment siblings — pure GC under the
+    * round-19 protocol: by the time a successful rebuild calls this,
+    * the committed consumed token already makes every batch at or
+    * below it invisible to readers, so a crash at any point inside
+    * this face changes nothing a reader sees. */
   private def clearIncTables(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/$IncClearMarker")
-    val fs = marker.getFileSystem(conf)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     Seq("assigned_inc.parquet", "codes_inc.parquet")
       .map(t => new org.apache.hadoop.fs.Path(s"$dir/$t"))
       .foreach(p => if (fs.exists(p)) { fs.delete(p, true); () })
-    if (fs.exists(marker)) { fs.delete(marker, false); () }
   }
 
   /** Max increment batch id VISIBLE in a row table's increment sibling
@@ -2023,32 +1956,15 @@ object Similarity {
       scala.util.Try(s.toLong).toOption
     }
 
-  /** The committed consumed-cutoff of a row table (None for
-    * pre-round-19 indexes, fresh builds that had nothing to consume,
-    * or a torn token): increment batches at or below it are ALREADY IN
-    * the base — every reader must skip them and [[healIndexDir]] may
-    * physically drop them.
-    *
-    * The legacy pre-round-19 `_inc_clear_pending` marker resolves HERE
-    * and nowhere else (round 20 — read faces used to branch on it
-    * separately): the marker meant "every increment batch visible
-    * right now is already in the base", which under the token protocol
-    * is exactly `consumed = max visible batch id`, synthesized
-    * read-only. (Safe to read live rather than at crash time: any
-    * post-upgrade append would have healed the marker away first —
-    * every write face heals on entry — so a marker-bearing index has
-    * only pre-crash batches.) [[healIndexDir]] retires the marker
-    * physically on the next write-face touch. */
+  /** The committed consumed-cutoff of a row table (None for fresh
+    * builds that had nothing to consume, or a torn token): increment
+    * batches at or below it are ALREADY IN the base — every reader must
+    * skip them and [[healIndexDir]] may physically drop them. */
   private def rowTableConsumedUpTo(spark: org.apache.spark.sql.SparkSession,
                                    dir: String, table: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table/$IncConsumedToken")
     readConsumedToken(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
       .filter(_ >= 0)
-      .orElse {
-        if (incClearPending(spark, dir))
-          Some(maxIncBatchId(spark, dir, table)).filter(_ >= 0)
-        else None
-      }
   }
 
   /** RENAME-COMMITTED whole-build rebuild (round 19 closed the
@@ -2061,7 +1977,7 @@ object Similarity {
     * only moved it. This face makes the set ATOMIC instead: the
     * caller's `write` callback stages the rows AND the build sidecars
     * (quantizer geometry, PQ codebook, build_meta — under the hidden
-    * `_graft/` subdir, [[InTableSidecars]]) into a
+    * `_graft/` subdir, [[sidecarPath]]) into a
     * `<table>.staging` sibling, the consumed-cutoff token
     * (`_inc_consumed_upto` = the max increment batch id visible when
     * the rebuild started, snapshotted BEFORE any write) is placed
@@ -2085,8 +2001,8 @@ object Similarity {
     * rename → the table is MISSING and a complete staging exists →
     * heal finishes the rename (roll-forward). After the commit
     * rename → committed: readers skip consumed batches via the token;
-    * the trailing `.old` delete, the legacy-sibling sweep, and the
-    * physical clear are all heal-idempotent GC (a crash mid-delete
+    * the trailing `.old` delete and the physical clear are both
+    * heal-idempotent GC (a crash mid-delete
     * leaves hidden garbage heal sweeps once the final table exists).
     * The token also fixes an
     * adjacent seam the markers never covered: an at-least-once
@@ -2162,21 +2078,15 @@ object Similarity {
       require(fs.rename(fin, old), s"rename-aside $fin -> $old failed")
     require(fs.rename(staging, fin), s"rename $staging -> $fin failed")
     if (fs.exists(old)) { fs.delete(old, true); () } // hidden garbage now
-    // the committed build carries its sidecars in-table (round 20), so
-    // any legacy pre-round-20 sibling copies are stale garbage —
-    // readers already prefer the in-table copy (sidecarPath); pure GC,
-    // heal-idempotent (healIndexDir sweeps them too after a crash here)
-    InTableSidecars.foreach { n =>
-      val legacy = new org.apache.hadoop.fs.Path(s"$dir/$n")
-      if (fs.exists(new org.apache.hadoop.fs.Path(fin, inTableName(n))) &&
-          fs.exists(legacy)) { fs.delete(legacy, true); () }
-    }
   }
 
-  /** Heal every crash window of the rename-commit rebuild protocol
-    * (and the legacy pre-round-19 marker), in dependency order —
-    * called FIRST by every maintenance/append face
-    * ([[ivfIndexMaintain]], [[ivfIndexAppendBatch]],
+  /** Heal every crash window of the rename-commit rebuild protocol,
+    * in dependency order, and return the healed row table
+    * ([[rowTableOf]] — the layout check runs after the staging
+    * roll-forward, which can restore a missing table, and before
+    * anything else is touched) — called FIRST by every
+    * maintenance/append face ([[ivfIndexMaintain]],
+    * [[ivfIndexAppend]], [[ivfIndexAppendBatch]],
     * [[ivfIndexConsolidate]]; single-writer like them). Read faces
     * never mutate PROTOCOL STATE — they apply the same visibility
     * rules instead; the one sanctioned read-face write is the skew
@@ -2185,7 +2095,7 @@ object Similarity {
     * just stays footer-bound), unique-tmp rename committed,
     * last-writer-wins under concurrent polls. */
   private def healIndexDir(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Unit = {
+                           dir: String): String = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     // 1. staging roll-forward/back: a COMPLETE staging (parseable
@@ -2208,52 +2118,41 @@ object Similarity {
       }
       val old = new org.apache.hadoop.fs.Path(s"$dir/$t.old")
       if (fs.exists(old) && fs.exists(fin)) { fs.delete(old, true); () }
-      // round 20: a one-rename build's in-table sidecars supersede any
-      // legacy sibling copies — a crash between the commit rename and
-      // commitRowTable's own sweep leaves them behind; readers never
-      // consult them once the in-table copy exists, so this is pure GC
-      if (fs.exists(fin)) InTableSidecars.foreach { n =>
-        val legacy = new org.apache.hadoop.fs.Path(s"$dir/$n")
-        if (fs.exists(new org.apache.hadoop.fs.Path(fin, inTableName(n))) &&
-            fs.exists(legacy)) { fs.delete(legacy, true); () }
-      }
     }
-    // 2. legacy marker (pre-round-19 crashed rebuilds)
-    if (incClearPending(spark, dir)) clearIncTables(spark, dir)
-    // 3. physically drop increment batches the base already absorbed
+    val table = rowTableOf(spark, dir)
+    // 2. physically drop increment batches the base already absorbed
     // (a crashed rebuild's pending clear, or a late at-least-once
     // replay of a consumed batch): plain dirs at or below the token,
     // plus the epoch dir — and its marker — when wholly consumed
     // (folding a consumed batch into a visible epoch would resurrect
     // it, so consolidation heals before it folds)
-    Seq("assigned.parquet", "codes.parquet").foreach { t =>
-      rowTableConsumedUpTo(spark, dir, t).foreach { consumed =>
-        val incDir = s"$dir/${incTableOf(t)}"
-        val incRoot = new org.apache.hadoop.fs.Path(incDir)
-        if (fs.exists(incRoot)) {
-          val cutoff =
-            graft.streaming.DedupStream.compactedUpTo(spark, incDir)
-          fs.listStatus(incRoot).foreach { s =>
-            val n = s.getPath.getName
-            if (s.isDirectory && n.startsWith("batch="))
-              scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-                .foreach { b =>
-                  val stale =
-                    if (b >= 0) b <= consumed
-                    else cutoff.exists(c => b == -(c + 2) && c <= consumed)
-                  if (stale) { fs.delete(s.getPath, true); () }
-                }
-          }
-          if (cutoff.exists(_ <= consumed)) {
-            // epoch gone: its marker goes too (remaining plain batches
-            // are > cutoff, so marker-less visibility is identical)
-            val m = new org.apache.hadoop.fs.Path(incDir,
-              graft.streaming.DedupStream.MarkerName)
-            if (fs.exists(m)) { fs.delete(m, false); () }
-          }
+    rowTableConsumedUpTo(spark, dir, table).foreach { consumed =>
+      val incDir = s"$dir/${incTableOf(table)}"
+      val incRoot = new org.apache.hadoop.fs.Path(incDir)
+      if (fs.exists(incRoot)) {
+        val cutoff =
+          graft.streaming.DedupStream.compactedUpTo(spark, incDir)
+        fs.listStatus(incRoot).foreach { s =>
+          val n = s.getPath.getName
+          if (s.isDirectory && n.startsWith("batch="))
+            scala.util.Try(n.stripPrefix("batch=").toLong).toOption
+              .foreach { b =>
+                val stale =
+                  if (b >= 0) b <= consumed
+                  else cutoff.exists(c => b == -(c + 2) && c <= consumed)
+                if (stale) { fs.delete(s.getPath, true); () }
+              }
+        }
+        if (cutoff.exists(_ <= consumed)) {
+          // epoch gone: its marker goes too (remaining plain batches
+          // are > cutoff, so marker-less visibility is identical)
+          val m = new org.apache.hadoop.fs.Path(incDir,
+            graft.streaming.DedupStream.MarkerName)
+          if (fs.exists(m)) { fs.delete(m, false); () }
         }
       }
     }
+    table
   }
 
   /** [[ivfIndexAppend]] made REPLAY-IDEMPOTENT for
@@ -2298,9 +2197,9 @@ object Similarity {
     // heal a crashed rebuild first: roll a staged commit forward/back
     // and drop increment batches the base already absorbed — their
     // stale rows would otherwise sit next to this batch's
-    healIndexDir(spark, dir)
-    val (table, rows) = shardRows(spark, dir, newVectors, idCol, vecCol)
-    rows.write.mode("overwrite").partitionBy("centroid_id")
+    val table = healIndexDir(spark, dir)
+    shardRows(spark, dir, table, newVectors, idCol, vecCol)
+      .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(s"$dir/${incTableOf(table)}/batch=$batchId")
   }
 
@@ -2312,17 +2211,11 @@ object Similarity {
     * Identical frame (and plan) to a bare base read when no increment
     * exists — plain-append indexes see zero change. Filters the probe
     * faces apply push into BOTH scans (centroid_id is a partition
-    * column on each side of the union). */
-  private def servingRows(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): DataFrame = {
-    val table = rowTableOf(spark, dir)
-    servingRows(spark, dir, table, spark.read.parquet(s"$dir/$table"))
-  }
-
-  /** [[servingRows]] over an already-opened base table — the probe
-    * faces open it with the schema their [[ServedGeometry]] carries,
-    * so no per-call schema inference job runs. The increment sibling is
-    * still listed (and read) on every call. */
+    * column on each side of the union). `base` is the opened row
+    * table — the probe faces open it with the schema their
+    * [[ServedGeometry]] carries, so no per-call schema inference job
+    * runs. The increment sibling is still listed (and read) on every
+    * call. */
   private def servingRows(spark: org.apache.spark.sql.SparkSession,
                           dir: String, table: String,
                           base: DataFrame): DataFrame = {
@@ -2331,9 +2224,7 @@ object Similarity {
     else {
       val inc0 = graft.streaming.DedupStream.visibleIndex(spark, incDir)
       // batches the base already absorbed (the round-19 consumed
-      // token; the legacy pending-clear marker resolves to the same
-      // cutoff inside rowTableConsumedUpTo — round 20, one resolution
-      // point): plain dirs at or below it, and the epoch partition
+      // token): plain dirs at or below it, and the epoch partition
       // when the committed cutoff is itself consumed
       val inc = rowTableConsumedUpTo(spark, dir, table).fold(inc0) {
         consumed =>
@@ -2365,9 +2256,9 @@ object Similarity {
   def ivfIndexConsolidate(spark: org.apache.spark.sql.SparkSession,
                           dir: String, keepLastBatches: Int = 1,
                           targetBytes: Long = 128L * 1024 * 1024): Option[Long] = {
-    healIndexDir(spark, dir) // heal first: folding a consumed batch
-    // into a visible epoch would resurrect it
-    val incDir = s"$dir/${incTableOf(rowTableOf(spark, dir))}"
+    // heal first: folding a consumed batch into a visible epoch would
+    // resurrect it
+    val incDir = s"$dir/${incTableOf(healIndexDir(spark, dir))}"
     if (!hasIncRows(spark, incDir)) None
     else graft.streaming.DedupStream.compactIndexTableNested(spark, incDir,
       "centroid_id", keepLastBatches, targetBytes)
@@ -2396,30 +2287,24 @@ object Similarity {
   }
 
   /** Identity of the files one sidecar was read from: (path, length,
-    * mtime) of each file in its dir, from ONE listing — the in-table
-    * `_graft/` copy first, the legacy sibling second
-    * ([[sidecarPath]]'s order), and an explicit absent entry when
-    * neither exists. Part-file names carry the writer job's UUID, so a
-    * rebuild — committed, or crashed and healed — never repeats an
-    * identity. Carries the resolved path, so a miss reads exactly the
-    * dir it listed. */
-  private final case class SidecarIdentity(path: String, exists: Boolean,
+    * mtime) of each file in its dir ([[sidecarPath]]), from ONE
+    * listing; no files when the dir is absent (the miss then raises
+    * the read's own missing-path error). Part-file names carry the
+    * writer job's UUID, so a rebuild — committed, or crashed and
+    * healed — never repeats an identity. */
+  private final case class SidecarIdentity(path: String,
                                            files: Seq[(String, Long, Long)])
 
   private def sidecarIdentity(fs: org.apache.hadoop.fs.FileSystem,
                               dir: String, table: String,
                               name: String): SidecarIdentity = {
-    def listing(path: String): Option[SidecarIdentity] =
-      try Some(SidecarIdentity(path, exists = true,
-        fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-          .filter(_.isFile)
-          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-          .sortBy(_._1)))
-      catch { case _: java.io.FileNotFoundException => None }
-    val legacy = s"$dir/$name"
-    listing(s"$dir/$table/${inTableName(name)}")
-      .orElse(listing(legacy))
-      .getOrElse(SidecarIdentity(legacy, exists = false, Nil))
+    val path = sidecarPath(dir, table, name)
+    SidecarIdentity(path,
+      try fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+        .filter(_.isFile)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sortBy(_._1)
+      catch { case _: java.io.FileNotFoundException => Nil })
   }
 
   /** One entry per served dir, bounded (least recently probed evicted
@@ -2472,11 +2357,10 @@ object Similarity {
     GeometryCache.getOrResolve(s"$dir|$sidecarTable", (table, quantizer +: pqSidecars)) {
       val centroids = localCentroids(spark.read.parquet(quantizer.path))
       val (book, residual) = pqSidecars match {
-        case Seq(codebook, meta) =>
+        case Seq(codebook, _) =>
           val b = collectCodebook(spark.read.parquet(codebook.path))
           require(b.length >= 1, "empty codebook")
-          (b, meta.exists &&
-            residualFlagIn(spark.read.parquet(meta.path), meta.path))
+          (b, buildMetaOf(spark, dir, sidecarTable).residual)
         case _ => (Array.empty[Array[Array[Double]]], false)
       }
       ServedGeometry(table, centroids, book, residual,
@@ -2594,28 +2478,33 @@ object Similarity {
   }
 
   /** Appended-since-build fraction of a persisted index:
-    * (rows now - rows at build) / rows at build. None for an index
-    * written before the build_meta sidecar existed, and None for an
-    * index built over an EMPTY corpus (builtN = 0 — a fraction of
-    * nothing is not a signal; feeding Infinity/NaN to the re-quantize
-    * rule would be nonsense, and such an index needs a rebuild the
-    * moment it holds any rows anyway). The count is
-    * parquet-metadata-cheap; see [[ivfIndexAppend]] for the
-    * re-quantize rule it feeds. Works on both persisted layouts: the
-    * plain [[ivfIndexWrite]] one (`assigned.parquet`) and the IVF-PQ
-    * [[pqIndexWrite]] one (`codes.parquet`). */
+    * (rows now - rows at build) / rows at build, with rows at build
+    * read from build_meta's `built_n` ([[buildMetaOf]] — a meta with
+    * no row raises its named error). None for an index built over an
+    * EMPTY corpus (builtN = 0 — a fraction of nothing is not a signal;
+    * feeding Infinity/NaN to the re-quantize rule would be nonsense,
+    * and such an index needs a rebuild the moment it holds any rows
+    * anyway). The count is parquet-metadata-cheap; see
+    * [[ivfIndexAppend]] for the re-quantize rule it feeds. Works on
+    * both persisted layouts: the plain [[ivfIndexWrite]] one
+    * (`assigned.parquet`) and the IVF-PQ [[pqIndexWrite]] one
+    * (`codes.parquet`). */
   def ivfIndexStaleness(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Option[Double] = {
-    val resolved = sidecarPath(spark, dir, "build_meta.parquet")
-    val metaPath = new org.apache.hadoop.fs.Path(resolved)
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(metaPath)) return None
-    val builtN = spark.read.parquet(resolved)
-      .select("built_n").head().getLong(0)
-    if (builtN == 0L) return None
-    val nowN = servingRows(spark, dir).count()
-    Some((nowN - builtN).toDouble / builtN)
+    val table = rowTableOf(spark, dir)
+    stalenessOf(spark, dir, table, buildMetaOf(spark, dir, table))
   }
+
+  /** [[ivfIndexStaleness]] over an already-read meta. */
+  private def stalenessOf(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, table: String,
+                          meta: BuildMeta): Option[Double] =
+    if (meta.builtN == 0L) None
+    else {
+      val nowN = servingRows(spark, dir, table,
+        spark.read.parquet(s"$dir/$table")).count()
+      Some((nowN - meta.builtN).toDouble / meta.builtN)
+    }
 
   /** Bucket-size skew of a persisted index: max/median of the
     * per-centroid_id partition row counts — the OTHER re-quantize
@@ -2782,8 +2671,9 @@ object Similarity {
     } catch { case scala.util.control.NonFatal(_) => () } // advisory
 
   /** [[ivfIndexSkew]] with the listing strategy pinned — package-
-    * visible so the spec can assert both strategies agree and the
-    * probe can measure each. */
+    * visible so the spec can assert both strategies agree (their A/B:
+    * SCALE.md "Round-18 measurements: kmeans|| at quality K,
+    * scheme-aware skew listing"). */
   private[graft] def ivfIndexSkewListing(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       bulkListing: Boolean): Option[Double] =
@@ -2792,7 +2682,8 @@ object Similarity {
   /** [[ivfIndexSkewListing]] plus the number of parquet footers the
     * poll actually OPENED — package-visible so the spec can pin the
     * cache contract (warm poll = zero opens; appends open only their
-    * own files) and the probe can report cold vs warm. */
+    * own files). Cold vs warm poll walls: SCALE.md "Round-19
+    * measurements: the skew poll loses its O(files) footer term, ...". */
   private[graft] def ivfIndexSkewCounted(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       bulkListing: Boolean): (Option[Double], Int) = {
@@ -2855,8 +2746,8 @@ object Similarity {
     // ([[RowCacheName]] — round 19; a warm poll opens NOTHING), footer
     // opens only for the misses, fanned out on the parallel pool
     // (opens are ~ms each — sequential at K=1024 x multiple files that
-    // was most of a minute, IndexSkewProbe-measured; parallel it is
-    // seconds; cached it is a listing)
+    // was most of a minute, parallel it is seconds, cached it is a
+    // listing: SCALE.md "Round-17 scale-seam closures", item 2)
     val cacheFile = new org.apache.hadoop.fs.Path(s"$dir/$RowCacheName")
     val cachedRows = readRowCache(fs, cacheFile)
     val opened = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -2943,10 +2834,11 @@ object Similarity {
     * K-bounded: the stored table is eagerly checkpointed (it is about
     * to be overwritten) and [[lloyd]] collects per iteration. */
   private def warmCentroids(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, corpus: DataFrame, iterations: Int,
-                            idCol: String, vecCol: String): DataFrame = {
+                            dir: String, table: String, corpus: DataFrame,
+                            iterations: Int, idCol: String,
+                            vecCol: String): DataFrame = {
     val cur = spark.read.parquet(
-        sidecarPath(spark, dir, "centroids.parquet"))
+        sidecarPath(dir, table, "centroids.parquet"))
       .localCheckpoint(eager = true)
     if (iterations <= 0) cur
     else lloyd(
@@ -2974,9 +2866,9 @@ object Similarity {
     * it. The one exception is `seeding = "given"`
     * ([[ivfIndexWriteWith]]/[[pqIndexWriteWith]]: a caller-supplied
     * geometry whose construction the index cannot know) — the rebuild
-    * warns loudly on stderr and builds with `IndexSpec()`; pre-round-18
-    * metas lack the record and read as stride, which is exactly the
-    * rebuild they already received. `corpus` must be the FULL current
+    * warns loudly on stderr and builds with `IndexSpec()`. The poll
+    * reads build_meta ONCE ([[buildMetaOf]]): the staleness
+    * denominator and, on a fire, the record replayed. `corpus` must be the FULL current
     * corpus (the appended rows included): the rebuild re-derives
     * geometry from it and clears the increment sibling. Single-writer
     * like every maintenance face; polling cost when nothing fires is
@@ -3041,8 +2933,9 @@ object Similarity {
     // heal a crashed rebuild before reading the triggers (roll a
     // staged commit forward/back, drop absorbed increment batches —
     // the readings below already skip them either way)
-    healIndexDir(spark, dir)
-    val st = ivfIndexStaleness(spark, dir)
+    val table = healIndexDir(spark, dir)
+    val meta = buildMetaOf(spark, dir, table)
+    val st = stalenessOf(spark, dir, table, meta)
     val sk = ivfIndexSkew(spark, dir)
     val appended = st.exists(_ > 0)
     val staleFire = st.exists(_ >= maxStaleness)
@@ -3050,15 +2943,14 @@ object Similarity {
     val fire = staleFire || skewFire
     var warmFellBack = false
     if (fire) {
-      val table = rowTableOf(spark, dir)
       val k = spark.read.parquet(
-        sidecarPath(spark, dir, "centroids.parquet", table)).count().toInt
-      val q = qualityOf(spark, dir)
+        sidecarPath(dir, table, "centroids.parquet")).count().toInt
+      val q = meta.spec
       val pq =
         if (table == "assigned.parquet") None
         else {
           val book = collectCodebook(spark.read.parquet(
-            sidecarPath(spark, dir, "pq_codebook.parquet", "codes.parquet")))
+            sidecarPath(dir, table, "pq_codebook.parquet")))
           Some((book.length, book.head.length))
         }
       // warm-start cannot serve a PURELY skew-driven fire when the
@@ -3091,8 +2983,8 @@ object Similarity {
             IndexSpec()
           }
         val centroids =
-          if (warm) warmCentroids(spark, dir, corpus, q.kmeansIterations,
-            idCol, vecCol)
+          if (warm) warmCentroids(spark, dir, table, corpus,
+            q.kmeansIterations, idCol, vecCol)
           else coarseQuantizer(corpus, k, spec, idCol, vecCol)
         buildIndex(corpus, dir, centroids, pq, idCol, vecCol, spec)
         ()
@@ -3121,20 +3013,30 @@ object Similarity {
 
   /** Which row table a persisted index directory holds:
     * `assigned.parquet` ([[ivfIndexWrite]]) or `codes.parquet`
-    * ([[pqIndexWrite]]) — the maintenance family (staleness, compact,
-    * skew) works on either layout. Loud when neither exists. */
+    * ([[pqIndexWrite]]) — the ONE layout check every face runs (the
+    * probe, append, and maintenance families work on either layout),
+    * one existence test per layout: the table's `_graft/` sidecar dir
+    * ([[sidecarPath]]). A row table without one holds an outdated
+    * layout (sidecars beside the table, no in-table record) that no
+    * face reads; a served index is derived data, so the named error
+    * says to rebuild it. Loud when neither table exists. */
   private def rowTableOf(spark: org.apache.spark.sql.SparkSession,
                          dir: String): String = {
-    val conf = spark.sessionState.newHadoopConf()
-    def exists(name: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      p.getFileSystem(conf).exists(p)
+    val tables = Seq("assigned.parquet", "codes.parquet")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def exists(path: String) = fs.exists(new org.apache.hadoop.fs.Path(path))
+    tables.find(t => exists(s"$dir/$t/$SidecarDir")).getOrElse {
+      throw new IllegalArgumentException(
+        tables.find(t => exists(s"$dir/$t")).fold(
+          s"$dir holds neither assigned.parquet nor codes.parquet — not an " +
+            "ivfIndexWrite/pqIndexWrite index directory") { t =>
+          s"$dir/$t has an outdated index layout (no in-table " +
+            s"$SidecarDir/ build sidecars) that this version no longer " +
+            "reads — rebuild it with ivfIndexWrite/pqIndexWrite over its " +
+            "corpus into a fresh dir"
+        })
     }
-    if (exists("assigned.parquet")) "assigned.parquet"
-    else if (exists("codes.parquet")) "codes.parquet"
-    else throw new IllegalArgumentException(
-      s"$dir holds neither assigned.parquet nor codes.parquet — not an " +
-        "ivfIndexWrite/pqIndexWrite index directory")
   }
 
   /** Probe a persisted [[ivfIndexWrite]] index: identical results to

@@ -1569,7 +1569,7 @@ class DataxSpec extends AnyFunSuite {
         maxStaleness = Double.MaxValue, maxSkew = 1.0)
       assert(viaSkew.rebuilt)
       assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, dir, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, dir, "build_meta.parquet"))
         .select("residual").head().getBoolean(0),
         "a residual index must rebuild residual")
       // append-driven hysteresis: the rebuild zeroed staleness, so the
@@ -1582,62 +1582,6 @@ class DataxSpec extends AnyFunSuite {
         s"an un-appended index must never skew-fire, got $after")
     } finally Seq(dir, dir2).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
-  }
-
-  test("a crashed rebuild's pending increment clear: readers skip the stale rows, the next maintenance poll heals") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select("vec_id", "embedding")
-    val base = emb.filter($"vec_id" % 5 =!= 3)
-    val shard = emb.filter($"vec_id" % 5 === 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-incheal").toString
-    try {
-      // reach window B's exact state: a completed rebuild over the
-      // union whose increment clear never ran — base holds everything,
-      // the increment holds duplicates of shard's rows, marker present
-      Similarity.pqIndexWrite(base, dir, nCentroids = 16)
-      Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L)
-      val centroids = Similarity.ivfIndex(base, nCentroids = 16)._1
-      val book = Similarity.pqCentroids(base)
-      Similarity.pqIndexWriteWith(emb, dir, centroids, book) // full rebuild
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      // a TRUE pre-round-19 index: no consumed token (the round-19/20
-      // protocols would cover batch 0 via the token alone — deleting it
-      // keeps the MARKER the only thing protecting the read)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$dir/codes.parquet/_inc_consumed_upto"), false)
-      Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L)  // rows now duplicated
-      fs.create(new org.apache.hadoop.fs.Path(s"$dir/_inc_clear_pending"),
-        true).close()
-      // readers skip the stale increment: no id surfaces twice, probe
-      // equals a clean rebuild, staleness reads 0
-      val queries = emb.filter($"vec_id" < 16)
-      val probed = Similarity.ivfPqTopK(spark, dir, queries, k = 5, nProbe = 4)
-        .orderBy("query_id", "rank").collect().toSeq
-      val dir2 = java.nio.file.Files.createTempDirectory("graft-incheal2").toString
-      try {
-        Similarity.pqIndexWriteWith(emb, dir2, centroids, book)
-        val clean = Similarity.ivfPqTopK(spark, dir2, queries, k = 5, nProbe = 4)
-          .orderBy("query_id", "rank").collect().toSeq
-        assert(probed == clean,
-          "under the marker the stale increment must be invisible")
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(dir2)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-      }
-      assert(Similarity.ivfIndexStaleness(spark, dir) == Some(0.0))
-      // the next maintenance poll heals: increment gone, marker gone,
-      // no rebuild fired
-      val poll = Similarity.ivfIndexMaintain(spark, dir, emb)
-      assert(!poll.rebuilt)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes_inc.parquet")),
-        "the heal must complete the pending clear")
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_inc_clear_pending")),
-        "the heal must retire the marker")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     }
   }
@@ -1655,13 +1599,23 @@ class DataxSpec extends AnyFunSuite {
       Seq.empty[(Long, Int, Int, Boolean)]
         .toDF("built_n", "m", "ksub", "residual")
         .write.mode("overwrite").parquet(
-          Similarity.sidecarPath(spark, dirR, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, dirR, "build_meta.parquet"))
       val ex2 = intercept[IllegalStateException] {
         Similarity.ivfPqTopK(spark, dirR, emb.filter($"vec_id" < 4),
           k = 2, nProbe = 2)
       }
       assert(ex2.getMessage.contains("no residual flag row"),
         s"got: ${ex2.getMessage}")
+      // the maintenance family reads the same meta row through the same
+      // check: the named error, not a bare NoSuchElementException
+      Seq[(String, () => Any)](
+        "ivfIndexStaleness" -> (() => Similarity.ivfIndexStaleness(spark, dirR)),
+        "ivfIndexMaintain" -> (() => Similarity.ivfIndexMaintain(spark, dirR, emb))
+      ).foreach { case (face, call) =>
+        val ex = intercept[IllegalStateException](call())
+        assert(ex.getMessage.contains("no residual flag row"),
+          s"$face got: ${ex.getMessage}")
+      }
     } finally Seq(dirR).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
@@ -1693,10 +1647,10 @@ class DataxSpec extends AnyFunSuite {
         "near-orthogonal noise: auto must pick raw")
       // build_meta records the choice — the index stays self-describing
       assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, dirC, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, dirC, "build_meta.parquet"))
         .select("residual").head().getBoolean(0))
       assert(!spark.read.parquet(
-          Similarity.sidecarPath(spark, dirN, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, dirN, "build_meta.parquet"))
         .select("residual").head().getBoolean(0))
       // and the written layout IS the explicit face's, probe-identical
       val qC = clustered.filter($"vec_id" < 8)
@@ -2267,7 +2221,7 @@ class DataxSpec extends AnyFunSuite {
        else Similarity.ivfTopKIndexed(spark, d, queries, k = 5, nProbe = 4))
         .orderBy("query_id", "rank").collect().toSeq
     def metaOf(d: String) = spark.read.parquet(
-      Similarity.sidecarPath(spark, d, "build_meta.parquet"))
+      Similarity.sidecarOf(spark, d, "build_meta.parquet"))
     val qualityCols = Seq("seeding", "kmeans_iterations", "seed_rounds",
       "seed_oversample", "seed", "pq_kmeans_iterations", "pq_chunk_ids",
       "auto", "sample_multiple")
@@ -2385,7 +2339,7 @@ class DataxSpec extends AnyFunSuite {
     def probeIvf(d: String) = Similarity.ivfTopKIndexed(spark, d, queries,
       k = 5, nProbe = 4).orderBy("query_id", "rank").collect().toSeq
     def seedingOf(d: String) = spark.read.parquet(
-        Similarity.sidecarPath(spark, d, "build_meta.parquet"))
+        Similarity.sidecarOf(spark, d, "build_meta.parquet"))
       .select("seeding").head().getString(0)
     val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
     def fresh() = {
@@ -2513,7 +2467,7 @@ class DataxSpec extends AnyFunSuite {
       d
     }
     def bookOf(d: String) = spark.read.parquet(
-        Similarity.sidecarPath(spark, d, "pq_codebook.parquet"))
+        Similarity.sidecarOf(spark, d, "pq_codebook.parquet"))
       .orderBy("sub", "cid").collect().toSeq
     try {
       // RAW kmeans|| record, Lloyd >= 1 (the warm path genuinely
@@ -2552,12 +2506,12 @@ class DataxSpec extends AnyFunSuite {
         maxStaleness = 0.05, warmStart = false).rebuilt)
       def residualErrOf(d: String): Double = {
         val cents = spark.read.parquet(
-            Similarity.sidecarPath(spark, d, "centroids.parquet"))
+            Similarity.sidecarOf(spark, d, "centroids.parquet"))
           .localCheckpoint(eager = true)
         Similarity.encodeErrorSum(
           Similarity.residualRows(emb, cents, "vec_id", "embedding"),
           spark.read.parquet(
-            Similarity.sidecarPath(spark, d, "pq_codebook.parquet")),
+            Similarity.sidecarOf(spark, d, "pq_codebook.parquet")),
           "vec")
       }
       val (errW, errC) = (residualErrOf(rw), residualErrOf(rc))
@@ -2566,7 +2520,7 @@ class DataxSpec extends AnyFunSuite {
         f"residual warm fire drifted past tolerance: warm $errW%.2f vs " +
           f"cold $errC%.2f")
       assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, rw, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, rw, "build_meta.parquet"))
         .select("residual").head().getBoolean(0),
         "the residual record survives the warm fire")
     } finally dirs.foreach { d =>
@@ -2621,7 +2575,7 @@ class DataxSpec extends AnyFunSuite {
       assert(probe(dir) == probe(dirX),
         "the fallback must replay the recorded cold construction")
       assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, dir, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, dir, "build_meta.parquet"))
         .select("seeding").head().getString(0) == "reservoir",
         "the quality record survives the fallback")
       // the consumed token survives the SECOND rebuild of the same fire
@@ -2698,7 +2652,7 @@ class DataxSpec extends AnyFunSuite {
       // eager checkpoint: the write face overwrites the very files this
       // frame would lazily re-read
       val centroids = spark.read.parquet(
-          Similarity.sidecarPath(spark, dir, "centroids.parquet"))
+          Similarity.sidecarOf(spark, dir, "centroids.parquet"))
         .localCheckpoint(eager = true)
       val ex = intercept[Throwable] {
         Similarity.ivfIndexWriteWith(crashy, dir, centroids)
@@ -2749,7 +2703,7 @@ class DataxSpec extends AnyFunSuite {
       // built_n still records the full corpus row count — the observed
       // count is the same number the retired second pass produced
       assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, dir, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, dir, "build_meta.parquet"))
         .select("built_n").head().getLong(0) == emb.count(),
         "built_n == corpus rows, via the observed row write")
       assert(exists("assigned.parquet/_inc_consumed_upto"),
@@ -2815,7 +2769,7 @@ class DataxSpec extends AnyFunSuite {
       // the pairing invariant: the served quantizer still has 16 rows
       // and the probe view is byte-identical to the pre-crash build
       assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, dir, "centroids.parquet")).count()
+          Similarity.sidecarOf(spark, dir, "centroids.parquet")).count()
         == 16L, "the served quantizer must be the PRIOR build's")
       assert(probe() == preCrash,
         "geometry and rows must roll back together — never mixed")
@@ -2829,54 +2783,56 @@ class DataxSpec extends AnyFunSuite {
     }
   }
 
-  test("pre-round-20 sibling-sidecar indexes read through the fallback " +
-       "and migrate to the in-table layout on their first rebuild, " +
-       "which sweeps the stale legacy copies") {
+  test("an index with sidecars outside its row table (the layout " +
+       "before in-table sidecars) is rejected by every face with one " +
+       "named error and left untouched") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-legacy").toString
     val conf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     def p(name: String) = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    def listing(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map { f =>
+        val a = java.nio.file.Files.readAttributes(f,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        s"${root.relativize(f)} ${a.size} ${a.lastModifiedTime}"
+      }.toSeq.sorted finally walk.close()
+    }
     try {
-      // reconstruct the legacy layout exactly: build fresh, then move
-      // the in-table sidecars out to the pre-round-20 sibling paths
+      // reconstruct the old layout exactly: build fresh, then move the
+      // in-table sidecars out to the sibling paths they used to occupy
+      // (the old layout had no _graft/ dir at all)
       Similarity.pqIndexWrite(emb, dir, nCentroids = 16,
         spec = IndexSpec(encoding = "residual"))
       Seq("centroids.parquet", "pq_codebook.parquet", "build_meta.parquet")
         .foreach { n =>
           assert(fs.rename(p(s"codes.parquet/_graft/$n"), p(n)),
-            s"legacy reconstruction failed for $n")
+            s"old-layout reconstruction failed for $n")
         }
+      assert(fs.delete(p("codes.parquet/_graft"), false),
+        "the emptied _graft/ dir must go")
+      val before = listing()
       val queries = emb.filter($"vec_id" < 8)
-      def probe() = Similarity.ivfPqTopK(spark, dir, queries,
-        k = 5, nProbe = 4).orderBy("query_id", "rank").collect().toSeq
-      // every read face resolves the legacy siblings (residual flag,
-      // quality record, geometry, staleness denominator)
-      val legacyView = probe()
-      assert(legacyView.nonEmpty)
-      assert(Similarity.ivfIndexStaleness(spark, dir) == Some(0.0))
-      assert(Similarity.sidecarPath(spark, dir, "build_meta.parquet")
-        == s"$dir/build_meta.parquet", "fallback resolves the sibling")
-      // a maintenance-fired rebuild (staleness 1.0 via an append of the
-      // same corpus under new ids) replays the recorded RESIDUAL
-      // construction and migrates the sidecars in-table
       val shard = emb.withColumn("vec_id", $"vec_id" + 100000L)
-      Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L)
-      assert(Similarity.ivfIndexMaintain(spark, dir,
-        emb.unionByName(shard), maxStaleness = 0.5).rebuilt)
-      Seq("centroids.parquet", "pq_codebook.parquet", "build_meta.parquet")
-        .foreach { n =>
-          assert(fs.exists(p(s"codes.parquet/_graft/$n")),
-            s"$n must live in-table after the rebuild")
-          assert(!fs.exists(p(n)),
-            s"the stale legacy $n sibling must be swept")
-        }
-      assert(spark.read.parquet(
-          Similarity.sidecarPath(spark, dir, "build_meta.parquet"))
-        .select("residual").head().getBoolean(0),
-        "the residual record survives the migration")
-      assert(probe().nonEmpty)
+      Seq[(String, () => Any)](
+        "ivfPqTopK" -> (() => Similarity.ivfPqTopK(spark, dir, queries,
+          k = 5, nProbe = 4)),
+        "ivfIndexAppendBatch" -> (() =>
+          Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L)),
+        "ivfIndexMaintain" -> (() => Similarity.ivfIndexMaintain(spark, dir,
+          emb.unionByName(shard), maxStaleness = 0.5)),
+        "ivfIndexStaleness" -> (() => Similarity.ivfIndexStaleness(spark, dir))
+      ).foreach { case (face, call) =>
+        val ex = intercept[IllegalArgumentException](call())
+        assert(ex.getMessage.contains("outdated index layout") &&
+            ex.getMessage.contains("rebuild it with ivfIndexWrite/pqIndexWrite"),
+          s"$face got: ${ex.getMessage}")
+      }
+      assert(listing() == before, "a rejected dir must be left untouched")
     } finally {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     }
@@ -3050,7 +3006,7 @@ class DataxSpec extends AnyFunSuite {
       Seq.empty[(Long, Int, Int, Boolean)]
         .toDF("built_n", "m", "ksub", "residual")
         .write.mode("overwrite").parquet(
-          Similarity.sidecarPath(spark, dir, "build_meta.parquet"))
+          Similarity.sidecarOf(spark, dir, "build_meta.parquet"))
       (1 to 2).foreach { i =>
         val ex = intercept[IllegalStateException](probePq(dir, queries))
         assert(ex.getMessage.contains("no residual flag row"), s"probe $i got: ${ex.getMessage}")
@@ -3081,7 +3037,7 @@ class DataxSpec extends AnyFunSuite {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sessionState.newHadoopConf())
       val q = new org.apache.hadoop.fs.Path(
-        Similarity.sidecarPath(spark, dir, "centroids.parquet"))
+        Similarity.sidecarOf(spark, dir, "centroids.parquet"))
       val aside = new org.apache.hadoop.fs.Path(s"$dir/centroids.aside")
       assert(fs.rename(q, aside))
       (1 to 2).foreach { i =>

@@ -1524,10 +1524,10 @@ class StreamingSpec extends AnyFunSuite {
     val rebuilt = s"$dir/rebuilt"
     Similarity.pqIndexWriteWith(survivors, rebuilt,
       spark.read.parquet(
-        Similarity.sidecarPath(spark, serving, "centroids.parquet"))
+        Similarity.sidecarOf(spark, serving, "centroids.parquet"))
         .localCheckpoint(eager = true),
       spark.read.parquet(
-        Similarity.sidecarPath(spark, serving, "pq_codebook.parquet"))
+        Similarity.sidecarOf(spark, serving, "pq_codebook.parquet"))
         .localCheckpoint(eager = true))
     val queries = embedVecs
     val a = Similarity.ivfPqTopK(spark, serving, queries, k = 2, nProbe = 2)
