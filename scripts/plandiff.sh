@@ -12,6 +12,11 @@
 #   \w+\.scala:\d+   source positions
 #   plan_id=\d+      exchange plan ids
 #   $Lambda$...@...  lambda object identities
+# and, in plans with a distinct-aggregate `Expand` (a `gid` column), the
+# order Spark gives its distinct groups, which follows expression-id
+# hashing and so differs between runs of one tree: scripts/
+# plandiff_expand.py renumbers the `gid` literals by projection content
+# and sorts the lists on the lines that carry `gid`.
 # Prints one `identical|differs|only-in-A|only-in-B  <name>` line per
 # query, then a summary; exits 1 when anything differs or is unpaired.
 # `PLANDIFF_SHOW=1` also prints the masked diff of each differing query.
@@ -25,14 +30,23 @@ fi
 a="$1"
 b="$2"
 
-mask() {
+expand="$(dirname "$0")/plandiff_expand.py"
+
+mask_ids() {
   sed -E \
     -e 's/#[0-9]+/#N/g' \
     -e 's/\[[0-9]+\]/[N]/g' \
     -e 's/[A-Za-z0-9_]+\.scala:[0-9]+/X.scala:N/g' \
     -e 's/plan_id=[0-9]+/plan_id=N/g' \
-    -e 's/\$Lambda\$[^@[:space:],]*@[0-9a-f]+/$Lambda$X/g' \
-    "$1"
+    -e 's/\$Lambda\$[^@[:space:],]*@[0-9a-f]+/$Lambda$X/g'
+}
+
+mask() {
+  if grep -q 'gid#[0-9]' "$1"; then
+    python3 "$expand" relabel < "$1" | mask_ids | python3 "$expand" sort
+  else
+    mask_ids < "$1"
+  fi
 }
 
 # <name> -> file, for one dir

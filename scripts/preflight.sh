@@ -13,6 +13,16 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# One session contract: graft.Sessions.local is the only session builder
+# under src/ (GraftExtensions checks its ANSI-off/UTC preconditions; a
+# hand-rolled builder is how they drifted before).
+builders="$(grep -rl 'SparkSession.builder' src | grep -v '/graft/Sessions\.scala$' || true)"
+if [ -n "$builders" ]; then
+  echo "== preflight FAILED: SparkSession.builder outside graft/Sessions.scala (use Sessions.local):" >&2
+  echo "$builders" | sed 's/^/   /' >&2
+  exit 1
+fi
+
 # Both gates verify tests actually RAN (r13 ADVICE: `testOnly` with a
 # misspelled suite matches zero tests and sbt exits 0 — the exact
 # failure mode this script exists to prevent). ScalaTest prints one

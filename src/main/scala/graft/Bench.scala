@@ -7,20 +7,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev knob for contention experiments; defaults to one partition per
-    // core (AQE coalesces small shuffles below that anyway)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // dev loop: SPARK_GRAFT_ONLY=d05_x,d06_y restricts the run
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -242,7 +229,8 @@ object Bench {
     // OUTSIDE this run: queries landing more than priorTol x above it get
     // one re-run pass (adopt-the-faster), and whatever still exceeds the
     // prior ships under "prior_regressed" with its ratio, so a reader
-    // adjudicates (code diff / PlanStabilityProbe) instead of mistaking
+    // adjudicates (code diff; SCALE.md "h10 skew" / "h06 rep-spread
+    // adjudicated": plan diff vs task skew vs box noise) instead of mistaking
     // box noise for a regression. It does NOT flip `trusted`: a real code
     // regression legitimately exceeds the prior and the artifact must
     // still be publishable — trust certifies the environment, this field

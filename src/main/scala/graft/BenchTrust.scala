@@ -26,7 +26,8 @@ package graft
   * [[priorOutliers]]: the committed previous full-suite run is an
   * out-of-run reference floor; queries landing >`tol`x above it get
   * re-run (min adopted) and, if persistent, surfaced in the artifact's
-  * `prior_regressed` so a reader adjudicates (PlanStabilityProbe)
+  * `prior_regressed` so a reader adjudicates (SCALE.md "h06 rep-spread
+  * adjudicated" / "h10 skew": plan diff vs task skew vs box noise)
   * instead of reading box noise as a regression. `prior_regressed` does
   * NOT flip `trusted` — a real code regression would legitimately
   * exceed the prior and the artifact must still be publishable; trust

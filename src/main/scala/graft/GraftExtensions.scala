@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import java.time.ZoneOffset
+
+import org.apache.spark.sql.{AnalysisException, Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.datax.{Dedup, TextStats}
@@ -16,7 +20,15 @@ import graft.ops.Enrich
   * Enable with `spark.sql.extensions=graft.GraftExtensions`. The
   * Column combinators are composed expression TREES (not UDFs): the
   * registered form plans and codegens identically to the DataFrame
-  * form. */
+  * form.
+  *
+  * It also checks the session contract on every analyzed plan: ANSI
+  * off (the operators' null-on-malformed casts) and a session zone
+  * that normalizes to UTC (the timestamp normalization of `Tables.load`
+  * and `StreamOps.normalizeEventTime`). A session that breaks either
+  * fails analysis with `INVALID_CONF_VALUE.REQUIREMENT`, naming the
+  * setting and the value it needs. [[Sessions.local]] builds a session
+  * that holds it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def inject(ext: SparkSessionExtensions, name: String, arity: Int)
@@ -29,7 +41,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         Bridge.resolvedExpression(f(exprs.map(Bridge.column)))
       }))
 
+  private def violation(key: String, value: String, needed: String) =
+    new AnalysisException("INVALID_CONF_VALUE.REQUIREMENT", Map(
+      "confName" -> key, "confValue" -> value,
+      "confRequirement" -> s"graft.GraftExtensions requires $key=$needed."))
+
+  private def checkContract(conf: SQLConf): Unit = {
+    if (conf.ansiEnabled)
+      throw violation(SQLConf.ANSI_ENABLED.key, "true", "false")
+    val zone = conf.sessionLocalTimeZone
+    if (DateTimeUtils.getZoneId(zone).normalized() != ZoneOffset.UTC)
+      throw violation(SQLConf.SESSION_LOCAL_TIMEZONE.key, zone, "UTC")
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectCheckRule(session => _ => checkContract(session.sessionState.conf))
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

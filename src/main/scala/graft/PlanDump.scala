@@ -18,15 +18,7 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val only = if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet)
                else None
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

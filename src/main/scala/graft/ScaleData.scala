@@ -88,14 +88,7 @@ object ScaleData {
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", s"/tmp/graft_scale_${n}x")
     val tables = sys.env.getOrElse("SPARK_GRAFT_SCALE_TABLES",
       "documents,events,embeddings").split(",").map(_.trim).toSet
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     def write(table: String, copy: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit = {
       if (!tables.contains(table)) return

@@ -1339,10 +1339,8 @@ object Similarity {
     val parts = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
     parts.foldLeft((0, 0)) { case ((b, a), p) =>
-      // toUri.getPath, not toString: the hadoop Path renders with a
-      // file: scheme that java.nio (Compact's walker) reads as relative
       val (pb, pa) = graft.ops.Compact.compact(spark,
-        p.getPath.toUri.getPath, targetBytes, slack)
+        p.getPath.toString, targetBytes, slack)
       (b + pb, a + pa)
     }
   }

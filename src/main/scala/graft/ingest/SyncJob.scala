@@ -1,7 +1,5 @@
 package graft.ingest
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,7 +38,7 @@ object SyncJob {
     /** Latest cursor per key (max ts, then max page as tiebreak). */
     def latest(spark: SparkSession, path: String): DataFrame = {
       val raw =
-        if (Files.exists(Paths.get(path))) spark.read.schema(schema).parquet(path)
+        if (exists(spark, path)) spark.read.schema(schema).parquet(path)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(schema))
@@ -210,7 +208,7 @@ object SyncJob {
       val tmp = statePath + ".tmp"
       res.merged.write.mode(SaveMode.Overwrite).parquet(tmp)
       val counts = res.observedCounts()
-      swapState(tmp, statePath)
+      swapState(spark, tmp, statePath)
       val (ins, upd) = (counts.getOrElse("insert", 0L), counts.getOrElse("update", 0L))
 
       // cursor totals are CUMULATIVE across runs (sync_top.py:266-271:
@@ -322,14 +320,19 @@ object SyncJob {
     * run). Heals an interrupted swap first (see [[graft.util.AtomicSwap]]). */
   private def readState(spark: SparkSession, path: String,
                         template: DataFrame): DataFrame = {
-    graft.util.AtomicSwap.recover(Paths.get(path))
-    if (Files.exists(Paths.get(path))) spark.read.parquet(path)
+    graft.util.AtomicSwap.recover(spark, path)
+    if (exists(spark, path)) spark.read.parquet(path)
     else template.limit(0)
   }
 
   /** Parquet MERGE target swap: the local-FS stand-in for an Iceberg/
     * Delta MERGE INTO commit. Spark can't overwrite a parquet dir it is
     * reading in the same job, hence write-aside + crash-safe swap. */
-  private def swapState(tmp: String, path: String): Unit =
-    graft.util.AtomicSwap.swapIn(Paths.get(tmp), Paths.get(path))
+  private def swapState(spark: SparkSession, tmp: String, path: String): Unit =
+    graft.util.AtomicSwap.swapIn(spark, tmp, path)
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val (fs, p) = graft.util.AtomicSwap.resolve(spark, path)
+    fs.exists(p)
+  }
 }

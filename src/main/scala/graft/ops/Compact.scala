@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.util.AtomicSwap
@@ -31,18 +29,19 @@ import graft.util.AtomicSwap
   */
 object Compact {
 
-  /** On-disk bytes + file count of a parquet dir (driver-side walk —
-    * metadata only, never data). */
-  def stats(path: String): (Long, Int) = {
-    val p = Paths.get(path)
-    AtomicSwap.recover(p)
-    if (!Files.exists(p)) return (0L, 0)
-    val s = Files.walk(p)
-    val files =
-      try s.filter(f => f.toString.endsWith(".parquet") && Files.isRegularFile(f))
-        .toArray.map(_.asInstanceOf[Path])
-      finally s.close()
-    (files.map(Files.size).sum, files.length)
+  /** On-disk bytes + file count of a parquet dir (driver-side listing
+    * — metadata only, never data). */
+  def stats(spark: SparkSession, path: String): (Long, Int) = {
+    AtomicSwap.recover(spark, path)
+    val (fs, p) = AtomicSwap.resolve(spark, path)
+    if (!fs.exists(p)) return (0L, 0)
+    val it = fs.listFiles(p, true)
+    var (bytes, files) = (0L, 0)
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.getPath.getName.endsWith(".parquet")) { bytes += f.getLen; files += 1 }
+    }
+    (bytes, files)
   }
 
   /** Rewrite `path` into ceil(bytes/targetBytes) files if it currently
@@ -51,15 +50,15 @@ object Compact {
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024,
               slack: Int = 4): (Int, Int) = {
-    val (bytes, nFiles) = stats(path)
+    val (bytes, nFiles) = stats(spark, path)
     if (nFiles == 0) return (0, 0)
     val targetFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     if (nFiles <= targetFiles + slack) return (nFiles, nFiles)
     val df: DataFrame = spark.read.parquet(path)
     val tmp = path + ".compact"
-    AtomicSwap.deleteRec(Paths.get(tmp)) // stale rewrite from a crashed run
+    // Overwrite replaces a stale rewrite from a crashed run
     df.coalesce(targetFiles).write.mode(SaveMode.Overwrite).parquet(tmp)
-    AtomicSwap.swapIn(Paths.get(tmp), Paths.get(path))
-    (nFiles, stats(path)._2)
+    AtomicSwap.swapIn(spark, tmp, path)
+    (nFiles, stats(spark, path)._2)
   }
 }

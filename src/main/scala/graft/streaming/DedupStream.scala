@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.datax.Dedup
+import graft.util.AtomicSwap
 
 /** The STREAMING face of the incremental-dedup loop: each micro-batch of
   * new documents is deduplicated against the standing corpus INDEX, and
@@ -156,7 +157,7 @@ object DedupStream {
         // mid-staging leaves every index partition intact (replay
         // deletes the stage and rewrites), a crash between renames is
         // the old between-writes window (replay overwrites all three).
-        val (fs, _) = hfs(spark, indexRoot)
+        val (fs, _) = AtomicSwap.resolve(spark, indexRoot)
         val stage = new org.apache.hadoop.fs.Path(
           s"$indexRoot/${StageDirPrefix}$batchId")
         fs.delete(stage, true) // stale attempt of this batch
@@ -299,20 +300,15 @@ object DedupStream {
   private[graft] val MarkerName = "_compact_upto" // "_" prefix: invisible to parquet reads
 
   // ALL maintenance I/O goes through the Hadoop FileSystem resolved from
-  // the path (as the parquet reads/writes already do): on a non-local
-  // indexRoot (hdfs://, s3a://) java.nio would silently see nothing —
-  // compactedUpTo would return None and visibleIndex's `batch >= 0`
-  // filter would hide a committed epoch partition, re-admitting
-  // near-dups with no error.
-  private[streaming] def hfs(spark: SparkSession, dir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  // the path (AtomicSwap.resolve, as the parquet reads/writes already
+  // do): on a non-local indexRoot (hdfs://, s3a://) java.nio would
+  // silently see nothing — compactedUpTo would return None and
+  // visibleIndex's `batch >= 0` filter would hide a committed epoch
+  // partition, re-admitting near-dups with no error.
 
   /** Committed compaction cutoff of one index table, if any. */
   def compactedUpTo(spark: SparkSession, dir: String): Option[Long] = {
-    val (fs, root) = hfs(spark, dir)
+    val (fs, root) = AtomicSwap.resolve(spark, dir)
     val m = new org.apache.hadoop.fs.Path(root, MarkerName)
     if (!fs.exists(m)) None
     else {
@@ -421,7 +417,7 @@ object DedupStream {
       val dir = s"$indexRoot/$t"
       gcIndexTable(spark, dir) // heal any crashed compaction first
       compactedUpTo(spark, dir).flatMap { c =>
-        val (fs, root) = hfs(spark, dir)
+        val (fs, root) = AtomicSwap.resolve(spark, dir)
         val epoch = new org.apache.hadoop.fs.Path(root, s"batch=${-(c + 2)}")
         if (fs.exists(epoch)) { fs.delete(epoch, true); Some(c) } else None
       }
@@ -429,7 +425,7 @@ object DedupStream {
 
   private def batchDirs(spark: SparkSession, dir: String)
       : Seq[(org.apache.hadoop.fs.Path, Long)] = {
-    val (fs, root) = hfs(spark, dir)
+    val (fs, root) = AtomicSwap.resolve(spark, dir)
     if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return Seq.empty
     fs.listStatus(root).toSeq.flatMap { st =>
       val n = st.getPath.getName
@@ -446,7 +442,7 @@ object DedupStream {
     * round-17 review caught this as the last hand-coded complement of
     * that rule). */
   def gcIndexTable(spark: SparkSession, dir: String): Unit = {
-    val (fs, _) = hfs(spark, dir)
+    val (fs, _) = AtomicSwap.resolve(spark, dir)
     val cutoff = compactedUpTo(spark, dir)
     batchDirs(spark, dir).foreach { case (p, b) =>
       if (!visibleBatch(cutoff, b)) { fs.delete(p, true); () }
@@ -458,7 +454,7 @@ object DedupStream {
     * does not overwrite, and delete-then-rename would open a window
     * where readers see NO marker and hide the committed epoch). */
   private def commitMarker(spark: SparkSession, dir: String, cutoff: Long): Unit = {
-    val (fs, root) = hfs(spark, dir)
+    val (fs, root) = AtomicSwap.resolve(spark, dir)
     val mtmp = new org.apache.hadoop.fs.Path(root, MarkerName + ".tmp")
     val out = fs.create(mtmp, true)
     try out.write(cutoff.toString.getBytes("UTF-8")) finally out.close()
@@ -485,7 +481,7 @@ object DedupStream {
     require(keepLastBatches >= 1,
       s"keepLastBatches=$keepLastBatches: the in-flight batch is replayable and must stay")
     gcIndexTable(spark, dir)
-    val (fs, root) = hfs(spark, dir)
+    val (fs, root) = AtomicSwap.resolve(spark, dir)
     val prev = compactedUpTo(spark, dir)
     val real = batchDirs(spark, dir).map(_._2).filter(_ >= 0)
     if (real.isEmpty) return None
@@ -513,7 +509,7 @@ object DedupStream {
                                 keepLastBatches: Int,
                                 targetBytes: Long): Option[Long] = {
     gcIndexTable(spark, dir) // heal leftovers from any crashed prior run
-    val (fs, root) = hfs(spark, dir)
+    val (fs, root) = AtomicSwap.resolve(spark, dir)
     val prev = compactedUpTo(spark, dir)
     val real = batchDirs(spark, dir).map(_._2).filter(_ >= 0)
     if (real.isEmpty) return None
@@ -539,7 +535,7 @@ object DedupStream {
   }
 
   private def dirBytes(spark: SparkSession, dir: String): Long = {
-    val (fs, p) = hfs(spark, dir)
+    val (fs, p) = AtomicSwap.resolve(spark, dir)
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.datax.{Dedup, Similarity}
+import graft.util.AtomicSwap
 
 /** The VECTOR twin of [[DedupStream]] — the continuous-ingest dedup loop
   * for an embedding corpus: each micro-batch of new vectors is
@@ -241,7 +242,7 @@ object EmbedStream {
       // a THIRD dimension probe inside the write face). Crash windows
       // unchanged: mid-staging leaves the index intact, between renames
       // is the old between-writes window — the replay overwrites both.
-      val (fs, _) = DedupStream.hfs(spark, indexRoot)
+      val (fs, _) = AtomicSwap.resolve(spark, indexRoot)
       val stage = new org.apache.hadoop.fs.Path(
         s"$indexRoot/${DedupStream.StageDirPrefix}$batchId")
       fs.delete(stage, true) // stale attempt of this batch

@@ -1,12 +1,14 @@
 package graft.util
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.io.IOException
 
-/** Local-FS stand-in for a transactional table commit (Iceberg/Delta
-  * MERGE/OPTIMIZE commit): install a rewritten directory over a live
-  * one such that a crash at ANY point leaves either the old or the new
-  * table recoverable — never no table.
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+
+/** Plain-parquet stand-in for a transactional table commit (Iceberg/
+  * Delta MERGE/OPTIMIZE commit): install a rewritten directory over a
+  * live one such that a crash at ANY point leaves either the old or the
+  * new table recoverable — never no table.
   *
   * Two-phase: park target at `<target>.old`, move the rewrite in, drop
   * the parked copy. The one crash window that leaves `target` missing
@@ -16,35 +18,41 @@ import java.util.Comparator
   * delete, the data existed only at the tmp path and a re-run saw an
   * empty table as success.
   *
+  * Paths go through the Hadoop FileSystem that owns them, so a bare
+  * path and a `file:` (or any other scheme) URI name the same table.
+  *
   * NOT safe against CONCURRENT writers to `target` — single-writer
   * maintenance semantics, the plain-parquet contract (a lakehouse
   * handles this transactionally). */
 object AtomicSwap {
 
+  /** The FileSystem that owns `path`, and `path` as a Hadoop Path. */
+  def resolve(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
+
   private def oldPath(target: Path): Path =
-    target.resolveSibling(target.getFileName.toString + ".old")
+    new Path(target.getParent, target.getName + ".old")
+
+  private def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new IOException(s"cannot move $from to $to")
 
   /** Install `tmp` at `target`. */
-  def swapIn(tmp: Path, target: Path): Unit = {
-    val old = oldPath(target)
-    deleteRec(old) // stale park from an interrupted earlier swap
-    if (Files.exists(target)) Files.move(target, old)
-    Files.move(tmp, target)
-    deleteRec(old)
+  def swapIn(spark: SparkSession, tmp: String, target: String): Unit = {
+    val (fs, t) = resolve(spark, target)
+    val old = oldPath(t)
+    fs.delete(old, true) // stale park from an interrupted earlier swap
+    if (fs.exists(t)) move(fs, t, old)
+    move(fs, new Path(tmp), t)
+    fs.delete(old, true)
   }
 
   /** Heal the park-but-not-installed crash window: target missing with
     * a parked copy present -> restore the parked copy. Idempotent. */
-  def recover(target: Path): Unit = {
-    val old = oldPath(target)
-    if (!Files.exists(target) && Files.exists(old))
-      Files.move(old, target)
+  def recover(spark: SparkSession, target: String): Unit = {
+    val (fs, t) = resolve(spark, target)
+    val old = oldPath(t)
+    if (!fs.exists(t) && fs.exists(old)) move(fs, old, t)
   }
-
-  def deleteRec(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }

@@ -43,4 +43,27 @@ class RegistrySpec extends AnyFunSuite {
       "SELECT graft_simhash('a b c') = graft_simhash('a b c')").head()
     assert(sh.getBoolean(0))
   }
+
+  test("session contract: GraftExtensions fails analysis unless ANSI is off and the zone is UTC") {
+    def withConf(key: String, value: String) = {
+      val s = spark.newSession()
+      s.conf.set(key, value)
+      s
+    }
+    def violation(key: String, value: String, needed: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        withConf(key, value).sql("SELECT 1")
+      }
+      assert(e.getCondition == "INVALID_CONF_VALUE.REQUIREMENT", e.getMessage)
+      assert(e.getMessage.contains(s"requires $key=$needed"), e.getMessage)
+    }
+    violation("spark.sql.ansi.enabled", "true", "false")
+    violation("spark.sql.session.timeZone", "America/New_York", "UTC")
+    violation("spark.sql.session.timeZone", "Europe/London", "UTC")
+    for (zone <- Seq("UTC", "Etc/UTC", "GMT"))
+      withConf("spark.sql.session.timeZone", zone).sql("SELECT 1")
+    val cos = spark.sql(
+      "SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d))").head()
+    assert(math.abs(cos.getDouble(0) - 1.0) < 1e-12)
+  }
 }

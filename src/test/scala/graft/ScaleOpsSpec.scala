@@ -51,30 +51,34 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("compact: many appended small files collapse to the size target, data intact") {
     import graft.ops.Compact
-    val dir = Files.createTempDirectory("compact").toString + "/log"
-    // 30 appends of one tiny file each — the cursor/dead-letter pattern
-    for (i <- 1 to 30)
-      Seq((i.toLong, s"row $i")).toDF("id", "v")
-        .write.mode("append").parquet(dir)
-    val (before, _) = (Compact.stats(dir)._2, ())
-    assert(before >= 30, s"expected >=30 appended files, got $before")
-    // tiny targetBytes still coalesces to 1 file (total is a few KB)
-    val (b, a) = Compact.compact(spark, dir, targetBytes = 128L * 1024 * 1024)
-    assert(b == before && a == 1, s"expected $before -> 1 files, got $b -> $a")
-    val rows = spark.read.parquet(dir).orderBy("id")
-      .as[(Long, String)].collect().toSeq
-    assert(rows == (1 to 30).map(i => (i.toLong, s"row $i")),
-      "every row must survive compaction")
-    // idempotent: already-compact table is a no-op
-    assert(Compact.compact(spark, dir) == ((1, 1)))
+    // a file: URI must behave exactly like the bare path it names
+    for (asUri <- Seq(false, true)) {
+      val local = Files.createTempDirectory("compact").toString + "/log"
+      val dir = if (asUri) "file://" + local else local
+      // 30 appends of one tiny file each — the cursor/dead-letter pattern
+      for (i <- 1 to 30)
+        Seq((i.toLong, s"row $i")).toDF("id", "v")
+          .write.mode("append").parquet(dir)
+      val (before, _) = (Compact.stats(spark, dir)._2, ())
+      assert(before >= 30, s"$dir: expected >=30 appended files, got $before")
+      // tiny targetBytes still coalesces to 1 file (total is a few KB)
+      val (b, a) = Compact.compact(spark, dir, targetBytes = 128L * 1024 * 1024)
+      assert(b == before && a == 1, s"$dir: expected $before -> 1 files, got $b -> $a")
+      val rows = spark.read.parquet(dir).orderBy("id")
+        .as[(Long, String)].collect().toSeq
+      assert(rows == (1 to 30).map(i => (i.toLong, s"row $i")),
+        "every row must survive compaction")
+      // idempotent: already-compact table is a no-op
+      assert(Compact.compact(spark, dir) == ((1, 1)))
 
-    // crash-window recovery: a swap interrupted between park and
-    // install leaves the table only at <dir>.old — the next stats()
-    // heals it instead of reporting an empty table as success
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(dir), java.nio.file.Paths.get(dir + ".old"))
-    assert(Compact.stats(dir)._2 == 1, "recover() must restore the parked table")
-    assert(spark.read.parquet(dir).count() == 30)
+      // crash-window recovery: a swap interrupted between park and
+      // install leaves the table only at <dir>.old — the next stats()
+      // heals it instead of reporting an empty table as success
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(local), java.nio.file.Paths.get(local + ".old"))
+      assert(Compact.stats(spark, dir)._2 == 1, "recover() must restore the parked table")
+      assert(spark.read.parquet(dir).count() == 30)
+    }
   }
 
   test("bucketed MERGE: catalog side never shuffles; view flip commits; counters correct") {
