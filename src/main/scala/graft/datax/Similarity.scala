@@ -908,16 +908,19 @@ object Similarity {
   def ivfTopK(centroids: DataFrame, assigned: DataFrame, queries: DataFrame,
               k: Int, nProbe: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    scoreProbes(probeRank(queries, centroids, nProbe, idCol, vecCol), assigned, k)
+    scoreProbes(probeRank(queryVectors(queries, idCol, vecCol), centroids, nProbe),
+      assigned, k)
 
-  /** Per-query nProbe nearest centroids — the probes frame both IVF
-    * probe faces share: (query_id, qvec, _qn, centroid_id), one row per
-    * (query, probed bucket). Centroids broadcast; ranks by (cosine
-    * desc, centroid_id asc). */
-  private def probeRank(queries: DataFrame, centroids: DataFrame,
-                        nProbe: Int, idCol: String, vecCol: String): DataFrame =
+  /** The (query_id, qvec) frame every probe face ranks and scores. */
+  private def queryVectors(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
     queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qvec"))
-      .withColumn("_qn", norm(col("qvec")))
+
+  /** Per-query nProbe nearest centroids of a [[queryVectors]] frame —
+    * the probes frame both IVF probe faces share: (query_id, qvec, _qn,
+    * centroid_id), one row per (query, probed bucket). Centroids
+    * broadcast; ranks by (cosine desc, centroid_id asc). */
+  private def probeRank(q: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame =
+    q.withColumn("_qn", norm(col("qvec")))
       .crossJoin(broadcast(centroids))
       .select(col("query_id"), col("qvec"), col("_qn"), col("centroid_id"),
         cosine(col("qvec"), col("cvec")).as("_sim"))
@@ -926,20 +929,133 @@ object Similarity {
       .filter(col("_rn") <= nProbe)
       .select("query_id", "qvec", "_qn", "centroid_id")
 
+  /** The probes of one served-index probe, as its scoring join takes
+    * them: one row per (query, probed bucket); the distinct probed
+    * bucket ids, in the order the codes scan's `isin` lists them; and
+    * whether every row belongs to one query (known on the driver path
+    * only). */
+  private final case class Probes(frame: DataFrame, probedIds: Seq[Any],
+                                  oneQuery: Boolean)
+
+  /** The distributed probes: `probes` is cut once by a localCheckpoint,
+    * because it feeds both the probed-id pull and the scoring join's
+    * broadcast side, and without the cut its subtree ran once per
+    * consumer. */
+  private def checkpointedProbes(probes: DataFrame): Probes = {
+    val cut = probes.localCheckpoint(eager = true)
+    Probes(cut, cut.select("centroid_id").distinct().collect().map(_.get(0)).toSeq,
+      oneQuery = false)
+  }
+
+  /** Most (query x centroid) rows [[localProbes]] ranks on the driver:
+    * 16 queries against the largest quantizer (4,096 centroids), or
+    * 4,096 queries against 16. */
+  private val LocalProbeMaxCross = 65536L
+
+  /** The probes of a query frame whose rows already sit on the driver,
+    * built there with no Spark job. `q` is (query_id, qvec) and
+    * `centroids` the served quantizer rows; `payload` are the columns of
+    * the probes frame, over (query_id, qvec, centroid_id, cvec).
+    *
+    * It runs when both frames optimize to a `LocalRelation` and the
+    * cross has at most [[LocalProbeMaxCross]] rows. The queries x
+    * centroids cross is a driver-side `LocalRelation`, and the cosine
+    * over it and then the payload over the kept rows are the same
+    * Catalyst expressions the distributed path runs, evaluated through
+    * their interpreted `eval` (ConvertToLocalRelation). Each query keeps
+    * its first `nProbe` centroids in the distributed window's order,
+    * (cosine desc, centroid_id asc), compared by Catalyst's own
+    * `InterpretedOrdering`: NaN sorts largest, -0.0 equals 0.0, a null
+    * cosine sorts last. Queries are grouped by the same ordering's
+    * equality, as the window partitions them. The probed ids come from
+    * the kept rows, so there is no checkpoint and no id pull. None when
+    * the frames are not local or the cross is over the bound: the
+    * caller then builds the distributed probes. */
+  private def localProbes(spark: org.apache.spark.sql.SparkSession,
+                          q: DataFrame, centroids: DataFrame, nProbe: Int,
+                          payload: Seq[Column]): Option[Probes] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Ascending,
+      AttributeReference, Descending, InterpretedOrdering, RowOrdering, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.graftbridge.Bridge
+    def local(df: DataFrame): Option[LocalRelation] =
+      df.queryExecution.optimizedPlan match {
+        case l: LocalRelation if !l.isStreaming => Some(l)
+        case _ => None
+      }
+    for {
+      ql <- local(q)
+      cl <- local(centroids.select("centroid_id", "cvec"))
+      if ql.data.size.toLong * cl.data.size <= LocalProbeMaxCross &&
+        RowOrdering.isOrderable(ql.output.head.dataType)
+    } yield {
+      val qs = ql.data.map(_.toSeq(ql.schema))
+      val cs = cl.data.map(_.toSeq(cl.schema))
+      val cross = (for (qr <- qs; cr <- cs) yield qr ++ cr).toVector.zipWithIndex
+        .map { case (vs, ix) => InternalRow.fromSeq(vs :+ ix) }
+      val crossOutput = (ql.output ++ cl.output).map(_.newInstance()) :+
+        AttributeReference("_ix", org.apache.spark.sql.types.IntegerType,
+          nullable = false)()
+      def crossFrame(rows: Seq[InternalRow]) = Bridge.localFrame(spark, crossOutput, rows)
+      val sims = crossFrame(cross).select(col("query_id"), col("centroid_id"),
+          cosine(col("qvec"), col("cvec")).as("_sim"), col("_ix"))
+        .queryExecution.executedPlan
+      val Seq(qid, cid, sim, _) = sims.output
+      val sameQuery = new InterpretedOrdering(Seq(SortOrder(qid, Ascending)), sims.output)
+      val rankOrder = new InterpretedOrdering(Seq(SortOrder(qid, Ascending),
+        SortOrder(sim, Descending), SortOrder(cid, Ascending)), sims.output)
+      val ranked = sims.executeCollect().sorted(rankOrder)
+      var queriesSeen = 0
+      var rank = 0
+      val kept = ranked.indices.flatMap { i =>
+        if (i == 0 || sameQuery.compare(ranked(i - 1), ranked(i)) != 0) {
+          queriesSeen += 1
+          rank = 0
+        }
+        rank += 1
+        if (rank <= nProbe) Some(cross(ranked(i).getInt(3))) else None
+      }
+      val toScala = CatalystTypeConverters.createToScalaConverter(cid.dataType)
+      val cidIx = ql.output.length
+      val probedIds = kept.map(r => toScala(r.get(cidIx, cid.dataType))).distinct
+      val probes = crossFrame(kept).select(payload: _*).queryExecution.executedPlan
+      Probes(Bridge.localFrame(spark, probes.output.map(_.newInstance()),
+          probes.executeCollect().toSeq),
+        probedIds, oneQuery = queriesSeen == 1)
+    }
+  }
+
   /** Exact-cosine scoring of a probes frame against the probed buckets'
     * rows: candidates restricted to each query's OWN buckets via the
     * centroid_id join, rank 1 = nearest, ties by id. */
   private def scoreProbes(probes: DataFrame, assigned: DataFrame,
-                          k: Int): DataFrame = {
+                          k: Int, oneQuery: Boolean = false): DataFrame = {
     val scored = probes
       .join(assigned.withColumn("_n", norm(col("vec"))), Seq("centroid_id"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
         (dot(col("vec"), col("qvec")) / (col("_n") * col("_qn"))).as("cosine"))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("id").asc)))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, col("cosine").desc, k, oneQuery)
       .select("query_id", "rank", "id", "cosine")
+  }
+
+  /** Each query's first k candidates of `scored` by `score`, ties by
+    * id, numbered in `rank` from 1. With `oneQuery` (every row has one
+    * query_id) a bounded top-k runs under the per-query window: its
+    * TakeOrderedAndProject is one job, and its single-partition output,
+    * already ordered as the window wants, needs no exchange and no sort.
+    * It keeps exactly the rows the window keeps: they are the first k in
+    * the same total order. */
+  private def topKPerQuery(scored: DataFrame, score: Column, k: Int,
+                           oneQuery: Boolean): DataFrame = {
+    val bounded =
+      if (oneQuery && k > 0) scored.orderBy(col("query_id"), score, col("id").asc).limit(k)
+      else scored
+    bounded.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(score, col("id").asc)))
+      .filter(col("rank") <= k)
   }
 
   /** How an index is BUILT — the one construction recipe both derived
@@ -2211,16 +2327,21 @@ object Similarity {
     * faces apply push into BOTH scans (centroid_id is a partition
     * column on each side of the union). `base` is the opened row
     * table — the probe faces open it with the schema their
-    * [[ServedGeometry]] carries, so no per-call schema inference job
-    * runs. The increment sibling is still listed (and read) on every
-    * call. */
+    * [[ServedGeometry]] carries. The increment sibling is opened with a
+    * schema derived from `base`'s (its data columns, then the `batch`
+    * and `centroid_id` partition columns), so no schema inference job
+    * runs; it is still listed (and read) on every call. */
   private def servingRows(spark: org.apache.spark.sql.SparkSession,
                           dir: String, table: String,
                           base: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val incDir = s"$dir/${incTableOf(table)}"
     if (!hasIncRows(spark, incDir)) base
     else {
-      val inc0 = graft.streaming.DedupStream.visibleIndex(spark, incDir)
+      val incSchema = StructType(base.schema.filterNot(_.name == "centroid_id") :+
+        StructField("batch", LongType) :+ base.schema("centroid_id"))
+      val inc0 = graft.streaming.DedupStream.visibleRows(spark, incDir,
+        spark.read.schema(incSchema).parquet(incDir))
       // batches the base already absorbed (the round-19 consumed
       // token): plain dirs at or below it, and the epoch partition
       // when the committed cutoff is itself consumed
@@ -2384,15 +2505,25 @@ object Similarity {
     * rebuild (any write face, or a healed crashed one) is picked up by
     * the next probe. Read on EVERY call: the row table's file listing
     * and every visible increment batch ([[ivfIndexAppendBatch]] rows
-    * are served with no rebuild), plus the probes checkpoint and the
-    * probed-bucket pull. A build_meta that cannot say how the codes
-    * were encoded raises on every probe; errors are never cached. */
+    * are served with no rebuild; the increment is opened with a schema
+    * derived from the geometry's, so no inference job runs). A
+    * build_meta that cannot say how the codes were encoded raises on
+    * every probe; errors are never cached.
+    *
+    * Where the probes are built: a query frame that is already on the
+    * driver (a local relation, queries x centroids within
+    * [[LocalProbeMaxCross]]) is ranked and its LUTs built there with no
+    * Spark job ([[localProbes]]); one query then also takes a bounded
+    * top-k under the rank window. Any other frame ranks its centroids
+    * in Spark, and the ranked probes are checkpointed and their bucket
+    * ids pulled to the driver ([[checkpointedProbes]]). Both shapes give
+    * the same rows (spec-pinned on hostile queries). */
   def ivfPqTopK(spark: org.apache.spark.sql.SparkSession, dir: String,
                 queries: DataFrame, k: Int, nProbe: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val geom = servedGeometry(spark, dir, pq = true)
-    val q = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qvec"))
+    val q = queryVectors(queries, idCol, vecCol)
+    val centroids = geom.centroids.df(spark)
     // residual index (IVFADC): the asymmetric side subtracts the PROBED
     // centroid from the query, so the LUT is per (query, centroid) —
     // built here where cvec is in scope, K-bounded extra work, same
@@ -2400,34 +2531,25 @@ object Similarity {
     val lutSrc =
       if (geom.residual) zip_with(col("qvec"), col("cvec"), (x, y) => x - y)
       else col("qvec")
-    // localCheckpoint before the distinct-ids collect (round 16 —
-    // verdict finding): the queries x centroids rank feeds BOTH the
-    // pruning pull and the broadcast side of the codes join, and
-    // without the cut the subtree (rank + per-query LUT build)
-    // executed once per consumer. Materialized size is queries x
-    // nProbe rows carrying one m x ksub LUT each — executor-resident,
-    // never a driver pull.
-    val probes = q.crossJoin(broadcast(geom.centroids.df(spark)))
-      .select(col("query_id"), col("qvec"), col("cvec"), col("centroid_id"),
-        cosine(col("qvec"), col("cvec")).as("_sim"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("_sim").desc, col("centroid_id").asc)))
-      .filter(col("_rn") <= nProbe)
-      .select(col("query_id"), col("centroid_id"), lutOf(lutSrc, geom.book).as("lut"))
-      .localCheckpoint(eager = true)
-    val probedIds = probes.select("centroid_id").distinct()
-      .collect().map(_.get(0)).toSeq
+    val payload = Seq(col("query_id"), col("centroid_id"), lutOf(lutSrc, geom.book).as("lut"))
+    // materialized size is queries x nProbe rows carrying one m x ksub
+    // LUT each
+    val probes = localProbes(spark, q, centroids, nProbe, payload).getOrElse(
+      checkpointedProbes(q.crossJoin(broadcast(centroids))
+        .select(col("query_id"), col("qvec"), col("cvec"), col("centroid_id"),
+          cosine(col("qvec"), col("cvec")).as("_sim"))
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy("query_id")
+            .orderBy(col("_sim").desc, col("centroid_id").asc)))
+        .filter(col("_rn") <= nProbe)
+        .select(payload: _*)))
     val codes = servingRows(spark, dir, geom.table, geom.base(spark, dir))
-      .filter(col("centroid_id").isin(probedIds: _*))
-    val scored = codes.join(broadcast(probes), Seq("centroid_id"))
+      .filter(col("centroid_id").isin(probes.probedIds: _*))
+    val scored = codes.join(broadcast(probes.frame), Seq("centroid_id"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
         graft.functions.AdcLookup.adc(col("codes"), col("lut")).as("adc_dist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, col("adc_dist").asc, k, probes.oneQuery)
       .select("query_id", "rank", "id", "adc_dist")
   }
 
@@ -2463,9 +2585,7 @@ object Similarity {
       .select("query_id", "id")
     val v = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
       .withColumn("_n", norm(col("vec")))
-    val q = queries.select(col(idCol).as("query_id"),
-        toDouble(col(vecCol)).as("qvec"))
-      .withColumn("_qn", norm(col("qvec")))
+    val q = queryVectors(queries, idCol, vecCol).withColumn("_qn", norm(col("qvec")))
     val scored = cands.join(v, "id").join(broadcast(q), "query_id")
       .select(col("query_id"), col("id"),
         (dot(col("vec"), col("qvec")) / (col("_n") * col("_qn"))).as("cosine"))
@@ -3046,36 +3166,36 @@ object Similarity {
     * The probe set must reach the scan as LITERALS for directory-level
     * pruning (a join cannot prune partitions at planning time), so the
     * per-query nearest-centroid ranks are computed once against the
-    * K-row centroid table and the distinct probed ids collected — a
-    * K-BOUNDED driver pull (<= min(queries x nProbe, K) values), the
+    * K-row centroid table and the distinct probed ids brought to the
+    * driver — a K-BOUNDED set (<= min(queries x nProbe, K) values), the
     * same budget every centroid operator here already pays. The scoring
     * join then re-restricts each query to its OWN nProbe buckets, so
     * the union-level pruning never widens a query's candidate set.
     *
-    * The probes frame is `localCheckpoint`ed before the distinct-ids
-    * collect (round 16 — verdict finding): the queries x centroids rank
-    * is consumed twice (the pruning pull and the scoring join), and
-    * without the cut the subtree executed once per consumer. One
-    * materialization of queries x nProbe rows (bounded, no lut payload
-    * here) halves the rank work; spec pins the executed probe plan free
-    * of any centroids.parquet re-scan.
+    * The probes are built as [[ivfPqTopK]] builds them: on the driver
+    * with no Spark job for a local query frame ([[localProbes]]), or
+    * ranked in Spark, checkpointed once (the rank is consumed by both
+    * the pruning pull and the scoring join) and their bucket ids pulled
+    * ([[checkpointedProbes]]) for any other frame.
     *
     * What is read when ([[ivfPqTopK]]'s split): the quantizer rows and
     * the row table's schema are resolved ONCE per committed build
     * ([[servedGeometry]] — each call lists the quantizer sidecar and
     * reuses them while its files are unchanged, so a rebuild is seen by
     * the next probe); the row table's file listing and every visible
-    * increment batch are read on EVERY call. */
+    * increment batch are read on EVERY call, the increment with no
+    * schema inference job. */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
                      queries: DataFrame, k: Int, nProbe: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val geom = servedGeometry(spark, dir, pq = false)
-    val probes = probeRank(queries, geom.centroids.df(spark), nProbe, idCol, vecCol)
-      .localCheckpoint(eager = true)
-    val probedIds = probes.select("centroid_id").distinct()
-      .collect().map(_.get(0)).toSeq
+    val centroids = geom.centroids.df(spark)
+    val q = queryVectors(queries, idCol, vecCol)
+    val probes = localProbes(spark, q, centroids, nProbe,
+        Seq(col("query_id"), col("qvec"), norm(col("qvec")).as("_qn"), col("centroid_id")))
+      .getOrElse(checkpointedProbes(probeRank(q, centroids, nProbe)))
     val assigned = servingRows(spark, dir, geom.table, geom.base(spark, dir))
-      .filter(col("centroid_id").isin(probedIds: _*))
-    scoreProbes(probes, assigned, k)
+      .filter(col("centroid_id").isin(probes.probedIds: _*))
+    scoreProbes(probes.frame, assigned, k, probes.oneQuery)
   }
 }

@@ -93,12 +93,18 @@ object PagedSource {
     * by the reference's skipped_* taxonomy, summed across tasks by the
     * engine and rendered in the scan node's SQL metrics. */
   val GiveUpKinds: Seq[String] = Seq("network", "http", "other")
-  private class GiveUpMetric(kind: String) extends CustomSumMetric {
+  sealed abstract class GiveUpMetric(kind: String) extends CustomSumMetric {
     override def name(): String = s"giveUpPages_$kind"
     override def description(): String = s"pages given up ($kind errors)"
   }
+  // One public zero-arg class per kind: the SQL status listener
+  // re-creates each driver-side metric from its class name alone to sum
+  // the task values, and skips a metric it cannot construct.
+  final class GiveUpNetworkMetric extends GiveUpMetric("network")
+  final class GiveUpHttpMetric extends GiveUpMetric("http")
+  final class GiveUpOtherMetric extends GiveUpMetric("other")
   def giveUpMetrics(): Array[CustomMetric] =
-    GiveUpKinds.map(new GiveUpMetric(_): CustomMetric).toArray
+    Array(new GiveUpNetworkMetric, new GiveUpHttpMetric, new GiveUpOtherMetric)
   final case class GiveUpTaskMetric(kind: String, v: Long) extends CustomTaskMetric {
     override def name(): String = s"giveUpPages_$kind"
     override def value(): Long = v

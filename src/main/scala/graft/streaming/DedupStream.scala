@@ -344,13 +344,18 @@ object DedupStream {
     * invisible). Public: this is the read face downstream consumers of
     * the index should use — a raw `read.parquet(dir)` sees invisible
     * dirs during the (crash-safe) compaction windows. */
-  def visibleIndex(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read.parquet(dir)
+  def visibleIndex(spark: SparkSession, dir: String): DataFrame =
+    visibleRows(spark, dir, spark.read.parquet(dir))
+
+  /** [[visibleIndex]] over `df`, an already-opened read of `dir`: a
+    * caller that knows the table's schema opens it with that schema and
+    * skips the inference job. */
+  private[graft] def visibleRows(spark: SparkSession, dir: String,
+                                 df: DataFrame): DataFrame =
     compactedUpTo(spark, dir) match {
       case Some(c) => df.filter(col("batch") === lit(-(c + 2)) || col("batch") > c)
       case None    => df.filter(col("batch") >= 0)
     }
-  }
 
   /** Consolidate all three index tables up to (highest batch −
     * `keepLastBatches`): per table, rewrite the visible rows at or

@@ -1046,16 +1046,23 @@ class DataxSpec extends AnyFunSuite {
           queries, k = 5)
         .orderBy("query_id", "rank").collect().toSeq
       assert(all.nonEmpty && all == flat)
+      // the same rows as a local query frame: probes built on the driver
+      val localQueries = spark.createDataFrame(
+        java.util.Arrays.asList(queries.collect(): _*), queries.schema)
+      assert(Similarity.ivfPqTopK(spark, dir, localQueries, k = 5, nProbe = 16)
+        .orderBy("query_id", "rank").collect().toSeq == flat)
       // the scale property: a partial probe reads only its buckets
-      val pruned = Similarity.ivfPqTopK(spark, dir, queries, k = 5,
-        nProbe = 4)
-      val plan = pruned.queryExecution.executedPlan.toString
-      val scanLine = plan.linesIterator
-        .find(l => l.contains("codes.parquet") && l.contains("PartitionFilters"))
-        .getOrElse(fail(s"no codes.parquet scan with PartitionFilters:\n$plan"))
-      assert(!scanLine.contains("PartitionFilters: []")
-          && scanLine.contains("centroid_id"),
-        s"probe must prune code partitions:\n$scanLine")
+      Seq(queries, localQueries).foreach { q =>
+        val pruned = Similarity.ivfPqTopK(spark, dir, q, k = 5,
+          nProbe = 4)
+        val plan = pruned.queryExecution.executedPlan.toString
+        val scanLine = plan.linesIterator
+          .find(l => l.contains("codes.parquet") && l.contains("PartitionFilters"))
+          .getOrElse(fail(s"no codes.parquet scan with PartitionFilters:\n$plan"))
+        assert(!scanLine.contains("PartitionFilters: []")
+            && scanLine.contains("centroid_id"),
+          s"probe must prune code partitions:\n$scanLine")
+      }
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
@@ -1939,13 +1946,16 @@ class DataxSpec extends AnyFunSuite {
   }
 
   test("probe subtrees execute once: the checkpointed probes cut the centroids re-scan out of the served plan") {
-    // verdict r15 #2: ivfPqTopK/ivfTopKIndexed computed the queries x
-    // centroids rank twice — once for the pruning pull, once as the
-    // scoring join's broadcast side. The probes frame is now
-    // localCheckpoint'ed before the collect, so the SERVED plan reads
-    // the materialized probes (a scan) instead of re-executing the
-    // rank — no centroids.parquet scan may remain in it. Values are
-    // pinned by the d09a/d09e oracles and the equality specs above.
+    // This pins the DISTRIBUTED probe path (a parquet-backed query
+    // frame; a local one builds its probes on the driver, pinned in
+    // ServedProbeSpec). verdict r15 #2: ivfPqTopK/ivfTopKIndexed
+    // computed the queries x centroids rank twice — once for the
+    // pruning pull, once as the scoring join's broadcast side. The
+    // probes frame is localCheckpoint'ed before the collect, so the
+    // SERVED plan reads the materialized probes (a scan) instead of
+    // re-executing the rank — no centroids.parquet scan may remain in
+    // it. Values are pinned by the d09a/d09e oracles and the equality
+    // specs above.
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select("vec_id", "embedding")
     val queries = emb.filter($"vec_id" < 8)
@@ -2939,13 +2949,27 @@ class DataxSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
+  /** `probe` over both query frame shapes a served probe takes: the
+    * rows as a local relation (probes built on the driver) and behind a
+    * repartition (probes ranked in Spark and checkpointed). The two
+    * answers must be equal; returns it. */
+  private def probeBothShapes(queries: org.apache.spark.sql.DataFrame)
+                             (probe: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Seq[Row] = {
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(queries.collect(): _*), queries.schema)
+    def run(q: org.apache.spark.sql.DataFrame) =
+      probe(q).orderBy("query_id", "rank").collect().toSeq
+    val onDriver = run(local)
+    assert(run(local.repartition(2)) == onDriver,
+      "a local and a distributed query frame must probe the same rows")
+    onDriver
+  }
+
   private def probePq(d: String, queries: org.apache.spark.sql.DataFrame): Seq[Row] =
-    Similarity.ivfPqTopK(spark, d, queries, k = 5, nProbe = 4)
-      .orderBy("query_id", "rank").collect().toSeq
+    probeBothShapes(queries)(Similarity.ivfPqTopK(spark, d, _, k = 5, nProbe = 4))
 
   private def probeIvf(d: String, queries: org.apache.spark.sql.DataFrame): Seq[Row] =
-    Similarity.ivfTopKIndexed(spark, d, queries, k = 5, nProbe = 4)
-      .orderBy("query_id", "rank").collect().toSeq
+    probeBothShapes(queries)(Similarity.ivfTopKIndexed(spark, d, _, k = 5, nProbe = 4))
 
   test("served geometry: an in-place PQ rebuild (raw -> residual, then a new codebook via pqIndexWriteWith) is seen by the next probe") {
     val emb = geoEmb

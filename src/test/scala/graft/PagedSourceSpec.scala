@@ -90,4 +90,32 @@ class PagedSourceSpec extends AnyFunSuite {
     val df = spark.read.format("tmdb-pages").option("path", dir).load()
     assert(df.count() == 8, "the scan ignores the strays instead of throwing")
   }
+  test("give-up counts reach the SQL status store (one zero-arg metric class per kind)") {
+    // the status listener re-creates each custom metric from its class
+    // name to sum the task values; a metric it cannot construct never
+    // reaches executionMetrics
+    import graft.sources.Retry
+    val dir = writeFeed(pages = 2, perPage = 4)
+    val store = spark.sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).toSet
+    try {
+      Retry.Faults.failNext(s"$dir/page-2.json", times = 99,
+        new java.io.IOException("hard down"))
+      val df = spark.read.format("tmdb-pages").option("path", dir)
+        .option("backoffMillis", 0).option("maxAttempts", 2).load()
+      assert(df.collect().length == 4, "the exhausted page degrades to empty")
+    } finally Retry.Faults.clear()
+    def giveUps(): Map[String, String] = store.executionsList()
+      .filterNot(e => before(e.executionId))
+      .flatMap { e =>
+        val values = store.executionMetrics(e.executionId)
+        e.metrics.filter(_.metricType.contains("PagedSource$GiveUp"))
+          .flatMap(m => values.get(m.accumulatorId).map(m.name -> _))
+      }.toMap
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (giveUps().size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(giveUps() == Map("pages given up (network errors)" -> "1",
+      "pages given up (http errors)" -> "0",
+      "pages given up (other errors)" -> "0"), s"got ${giveUps()}")
+  }
 }
