@@ -12,6 +12,9 @@
 #   \w+\.scala:\d+   source positions
 #   plan_id=\d+      exchange plan ids
 #   $Lambda$...@...  lambda object identities
+#   lambda x_120     lambda variable counters (JVM-global, so one extra
+#                    lambda Column built earlier shifts them all),
+#                    renumbered in order of first appearance per file
 # and, in plans with a distinct-aggregate `Expand` (a `gid` column), the
 # order Spark gives its distinct groups, which follows expression-id
 # hashing and so differs between runs of one tree: scripts/
@@ -38,7 +41,8 @@ mask_ids() {
     -e 's/\[[0-9]+\]/[N]/g' \
     -e 's/[A-Za-z0-9_]+\.scala:[0-9]+/X.scala:N/g' \
     -e 's/plan_id=[0-9]+/plan_id=N/g' \
-    -e 's/\$Lambda\$[^@[:space:],]*@[0-9a-f]+/$Lambda$X/g'
+    -e 's/\$Lambda\$[^@[:space:],]*@[0-9a-f]+/$Lambda$X/g' \
+    | perl -pe 's/\blambda (\w+)_(\d+)\b/"lambda $1_" . ($n{"$1_$2"} \/\/= ++$k)/ge'
 }
 
 mask() {

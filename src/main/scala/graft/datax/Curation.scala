@@ -213,8 +213,8 @@ object Curation {
     * Scale shape: quality is scan-side ([[TextStats.qualityScore]] — pure
     * column algebra, no tokens materialized); the window is ONE shuffle
     * on the group key. Hot groups (a group >> task memory) are the window
-    * operator's intrinsic skew unit — [[domainCapBanded]] is the bounded
-    * variant (identical output, window state divided by `bands`). */
+    * operator's intrinsic skew unit: one mega-host is one window
+    * partition. */
   def domainCap(docs: DataFrame, idCol: String, groupCol: String,
                 textCol: String, maxPerGroup: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -224,58 +224,6 @@ object Curation {
         TextStats.qualityScore(col(textCol)).as("quality"))
       .withColumn("rank", row_number().over(w))
       .withColumn("keep", col("rank") <= maxPerGroup)
-  }
-
-  /** [[domainCap]] with BOUNDED window state for hot groups — the
-    * [[tokenBudgetSelect]] two-phase banding applied to ranking. A naive
-    * per-group window holds the whole group in one window partition; a
-    * single mega-host (the exact case domainCap exists for) makes that
-    * partition corpus-sized. Here quality bands split each group:
-    * band = floor((1-q) * bands) is MONOTONE in quality, so global
-    * per-group rank = (count of the group's rows in earlier bands) +
-    * (row_number within the (group, band) partition). Band counts are a
-    * tiny (group, band)-grained aggregate whose exclusive prefix runs in
-    * a window over <= `bands` rows per group; the corpus-sized window is
-    * partitioned by (group, band) — per-partition width divided by the
-    * band count. Quality ties always land in ONE band and break by id
-    * there, identical to the global (quality desc, id) order, so ranks —
-    * and therefore output — are EXACTLY domainCap's. Residual skew:
-    * ties themselves (a group where most docs share one quality value
-    * collapse into one band); raise `bands` for resolution elsewhere,
-    * but tie mass is irreducible by any order-preserving split.
-    *
-    * NULLs keep the contract too: a NULL text makes quality NULL, which
-    * `desc` ordering places last — so NULL-quality rows get the sentinel
-    * band `bands + 1`, strictly after every real band, and tie-break by
-    * id there exactly as domainCap's global order does. A NULL group is
-    * one group to groupBy/window alike; the offsets join is null-safe on
-    * the group key (`<=>`) so those rows rank instead of silently
-    * vanishing through an equi-join. */
-  def domainCapBanded(docs: DataFrame, idCol: String, groupCol: String,
-                      textCol: String, maxPerGroup: Int = 100,
-                      bands: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(bands >= 1, s"bands=$bands must be >= 1")
-    val base = docs.select(col(idCol), col(groupCol),
-        TextStats.qualityScore(col(textCol)).as("quality"))
-      .withColumn("_band",
-        when(col("quality").isNull, lit(bands + 1))
-          .otherwise(((lit(1.0) - col("quality")) * bands).cast("int")))
-    val bandCnt = base.groupBy(col(groupCol), col("_band"))
-      .agg(count(lit(1)).as("_bn"))
-    val offsets = bandCnt.select(col(groupCol).as("_g"), col("_band").as("_b"),
-      coalesce(sum(col("_bn")).over(
-          Window.partitionBy(col(groupCol)).orderBy(col("_band"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)).as("_off"))
-    val within = Window.partitionBy(col(groupCol), col("_band"))
-      .orderBy(col("quality").desc, col(idCol).asc)
-    base.join(offsets,
-        col(groupCol) <=> col("_g") && col("_band") === col("_b"))
-      .withColumn("rank",
-        (col("_off") + row_number().over(within)).cast("int"))
-      .withColumn("keep", col("rank") <= maxPerGroup)
-      .select(col(idCol), col(groupCol), col("quality"), col("rank"), col("keep"))
   }
 
   /** Deterministic corpus shuffle: a reproducible global permutation for
@@ -455,7 +403,7 @@ object Curation {
         when(col(textCol).isNotNull,
           size(TextStats.tokens(col(textCol))).cast("long")).as("n_tokens"))
       // NULL-quality (null-text) docs take the SENTINEL band strictly
-      // after every real band — domainCapBanded's rule (review finding:
+      // after every real band (review finding:
       // a null band fell out of the equi-join entirely, losing the row,
       // where the documented naive-global-window oracle ranks it LAST
       // under DESC NULLS LAST and still emits it)

@@ -76,7 +76,7 @@ object Dedup {
     * `split(...)` expression: every `slice(toks, i, k)` inside the
     * lambda re-evaluates its subtree per element, so an inline split
     * costs O(positions x text-length) per row. */
-  def shinglesFromTokens(toks: Column, k: Int): Column =
+  private def shinglesFromTokens(toks: Column, k: Int): Column =
     when(size(toks) >= k,
       array_distinct(
         filter(
@@ -87,7 +87,7 @@ object Dedup {
 
   /** Convenience single-expression form (fine for small data / specs;
     * table-scale callers should materialize tokens first). */
-  def shingles(text: Column, k: Int): Column =
+  private[graft] def shingles(text: Column, k: Int): Column =
     shinglesFromTokens(TextStats.tokens(text), k)
 
   /** The distinct (id, shingle) ROWS of each document — the workhorse
@@ -253,20 +253,6 @@ object Dedup {
   private def minhashHash(x: Column, i: Int): Column =
     substring(md5(concat(lit(s"${i / 4}:"), x)), (i % 4) * 8 + 1, 8)
 
-  /** One MinHash value: min over shingles of the i-th hash. */
-  private def minhashOne(sh: Column, i: Int): Column =
-    array_min(transform(sh, x => minhashHash(x, i)))
-
-  /** The numHashes-long MinHash signature, computed scan-side. */
-  def minhashSignature(sh: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(minhashOne(sh, _)): _*)
-
-  /** LSH band signatures: bands of rows hashes each collapsed to one
-    * digest. Two docs sharing any band are candidates. */
-  def lshBandSigs(sig: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => md5(concat_ws(",", slice(sig, b * rows + 1, lit(rows)))))
-
   /** Exact Jaccard over the distinct shingle sets. */
   def jaccard(shA: Column, shB: Column): Column = {
     val inter = size(array_intersect(shA, shB))
@@ -287,8 +273,8 @@ object Dedup {
   /** (id, band, bsig) rows from a shingle-rows relation: the signature
     * min-aggregates (map-side partial min, one row per doc into the
     * shuffle) collapsed into per-band digests. THE shared band
-    * construction — minhashNearDups and contaminationLsh must bucket
-    * identically for their S-curve/replayability claims to hold. */
+    * construction — every minhashNearDups path buckets through it, so
+    * their S-curve/replayability claims hold together. */
   private def bandedSigs(exploded: DataFrame, numHashes: Int,
                          bands: Int): DataFrame = {
     val rows = numHashes / bands
@@ -986,8 +972,8 @@ object Dedup {
     * item has low Jaccard but containment ~1). Same plan shape as
     * [[jaccardPairs]]: a shared-shingle join whose rows ARE the
     * intersection elements, counted codegen-side — no arrays ride the
-    * join. At scale, restrict the corpus side by an LSH prefilter
-    * exactly as [[minhashNearDups]] does. */
+    * join. At scale, [[contaminationBloomWithin]] prefilters the
+    * corpus side losslessly. */
   def contamination(corpus: DataFrame, bench: DataFrame, idCol: String,
                     textCol: String, k: Int = 4,
                     threshold: Double = 0.5): DataFrame =
@@ -1006,38 +992,6 @@ object Dedup {
       sh.filter(isBench(col("id"))), threshold)
   }
 
-  /** [[contamination]] with a MinHash-LSH prefilter on the corpus side —
-    * the 100 TB path: instead of joining every shared shingle across the
-    * full corpus, band signatures bucket both sides first and only
-    * bucket-colliding (bench, corpus) pairs are containment-verified.
-    * APPROXIMATE on the LSH side (recall follows the band/row S-curve,
-    * tuned by bands x rows like minhashNearDups); every returned pair
-    * carries the EXACT containment. Verified pairs ⊆ [[contamination]]'s. */
-  def contaminationLsh(corpus: DataFrame, bench: DataFrame, idCol: String,
-                       textCol: String, k: Int = 4, numHashes: Int = 16,
-                       bands: Int = 8, threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
-    val cs = docShingleRows(corpus, idCol, textCol, k)
-    val bs = docShingleRows(bench, idCol, textCol, k)
-    val cand = bandedSigs(bs, numHashes, bands)
-      .select(col("band"), col("bsig"), col("id").as("bench_id"))
-      .join(bandedSigs(cs, numHashes, bands)
-        .select(col("band"), col("bsig"), col("id").as("corpus_id")),
-        Seq("band", "bsig"))
-      .select("bench_id", "corpus_id").distinct()
-    // exact containment, restricted to the candidates
-    val inter = cand
-      .join(bs.select(col("id").as("bench_id"), col("s").as("s_b")), "bench_id")
-      .join(cs.select(col("id").as("_cid"), col("s").as("s_c")),
-        col("corpus_id") === col("_cid") && col("s_b") === col("s_c"))
-      .groupBy("bench_id", "corpus_id").agg(count(lit(1)).as("_inter"))
-    val bsz = shingleCounts(bs).select(col("id").as("bench_id"), col("n").as("_nb"))
-    inter.join(bsz, "bench_id")
-      .select(col("bench_id"), col("corpus_id"),
-        (col("_inter") / col("_nb")).as("containment"))
-      .filter(col("containment") >= threshold)
-  }
-
   /** [[contaminationWithin]] with a BLOOM prefilter on the corpus side —
     * the scan-side 100 TB path. A bloom sketch of the benchmark's
     * shingle hashes (one aggregate over the SMALL side) is collected and
@@ -1046,7 +1000,7 @@ object Dedup {
     * `BloomFilterAggregate`/`BloomFilterMightContain` expressions
     * ([[graft.functions.BloomSketch]]).
     *
-    * LOSSLESS, unlike the LSH prefilter: a corpus shingle the bloom
+    * LOSSLESS, unlike an LSH prefilter: a corpus shingle the bloom
     * drops is definitely absent from the benchmark set (no false
     * negatives), so it could never have joined; a false positive merely
     * survives to the exact shared-shingle join and dies there. Output is
@@ -1091,8 +1045,8 @@ object Dedup {
     * released before returning, and the returned frame is a cheap
     * (corpus ANTI JOIN small-list) plan with NO forced broadcast — AQE
     * picks the join strategy from the list's actual size. At 100 TB,
-    * swap the exact containment for [[contaminationLsh]]'s band
-    * prefilter; the drop rule is unchanged. */
+    * shrink the corpus side as [[contaminationBloomWithin]] does; the
+    * drop rule is unchanged. */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
                     isBench: Column => Column, k: Int = 4,
                     threshold: Double = 0.5): DataFrame = {
@@ -1266,27 +1220,6 @@ object Dedup {
       lit(0L), (acc, x) => acc.bitwiseOR(x))
   }
 
-  /** Hamming distance between two simhash fingerprints. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** Table-level SimHash — identical output to [[simhash64]] but via
-    * explode + 64 codegen'd conditional-sum aggregates (the array fold is
-    * interpreted; this stays in whole-stage codegen and partial-aggs
-    * map-side, one row per doc into the shuffle). */
-  def simhashTable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tokens = docs.select(col(idCol).as("id"),
-      explode(TextStats.tokens(col(textCol))).as("t"))
-    val hashed = tokens.select(col("id"), xxhash64(col("t")).as("h"))
-    val bitAggs = (0 until 64).map(j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"_b$j"))
-    val sums = hashed.groupBy("id").agg(bitAggs.head, bitAggs.tail: _*)
-    val fp = (0 until 64).map(j =>
-        when(col(s"_b$j") > 0, shiftleft(lit(1L), j)).otherwise(0L))
-      .reduce(_.bitwiseOR(_))
-    sums.select(col("id"), fp.as("simhash"))
-  }
-
   /** Winnowing document fingerprints (the MOSS scheme): hash every
     * k-gram IN POSITION ORDER (no distinct — position structure is the
     * point), slide a w-wide window over the hash sequence, keep each
@@ -1324,12 +1257,11 @@ object Dedup {
 
   /** Oracle-portable 64-bit SimHash: the per-token hash is md5, with the
     * 64 bits read off the leading 16 hex nibbles (bit j = bit (j%4) of
-    * nibble j/4). Identical plan shape to [[simhashTable]] — explode +
-    * codegen'd conditional-sum aggregates, one row per doc into the
-    * shuffle — but every step is replayable in DuckDB SQL
-    * (strpos-on-hex ≡ conv), so the driver hash-verifies it end-to-end.
-    * [[simhashTable]] (xxhash64) stays as the cheaper non-portable
-    * variant: one 64-bit hash vs sixteen nibble decodes per token. */
+    * nibble j/4). Explode + 64 codegen'd conditional-sum aggregates
+    * (the array fold of [[simhash64]] is interpreted; this stays in
+    * whole-stage codegen and partial-aggs map-side, one row per doc into
+    * the shuffle), and every step is replayable in DuckDB SQL
+    * (strpos-on-hex ≡ conv), so the driver hash-verifies it end-to-end. */
   def simhashTablePortable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tokens = docs.select(col(idCol).as("id"),
       explode(TextStats.tokens(col(textCol))).as("t"))
@@ -1450,21 +1382,6 @@ object Dedup {
     }
     (tables, r)
   }
-
-  /** [[embeddingNearDups]] with the plane count derived from the input
-    * size via [[planesFor]] — one count pass, then the bucketed join.
-    * Callers that already know n should call [[embeddingNearDups]] with
-    * `planesFor(n)` directly and skip the count. NOTE: single-table —
-    * recall collapses as the plane count grows (see [[planesFor]]);
-    * [[embeddingNearDupsBandedAuto]] is the recall-holding form. */
-  def embeddingNearDupsAuto(vectors: DataFrame, idCol: String, vecCol: String,
-                            threshold: Double = 0.9,
-                            metricSuffix: String = ""): DataFrame =
-    // maxOccupancy=None: planes ARE derived from n here, so occupancy
-    // sits at the design point by construction; the observe() metric
-    // keeps the load visible (same rationale as the banded auto form)
-    embeddingNearDups(vectors, idCol, vecCol, planesFor(vectors.count()),
-      threshold, maxOccupancy = None, metricSuffix = metricSuffix)
 
   /** Dimension of the FIRST non-null, non-empty vector (0 when none
     * exist). Probing `limit(1)` without the null filter either NPEs on

@@ -25,7 +25,7 @@ object Similarity {
 
   /** The built-in higher-order-function fold (interpreted; kept as the
     * reference semantics the native expression must match). */
-  def dotFold(a: Column, b: Column): Column =
+  private[graft] def dotFold(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -366,8 +366,9 @@ object Similarity {
     * re-broadcast each round, exactly as MLlib's KMeans drives Lloyd —
     * keeping per-iteration lineage flat. Empty clusters keep their
     * previous centroid. */
-  def ivfIndexKMeans(vectors: DataFrame, nCentroids: Int, iterations: Int = 2,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, DataFrame) = {
+  private[graft] def ivfIndexKMeans(vectors: DataFrame, nCentroids: Int,
+                                    iterations: Int = 2, idCol: String = "vec_id",
+                                    vecCol: String = "embedding"): (DataFrame, DataFrame) = {
     val v = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
     val centroids = lloyd(v, ivfIndex(vectors, nCentroids, idCol, vecCol)._1,
       iterations, avgMeans)
@@ -394,9 +395,10 @@ object Similarity {
     * regardless). Output (centroid_id = source id, cvec) — drop-in for
     * [[lloyd]] / [[assign]] / [[ivfIndexWrite]]'s given-quantizer
     * faces. */
-  def ivfSeedsReservoir(vectors: DataFrame, nCentroids: Int, seed: Long = 42L,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
+  private[graft] def ivfSeedsReservoir(vectors: DataFrame, nCentroids: Int,
+                                       seed: Long = 42L,
+                                       idCol: String = "vec_id",
+                                       vecCol: String = "embedding"): DataFrame = {
     require(nCentroids >= 1, s"nCentroids=$nCentroids must be >= 1")
     vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
       .withColumn("_u", hashUniform(seed, "res", col("id")))
@@ -565,11 +567,11 @@ object Similarity {
     * ([[ivfSeedsKMeansParallel]]), then the same Lloyd refinement.
     * Use when the corpus layout makes the stride pick unrepresentative
     * (id-clustered writes, heavily skewed cluster sizes). */
-  def ivfIndexKMeansParallel(vectors: DataFrame, nCentroids: Int,
-                             rounds: Int = 2, iterations: Int = 2,
-                             oversample: Double = 2.0, seed: Long = 42L,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding"): (DataFrame, DataFrame) = {
+  private[graft] def ivfIndexKMeansParallel(vectors: DataFrame, nCentroids: Int,
+                                            rounds: Int = 2, iterations: Int = 2,
+                                            oversample: Double = 2.0, seed: Long = 42L,
+                                            idCol: String = "vec_id",
+                                            vecCol: String = "embedding"): (DataFrame, DataFrame) = {
     val v = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
     val centroids = lloyd(v,
       ivfSeedsKMeansParallel(vectors, nCentroids, rounds, oversample, seed,
@@ -722,7 +724,7 @@ object Similarity {
     * clamp is LOUD, because past it the per-cluster width grows again and
     * the caller should rely on the hot-cluster guard (or pre-partition
     * the corpus and dedup per partition). */
-  def centroidsFor(n: Long, maxCentroids: Int = 4096): Int = {
+  private[graft] def centroidsFor(n: Long, maxCentroids: Int = 4096): Int = {
     require(maxCentroids >= 1, s"maxCentroids=$maxCentroids must be >= 1")
     val exact = math.ceil(math.sqrt(math.max(0L, n).toDouble)).max(16.0)
     val k = math.min(exact, maxCentroids.toDouble).toInt
@@ -749,7 +751,7 @@ object Similarity {
     * — the oracle face, and still the default. Like every chunking,
     * the derived fold is deterministic at any partitioning and
     * bit-equal to the flat fold exactly where sums are exact. */
-  def chunkIdsFor(minId: Long, maxId: Long): Long = {
+  private[graft] def chunkIdsFor(minId: Long, maxId: Long): Long = {
     require(maxId >= minId, s"empty id range: maxId=$maxId < minId=$minId")
     math.max(1L, math.ceil(math.sqrt((maxId - minId + 1).toDouble)).toLong)
   }
@@ -1222,10 +1224,10 @@ object Similarity {
     * index's stored geometry for a frozen-quantizer rebuild, a
     * quantizer derived outside this module) and assign the corpus
     * against it. Records `seeding = "given"` (see [[IndexSpec]]). */
-  def ivfIndexWriteWith(vectors: DataFrame, dir: String,
-                        centroids: DataFrame,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): Unit = {
+  private[graft] def ivfIndexWriteWith(vectors: DataFrame, dir: String,
+                                       centroids: DataFrame,
+                                       idCol: String = "vec_id",
+                                       vecCol: String = "embedding"): Unit = {
     buildIndex(vectors, dir, centroids, None, idCol, vecCol,
       IndexSpec(seeding = "given"))
     ()
@@ -1268,8 +1270,8 @@ object Similarity {
 
   /** The one derived build: the plain layout (`pq` empty) or IVF-PQ
     * with (m, ksub) and `spec`'s encoding, over an already-derived
-    * coarse quantizer — a fresh [[coarseQuantizer]], or maintenance's
-    * warm one. Returns whether residual codes were written.
+    * coarse quantizer ([[coarseQuantizer]]). Returns whether residual
+    * codes were written.
     *
     * Residual and auto builds cache the residual frame: it feeds the
     * residual codebook, the chooser's evaluation sample, and (when
@@ -1384,8 +1386,9 @@ object Similarity {
     * to the lower centroid_id) — the quantizer applied without
     * recomputing it; output (id, vec double[], centroid_id), the
     * assigned-table schema [[ivfTopK]] consumes. One broadcast pass. */
-  def ivfAssign(vectors: DataFrame, centroids: DataFrame,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+  private[graft] def ivfAssign(vectors: DataFrame, centroids: DataFrame,
+                               idCol: String = "vec_id",
+                               vecCol: String = "embedding"): DataFrame =
     assign(vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec")),
       centroids)
 
@@ -1432,33 +1435,6 @@ object Similarity {
     shardRows(spark, dir, table, newVectors, idCol, vecCol)
       .write.mode("append").partitionBy("centroid_id")
       .parquet(s"$dir/$table")
-  }
-
-  /** Small-file maintenance for an appended index: every
-    * [[ivfIndexAppend]] adds at least one file per touched centroid
-    * partition, so a long-running serving index pays one file-open per
-    * append per bucket at probe time. Runs [[graft.ops.Compact]] PER
-    * PARTITION DIRECTORY — the data files inside `centroid_id=N` don't
-    * carry the partition column (partitionBy strips it), so a per-dir
-    * rewrite-and-swap preserves the pruned layout exactly; probing
-    * before and after is row-identical (spec-pinned). Same
-    * single-writer contract as Compact: never run concurrently with
-    * appends. Returns (filesBefore, filesAfter) summed over
-    * partitions. Works on both persisted layouts ([[ivfIndexWrite]]'s
-    * `assigned.parquet` and [[pqIndexWrite]]'s `codes.parquet`) — the
-    * appends that fragment them are the same shape. */
-  def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      targetBytes: Long = 128L * 1024 * 1024,
-                      slack: Int = 4): (Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/${rowTableOf(spark, dir)}")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-    parts.foldLeft((0, 0)) { case ((b, a), p) =>
-      val (pb, pa) = graft.ops.Compact.compact(spark,
-        p.getPath.toString, targetBytes, slack)
-      (b + pb, a + pa)
-    }
   }
 
   // ---- product quantization (round 15): the in-bucket compression
@@ -1791,9 +1767,10 @@ object Similarity {
     * quantizer in the append spec). [[ivfIndexAppend]] composes
     * per-shard on top; this is the full-rewrite face. Records
     * `seeding = "given"` (see [[IndexSpec]]). */
-  def pqIndexWriteWith(vectors: DataFrame, dir: String,
-                       centroids: DataFrame, codebook: DataFrame,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+  private[graft] def pqIndexWriteWith(vectors: DataFrame, dir: String,
+                                      centroids: DataFrame, codebook: DataFrame,
+                                      idCol: String = "vec_id",
+                                      vecCol: String = "embedding"): Unit =
     commitBuild(vectors, dir, localCentroids(centroids),
       Some(localCodebook(codebook)), None, idCol, vecCol,
       IndexSpec(seeding = "given"))
@@ -1877,14 +1854,6 @@ object Similarity {
             element_at(lc.vecsLit, col("_ix") + 1),
             (x, y) => x - y).as("vec"))
   }
-
-  /** Residual-trained subspace codebook: [[pqCentroids]]' stride rule
-    * applied to the RESIDUAL table of a given coarse quantizer. */
-  def pqCentroidsResidual(vectors: DataFrame, centroids: DataFrame,
-                          m: Int = 8, ksub: Int = 16,
-                          idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqCentroids(residualRows(vectors, centroids, idCol, vecCol),
-      m, ksub, "id", "vec")
 
   /** (id, codes, centroid_id) rows of the RESIDUAL-encoded layout —
     * the residual twin of [[pqCodeRows]]; the assignment rides the
@@ -2162,8 +2131,8 @@ object Similarity {
     // snapshot what this rebuild consumes BEFORE any write: the
     // caller's corpus contains these rows (the full-corpus contract).
     // MONOTONE over the current table's committed token (round-20
-    // review finding): a rebuild that runs right after another — the
-    // warm futility fallback's second fire is the in-code instance —
+    // review finding): a rebuild that runs right after another (two
+    // maintenance fires in a row, or an explicit rebuild after one)
     // sees the increment dirs already cleared (maxIncBatchId = -1); a
     // raw snapshot would stamp -1 = "nothing consumed" and a late
     // at-least-once replay of a batch the FIRST rebuild absorbed would
@@ -2296,12 +2265,12 @@ object Similarity {
     * Probe and maintenance faces read base UNION increment
     * ([[servingRows]]) with directory pruning intact on both sides
     * (centroid_id is a partition column of each); a rebuild (any write
-    * face) clears the increment sibling. [[ivfIndexCompact]] does not
-    * touch increment partitions — each is bounded by its batch size,
-    * and the staleness/skew triggers that force the rebuild also reset
-    * them. The serving index must already EXIST (geometry sized for
-    * the eventual corpus — the same no-fixture-defaults stance as the
-    * ingest loop's LSH geometry); loud on a non-index dir. */
+    * face) clears the increment sibling. Each increment partition is
+    * bounded by its batch size, and the staleness/skew triggers that
+    * force the rebuild also reset them. The serving index must already
+    * EXIST (geometry sized for the eventual corpus — the same
+    * no-fixture-defaults stance as the ingest loop's LSH geometry); loud
+    * on a non-index dir. */
   def ivfIndexAppendBatch(spark: org.apache.spark.sql.SparkSession,
                           dir: String, newVectors: DataFrame, batchId: Long,
                           idCol: String = "vec_id",
@@ -2367,9 +2336,8 @@ object Similarity {
     * and the probe plan shape are unchanged — committed by the
     * [[graft.streaming.DedupStream]] epoch/marker protocol (atomic
     * rename; every crash window closed; the in-flight replayable batch
-    * is never folded). The BASE table is untouched
-    * ([[ivfIndexCompact]] owns its file counts); a full rebuild still
-    * clears the whole sibling. Single-writer like all maintenance
+    * is never folded). The BASE table is untouched; a full rebuild
+    * still clears the whole sibling. Single-writer like all maintenance
     * here: run between appends, never concurrently with one. Returns
     * the committed cutoff, or None when nothing is old enough. */
   def ivfIndexConsolidate(spark: org.apache.spark.sql.SparkSession,
@@ -2937,32 +2905,11 @@ object Similarity {
     (skew, opened.get)
   }
 
-  /** One maintenance poll's outcome: both trigger readings, whether
-    * the rebuild fired, and whether a futile warm skew-only fire fell
-    * back to the recorded cold construction (round 20 — always false
-    * unless `warmStart` was on). */
+  /** One maintenance poll's outcome: both trigger readings and whether
+    * the rebuild fired. */
   final case class IndexMaintenance(staleness: Option[Double],
                                     skew: Option[Double],
-                                    rebuilt: Boolean,
-                                    warmFellBack: Boolean = false)
-
-  /** The warm-start coarse quantizer (round 19): the CURRENT stored
-    * centroids, re-refined by the recorded Lloyd iteration count,
-    * instead of a from-scratch re-run of the recorded construction.
-    * K-bounded: the stored table is eagerly checkpointed (it is about
-    * to be overwritten) and [[lloyd]] collects per iteration. */
-  private def warmCentroids(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, table: String, corpus: DataFrame,
-                            iterations: Int, idCol: String,
-                            vecCol: String): DataFrame = {
-    val cur = spark.read.parquet(
-        sidecarPath(dir, table, "centroids.parquet"))
-      .localCheckpoint(eager = true)
-    if (iterations <= 0) cur
-    else lloyd(
-      corpus.select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec")),
-      cur, iterations, avgMeans)
-  }
+                                    rebuilt: Boolean)
 
   /** The RE-QUANTIZE RULE as one callable (round 17 — previously the
     * rule lived as scaladoc prose on [[ivfIndexAppend]]): poll both
@@ -3000,54 +2947,12 @@ object Similarity {
     * unconditional absolute trigger would turn a daemon polling an
     * intrinsically skewed corpus into a full-corpus rebuild loop.
     * Intrinsic skew is a build-QUALITY matter: address it with the
-    * [[IndexSpec]] seeding knobs, not the maintenance loop.
-    *
-    * `warmStart` (round 19, default OFF — the record replays the full
-    * construction): when a trigger fires and the geometry is unchanged
-    * (it always is here — K, m, ksub, and the encoding are all read
-    * from the stored index), seed the Lloyd refinement from the
-    * CURRENT centroids ([[warmCentroids]]) instead of re-running the
-    * recorded seeding from scratch. A quality fire costs ~2x a stride
-    * fire (SCALE.md) and most of that is the seed construction;
-    * centroids that start near a fixed point converge in fewer
-    * effective passes, and the quality A/B (round 20 — sf0.1 and a 10x
-    * ScaleData corpus, SCALE.md) measured what "equal quality" means
-    * per layout: on RAW layouts the stored codebook is BIT-IDENTICAL
-    * warm vs cold (it trains on raw vectors, independent of the
-    * quantizer — spec-pinned), encode error exactly equal, probe recall
-    * equal within noise, fires 9-43% cheaper on kmeans|| records; on
-    * RESIDUAL records the codebook trains against each fire's own
-    * quantizer and the warm one measured ~5-6% HIGHER encode error with
-    * NO wall saving (stride seeds cost nothing to re-run) — keep
-    * warmStart off for residual stride records; the spec bounds the
-    * drift at 1.25x if a caller flips it anyway. The record is written
-    * UNCHANGED either way, so any later cold fire (or geometry change,
-    * which forces an explicit rebuild anyway) still replays the full
-    * recorded construction. The auto chooser is excluded (re-running
-    * the decision procedure IS its record); a "given" record
-    * warm-starts to the frozen-geometry rebuild it always wanted
-    * instead of the warned downgrade. Spec pins: warm fires are
-    * deterministic (identical dirs + corpus produce identical indexes),
-    * keep the record intact, reset staleness, and at kmeansIterations =
-    * 0 serve EXACTLY the pre-fire view (unchanged quantizer, re-encoded
-    * corpus).
-    *
-    * SKEW-ONLY warm fires self-heal against futility (round 20, from
-    * round-19 ADVICE): at recorded kmeansIterations = 0 the warm
-    * quantizer is bit-identical to the current one — such a fire takes
-    * the recorded cold construction up front; at iterations >= 1 a
-    * warm Lloyd refinement sitting at its fixed point has the same
-    * cannot-move-skew property, detectable only after the fact — the
-    * fire re-measures skew and, when it did not drop, falls back to
-    * the recorded cold construction in the SAME call (reported as
-    * `warmFellBack`), so warmStart = true can never loop futile
-    * O(corpus) rebuilds on an append-skewed corpus. */
+    * [[IndexSpec]] seeding knobs, not the maintenance loop. */
   def ivfIndexMaintain(spark: org.apache.spark.sql.SparkSession,
                        dir: String, corpus: DataFrame,
                        maxStaleness: Double = 0.5, maxSkew: Double = 4.0,
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       warmStart: Boolean = false): IndexMaintenance = {
+                       vecCol: String = "embedding"): IndexMaintenance = {
     // heal a crashed rebuild before reading the triggers (roll a
     // staged commit forward/back, drop absorbed increment batches —
     // the readings below already skip them either way)
@@ -3055,15 +2960,11 @@ object Similarity {
     val meta = buildMetaOf(spark, dir, table)
     val st = stalenessOf(spark, dir, table, meta)
     val sk = ivfIndexSkew(spark, dir)
-    val appended = st.exists(_ > 0)
-    val staleFire = st.exists(_ >= maxStaleness)
-    val skewFire = appended && sk.exists(_ >= maxSkew)
-    val fire = staleFire || skewFire
-    var warmFellBack = false
+    val fire = st.exists(_ >= maxStaleness) ||
+      (st.exists(_ > 0) && sk.exists(_ >= maxSkew))
     if (fire) {
       val k = spark.read.parquet(
         sidecarPath(dir, table, "centroids.parquet")).count().toInt
-      val q = meta.spec
       val pq =
         if (table == "assigned.parquet") None
         else {
@@ -3071,62 +2972,23 @@ object Similarity {
             sidecarPath(dir, table, "pq_codebook.parquet")))
           Some((book.length, book.head.length))
         }
-      // warm-start cannot serve a PURELY skew-driven fire when the
-      // record's Lloyd count is 0: the warm quantizer is bit-identical
-      // to the current one, so the rebuild cannot move skew and the
-      // trigger would re-fire a futile O(corpus) rebuild on every
-      // subsequent append (round-19 review finding) — that fire takes
-      // the recorded cold construction instead, whose re-derived
-      // geometry CAN move skew. Staleness-driven fires stay warm: the
-      // re-encode is the point there, geometry movement is not. The
-      // auto chooser is never warm: re-running the recorded decision
-      // procedure IS the record, and it derives its own quantizer.
-      val warm0 = warmStart && q.encoding != "auto" &&
-        !(skewFire && !staleFire && q.kmeansIterations == 0)
-      // a cold fire replays the record; a warm one keeps it UNCHANGED
-      // over the current centroids (for a "given" record at iterations
-      // 0: exactly the frozen-geometry rebuild, no downgrade warning)
-      def fireRebuild(warm: Boolean): Unit = {
-        val spec =
-          if (warm || q.seeding != "given") q
-          else {
-            System.err.println(
-              "[graft-similarity] ivfIndexMaintain: index was built from a " +
-                "CALLER-SUPPLIED geometry (ivfIndexWriteWith/pqIndexWriteWith " +
-                "— seeding = \"given\"); its construction is not recorded, " +
-                "so this rebuild uses the default IndexSpec() (stride). To " +
-                "keep a quality build across maintenance, build through " +
-                "ivfIndexWrite / pqIndexWrite with an IndexSpec, or rebuild " +
-                "explicitly.")
-            IndexSpec()
-          }
-        val centroids =
-          if (warm) warmCentroids(spark, dir, table, corpus,
-            q.kmeansIterations, idCol, vecCol)
-          else coarseQuantizer(corpus, k, spec, idCol, vecCol)
-        buildIndex(corpus, dir, centroids, pq, idCol, vecCol, spec)
-        ()
-      }
-      fireRebuild(warm0)
-      // a skew-only WARM fire must MOVE skew or it will re-fire an
-      // O(corpus) rebuild on every subsequent append — at recorded
-      // kmeansIterations == 0 the guard above pre-empts it (the warm
-      // quantizer is bit-identical), but at iterations >= 1 a warm
-      // Lloyd refinement sitting at its fixed point has the same
-      // property and can only be detected AFTER the fact (round-19
-      // ADVICE): when the re-measured skew did not drop, fall back to
-      // the recorded cold construction IN THIS FIRE, whose re-derived
-      // geometry can move skew. One extra cache-warm skew poll per
-      // warm skew-only fire.
-      if (warm0 && skewFire && !staleFire) {
-        val after = ivfIndexSkew(spark, dir)
-        if (after.exists(a => sk.exists(b => a >= b))) {
-          warmFellBack = true
-          fireRebuild(warm = false)
+      val spec =
+        if (meta.spec.seeding != "given") meta.spec
+        else {
+          System.err.println(
+            "[graft-similarity] ivfIndexMaintain: index was built from a " +
+              "CALLER-SUPPLIED geometry (ivfIndexWriteWith/pqIndexWriteWith " +
+              "— seeding = \"given\"); its construction is not recorded, " +
+              "so this rebuild uses the default IndexSpec() (stride). To " +
+              "keep a quality build across maintenance, build through " +
+              "ivfIndexWrite / pqIndexWrite with an IndexSpec, or rebuild " +
+              "explicitly.")
+          IndexSpec()
         }
-      }
+      buildIndex(corpus, dir, coarseQuantizer(corpus, k, spec, idCol, vecCol),
+        pq, idCol, vecCol, spec)
     }
-    IndexMaintenance(st, sk, fire, warmFellBack)
+    IndexMaintenance(st, sk, fire)
   }
 
   /** Which row table a persisted index directory holds:

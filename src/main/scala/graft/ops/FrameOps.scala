@@ -50,7 +50,7 @@ object FrameOps {
     * exact ties keep INPUT order (the reference's stable reverse sort,
     * app/tmdb_client.py:214-220) — expressed by carrying -pos in the
     * descending comparison struct (desc on -pos = ascending position). */
-  def sortFrames(frames: Column): Column =
+  private def sortFrames(frames: Column): Column =
     transform(
       sort_array(
         transform(coalesce(frames, array().cast(framesType)), (f, i) =>

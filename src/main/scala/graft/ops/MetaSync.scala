@@ -51,7 +51,7 @@ object MetaSync {
   /** P11 + F3 + R3 — parse all `years:*` cursors into (content_type, year)
     * rows, skipping malformed keys, sorted by (content_type, year)
     * (reference: app/main.py:96-118). */
-  def parsedYearCursors(cursors: DataFrame): DataFrame =
+  private def parsedYearCursors(cursors: DataFrame): DataFrame =
     cursors
       .filter(col("key").startsWith("years:"))
       .withColumn("content_type", Enrich.parseKeyContentType(col("key")))

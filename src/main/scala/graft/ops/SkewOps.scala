@@ -6,14 +6,11 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation for hot keys (the 100 TB failure mode AQE can't always
   * save: one reducer drowning in a single key's rows).
   *
-  *  - [[saltedAgg]]: two-phase aggregation — groupBy(key, salt) splits a
-  *    hot key across `buckets` reducers, then groupBy(key) combines the
-  *    partials. Identical results to the direct aggregation for
-  *    algebraic aggregates (sum/count/min/max) — verified by the oracle
-  *    (q: k01) — at the cost of one extra (tiny) shuffle.
-  *  - [[saltedJoin]]: fact-side deterministic salt + dim-side
-  *    replication x buckets, joining on (key, salt) so one hot join key
-  *    spreads over `buckets` tasks. Equivalent to the plain inner join.
+  * [[saltedAgg]] is two-phase aggregation — groupBy(key, salt) splits a
+  * hot key across `buckets` reducers, then groupBy(key) combines the
+  * partials. Identical results to the direct aggregation for algebraic
+  * aggregates (sum/count/min/max) — verified by the oracle (q: k01) — at
+  * the cost of one extra (tiny) shuffle.
   *
   * Salts must be DETERMINISTIC (hash of a row column, never rand()) —
   * retried tasks must land rows in the same bucket or results diverge
@@ -22,7 +19,7 @@ import org.apache.spark.sql.functions._
 object SkewOps {
 
   /** Deterministic salt in [0, buckets) from `saltBy`. */
-  def salt(saltBy: Column, buckets: Int): Column =
+  private def salt(saltBy: Column, buckets: Int): Column =
     pmod(xxhash64(saltBy), lit(buckets.toLong)).cast("int")
 
   /** Two-phase salted sum/count. `aggs` maps output name -> (partial
@@ -40,15 +37,5 @@ object SkewOps {
       .groupBy(keyCols.map(col): _*)
       .agg(aggs.head._3("_p_" + aggs.head._1).as(aggs.head._1),
         aggs.tail.map(a => a._3("_p_" + a._1).as(a._1)): _*)
-  }
-
-  /** Salted inner equi-join: `fact` salted by a deterministic hash,
-    * `dim` replicated across all buckets. Result ≡ plain inner join. */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, keys: Seq[String],
-                 saltBy: Column, buckets: Int): DataFrame = {
-    val saltedFact = fact.withColumn("_salt", salt(saltBy, buckets))
-    val replicatedDim = dim.withColumn("_salt",
-      explode(sequence(lit(0), lit(buckets - 1))))
-    saltedFact.join(replicatedDim, keys :+ "_salt").drop("_salt")
   }
 }

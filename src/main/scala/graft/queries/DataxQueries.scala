@@ -1324,8 +1324,8 @@ object DataxQueries {
       }),
 
     /* SimHash fingerprints — the oracle-portable md5-nibble variant
-     * (hash-verified end-to-end); the cheaper xxhash64 simhashTable is
-     * the non-gated fast path, pinned by DedupSpec. */
+     * (hash-verified end-to-end); the xxhash64 fold Dedup.simhash64
+     * (SQL `graft_simhash`) is the non-portable variant. */
     QueryDef("d07_simhash",
       (s, dir) => Dedup.simhashTablePortable(t(s, dir, "documents"), "doc_id", "text")
         .withColumnRenamed("id", "doc_id")

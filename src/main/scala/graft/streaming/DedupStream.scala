@@ -294,8 +294,8 @@ object DedupStream {
   // `keepLastBatches` highest batches: the only batch Structured
   // Streaming can replay is the in-flight (highest) one, whose
   // partition remains its own dir, and `batch =!= batchId` keeps
-  // excluding it. Single-writer maintenance like ops/Compact: run it
-  // from the ingest loop between batches, never concurrently with one.
+  // excluding it. Single-writer maintenance: run it from the ingest
+  // loop between batches, never concurrently with one.
 
   private[graft] val MarkerName = "_compact_upto" // "_" prefix: invisible to parquet reads
 
@@ -359,8 +359,8 @@ object DedupStream {
 
   /** Consolidate all three index tables up to (highest batch −
     * `keepLastBatches`): per table, rewrite the visible rows at or
-    * below the cutoff into one `coalesce`d epoch partition (sized like
-    * [[graft.ops.Compact]] from current bytes), commit via the marker
+    * below the cutoff into one `coalesce`d epoch partition (ceil(current
+    * bytes / `targetBytes`) files), commit via the marker
     * flip, then GC the now-invisible dirs. Idempotent; crash-safe at
     * every step (protocol above); a no-op when nothing is old enough.
     * Returns the new cutoff, or None when nothing was compacted. */
@@ -446,7 +446,7 @@ object DedupStream {
     * "invisible" BY [[visibleBatch]], the one predicate, negated (the
     * round-17 review caught this as the last hand-coded complement of
     * that rule). */
-  def gcIndexTable(spark: SparkSession, dir: String): Unit = {
+  private[graft] def gcIndexTable(spark: SparkSession, dir: String): Unit = {
     val (fs, _) = AtomicSwap.resolve(spark, dir)
     val cutoff = compactedUpTo(spark, dir)
     batchDirs(spark, dir).foreach { case (p, b) =>

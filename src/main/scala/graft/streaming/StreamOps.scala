@@ -54,7 +54,7 @@ object StreamOps {
     * normTsIfNtz contract above). The d52/d53 file drives route their
     * sources through this, and works unchanged on batch frames (same
     * rule Tables.load applies at the loader). */
-  def normalizeEventTime(df: DataFrame, name: String): DataFrame =
+  private[graft] def normalizeEventTime(df: DataFrame, name: String): DataFrame =
     if (df.schema(name).dataType == org.apache.spark.sql.types.TimestampNTZType)
       df.withColumn(name, normTs(col(name)))
     else df
@@ -201,15 +201,6 @@ object StreamOps {
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n_events"))
-
-  /** Streaming exact dedup, first-seen wins: duplicates of a key arriving
-    * within the watermark delay are dropped, and — the 100 TB/day point —
-    * a key's state is EXPIRED once the watermark passes its event time,
-    * so state is bounded by (arrival rate x delay), not by stream
-    * history. The input must carry `withWatermark` on its event-time
-    * column. Batch analogue: FrameOps.dedupKeepFirst on the same keys. */
-  def dedupStream(events: DataFrame, keys: Seq[String]): DataFrame =
-    events.dropDuplicatesWithinWatermark(keys)
 
   final case class UserActivity(user_id: Long, n_events: Long, last_value: Double)
   /** Keyed state of [[userActivity]] — the output triple plus the MAX

@@ -164,52 +164,6 @@ class CurationSpec extends AnyFunSuite {
     assert(r(2L) == 1 && r(5L) == 2)
   }
 
-  test("domainCapBanded: identical output to domainCap, hot group included") {
-    // one pathologically hot group (350 of 400 docs) with varied quality,
-    // plus small groups — the banded path must reproduce domainCap's
-    // ranks EXACTLY, including quality ties (same band, id order)
-    val d = (0 until 400).map { i =>
-      val g = if (i < 350) "hot.example" else s"g${i % 5}.example"
-      // vary length/punctuation so quality spreads across bands, with
-      // repeats (i % 40) so ties exist inside the hot group
-      val words = (0 to (i % 40) % 23).map(j => s"w$j").mkString(" ")
-      (i.toLong, g, if (i % 3 == 0) words + " !!" else words)
-    }.toDF("doc_id", "source", "text")
-    val exact = Curation.domainCap(d, "doc_id", "source", "text", maxPerGroup = 7)
-      .as[(Long, String, Double, Int, Boolean)].collect().toSet
-    for (bands <- Seq(1, 16, 256)) {
-      val banded = Curation.domainCapBanded(d, "doc_id", "source", "text",
-          maxPerGroup = 7, bands = bands)
-        .as[(Long, String, Double, Int, Boolean)].collect().toSet
-      assert(banded == exact,
-        s"bands=$bands diverged: ${(exact diff banded) ++ (banded diff exact)}")
-    }
-  }
-
-  test("domainCapBanded: NULL group and NULL text rank identically to domainCap") {
-    // NULL text -> NULL quality -> sentinel band (after every real band,
-    // matching desc-nulls-last); NULL group -> one group, null-safe join.
-    // Before round 6 the equi-join silently DROPPED all four null rows.
-    val d = Seq(
-      (1L, Option("the cat sat on the mat"), Option("A")),
-      (2L, Option("the dog ran in the park today"), Option("A")),
-      (3L, None: Option[String], Option("A")),      // null text, real group
-      (4L, Option("only doc with a null group"), None: Option[String]),
-      (5L, None: Option[String], None: Option[String]), // both null
-      (6L, Option("second doc in the null group"), None: Option[String]))
-      .toDF("doc_id", "text", "source")
-    val exact = Curation.domainCap(d, "doc_id", "source", "text", maxPerGroup = 2)
-      .as[(Long, Option[String], Option[Double], Int, Boolean)].collect().toSet
-    assert(exact.size == 6, "domainCap ranks every row, nulls included")
-    for (bands <- Seq(1, 256)) {
-      val banded = Curation.domainCapBanded(d, "doc_id", "source", "text",
-          maxPerGroup = 2, bands = bands)
-        .as[(Long, Option[String], Option[Double], Int, Boolean)].collect().toSet
-      assert(banded == exact,
-        s"bands=$bands diverged: ${(exact diff banded) ++ (banded diff exact)}")
-    }
-  }
-
   // ---- deterministic shuffle ----
 
   test("corpusShuffle: a permutation — contiguous positions per shard, deterministic, seed-sensitive") {

@@ -58,21 +58,6 @@ class DataxSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSeq
     assert(hits.map(h => (h._1, h._2)) == Seq((1L, 10L)))
     assert(hits.head._3 == 1.0, "fully contained -> containment 1.0")
-    // the LSH-prefiltered scale path: an EXACT duplicate has an identical
-    // shingle set -> identical signature -> collides in every band, so
-    // catching it is guaranteed (an embedded-passage pair like (1,10) is
-    // only probabilistically caught — that's the prefilter's S-curve)
-    val corpusWithCopy = corpus.union(
-      docs(12L -> "alpha beta gamma delta epsilon zeta eta theta"))
-    val lsh = Dedup.contaminationLsh(corpusWithCopy, bench, "doc_id", "text",
-        k = 4, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
-    assert(lsh.exists(h => h._1 == 1L && h._2 == 12L && h._3 == 1.0),
-      "identical text must always survive the prefilter")
-    val exhaustive = Dedup.contamination(corpusWithCopy, bench, "doc_id", "text",
-        k = 4, threshold = 0.5)
-      .select("bench_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(lsh.map(h => (h._1, h._2)).toSet.subsetOf(exhaustive))
   }
 
   test("decontaminate drops contaminated corpus docs, keeps clean + sub-k ones, excludes bench") {
@@ -107,20 +92,6 @@ class DataxSpec extends AnyFunSuite {
         isBench = _ => lit(false), k = 4, threshold = 0.5)
     assert(none.count() == 0)
     Dedup.releaseShingleCaches()
-  }
-
-  test("contaminationLsh ⊆ exhaustive contamination on real documents") {
-    val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val corpus = d.filter($"doc_id" % 29 =!= 0)
-    val bench = d.filter($"doc_id" % 29 === 0)
-    val exact = Dedup.contamination(corpus, bench, "doc_id", "text",
-        k = 4, threshold = 0.5)
-      .select("bench_id", "corpus_id").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.contaminationLsh(corpus, bench, "doc_id", "text",
-        k = 4, threshold = 0.5)
-      .select("bench_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(lsh.subsetOf(exact))
-    assert(exact.isEmpty || lsh.nonEmpty, "near-identical pairs survive the prefilter")
   }
 
   test("langId classifies marker-bearing sentences and CJK") {
@@ -261,10 +232,6 @@ class DataxSpec extends AnyFunSuite {
     assert(sh(0) == sh(1))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(0), sh(2)) < ham(sh(0), sh(3)))
-    // the codegen'd table-level path is bit-identical to the array fold
-    val tbl = Dedup.simhashTable(d, "doc_id", "text").orderBy("id")
-      .select("simhash").as[Long].collect()
-    assert(tbl.toSeq == sh.toSeq)
   }
 
   test("embeddingNearDups: empty input -> empty output, not a crash") {
@@ -361,17 +328,6 @@ class DataxSpec extends AnyFunSuite {
       "vec_id", "embedding", planes = 4, threshold = -1.0).count()
     assert(fixedPlanes > 4 * large,
       s"fixed planes=4 should explode vs scaled planes: $fixedPlanes vs $large")
-  }
-
-  test("embeddingNearDupsAuto derives the plane count from the input size") {
-    val vecs = Seq(
-      (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (2L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (3L, Array(-1.0f, 0.5f, -0.5f, 0.2f))).toDF("vec_id", "embedding")
-    val pairs = Dedup.embeddingNearDupsAuto(vecs, "vec_id", "embedding",
-        threshold = 0.95)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 2L)))
   }
 
   test("bandsFor: r follows the occupancy rule, L reaches the recall target") {
@@ -1104,20 +1060,6 @@ class DataxSpec extends AnyFunSuite {
       val staleness = Similarity.ivfIndexStaleness(spark, dir)
       assert(staleness.exists(s => math.abs(s - nShard.toDouble / nBase) < 1e-12),
         s"expected ${nShard.toDouble / nBase}, got $staleness")
-      // small-file maintenance: per-partition compaction preserves both
-      // the pruned layout and the probe rows exactly
-      val before = appended.orderBy("query_id", "rank").collect().toSeq
-      val (fb, fa) = Similarity.ivfIndexCompact(spark, dir, slack = 0)
-      assert(fa < fb, s"append left $fb files; compact must shrink, got $fa")
-      val after = Similarity.ivfTopKIndexed(spark, dir, queries,
-        k = 5, nProbe = 4)
-      assert(after.orderBy("query_id", "rank").collect().toSeq == before,
-        "compaction must not move a single probe row")
-      val planAfter = after.queryExecution.executedPlan.toString
-      assert(planAfter.linesIterator.exists(l =>
-          l.contains("assigned.parquet") && l.contains("PartitionFilters")
-            && !l.contains("PartitionFilters: []")),
-        s"compaction must preserve partition pruning:\n$planAfter")
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
@@ -1170,13 +1112,6 @@ class DataxSpec extends AnyFunSuite {
       val skew = Similarity.ivfIndexSkew(spark, dir)
       assert(skew.exists(s => math.abs(s - counts.last / median) < 1e-12),
         s"expected ${counts.last / median}, got $skew")
-      // compaction on the codes layout: fewer files, identical probe
-      val before = appended.orderBy("query_id", "rank").collect().toSeq
-      val (fb, fa) = Similarity.ivfIndexCompact(spark, dir, slack = 0)
-      assert(fa < fb, s"append left $fb files; compact must shrink, got $fa")
-      val after = Similarity.ivfPqTopK(spark, dir, queries, k = 5, nProbe = 4)
-      assert(after.orderBy("query_id", "rank").collect().toSeq == before,
-        "compaction must not move a single probe row")
     } finally Seq(dir, dir2).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
@@ -1846,7 +1781,8 @@ class DataxSpec extends AnyFunSuite {
         .select(col("id"),
           zip_with(col("vec"), col("cvec"), (x, y) => x - y).as("vec"))
       (rawErr, totalError(res,
-        Similarity.pqCentroidsResidual(corpus, centroids), "id", "vec"))
+        Similarity.pqCentroids(Similarity.residualRows(corpus, centroids,
+          "vec_id", "embedding"), 8, 16, "id", "vec"), "id", "vec"))
     }
     // CLUSTERED corpus — 64 tight clusters x 2 members, MORE clusters
     // than the 16 PQ cells can describe but few enough for the 64
@@ -2287,6 +2223,8 @@ class DataxSpec extends AnyFunSuite {
       val m = try Similarity.ivfIndexMaintain(spark, d, emb)
         finally System.setErr(oldErr)
       assert(m.rebuilt, cell)
+      assert(Similarity.ivfIndexStaleness(spark, d) == Some(0.0),
+        s"$cell: a fire is a real rebuild: staleness resets")
       assert(errBuf.toString.contains("CALLER-SUPPLIED") == spec.isEmpty,
         s"$cell: only the given record warns, got: ${errBuf.toString.take(400)}")
       val replayed = spec.getOrElse(IndexSpec())
@@ -2336,217 +2274,11 @@ class DataxSpec extends AnyFunSuite {
     }
   }
 
-  test("ivfIndexMaintain warm-start (round 19): deterministic, record-" +
-       "preserving, staleness-resetting; at zero Lloyd iterations the " +
-       "warm fire serves exactly the pre-fire view") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select("vec_id", "embedding")
-    val base = emb.filter($"vec_id" % 2 === 0)
-    val shard = emb.filter($"vec_id" % 2 === 1) // staleness 1.0 -> fires
-    val queries = emb.filter($"vec_id" < 8)
-    def probePq(d: String) = Similarity.ivfPqTopK(spark, d, queries,
-      k = 5, nProbe = 4).orderBy("query_id", "rank").collect().toSeq
-    def probeIvf(d: String) = Similarity.ivfTopKIndexed(spark, d, queries,
-      k = 5, nProbe = 4).orderBy("query_id", "rank").collect().toSeq
-    def seedingOf(d: String) = spark.read.parquet(
-        Similarity.sidecarOf(spark, d, "build_meta.parquet"))
-      .select("seeding").head().getString(0)
-    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    def fresh() = {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-warmstart").toString
-      dirs += d; d
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    def clone(src: String): String = {
-      val d = fresh()
-      val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
-      fs.listStatus(new org.apache.hadoop.fs.Path(src)).foreach { s =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-          new org.apache.hadoop.fs.Path(d, s.getPath.getName), false, conf)
-      }
-      d
-    }
-    try {
-      // PQ quality build + appended shard: the fire shape under test
-      val a = fresh()
-      Similarity.pqIndexWrite(base, a, nCentroids = 16,
-        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 2))
-      Similarity.ivfIndexAppendBatch(spark, a, shard, 0L)
-      val b = clone(a) // identical starting state
-      assert(Similarity.ivfIndexMaintain(spark, a, emb,
-        warmStart = true).rebuilt)
-      assert(Similarity.ivfIndexMaintain(spark, b, emb,
-        warmStart = true).rebuilt)
-      assert(probePq(a).nonEmpty && probePq(a) == probePq(b),
-        "warm fires are deterministic: identical dirs serve identically")
-      assert(seedingOf(a) == "kmeans_parallel",
-        "warm-start must NOT rewrite the quality record")
-      assert(Similarity.ivfIndexStaleness(spark, a) == Some(0.0),
-        "a warm fire is a real rebuild: staleness resets")
-      // a later COLD fire still replays the full recorded construction
-      Similarity.ivfIndexAppendBatch(spark, a, shard, 1L)
-      assert(Similarity.ivfIndexMaintain(spark, a, emb).rebuilt)
-      val aExplicit = fresh()
-      Similarity.pqIndexWrite(emb, aExplicit, nCentroids = 16,
-        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 2))
-      assert(probePq(a) == probePq(aExplicit),
-        "the record survives warm fires: cold replay is the full construction")
-      // zero-Lloyd record on the PLAIN layout: the warm fire keeps the
-      // quantizer bit-identical and the layout stores raw assignments
-      // (no corpus-derived codebook), so serving is EXACTLY the
-      // pre-fire view — the strongest warm-start exactness pin. (The
-      // PQ twin re-derives its codebook from the grown corpus, which
-      // legitimately moves ADC scores; its pins are the deterministic
-      // A/B and record-preservation above.)
-      val z = fresh()
-      Similarity.ivfIndexWrite(base, z, nCentroids = 16,
-        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 0))
-      Similarity.ivfIndexAppendBatch(spark, z, shard, 0L)
-      val before = probeIvf(z)
-      assert(Similarity.ivfIndexMaintain(spark, z, emb,
-        warmStart = true).rebuilt)
-      assert(probeIvf(z) == before,
-        "iterations=0 warm fire: unchanged quantizer + re-assigned corpus " +
-          "== the pre-fire serving view")
-      // a PURELY skew-driven fire on a 0-iteration record must IGNORE
-      // warm-start (round-19 review): the warm quantizer would be
-      // bit-identical, the rebuild couldn't move skew, and the trigger
-      // would re-fire per append forever — the fire takes the recorded
-      // cold construction instead
-      val s0 = fresh(); val s0Explicit = fresh()
-      Similarity.ivfIndexWrite(base, s0, nCentroids = 16,
-        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 0))
-      Similarity.ivfIndexAppendBatch(spark, s0, shard, 0L)
-      val ms = Similarity.ivfIndexMaintain(spark, s0, emb,
-        maxStaleness = 1e9, maxSkew = 1.01, warmStart = true)
-      assert(ms.rebuilt && ms.staleness.exists(_ < 1e9),
-        "the fixture must fire on skew alone")
-      Similarity.ivfIndexWrite(emb, s0Explicit, nCentroids = 16,
-        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 0))
-      assert(probeIvf(s0) == probeIvf(s0Explicit),
-        "a skew-only fire on a 0-iteration record runs the COLD " +
-          "construction (fresh kmeans|| seeds over the full corpus)")
-      // plain layout + "given" record: warm-start IS the frozen-
-      // geometry rebuild — no stride downgrade, no warning
-      val g = fresh()
-      Similarity.ivfIndexWriteWith(base, g,
-        Similarity.ivfIndex(base, nCentroids = 16)._1
-          .localCheckpoint(eager = true))
-      Similarity.ivfIndexAppendBatch(spark, g, shard, 0L)
-      val beforeG = probeIvf(g)
-      val errBuf = new java.io.ByteArrayOutputStream()
-      val oldErr = System.err
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      val mg = try Similarity.ivfIndexMaintain(spark, g, emb,
-        warmStart = true) finally System.setErr(oldErr)
-      assert(mg.rebuilt)
-      assert(!errBuf.toString.contains("CALLER-SUPPLIED"),
-        "a warm given-record fire needs no downgrade warning")
-      assert(probeIvf(g) == beforeG,
-        "warm given fire == frozen-geometry rebuild == pre-fire view")
-      assert(seedingOf(g) == "given")
-    } finally dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
-  }
-
-  test("warm-start QUALITY contract (round 20, measured not asserted): a " +
-       "raw-layout warm fire stores a codebook BIT-IDENTICAL to the cold " +
-       "fire's (trained on raw vectors, independent of the quantizer), so " +
-       "encode error is exactly equal; a residual-record warm fire stays " +
-       "within tolerance of cold on ITS chooser objective") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select("vec_id", "embedding")
-    val base = emb.filter($"vec_id" % 10 =!= 3)
-    val shard = emb.filter($"vec_id" % 10 === 3) // staleness ~1/9 -> fires
-    val conf = spark.sessionState.newHadoopConf()
-    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    def fresh() = {
-      val d = java.nio.file.Files.createTempDirectory("graft-warmq").toString
-      dirs += d; d
-    }
-    def clone(src: String): String = {
-      val d = fresh()
-      val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
-      fs.listStatus(new org.apache.hadoop.fs.Path(src)).foreach { s =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-          new org.apache.hadoop.fs.Path(d, s.getPath.getName), false, conf)
-      }
-      d
-    }
-    def bookOf(d: String) = spark.read.parquet(
-        Similarity.sidecarOf(spark, d, "pq_codebook.parquet"))
-      .orderBy("sub", "cid").collect().toSeq
-    try {
-      // RAW kmeans|| record, Lloyd >= 1 (the warm path genuinely
-      // refines): the codebook trains on the corpus's raw vectors on
-      // BOTH paths — identical inputs, identical deterministic
-      // training, identical book. Equal encode error follows without a
-      // tolerance (SCALE.md records the same bit-equality measured at
-      // sf0.1 and a 10x ScaleData corpus, with recall parity).
-      val w = fresh()
-      Similarity.pqIndexWrite(base, w, nCentroids = 16,
-        spec = IndexSpec(seeding = "kmeans_parallel", kmeansIterations = 2))
-      Similarity.ivfIndexAppendBatch(spark, w, shard, 0L)
-      val c = clone(w)
-      assert(Similarity.ivfIndexMaintain(spark, w, emb,
-        maxStaleness = 0.05, warmStart = true).rebuilt)
-      assert(Similarity.ivfIndexMaintain(spark, c, emb,
-        maxStaleness = 0.05, warmStart = false).rebuilt)
-      assert(bookOf(w) == bookOf(c),
-        "raw layout: the warm fire's codebook must be bit-identical to " +
-          "the cold fire's")
-      // RESIDUAL stride record: the codebook trains on residuals
-      // against each fire's own quantizer, so warm CAN differ —
-      // measured +5-6% encode error at sf0.1 and 10x (and no wall
-      // saving, stride seeds being free): the knob's scaladoc steers
-      // residual records cold; this pin bounds the drift if a caller
-      // flips it anyway (deterministic fixture => fixed ratio; 1.25 is
-      // headroom for fixture regeneration, not run-to-run noise)
-      val rw = fresh()
-      Similarity.pqIndexWrite(base, rw, nCentroids = 16,
-        spec = IndexSpec(encoding = "residual", kmeansIterations = 2))
-      Similarity.ivfIndexAppendBatch(spark, rw, shard, 0L)
-      val rc = clone(rw)
-      assert(Similarity.ivfIndexMaintain(spark, rw, emb,
-        maxStaleness = 0.05, warmStart = true).rebuilt)
-      assert(Similarity.ivfIndexMaintain(spark, rc, emb,
-        maxStaleness = 0.05, warmStart = false).rebuilt)
-      def residualErrOf(d: String): Double = {
-        val cents = spark.read.parquet(
-            Similarity.sidecarOf(spark, d, "centroids.parquet"))
-          .localCheckpoint(eager = true)
-        Similarity.encodeErrorSum(
-          Similarity.residualRows(emb, cents, "vec_id", "embedding"),
-          spark.read.parquet(
-            Similarity.sidecarOf(spark, d, "pq_codebook.parquet")),
-          "vec")
-      }
-      val (errW, errC) = (residualErrOf(rw), residualErrOf(rc))
-      assert(errW > 0 && errC > 0)
-      assert(errW <= errC * 1.25,
-        f"residual warm fire drifted past tolerance: warm $errW%.2f vs " +
-          f"cold $errC%.2f")
-      assert(spark.read.parquet(
-          Similarity.sidecarOf(spark, rw, "build_meta.parquet"))
-        .select("residual").head().getBoolean(0),
-        "the residual record survives the warm fire")
-    } finally dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
-  }
-
-  test("warm-start skew-only futility fallback (round 20): a warm Lloyd " +
-       "refinement at its fixed point cannot move skew — the SAME fire " +
-       "falls back to the recorded cold construction; staleness-driven " +
-       "warm fires never fall back") {
+  test("a skew-only fire replays the recorded construction, and a rebuild " +
+       "right after it keeps the consumed cutoff: a late replay of the " +
+       "absorbed batch stays invisible") {
     // four tight, mutually near-orthogonal direction clusters: axis j
-    // carries cluster j, axes 4-7 carry small within-cluster variation,
-    // so Lloyd converges (and STAYS converged) in a few iterations —
-    // the deterministic fixed point a futile warm fire sits at
+    // carries cluster j, axes 4-7 carry small within-cluster variation
     def clusterVec(j: Int, i: Int): Array[Float] =
       Array.tabulate(8)(d =>
         (if (d == j) 1.0f else 0f) +
@@ -2558,61 +2290,44 @@ class DataxSpec extends AnyFunSuite {
     val shard = (0 until 32).map(i => (1000L + i, clusterVec(0, i)))
       .toDF("vec_id", "embedding")
     val full = corpus.unionByName(shard)
-    val dir = java.nio.file.Files.createTempDirectory("graft-futile").toString
-    val dirS = java.nio.file.Files.createTempDirectory("graft-futileS").toString
-    val dirX = java.nio.file.Files.createTempDirectory("graft-futileX").toString
+    val spec = IndexSpec(seeding = "reservoir", seed = 42L,
+      kmeansIterations = 6)
+    val dir = java.nio.file.Files.createTempDirectory("graft-skewfire").toString
+    val dirX = java.nio.file.Files.createTempDirectory("graft-skewfireX").toString
     try {
-      Similarity.ivfIndexWrite(corpus, dir, nCentroids = 4,
-        spec = IndexSpec(seeding = "reservoir", seed = 42L,
-          kmeansIterations = 6))
+      Similarity.ivfIndexWrite(corpus, dir, nCentroids = 4, spec = spec)
       Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L)
-      // SKEW-ONLY warm fire: the warm quantizer reproduces the converged
-      // partition exactly, skew cannot drop — the fallback must fire the
-      // recorded cold construction in the same call
       val m = Similarity.ivfIndexMaintain(spark, dir, full,
-        maxStaleness = 1e9, maxSkew = 2.0, warmStart = true)
-      assert(m.rebuilt, s"the skew trigger must fire: $m")
-      assert(m.warmFellBack,
-        s"a fixed-point warm fire must fall back to the cold record: $m")
-      // the fallback IS the recorded construction: identical to the
+        maxStaleness = 1e9, maxSkew = 2.0)
+      assert(m.rebuilt && m.staleness.exists(_ < 1e9),
+        s"the skew trigger alone must fire: $m")
+      // the fire IS the recorded construction: identical to the
       // explicit reservoir build over the full corpus
-      Similarity.ivfIndexWrite(full, dirX, nCentroids = 4,
-        spec = IndexSpec(seeding = "reservoir", seed = 42L,
-          kmeansIterations = 6))
+      Similarity.ivfIndexWrite(full, dirX, nCentroids = 4, spec = spec)
       val queries = corpus.filter($"vec_id" < 8)
       def probe(d: String) = Similarity.ivfTopKIndexed(spark, d, queries,
         k = 5, nProbe = 2).orderBy("query_id", "rank").collect().toSeq
       assert(probe(dir) == probe(dirX),
-        "the fallback must replay the recorded cold construction")
+        "the skew fire must replay the recorded construction")
       assert(spark.read.parquet(
           Similarity.sidecarOf(spark, dir, "build_meta.parquet"))
         .select("seeding").head().getString(0) == "reservoir",
-        "the quality record survives the fallback")
-      // the consumed token survives the SECOND rebuild of the same fire
-      // (round-20 review finding): the fallback commits with the
-      // increment dirs already cleared, so a raw snapshot would stamp
-      // "nothing consumed" — the commit carries the first rebuild's
-      // cutoff forward instead, and a late at-least-once replay of the
-      // absorbed batch lands invisible, exactly as after a single fire
-      val postFire = probe(dir)
+        "the quality record survives the fire")
+      // the consumed token survives a SECOND rebuild (round-20 review
+      // finding): it commits with the increment dirs already cleared,
+      // so a raw snapshot would stamp "nothing consumed" — the commit
+      // carries the fire's cutoff forward instead, and a late
+      // at-least-once replay of the absorbed batch lands invisible,
+      // exactly as after a single rebuild
+      Similarity.ivfIndexWrite(full, dir, nCentroids = 4, spec = spec)
+      val postRebuild = probe(dir)
       Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L) // late replay
-      assert(probe(dir) == postFire,
-        "a replayed consumed batch must stay invisible after the " +
-          "fallback's second rebuild")
+      assert(probe(dir) == postRebuild,
+        "a replayed consumed batch must stay invisible after the second " +
+          "rebuild")
       assert(Similarity.ivfIndexStaleness(spark, dir) == Some(0.0),
         "the replayed batch must not read as fresh appended rows")
-      // a STALENESS-driven warm fire keeps the warm path (re-encode is
-      // the point there; geometry movement is not) — no fallback even
-      // though this corpus's warm quantizer is equally immobile
-      Similarity.ivfIndexWrite(corpus, dirS, nCentroids = 4,
-        spec = IndexSpec(seeding = "reservoir", seed = 42L,
-          kmeansIterations = 6))
-      Similarity.ivfIndexAppendBatch(spark, dirS, shard, 0L)
-      val mS = Similarity.ivfIndexMaintain(spark, dirS, full,
-        maxStaleness = 0.4, maxSkew = 1e9, warmStart = true)
-      assert(mS.rebuilt && !mS.warmFellBack,
-        s"staleness-driven warm fires must not fall back: $mS")
-    } finally Seq(dir, dirS, dirX).foreach { d =>
+    } finally Seq(dir, dirX).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     }

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.SkewOps
 
-/** Scale-technique specs: salted aggregation/join equivalence and
-  * bucketed co-located joins (shuffle-free plan shape). */
+/** Scale-technique specs: salted aggregation equivalence, the
+  * write-aside table swap, and bucketed co-located joins (shuffle-free
+  * plan shape). */
 class ScaleOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -34,50 +35,34 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(salted == direct)
   }
 
-  test("saltedJoin == plain inner join") {
-    val orders = Tables.load(spark, "/root/testdata/sf0.001", "orders")
-    val customer = Tables.load(spark, "/root/testdata/sf0.001", "customer")
-    val plain = orders.join(customer, col("o_custkey") === col("c_custkey"))
-      .select("o_orderkey", "c_name").orderBy("o_orderkey")
+  test("AtomicSwap: swapIn installs the rewrite, recover restores a table " +
+       "parked at <path>.old; a file: URI behaves like the bare path") {
+    import graft.util.AtomicSwap
+    def rows(path: String) = spark.read.parquet(path).orderBy("id")
       .as[(Long, String)].collect().toSeq
-    val salted = SkewOps.saltedJoin(
-        orders.withColumnRenamed("o_custkey", "k"),
-        customer.withColumnRenamed("c_custkey", "k"),
-        keys = Seq("k"), saltBy = col("o_orderkey"), buckets = 4)
-      .select("o_orderkey", "c_name").orderBy("o_orderkey")
-      .as[(Long, String)].collect().toSeq
-    assert(salted == plain)
-  }
-
-  test("compact: many appended small files collapse to the size target, data intact") {
-    import graft.ops.Compact
-    // a file: URI must behave exactly like the bare path it names
     for (asUri <- Seq(false, true)) {
-      val local = Files.createTempDirectory("compact").toString + "/log"
+      val local = Files.createTempDirectory("swap").toString + "/log"
       val dir = if (asUri) "file://" + local else local
-      // 30 appends of one tiny file each — the cursor/dead-letter pattern
-      for (i <- 1 to 30)
-        Seq((i.toLong, s"row $i")).toDF("id", "v")
-          .write.mode("append").parquet(dir)
-      val (before, _) = (Compact.stats(spark, dir)._2, ())
-      assert(before >= 30, s"$dir: expected >=30 appended files, got $before")
-      // tiny targetBytes still coalesces to 1 file (total is a few KB)
-      val (b, a) = Compact.compact(spark, dir, targetBytes = 128L * 1024 * 1024)
-      assert(b == before && a == 1, s"$dir: expected $before -> 1 files, got $b -> $a")
-      val rows = spark.read.parquet(dir).orderBy("id")
-        .as[(Long, String)].collect().toSeq
-      assert(rows == (1 to 30).map(i => (i.toLong, s"row $i")),
-        "every row must survive compaction")
-      // idempotent: already-compact table is a no-op
-      assert(Compact.compact(spark, dir) == ((1, 1)))
+      val old = java.nio.file.Paths.get(local + ".old")
+      Seq((1L, "old")).toDF("id", "v").write.parquet(dir)
+      val tmp = dir + ".rewrite"
+      Seq((1L, "new"), (2L, "new")).toDF("id", "v").write.parquet(tmp)
+      AtomicSwap.swapIn(spark, tmp, dir)
+      assert(rows(dir) == Seq((1L, "new"), (2L, "new")),
+        s"$dir: the rewrite must be installed")
+      assert(!Files.exists(java.nio.file.Paths.get(local + ".rewrite")) &&
+        !Files.exists(old), s"$dir: neither the rewrite nor a park may remain")
 
       // crash-window recovery: a swap interrupted between park and
-      // install leaves the table only at <dir>.old — the next stats()
-      // heals it instead of reporting an empty table as success
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(local), java.nio.file.Paths.get(local + ".old"))
-      assert(Compact.stats(spark, dir)._2 == 1, "recover() must restore the parked table")
-      assert(spark.read.parquet(dir).count() == 30)
+      // install leaves the table only at <dir>.old — recover() restores
+      // it instead of leaving readers an empty table
+      Files.move(java.nio.file.Paths.get(local), old)
+      AtomicSwap.recover(spark, dir)
+      assert(rows(dir) == Seq((1L, "new"), (2L, "new")),
+        s"$dir: recover() must restore the parked table")
+      assert(!Files.exists(old))
+      AtomicSwap.recover(spark, dir) // idempotent: nothing parked
+      assert(rows(dir) == Seq((1L, "new"), (2L, "new")))
     }
   }
 

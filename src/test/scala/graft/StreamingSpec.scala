@@ -168,32 +168,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(ours == builtin)
   }
 
-  test("dedupStream drops within-watermark duplicates across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val streamDf = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withWatermark("ts", "10 minutes")
-    val q = StreamOps.dedupStream(streamDf, Seq("event_id"))
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (1L, ts("2026-01-01 10:00:00"), 1L, "click", 1.0),
-        (1L, ts("2026-01-01 10:00:30"), 1L, "click", 1.0)) // same-batch dup
-      q.processAllAvailable()
-      mem.addData(
-        (1L, ts("2026-01-01 10:01:00"), 1L, "click", 2.0), // cross-batch dup
-        (2L, ts("2026-01-01 10:02:00"), 1L, "view", 3.0))
-      q.processAllAvailable()
-      mem.addData((9L, ts("2026-01-01 12:00:00"), 1L, "click", 0.0))
-      q.processAllAvailable() // advance watermark so appended rows emit
-      val ids = spark.table("dedup_stream")
-        .select("event_id").as[Long].collect().toSeq.sorted
-      assert(ids == Seq(1L, 2L, 9L), "one row per event_id, first seen wins")
-    } finally q.stop()
-  }
-
   test("userActivity keeps running per-user state via flatMapGroupsWithState") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
