@@ -57,12 +57,18 @@ object Dedup {
   private[datax] def registerCache(df: DataFrame): Unit =
     liveShingleCaches.add(df)
 
+  /** Unpersist `caches` and drop them from the registry — the precise
+    * release of the eager forms, which track what they created. */
+  private def releaseCaches(caches: Seq[DataFrame]): Unit = caches.foreach { e =>
+    e.unpersist(); liveShingleCaches.remove(e)
+  }
+
   /** Materialize `df` once and cut its lineage so upstream caches can be
     * released. Uses a RELIABLE checkpoint when the session has a
     * checkpoint dir configured (the cluster setting — survives executor
     * loss); falls back to a localCheckpoint otherwise (this harness's
     * single-JVM mode, where executor loss ≡ JVM death anyway). */
-  private def cutLineage(df: DataFrame): DataFrame =
+  private[graft] def cutLineage(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
@@ -765,9 +771,7 @@ object Dedup {
     // immediately on an error path)
     val created = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def track(df: DataFrame): DataFrame = { created += df; df }
-    def releaseAll(): Unit = created.foreach { e =>
-      e.unpersist(); liveShingleCaches.remove(e)
-    }
+    def releaseAll(): Unit = releaseCaches(created.toSeq)
     var ok = false
     try {
       val ne = track(docShingleRows(newDocs, idCol, textCol, k))
@@ -1668,54 +1672,68 @@ object Dedup {
                                    indexBands: Option[DataFrame] = None): DataFrame =
     embeddingIncrementPairs(newVecs, index, indexBands, idCol, vecCol,
       tables, planesPerTable, threshold, maxBucketLoad, metricSuffix,
-      dim = -1, eagerValidate = true)
+      dim = -1, ingest = false)._1
 
   /** [[embeddingNearDupsIncremental]]'s body, shared with the
     * [[graft.streaming.EmbedStream]] ingest loop, which passes the
     * batch `dim` it probed once for the whole micro-batch (`-1`:
-    * probe here) and `eagerValidate = false` — the sidecar params
-    * check then rides the data path ([[guardedSidecar]]) instead of a
-    * per-call full-sidecar distinct+collect. `dim` is the batch's, so
-    * it only serves the sidecar form; the direct form always probes
-    * the index. */
+    * probe here) and `ingest = true`. The loop's sidecar form differs
+    * from the public one in two ways: the sidecar params check rides
+    * the data path ([[guardedSidecar]]) instead of a per-call
+    * full-sidecar distinct+collect, and the candidate pairs — read by
+    * the touched-index fetch AND the verify — are cached, so the band
+    * join and its load guard run once (the text twin's
+    * [[crossPairs]] shape). Returns the pairs and the release of the
+    * caches this call created (a no-op on the public form, whose plan
+    * stays lazy and uncached); the caller runs it after its last
+    * action over the pairs. `dim` is the batch's, so it only serves
+    * the sidecar form; the direct form always probes the index. */
   private[graft] def embeddingIncrementPairs(newVecs: DataFrame,
       index: DataFrame, indexBands: Option[DataFrame], idCol: String,
       vecCol: String, tables: Int, planesPerTable: Int, threshold: Double,
       maxBucketLoad: Option[Long], metricSuffix: String, dim: Int,
-      eagerValidate: Boolean): DataFrame = {
+      ingest: Boolean): (DataFrame, () => Unit) = {
     require(tables >= 1 && planesPerTable >= 1,
       s"tables=$tables, planesPerTable=$planesPerTable must be >= 1")
     def vecs(df: DataFrame): DataFrame = df.select(col(idCol).as("id"),
       transform(col(vecCol), x => x.cast("double")).as("vec"))
     val nv = vecs(newVecs)
+    val nothing = () => ()
     indexBands match {
       case None =>
         val iv = vecs(index)
         val d = probeDim(index, vecCol)
         if (d == 0) // empty index: nothing to collide with
-          return emptyPairFrame(nv)
+          return (emptyPairFrame(nv), nothing)
         val cand = crossBucketCandidatePairs(
           embSigRows(nv, tables, planesPerTable, d),
           embSigRows(iv, tables, planesPerTable, d),
           Seq("tbl", "bucket"), maxBucketLoad,
           metricTag = tagged("inc_embedding", metricSuffix))
-        verifyCosineSides(cand, nv, iv, threshold)
+        (verifyCosineSides(cand, nv, iv, threshold), nothing)
       case Some(ib) =>
         val d = if (dim >= 0) dim else probeDim(newVecs, vecCol)
         if (d == 0) // empty/unusable batch: no pairs
-          return emptyPairFrame(nv)
+          return (emptyPairFrame(nv), nothing)
         val contract = embContract(tables, planesPerTable, d)
         val ibCols =
-          if (eagerValidate) validatedSidecar(ib, contract)
-          else guardedSidecar(ib, contract)
-        val cand = crossBucketCandidatePairs(
+          if (ingest) guardedSidecar(ib, contract)
+          else validatedSidecar(ib, contract)
+        val pairs = crossBucketCandidatePairs(
           embSigRows(nv, tables, planesPerTable, d),
           ibCols,
           Seq("tbl", "bucket"), maxBucketLoad,
           metricTag = tagged("inc_embedding_prebanded", metricSuffix))
+        val (cand, release) =
+          if (!ingest) (pairs, nothing)
+          else {
+            val c = pairs.cache()
+            registerCache(c)
+            (c, () => releaseCaches(Seq(c)))
+          }
         val touched = index.join(cand.select(col("id_b").as(idCol)).distinct(),
           Seq(idCol), "left_semi")
-        verifyCosineSides(cand, nv, vecs(touched), threshold)
+        (verifyCosineSides(cand, nv, vecs(touched), threshold), release)
     }
   }
 

@@ -1856,15 +1856,11 @@ object Similarity {
   }
 
   /** (id, codes, centroid_id) rows of the RESIDUAL-encoded layout —
-    * the residual twin of [[pqCodeRows]]; the assignment rides the
-    * residual frame, never recomputed. */
-  private def residualCodeRows(res: DataFrame, codebook: DataFrame): DataFrame =
-    residualCodeRowsLocal(res, collectCodebook(codebook))
-
-  /** [[residualCodeRows]] over a collected codebook: one projection over
-    * the residual frame — the assignment already rides `res`, so the
-    * former explode + re-group + join-back (two shuffles through the
-    * cache) collapses to a scan (round 20). */
+    * the residual twin of [[pqCodeRowsLocal]] over a collected
+    * codebook: one projection over the residual frame — the assignment
+    * already rides `res`, never recomputed (the former explode +
+    * re-group + join-back paid two shuffles through the cache; round
+    * 20). */
   private def residualCodeRowsLocal(res: DataFrame,
                                     book: Array[Array[Array[Double]]]): DataFrame =
     res.select(col("id"),
@@ -1904,22 +1900,22 @@ object Similarity {
     * the index's, never re-supplied by the caller). `table` is the
     * healed row table ([[healIndexDir]]); shared by [[ivfIndexAppend]]
     * and [[ivfIndexAppendBatch]] so the plain-append and
-    * batch-idempotent faces are byte-rule-identical. */
+    * batch-idempotent faces are byte-rule-identical. The geometry is
+    * the probes' [[servedGeometry]]: resolved once per committed build,
+    * so a steady append reads no sidecar (it used to re-read the
+    * quantizer, the codebook and build_meta on every call), and a
+    * rebuild's new sidecar files re-resolve it. */
   private def shardRows(spark: org.apache.spark.sql.SparkSession, dir: String,
                         table: String, newVectors: DataFrame, idCol: String,
                         vecCol: String): DataFrame = {
-    val centroids = spark.read.parquet(
-      sidecarPath(dir, table, "centroids.parquet"))
+    val geom = servedGeometry(spark, dir, pq = table != "assigned.parquet")
     if (table == "assigned.parquet")
-      ivfAssign(newVectors, centroids, idCol, vecCol)
-    else {
-      val book = spark.read.parquet(
-        sidecarPath(dir, table, "pq_codebook.parquet"))
-      if (buildMetaOf(spark, dir, table).residual)
-        residualCodeRows(residualRows(newVectors, centroids, idCol, vecCol),
-          book)
-      else pqCodeRows(newVectors, centroids, book, idCol, vecCol)
-    }
+      assignLocal(newVectors.select(col(idCol).as("id"),
+        toDouble(col(vecCol)).as("vec")), geom.centroids)
+    else if (geom.residual)
+      residualCodeRowsLocal(residualRowsLocal(newVectors, geom.centroids,
+        idCol, vecCol), geom.book)
+    else pqCodeRowsLocal(newVectors, geom.centroids, geom.book, idCol, vecCol)
   }
 
   // ---- replay-idempotent serving-index increment (round 17): the
@@ -2351,17 +2347,19 @@ object Similarity {
       "centroid_id", keepLastBatches, targetBytes)
   }
 
-  // ---- served build geometry: what the probe faces need of an
-  // index's BUILD (quantizer rows, PQ codebook, residual flag, row-table
-  // schema) is immutable for as long as the files that carry it are, so
-  // it is pulled once per committed build instead of once per probe ----
+  // ---- served build geometry: what the probe and append faces need of
+  // an index's BUILD (quantizer rows, PQ codebook, residual flag,
+  // row-table schema) is immutable for as long as the files that carry
+  // it are, so it is pulled once per committed build instead of once per
+  // probe or append ----
 
-  /** The build geometry of a served index, as one probe face needs it:
-    * the centroid rows (re-served to the probe rank as a local frame —
-    * no centroids scan, no schema job), the PQ codebook tensor (empty
-    * for the plain IVF layout), the residual flag, and the base row
-    * table's schema (opened with it, the per-call scan skips schema
-    * inference). K x d + m x ksub x dsub doubles. */
+  /** The build geometry of a served index, as the probe faces and the
+    * appends ([[shardRows]]) need it: the centroid rows (re-served to
+    * the probe rank as a local frame — no centroids scan, no schema
+    * job), the PQ codebook tensor (empty for the plain IVF layout), the
+    * residual flag, and the base row table's schema (opened with it,
+    * the per-call scan skips schema inference). K x d + m x ksub x dsub
+    * doubles. */
   private final case class ServedGeometry(
       table: String,
       centroids: LocalCentroids,

@@ -1,8 +1,11 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.datax.Dedup
 import graft.util.AtomicSwap
@@ -113,14 +116,6 @@ object DedupStream {
     val spark = batch.sparkSession
     val (docsDir, bandsDir, fpsDir) =
       (s"$indexRoot/docs", s"$indexRoot/bands", s"$indexRoot/fps")
-    // a partition possibly half-written by a crashed attempt of THIS
-    // batch must not count as index (the batch would dedup against its
-    // own rows and vanish); visibleIndex additionally resolves the
-    // compaction marker so consolidated epochs read consistently
-    def priorOnly(dir: String): Option[DataFrame] =
-      if (hasData(spark, dir))
-        Some(visibleIndex(spark, dir).filter(col("batch") =!= batchId))
-      else None
     // the batch frame re-executes its source per action; the dedup
     // pipeline reads it several times
     val raw = batch.persist()
@@ -134,12 +129,19 @@ object DedupStream {
       // so the sidecar write below reuses them (round 21, guide §1.2:
       // the write used to re-tokenize + re-aggregate the survivors from
       // raw text — a third signature derivation per batch); on the
-      // first batch there is no index and it runs the within pass alone
+      // first batch there is no index and it runs the within pass alone.
+      // The three index tables open with the schemas this loop writes
+      // them with: the batch's, and the sidecar faces' own output
+      // schemas (analysis only, no job)
       val (survivors, batchBands, release) = Dedup.dedupIncrementShared(b,
-        priorOnly(docsDir).map(_.select(batch.columns.map(col): _*)),
+        priorRows(spark, docsDir, batch.schema, batchId)
+          .map(_.select(batch.columns.map(col): _*)),
         idCol, textCol, k, numHashes, bands, threshold,
-        indexBands = priorOnly(bandsDir),
-        indexFps = priorOnly(fpsDir),
+        indexBands = priorRows(spark, bandsDir,
+          Dedup.bandSignatures(b, idCol, textCol, k, numHashes, bands).schema,
+          batchId),
+        indexFps = priorRows(spark, fpsDir,
+          Dedup.fingerprintTable(b, idCol, textCol).schema, batchId),
         maxBucketLoad = maxBucketLoad)
       try {
         // STAGE-THEN-RENAME batch commit (round 21, guide §2.4/§6; the
@@ -357,6 +359,41 @@ object DedupStream {
       case None    => df.filter(col("batch") >= 0)
     }
 
+  /** The index table at `dir` as a micro-batch of BOTH loops reads it:
+    * the visible rows ([[visibleRows]]) minus batch `batchId`'s
+    * partition — a partition possibly half-written by a crashed attempt
+    * of THIS batch must not count as index (the batch would dedup
+    * against its own rows and vanish). None while the table holds no
+    * data file. The table is opened with `schema`, the columns the
+    * loop writes it with, plus the `batch` partition column: no
+    * schema-inference job (one per table per batch before). `schema`
+    * is narrowed to the columns one stored data file carries (its
+    * footer, read on the driver), so a table stored without a column —
+    * a sidecar whose `params` column was lost — still reads without it
+    * and fails the sidecar contract's schema rule, instead of reading
+    * the column as nulls. */
+  private[streaming] def priorRows(spark: SparkSession, dir: String,
+                                   schema: StructType,
+                                   batchId: Long): Option[DataFrame] =
+    firstDataFile(spark, dir).map { file =>
+      val stored = footerColumns(spark, file)
+      val read = StructType(schema.filter(f => stored(f.name)) :+
+        StructField("batch", LongType))
+      visibleRows(spark, dir, spark.read.schema(read).parquet(dir))
+        .filter(col("batch") =!= batchId)
+    }
+
+  /** Column names in the footer of one parquet file — a driver-side
+    * read of the file's metadata, no Spark job. */
+  private def footerColumns(spark: SparkSession,
+                            file: org.apache.hadoop.fs.FileStatus): Set[String] = {
+    val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        spark.sessionState.newHadoopConf()))
+    try in.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+    finally in.close()
+  }
+
   /** Consolidate all three index tables up to (highest batch −
     * `keepLastBatches`): per table, rewrite the visible rows at or
     * below the cutoff into one `coalesce`d epoch partition (ceil(current
@@ -544,17 +581,17 @@ object DedupStream {
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
   }
 
-  /** True when the table root holds at least one committed partition
-    * with a parquet file (spark.read.parquet on a missing or empty dir
-    * cannot infer a schema and fails instead of returning an empty
-    * frame). Epoch dirs (batch=-K) count — after heavy compaction the
-    * whole index may live in one. Shared with [[EmbedStream]] (the
-    * vector loop runs the same batch-partition index protocol). */
-  private[streaming] def hasData(spark: SparkSession, dir: String): Boolean = {
+  /** One parquet file of a committed partition of the table at `dir`,
+    * if any — None also means a bare `spark.read.parquet` of the dir
+    * cannot infer a schema. Epoch dirs (batch=-K) count — after heavy
+    * compaction the whole index may live in one. */
+  private def firstDataFile(spark: SparkSession,
+                            dir: String): Option[org.apache.hadoop.fs.FileStatus] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(root) && Option(fs.globStatus(
+    if (!fs.exists(root)) None
+    else Option(fs.globStatus(
         new org.apache.hadoop.fs.Path(dir, "batch=*/*.parquet")))
-      .exists(_.nonEmpty)
+      .flatMap(_.headOption)
   }
 }

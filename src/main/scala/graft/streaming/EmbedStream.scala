@@ -150,6 +150,18 @@ object EmbedStream {
     * ahead of or behind the dedup side until the replay realigns
     * them.
     *
+    * The commit path computes each intermediate ONCE per batch: one
+    * dimension probe; the within-batch drop list, stored (lineage-cut —
+    * its occupancy guard fires in that job); the cross candidate pairs
+    * against the stored sidecar, cached for their two consumers and
+    * released before the call returns; the survivors write to a
+    * staging dir (the one action that runs the dedup plan); the bands
+    * sidecar derived from the staged survivors; the rename of both
+    * into their `batch=N` partitions; then the serving append, encoded
+    * against the serving index's build geometry as cached per
+    * committed build. Both guards fire before any `batch=N` partition
+    * is touched.
+    *
     * `withinOccupancy` (round-17 review): the WITHIN-batch pass's
     * occupancy bound. `None` (default) derives sqrt(maxBucketLoad) —
     * the bound whose in-bucket pair expansion equals the cross-join
@@ -172,12 +184,9 @@ object EmbedStream {
                    withinOccupancy: Option[Option[Int]] = None): Unit = {
     val spark = batch.sparkSession
     val (vecsDir, bandsDir) = (s"$indexRoot/vecs", s"$indexRoot/bands")
-    def priorOnly(dir: String): Option[DataFrame] =
-      if (DedupStream.hasData(spark, dir))
-        Some(DedupStream.visibleIndex(spark, dir)
-          .filter(col("batch") =!= batchId))
-      else None
     val raw = batch.persist()
+    // the cross pass's cached candidate pairs, released with the batch
+    var releaseCross: () => Unit = () => ()
     try {
       val b = validateDim match {
         case Some(dim) => Similarity.validEmbeddings(raw, vecCol, dim,
@@ -201,7 +210,13 @@ object EmbedStream {
         maxBucketLoad.map(m =>
           math.min(Int.MaxValue.toDouble,
             math.max(2.0, math.sqrt(m.toDouble))).toInt)) // guard floor: 2
-      val withinDrop = Dedup.embeddingNearDupsBanded(b, idCol, vecCol,
+      // the drop list is MATERIALIZED here, once (its guard fires in
+      // this job, before anything is staged): `withinSurvivors` feeds
+      // the cross pass's signatures, its verify side and the final
+      // anti join, and each of those used to re-run the whole pair
+      // expansion and verify of the within pass
+      val withinDrop = Dedup.cutLineage(
+        Dedup.embeddingNearDupsBanded(b, idCol, vecCol,
           tables, planesPerTable, threshold, maxOccupancy = withinBound,
           metricSuffix = "ingest_within",
           guardHint = "This is EmbedStream's WITHIN-batch pass (guard " +
@@ -212,26 +227,33 @@ object EmbedStream {
             "stays); replaying the batch without it re-raises " +
             "deterministically.",
           dim = dim)
-        .select(col("id_b").as(idCol))
+        .select(col("id_b").as(idCol)).distinct())
       val withinSurvivors = b.join(withinDrop, Seq(idCol), "left_anti")
       // CROSS batch x index: survivors pairing any index row drop.
       // Steady-state: batch bands join the STORED sidecar (params
       // checked on the DATA PATH — the eager per-batch full-sidecar
       // distinct+collect is the public form's posture, not the loop's);
       // index vectors re-enter only for the candidate-sized colliding
-      // slice. A bands table missing by manual surgery falls back to the
-      // direct form.
-      val survivors = priorOnly(vecsDir) match {
-        case Some(indexVecs) =>
-          val crossDrop = Dedup.embeddingIncrementPairs(withinSurvivors,
-              indexVecs.select(batch.columns.map(col): _*),
-              priorOnly(bandsDir), idCol, vecCol, tables, planesPerTable,
-              threshold, maxBucketLoad, metricSuffix = "ingest_cross",
-              dim = dim, eagerValidate = false)
-            .select(col("id_a").as(idCol)).distinct()
-          withinSurvivors.join(crossDrop, Seq(idCol), "left_anti")
-        case None => withinSurvivors // first batch: no index yet
-      }
+      // slice. Both index tables open with the schemas this loop writes
+      // them with ([[DedupStream.priorRows]], no inference job). A bands
+      // table missing by manual surgery falls back to the direct form.
+      val survivors =
+        DedupStream.priorRows(spark, vecsDir, batch.schema, batchId) match {
+          case Some(indexVecs) =>
+            val (pairs, release) = Dedup.embeddingIncrementPairs(
+                withinSurvivors, indexVecs.select(batch.columns.map(col): _*),
+                DedupStream.priorRows(spark, bandsDir,
+                  Dedup.embeddingBandSignatures(b, idCol, vecCol, tables,
+                    planesPerTable, dim = dim).schema, batchId),
+                idCol, vecCol, tables, planesPerTable, threshold,
+                maxBucketLoad, metricSuffix = "ingest_cross", dim = dim,
+                ingest = true)
+            releaseCross = release
+            withinSurvivors.join(
+              pairs.select(col("id_a").as(idCol)).distinct(),
+              Seq(idCol), "left_anti")
+          case None => withinSurvivors // first batch: no index yet
+        }
       // STAGE-THEN-RENAME batch commit ([[DedupStream.processBatch]]'s
       // round-21 pattern, for the two vector tables): the staged vecs
       // write IS the materialization point — no index partition is
@@ -259,7 +281,8 @@ object EmbedStream {
       // overwrite of its own batch partition, so the crash window
       // between the dedup writes above and this append closes on
       // replay — both sides rewrite, neither double-appends. Reads the
-      // committed batch partition (the survivors, already on disk).
+      // committed batch partition (the survivors, already on disk) and
+      // encodes against the serving index's cached build geometry.
       servingDir.foreach { sd =>
         Similarity.ivfIndexAppendBatch(spark, sd,
           spark.read.schema(org.apache.spark.sql.types.StructType(
@@ -269,7 +292,7 @@ object EmbedStream {
           batchId, idCol, vecCol)
       }
       ()
-    } finally { raw.unpersist(); () }
+    } finally { releaseCross(); raw.unpersist(); () }
     ()
   }
 

@@ -197,6 +197,60 @@ class IncrementalGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("the vector streaming face threads maxBucketLoad to the cross-index join") {
+    import graft.streaming.EmbedStream
+    val root = java.nio.file.Files.createTempDirectory("graft-guard-embed").toString
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      // mutually far-apart vectors (cosine < 0.5) that all fall in the
+      // one bucket of a (1 table x 1 plane) geometry: the index holds
+      // 10 of them, batch 1 three more — within-batch occupancy 3
+      // passes the derived sqrt(20) = 4 bound, the cross product
+      // 3 x 10 = 30 exceeds maxBucketLoad = 20
+      val plane = Dedup.planeSignsSeeded(0, 1, dim).head
+      val rnd = new scala.util.Random(7)
+      def cos(a: Array[Float], b: Array[Float]) = {
+        def d(x: Array[Float], y: Array[Float]) =
+          x.zip(y).map { case (p, q) => p.toDouble * q }.sum
+        d(a, b) / math.sqrt(d(a, a) * d(b, b))
+      }
+      val picked = Iterator.continually(Array.fill(dim)(rnd.nextGaussian().toFloat))
+        .filter(v => v.zip(plane).map { case (x, p) => x * p }.sum > 0.1)
+        .scanLeft(Vector.empty[Array[Float]]) { (acc, v) =>
+          if (acc.forall(cos(_, v) < 0.5)) acc :+ v else acc }
+        .dropWhile(_.size < 13).next()
+      def frame(ids: Seq[Long], vs: Seq[Array[Float]]) =
+        ids.zip(vs).toDF("vec_id", "embedding")
+      val serving = s"$root/serving"
+      val index = s"$root/index"
+      EmbedStream.processBatch(frame(1L to 10L, picked.take(10)), 0L, index,
+        "vec_id", "embedding", tables = 1, planesPerTable = 1)
+      graft.datax.Similarity.ivfIndexWrite(
+        spark.read.parquet(s"$index/vecs"), serving, nCentroids = 2)
+      val batch1 = frame(101L to 103L, picked.drop(10))
+      def landed = Seq(s"$index/vecs/batch=1", s"$index/bands/batch=1",
+          s"$serving/assigned_inc.parquet/batch=1")
+        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+      val ex = intercept[Throwable] {
+        EmbedStream.processBatch(batch1, 1L, index, "vec_id", "embedding",
+          tables = 1, planesPerTable = 1, maxBucketLoad = Some(20L),
+          servingDir = Some(serving))
+      }
+      assert(chain(ex).contains("hot LSH bucket (batch x index)"),
+        s"the vector streaming face must thread the bound:\n${chain(ex)}")
+      assert(landed.isEmpty, s"the raise must fire before any commit: $landed")
+      // with the default bound the same batch lands: all three survive
+      // (none is within cosine 0.9 of the index or of each other)
+      EmbedStream.processBatch(batch1, 1L, index, "vec_id", "embedding",
+        tables = 1, planesPerTable = 1, servingDir = Some(serving))
+      assert(landed.size == 3, s"got $landed")
+      assert(spark.read.parquet(s"$index/vecs/batch=1").count() == 3L)
+    } finally {
+      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    }
+  }
+
   test("embedding sidecar without a params column is rejected (dim is part of the bucket contract)") {
     val batch = identicalVecs(1 to 3)
     val index = identicalVecs(11 to 14)

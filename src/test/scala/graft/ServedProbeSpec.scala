@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -106,34 +103,6 @@ class ServedProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.ivfPqTopKReranked(spark, raw, q, emb, k = 3, rerank = 8, nProbe = 3))
   }
 
-  /** Blocks until the listener bus has delivered every posted event
-    * (`waitUntilEmpty` is private[spark], public in bytecode). */
-  private def drainListenerBus(): Unit = {
-    val bus = classOf[org.apache.spark.SparkContext]
-      .getMethod("listenerBus").invoke(spark.sparkContext)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    ()
-  }
-
-  /** Spark jobs started from `body`'s call through its collect. */
-  private def jobsOf(body: => Unit): Int = {
-    val tag = s"served-probe-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.tag") == tag))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setLocalProperty("graft.spec.tag", tag)
-    try { body; drainListenerBus() }
-    finally {
-      spark.sparkContext.setLocalProperty("graft.spec.tag", null)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    jobs.get
-  }
-
   test("a local single-query probe over base + increment runs at most 2 Spark jobs (ivfPqTopK, ivfTopKIndexed)") {
     val (raw, _, ivf) = dirs
     val one = spark.createDataFrame(queryRows.take(1).asJava, emb.schema)
@@ -147,8 +116,72 @@ class ServedProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(warm.exists(_.length == 10), s"$face: got $warm")
       assert(warm == outcome(probe(one.repartition(1))),
         s"$face: the single-query top-k disagrees with the distributed probe")
-      val n = jobsOf { probe(one).collect(); () }
+      val n = TestSpark.jobsOf { probe(one).collect(); () }
       assert(n <= 2, s"$face: a local single-query probe ran $n jobs")
+    }
+  }
+
+  test("an append never encodes against stale geometry: after a rebuild between two appends the increment's rows follow the NEW sidecars (raw PQ, residual PQ, plain IVF)") {
+    val shard = emb.filter(col("vec_id") % 5 === 3)
+    val corpus = emb.filter(col("vec_id") % 5 =!= 3)
+    // two build corpora whose stride samples — and so quantizer and
+    // codebook — differ
+    val (first, second) = (corpus.filter(col("vec_id") % 3 =!= 0),
+      corpus.filter(col("vec_id") % 3 =!= 1))
+    def sidecars(dir: String, pq: Boolean): (DataFrame, Option[DataFrame]) = {
+      def read(name: String) = spark.read
+        .parquet(Similarity.sidecarOf(spark, dir, name)).localCheckpoint(eager = true)
+      (read("centroids.parquet"), if (pq) Some(read("pq_codebook.parquet")) else None)
+    }
+    // (id, centroid_id, sub, code) rows — or (id, centroid_id, vec) on
+    // the plain layout — a shard encodes to under the given geometry
+    def encoded(geom: (DataFrame, Option[DataFrame]), residual: Boolean): DataFrame =
+      geom match {
+        case (cents, None) => Similarity.ivfAssign(shard, cents)
+        case (cents, Some(book)) if residual =>
+          val res = Similarity.residualRows(shard, cents, "vec_id", "embedding")
+          res.select("id", "centroid_id")
+            .join(Similarity.pqEncode(res, book, "id", "vec"), "id")
+        case (cents, Some(book)) =>
+          Similarity.pqCodeRowsForPlan(shard, cents, book)
+            .select(col("id"), col("centroid_id"),
+              posexplode(col("codes")).as(Seq("sub", "code")))
+      }
+    def incRows(dir: String, table: String, batch: Long, pq: Boolean): DataFrame = {
+      val rows = spark.read.parquet(s"$dir/$table").filter(col("batch") === batch)
+      if (pq) rows.select(col("id"), col("centroid_id"),
+        posexplode(col("codes")).as(Seq("sub", "code")))
+      else rows.select("id", "vec", "centroid_id")
+    }
+    def same(a: DataFrame, b: DataFrame): Boolean = {
+      val bb = b.select(a.columns.map(col).toIndexedSeq: _*)
+      a.exceptAll(bb).isEmpty && bb.exceptAll(a).isEmpty
+    }
+    Seq[(String, (DataFrame, String) => Unit, Boolean)](
+      ("raw PQ", Similarity.pqIndexWrite(_, _, nCentroids = 4), false),
+      ("residual PQ", Similarity.pqIndexWrite(_, _, nCentroids = 4,
+        spec = IndexSpec(encoding = "residual")), true),
+      ("plain IVF", Similarity.ivfIndexWrite(_, _, nCentroids = 4), false)
+    ).zipWithIndex.foreach { case ((name, write, residual), i) =>
+        val dir = s"$root/stale-$i"
+        def build(vectors: DataFrame): Unit = write(vectors, dir)
+        val pq = name != "plain IVF"
+        val inc = if (pq) "codes_inc.parquet" else "assigned_inc.parquet"
+        build(first)
+        // the first append resolves (and caches) the first build's geometry
+        Similarity.ivfIndexAppendBatch(spark, dir, shard, 0L)
+        val old = sidecars(dir, pq)
+        assert(same(encoded(old, residual), incRows(dir, inc, 0L, pq)),
+          s"$name: the first increment encodes against the first build")
+        build(second)
+        Similarity.ivfIndexAppendBatch(spark, dir, shard, 1L)
+        val got = incRows(dir, inc, 1L, pq)
+        assert(got.select("id").distinct().count() == shard.count(),
+          s"$name: every shard vector lands")
+        assert(same(encoded(sidecars(dir, pq), residual), got),
+          s"$name: the second increment must encode against the rebuilt sidecars")
+        assert(!same(encoded(old, residual), got),
+          s"$name: vacuous — the rebuild did not change the shard's encoding")
     }
   }
 }

@@ -1405,6 +1405,13 @@ class StreamingSpec extends AnyFunSuite {
     (2L, embedDir(4)), (5L, embedNear(4, 5)), (8L, embedNear(3, 8)))
     .toDF("vec_id", "embedding")
 
+  /** Ceiling on the Spark jobs of one steady
+    * [[graft.streaming.EmbedStream.processBatch]] batch over the fixture
+    * below, with a serving append. Computing the within drop list, the
+    * cross candidates and the serving geometry once, it runs 27;
+    * recomputing them for each reader ran 83. */
+  private val EmbedStreamSteadyJobCeiling = 35
+
   test("EmbedStream: AvailableNow drive == processBatch composition; replay idempotent; retention works") {
     import graft.streaming.{BatchFiles, DedupStream, EmbedStream}
     val dir = java.nio.file.Files.createTempDirectory("graft-d55-spec").toString
@@ -1514,6 +1521,65 @@ class StreamingSpec extends AnyFunSuite {
     val staleness = Similarity.ivfIndexStaleness(spark, serving)
     assert(staleness.exists(s => math.abs(s - 2.0 / 3.0) < 1e-12),
       s"2 appended over 3 built, got $staleness")
+  }
+
+  test("EmbedStream steady batch: each intermediate runs once (a job " +
+       "ceiling), no cache it creates outlives it, and its vecs, bands and " +
+       "serving rows == the pass-by-pass composition") {
+    import graft.streaming.{DedupStream, EmbedStream}
+    import graft.datax.{Dedup, Similarity}
+    val dir = java.nio.file.Files.createTempDirectory("graft-d55-once").toString
+    try {
+      val (root, serving) = (s"$dir/index", s"$dir/serving")
+      def split(i: Int) = embedVecs.filter(pmod($"vec_id", lit(3)) === i)
+      def step(i: Int, servingDir: Option[String]) =
+        EmbedStream.processBatch(split(i), i.toLong, root, "vec_id",
+          "embedding", tables = 3, planesPerTable = 4, threshold = 0.9,
+          servingDir = servingDir)
+      step(0, None)
+      def visible(table: String) =
+        DedupStream.visibleIndex(spark, s"$root/$table").drop("batch")
+          .localCheckpoint(eager = true)
+      val index = visible("vecs")
+      Similarity.pqIndexWrite(index, serving, nCentroids = 2)
+      // batch 1 the way the loop composed it pass by pass: within
+      // drops, then cross drops against the stored index and sidecar
+      val b1 = split(1)
+      val withinDrop = Dedup.embeddingNearDupsBanded(b1, "vec_id",
+          "embedding", tables = 3, planesPerTable = 4, threshold = 0.9)
+        .select($"id_b".as("vec_id"))
+      val withinKept = b1.join(withinDrop, Seq("vec_id"), "left_anti")
+      val crossDrop = Dedup.embeddingNearDupsIncremental(withinKept, index,
+          "vec_id", "embedding", tables = 3, planesPerTable = 4,
+          threshold = 0.9, indexBands = Some(visible("bands")))
+        .select($"id_a".as("vec_id"))
+      val want = withinKept.join(crossDrop, Seq("vec_id"), "left_anti")
+        .localCheckpoint(eager = true)
+      val wantBands = Dedup.embeddingBandSignatures(want, "vec_id",
+        "embedding", tables = 3, planesPerTable = 4)
+      def sidecar(name: String) =
+        spark.read.parquet(Similarity.sidecarOf(spark, serving, name))
+      val wantCodes = Similarity.pqCodeRowsForPlan(want,
+        sidecar("centroids.parquet"), sidecar("pq_codebook.parquet"))
+      Dedup.releaseShingleCaches()
+      spark.catalog.clearCache()
+      // the serving geometry resolves on its first append or probe; the
+      // steady batch reads it from the cache
+      Similarity.ivfPqTopK(spark, serving, split(1), k = 1, nProbe = 1).collect()
+      val jobs = TestSpark.jobsOf(step(1, Some(serving)))
+      assert(jobs <= EmbedStreamSteadyJobCeiling,
+        s"a steady vector batch ran $jobs Spark jobs")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "processBatch must release every cache it created")
+      assertSameRows(spark.read.parquet(s"$root/vecs/batch=1"), want, "vecs")
+      assertSameRows(spark.read.parquet(s"$root/bands/batch=1"), wantBands,
+        "bands")
+      assertSameRows(spark.read.parquet(s"$serving/codes_inc.parquet/batch=1"),
+        wantCodes, "serving increment")
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
   }
 
   test("serving probes are read-your-writes during an in-flight batch: " +
